@@ -106,10 +106,15 @@ object Multimodal {
     * data now yields its header metadata instead of the stub — the
     * same behavior the audio path has always had for corrupt sample
     * data (header truth is the metadata contract; MultimodalSpec pins
-    * it). NonFatal, not just IOException: the JDK plugin readers throw
-    * IllegalArgumentException / index errors on malformed headers that
-    * pass the format sniff — one such row must not kill the
-    * partition. */
+    * it). Caveat for formats whose header carries no checksum (the BMP
+    * class): garbage bytes that happen to start with the format's magic
+    * number can report arbitrary dimensions here, where a full decode
+    * would have failed to the stub. Declared corpora never hold such
+    * payloads; on real corrupt corpora, treat the dimensions of rows
+    * that `resize` stubs as untrusted. NonFatal, not just IOException:
+    * the JDK plugin readers throw IllegalArgumentException / index
+    * errors on malformed headers that pass the format sniff — one such
+    * row must not kill the partition. */
   private def decodeImage(id: Long, bytes: Array[Byte]): Option[DecodedMeta] =
     try {
       val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
@@ -221,7 +226,11 @@ object Multimodal {
     * as PNG — headless-safe, no display needed), digest-stub for
     * audio/video and corrupt payloads. Emits the target dimensions plus
     * a digest of the resized bytes; resized payloads stay in executor
-    * space (metadata-only schema downstream — the production shape). */
+    * space (metadata-only schema downstream — the production shape).
+    * Resizing needs the full pixel decode, so a row `decode()` reports
+    * as a real image (from its header alone) may still fall back to the
+    * stub here when its pixel data is unreadable: the two paths need
+    * not agree on such a row. */
   def resize(media: Dataset[MediaRow], width: Int, height: Int): DataFrame = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>

@@ -18,56 +18,107 @@ import org.apache.spark.sql.functions._
   *    filter is part of the Catalyst plan, so it executes below the
   *    sort (ServeSpec gates the plan shape), and a top-k request plans
   *    as TakeOrderedAndProject, never a full sort;
-  *  - dim lookups (`indexKeyFor`) collect a KB-sized dimension — the
-  *    reference does the same `dict(zip(...))` (:97-99).
+  *  - dim lookups (`indexKeyFor`) collect a KB-sized dimension once —
+  *    the reference does the same `dict(zip(...))` (:97-99);
+  *  - the dashboard's reads (`chartSvg`, `factDateBounds`, and every
+  *    [[StarServeHttp]] endpoint) answer from a [[ServeIndex]] of the
+  *    recorded snapshot, built by one scan on the first such read and
+  *    again when `refresh()` sees the pointer move: a read is a binary
+  *    search, not a Spark job. `fact`, `factSlice`,
+  *    `chartSeries`, `latest` and the dim frames stay the composable
+  *    DataFrame API the index is checked against.
   */
 class StarServe(spark: SparkSession, starDir: String,
     factSnapshotDir: Option[String] = None) {
 
   // The fact source is either the static star parquet (batch publish)
-  // or — snapshot mode — whatever snapshot the streaming upsert sink's
-  // `_LATEST` pointer names, closing the reference's daily-batch →
-  // dashboard loop with the incremental pipeline instead. Cached
-  // either way; in snapshot mode `refresh()` polls the pointer (one
-  // metadata read) and swaps the cache pin only when it moved.
-  @volatile private var factPtr: Option[String] =
-    factSnapshotDir.flatMap(d =>
-      graft.streaming.StreamingPipeline.latestSnapshotName(spark, d))
+  // or — snapshot mode — the snapshot the streaming upsert sink's
+  // `_LATEST` pointer named when this serve layer last looked, closing
+  // the reference's daily-batch → dashboard loop with the incremental
+  // pipeline instead. That name is RECORDED on first use (of the fact
+  // frame or of the index, whichever comes first) and moved only by
+  // `refresh()`; the cached fact frame and the serving index both
+  // follow it. Readers take the index through one volatile read and
+  // never lock; builds, the recorded name and the fact cache pin are
+  // guarded by `this`.
+  private var recorded: Option[Option[String]] = None
+  @volatile private var served: ServeIndex = null
+  @volatile private var builds = 0L
   private var factCache: Option[DataFrame] = None
 
-  private def loadFact(): DataFrame = (factSnapshotDir match {
-    case Some(d) =>
-      // record the pointer ACTUALLY loaded: without this, a snapshot
-      // published between construction and the first fact() call makes
-      // the next refresh() see a "moved" pointer and drop a cache that
-      // already holds the new data. (A flip between these two reads is
-      // benign — refresh() just reloads once.)
-      factPtr = graft.streaming.StreamingPipeline.latestSnapshotName(spark, d)
-      graft.streaming.StreamingPipeline.readLatestSnapshot(spark, d)
-    case None => spark.read.parquet(s"$starDir/fact_table.parquet")
-  }).cache()
+  private lazy val dims = ServeIndex.dims(dimStockIndex)
 
-  /** Cached fact frame (reference reads the same objects,
-    * app.py:75-95). */
+  /** The recorded snapshot name (None: the static star fact). */
+  private def snapshot: Option[String] = synchronized {
+    recorded.getOrElse {
+      val p = factSnapshotDir.map(d =>
+        graft.streaming.StreamingPipeline.awaitLatestSnapshotName(spark, d))
+      recorded = Some(p)
+      p
+    }
+  }
+
+  private def factPath(snapshot: Option[String]): String = factSnapshotDir match {
+    case Some(d) => s"$d/${snapshot.get}" // snapshot mode always records one
+    case None => s"$starDir/fact_table.parquet"
+  }
+
+  /** Build the serving index of `snapshot`, the name the pointer gave
+    * (never a second `_LATEST` lookup, which could name a newer one). */
+  private def build(snapshot: Option[String]): ServeIndex = {
+    val i = ServeIndex.build(spark.read.parquet(factPath(snapshot)), snapshot, dims)
+    builds += 1
+    i
+  }
+
+  /** The serving index of the recorded snapshot, built on first use. */
+  private[graft] def index: ServeIndex = {
+    val i = served
+    if (i != null) i
+    else synchronized {
+      if (served == null) served = build(snapshot)
+      served
+    }
+  }
+
+  /** The index if one is built, and how many builds ran: a metrics
+    * view that never triggers a build. */
+  private[graft] def indexState: (Option[ServeIndex], Long) = (Option(served), builds)
+
+  /** Cached fact frame of the recorded snapshot (reference reads the
+    * same objects, app.py:75-95). */
   def fact: DataFrame = synchronized {
-    factCache.getOrElse { val f = loadFact(); factCache = Some(f); f }
+    factCache.getOrElse {
+      val f = spark.read.parquet(factPath(snapshot)).cache()
+      factCache = Some(f)
+      f
+    }
   }
 
   /** Snapshot mode: re-read the `_LATEST` pointer; when it names a new
-    * snapshot, drop the cache pin so the next accessor call loads and
-    * caches the new one. Returns true when a swap happened. Static
-    * mode (no snapshot dir) always returns false — the star parquet is
-    * immutable by the publish contract. */
+    * snapshot, build that snapshot's serving index (one scan job, after
+    * the schema read Spark's parquet source runs as a job of its own),
+    * publish it with one reference swap, record the new name, and drop
+    * the fact cache pin so the next `fact` call caches the new
+    * snapshot. Returns true when a swap happened. A build that throws
+    * changes nothing — the previous index keeps serving and the
+    * recorded name stays, so the next refresh() retries — and the
+    * error propagates. An absent pointer (a writer's delete→rename
+    * flip window) is not a move. Static mode (no snapshot dir) always
+    * returns false — the star parquet is immutable by the publish
+    * contract. */
   def refresh(): Boolean = synchronized {
     factSnapshotDir match {
       case None => false
       case Some(d) =>
+        val current = snapshot
         val p = graft.streaming.StreamingPipeline.latestSnapshotName(spark, d)
-        if (p == factPtr) false
+        if (p.isEmpty || p == current) false
         else {
+          served = build(p)
+          recorded = Some(p)
           factCache.foreach(_.unpersist())
           factCache = None
-          factPtr = p
           true
         }
     }
@@ -81,17 +132,13 @@ class StarServe(spark: SparkSession, starDir: String,
   lazy val dimCountry: DataFrame =
     spark.read.parquet(s"$starDir/dim_country.parquet").cache()
 
-  /** IndexCode → IndexKey, the sidebar mapping (app.py:97-99). */
-  def indexKeyFor(indexCode: String): Option[String] =
-    dimStockIndex.filter(col("IndexCode") === indexCode)
-      .select(col("IndexKey")).collect().headOption.map(_.getString(0))
+  /** IndexCode → IndexKey, the sidebar mapping (app.py:97-99), from
+    * the dimension collected once. */
+  def indexKeyFor(indexCode: String): Option[String] = dims.keyFor(indexCode)
 
-  /** Date bounds for the range picker (app.py:101-103) — an aggregate,
-    * not a client-side scan. */
-  def factDateBounds(): (java.sql.Date, java.sql.Date) = {
-    val r = fact.agg(min(col("DateKey")), max(col("DateKey"))).head
-    (r.getDate(0), r.getDate(1))
-  }
+  /** Date bounds for the range picker (app.py:101-103), kept by the
+    * serving index — no scan per call. */
+  def factDateBounds(): (java.sql.Date, java.sql.Date) = index.bounds
 
   /** The Charts slice (app.py:106-110), filter-before-sort: index +
     * date-range predicates are Catalyst filters below the sort. */
@@ -109,36 +156,18 @@ class StarServe(spark: SparkSession, starDir: String,
       .select(col("DateKey"), col("Close"), col("GDPGrowthRate"))
 
   /** The rendered dual-axis chart (app.py:114-130): the chartSeries
-    * slice — already filtered and ordered in the Catalyst plan —
-    * collected and drawn as deterministic SVG. The collect is the
-    * serving-tier materialization the reference's `st.pyplot` does on
-    * the same KB-sized slice; an empty slice renders the reference's
-    * warning banner (app.py:131).
+    * slice drawn as deterministic SVG — byte-identical to
+    * `ChartRender.dualAxis` over `chartSeries(...).collect()` — but read
+    * from the serving index, so no Spark job runs. An empty slice
+    * renders the reference's warning banner (app.py:131).
     *
-    * `maxRows` enforces the serving-tier size contract in the SAME
-    * single execution that renders: the collect is limit-bounded at
-    * maxRows+1, and an over-cap slice throws [[StarServe.SliceTooLarge]]
-    * BEFORE materializing it (the HTTP facade maps this to 413). A
-    * probe-then-render pair would both run the query twice and race a
-    * concurrent snapshot refresh between check and use. */
+    * `maxRows` enforces the serving-tier size contract: an over-cap
+    * slice throws [[StarServe.SliceTooLarge]] before rendering (the
+    * HTTP facade maps this to 413). A `start`/`end` that Spark's
+    * string-to-date cast rejects throws [[StarServe.InvalidDate]]. */
   def chartSvg(indexCode: String, start: String, end: String,
-      maxRows: Int = Int.MaxValue): String = {
-    val name = dimStockIndex.filter(col("IndexCode") === indexCode)
-      .select(col("IndexName")).collect().headOption
-      .map(_.getString(0)).getOrElse(indexCode)
-    val collected =
-      if (maxRows == Int.MaxValue) chartSeries(indexCode, start, end).collect()
-      else chartSeries(indexCode, start, end).limit(maxRows + 1).collect()
-    if (collected.length > maxRows)
-      throw new StarServe.SliceTooLarge(
-        s"slice exceeds $maxRows rows; narrow the date range")
-    val rows = collected.toSeq.map { r =>
-      (r.getDate(0).toLocalDate.toEpochDay,
-        if (r.isNullAt(1)) None else Some(r.getDouble(1)),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)))
-    }
-    ChartRender.dualAxis(s"Close Price and GDP Growth - $name", rows)
-  }
+      maxRows: Int = Int.MaxValue): String =
+    index.chartSvg(indexCode, start, end, maxRows)
 
   /** Latest-k rows for a table widget: top-k plan
     * (TakeOrderedAndProject), never a full sort. */
@@ -149,10 +178,13 @@ class StarServe(spark: SparkSession, starDir: String,
       .orderBy(col("DateKey").desc)
       .limit(k)
 
-  /** Release the serve-layer cache pins. */
+  /** Release the serve-layer cache pins and the serving index (a later
+    * use records the snapshot `_LATEST` names then). */
   def release(): Unit = synchronized {
     factCache.foreach(_.unpersist())
     factCache = None
+    served = null
+    recorded = None
     Seq(dimStockIndex, dimDate, dimCountry).foreach(_.unpersist())
   }
 }
@@ -170,4 +202,8 @@ object StarServe {
     * before the oversized slice is materialized; the HTTP facade maps
     * it to 413 Content Too Large. */
   final class SliceTooLarge(msg: String) extends RuntimeException(msg)
+
+  /** A requested `start`/`end` is not a date by Spark's cast rule — the
+    * caller's input, so the HTTP facade maps it to 400. */
+  final class InvalidDate(msg: String) extends IllegalArgumentException(msg)
 }

@@ -3,7 +3,12 @@ package graft.serve
 import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets
+import java.util.Locale
 import java.util.concurrent.Executors
+import java.util.concurrent.atomic.LongAdder
+
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -18,32 +23,47 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *  - `GET /indexes` — the sidebar's index list (`app.py:97-99`),
   *    JSON array of dim_stock_index rows.
   *  - `GET /bounds` — the date-range picker's min/max
-  *    (`app.py:101-103`), computed as an aggregate, not a scan.
+  *    (`app.py:101-103`).
   *  - `GET /series?index=C&start=D&end=D` — the chart's two series
-  *    (`app.py:118-127`) as JSON rows, filter-below-sort plan. Capped
-  *    at `maxSliceRows` (413 beyond): the dashboard slice is KB-sized
-  *    by intent, and a start/end spanning the whole fact must not
-  *    collect the fact into one response. `/chart` enforces the same
-  *    cap before rendering.
+  *    (`app.py:118-127`) as JSON rows, ordered by date. Capped at
+  *    `maxSliceRows` (413 beyond): the dashboard slice is KB-sized by
+  *    intent, and a start/end spanning the whole fact must not put the
+  *    fact into one response. `/chart` enforces the same cap before
+  *    rendering. A start/end that is not a date is 400.
   *  - `GET /chart?index=C&start=D&end=D` — the rendered dual-axis
   *    figure (`app.py:114-130`) as `image/svg+xml`; an empty slice
   *    returns the warning banner (`app.py:131`), still as SVG.
-  *  - `GET /latest?index=C&k=N` — latest-k table widget, planned as
-  *    TakeOrderedAndProject (never a full sort).
+  *  - `GET /latest?index=C&k=N` — latest-k table widget.
   *  - `POST /refresh` — snapshot-mode pointer poll
   *    ([[StarServe.refresh]]); the Streamlit analogue is a page rerun.
+  *  - `GET /metrics` — per endpoint: requests, responses by status
+  *    class, summed latency; for the serving index: builds, the last
+  *    build's time, rows held, snapshot name, seconds since the swap.
   *  - `GET /health` — liveness.
   *
-  * Serving-tier boundary: every response body is a KB-sized slice the
-  * reference also materializes per page view; the distributed plan
-  * work (filter pushdown, broadcast dim join, top-k) happened in
-  * [[StarServe]] before the collect. Requests run on a small thread
-  * pool; concurrent queries against a mid-refresh snapshot swap are
-  * exercised by the ServeHttpSpec race probe.
+  * Every read endpoint answers from [[StarServe.index]], the
+  * in-memory index of the recorded snapshot: one volatile read, then a
+  * binary search and a string join — no Spark job per request. Each
+  * body is byte-identical to `toJSON` (or `ChartRender.dualAxis`) over
+  * the matching [[StarServe]] DataFrame accessor (ServeIndexSpec).
+  * Index builds run inside `POST /refresh` (and on first use); a fact
+  * above `ServeIndex.MaxIndexRows` fails its build, so reads of such a
+  * fact get that error as a 500. Requests run on a small thread pool;
+  * reads concurrent with a refresh see the old or the new index, never
+  * a mix (ServeHttpSpec race probe).
   */
 class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
     maxSliceRows: Int = 10000) {
+  import StarServeHttp.BadRequest
 
+  // The JDK server sends a response's headers and its body as two TCP
+  // segments; under Nagle's algorithm the body then waits for the
+  // client's delayed ACK of the headers, about 40 ms per keep-alive
+  // request on Linux — a hundred times what an index read costs. The
+  // JDK's own switch turns Nagle off on accepted sockets. It is read
+  // when the JVM's first server is created; an explicit setting wins.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", bindPort), 0)
   // daemon threads: an embedder that returns from main() without
@@ -97,87 +117,100 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
     }
   }
 
-  private def jsonArray(df: org.apache.spark.sql.DataFrame): String =
-    df.toJSON.collect().mkString("[", ",", "]")
-
-  /** [[jsonArray]] with the serving-tier size contract enforced: the
-    * dashboard slice is KB-sized BY INTENT, so a request whose
-    * predicate spans more than `maxSliceRows` rows (a hostile or
-    * fat-fingered start/end covering the whole fact) is refused with
-    * 413 instead of collecting the fact into one HTTP response. The
-    * probe is `limit(max+1)` — the scan stops at the cap, it never
-    * materializes the oversized slice. */
-  private def jsonArrayCapped(df: org.apache.spark.sql.DataFrame): String = {
-    // Int.MaxValue is the documented cap-off sentinel (chartSvg treats
-    // it that way) — without this branch, max+1 overflows to a
-    // NEGATIVE limit and every /series request 500s
-    if (maxSliceRows == Int.MaxValue)
-      return df.toJSON.collect().mkString("[", ",", "]")
-    val rows = df.limit(maxSliceRows + 1).toJSON.collect()
-    if (rows.length > maxSliceRows)
-      throw new TooLarge(
-        s"slice exceeds $maxSliceRows rows; narrow the date range")
-    rows.mkString("[", ",", "]")
-  }
-
   private def jsonErr(msg: String): String =
     s"""{"error":"${StarServeHttp.jsonEsc(msg)}"}"""
 
-  /** Thrown by handlers for malformed CLIENT input → 400 (anything
-    * else thrown by the serve path stays a 500). */
-  private final class BadRequest(msg: String) extends RuntimeException(msg)
+  /** Per-endpoint counters behind `/metrics`. */
+  private final class EndpointStats {
+    val requests = new LongAdder
+    /** Responses by status class: 2xx..5xx at 0..3. */
+    val byClass: Array[LongAdder] = Array.fill(4)(new LongAdder)
+    val nanos = new LongAdder
+    def record(status: Int, tookNanos: Long): Unit = {
+      requests.increment()
+      byClass(math.min(math.max(status / 100, 2), 5) - 2).increment()
+      nanos.add(tookNanos)
+    }
+  }
 
-  /** Thrown when a requested slice exceeds the serving-tier row cap →
-    * 413 Content Too Large (RFC 9110 §15.5.14). */
-  private final class TooLarge(msg: String) extends RuntimeException(msg)
+  // filled while the constructor registers endpoints, read-only after
+  private val endpoints = mutable.LinkedHashMap[String, EndpointStats]()
 
   /** Wrap a handler with param validation + error mapping: a missing
-    * required param is the client's fault (400), anything thrown by
-    * the serve path is ours (500 with the message, never a hung
-    * connection). */
+    * required param or a malformed date is the client's fault (400),
+    * anything else non-fatal thrown by the serve path is ours (500
+    * with the message, never a hung connection). Fatal errors (OOM,
+    * linkage) propagate. Every answered request of the exact path is
+    * counted for `/metrics`. */
   private def handle(path: String, required: Seq[String] = Nil,
       method: String = "GET")(
       f: Map[String, String] => (Int, String, String)): Unit = {
+    val stats = new EndpointStats
+    endpoints(path) = stats
     server.createContext(path, (ex: HttpExchange) => {
-      try {
-        // exact-path check FIRST: createContext matches by prefix, and
-        // an unknown path is 404 regardless of its query string — a
-        // bad percent-escape on /seriesX must not turn into a 400
-        if (ex.getRequestURI.getPath != path)
-          respond(ex, 404, "application/json", jsonErr("not found"))
-        else {
-          val p = params(ex)
-          val missing = required.filterNot(p.contains)
-          // HEAD is answered wherever GET is (respond() omits the body)
-          val effective =
-            if (method == "GET" && ex.getRequestMethod == "HEAD") "HEAD"
-            else method
-          if (ex.getRequestMethod != effective) {
-            // RFC 9110 §15.5.6: 405 MUST carry Allow
-            ex.getResponseHeaders.set("Allow",
-              if (method == "GET") "GET, HEAD" else method)
-            respond(ex, 405, "application/json",
-              jsonErr(s"method ${ex.getRequestMethod} not allowed; use $method"))
-          } else if (missing.nonEmpty)
-            respond(ex, 400, "application/json",
-              jsonErr(s"missing parameter(s): ${missing.mkString(", ")}"))
-          else {
-            val (status, ct, body) = f(p)
-            respond(ex, status, ct, body)
+      val t0 = System.nanoTime()
+      // exact-path check FIRST: createContext matches by prefix, and
+      // an unknown path is 404 regardless of its query string — a
+      // bad percent-escape on /seriesX must not turn into a 400
+      if (ex.getRequestURI.getPath != path)
+        respond(ex, 404, "application/json", jsonErr("not found"))
+      else {
+        val (status, ct, body) =
+          try {
+            val p = params(ex)
+            val missing = required.filterNot(p.contains)
+            // HEAD is answered wherever GET is (respond() omits the body)
+            val effective =
+              if (method == "GET" && ex.getRequestMethod == "HEAD") "HEAD"
+              else method
+            if (ex.getRequestMethod != effective) {
+              // RFC 9110 §15.5.6: 405 MUST carry Allow
+              ex.getResponseHeaders.set("Allow",
+                if (method == "GET") "GET, HEAD" else method)
+              (405, "application/json",
+                jsonErr(s"method ${ex.getRequestMethod} not allowed; use $method"))
+            } else if (missing.nonEmpty)
+              (400, "application/json",
+                jsonErr(s"missing parameter(s): ${missing.mkString(", ")}"))
+            else f(p)
+          } catch {
+            case e: BadRequest => (400, "application/json", jsonErr(e.getMessage))
+            case e: StarServe.InvalidDate =>
+              (400, "application/json", jsonErr(e.getMessage))
+            // 413 Content Too Large (RFC 9110 §15.5.14)
+            case e: StarServe.SliceTooLarge =>
+              (413, "application/json", jsonErr(e.getMessage))
+            case NonFatal(e) =>
+              (500, "application/json",
+                jsonErr(Option(e.getMessage).getOrElse(e.getClass.getName)))
           }
-        }
-      } catch {
-        case e: BadRequest =>
-          respond(ex, 400, "application/json", jsonErr(e.getMessage))
-        case e: TooLarge =>
-          respond(ex, 413, "application/json", jsonErr(e.getMessage))
-        case e: StarServe.SliceTooLarge =>
-          respond(ex, 413, "application/json", jsonErr(e.getMessage))
-        case e: Throwable =>
-          respond(ex, 500, "application/json",
-            jsonErr(Option(e.getMessage).getOrElse(e.getClass.getName)))
+        respond(ex, status, ct, body)
+        stats.record(status, System.nanoTime() - t0)
       }
     })
+  }
+
+  private def num(x: Double): String = "%.3f".formatLocal(Locale.ROOT, x)
+
+  /** The `/metrics` body. */
+  private def metricsJson: String = {
+    val eps = endpoints.map { case (path, s) =>
+      val classes = s.byClass.zipWithIndex.map { case (n, i) =>
+        s""""${i + 2}xx":${n.sum}""" }.mkString(",")
+      s""""$path":{"requests":${s.requests.sum},"status":{$classes},""" +
+        s""""latency_ms_sum":${num(s.nanos.sum / 1e6)}}"""
+    }.mkString(",")
+    val (built, builds) = serve.indexState
+    val index = built match {
+      case None => s"""{"builds":$builds,"last_build_ms":null,"rows":null,""" +
+        """"snapshot":null,"age_s":null}"""
+      case Some(i) =>
+        val snap = i.snapshot.map(n => s""""${StarServeHttp.jsonEsc(n)}"""").getOrElse("null")
+        s"""{"builds":$builds,"last_build_ms":${num(i.buildMs)},""" +
+          s""""rows":${i.rows},"snapshot":$snap,""" +
+          s""""age_s":${num((System.nanoTime() - i.builtAtNanos) / 1e9)}}"""
+    }
+    s"""{"endpoints":{$eps},"index":$index}"""
   }
 
   // ---- endpoints -------------------------------------------------------
@@ -185,7 +218,7 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
   handle("/health") { _ => (200, "application/json", """{"status":"ok"}""") }
 
   handle("/indexes") { _ =>
-    (200, "application/json", jsonArray(serve.dimStockIndex))
+    (200, "application/json", serve.index.indexesJson)
   }
 
   handle("/bounds") { _ =>
@@ -195,14 +228,10 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
 
   handle("/series", required = Seq("index", "start", "end")) { p =>
     (200, "application/json",
-      jsonArrayCapped(serve.chartSeries(p("index"), p("start"), p("end"))))
+      serve.index.seriesJson(p("index"), p("start"), p("end"), maxSliceRows))
   }
 
   handle("/chart", required = Seq("index", "start", "end")) { p =>
-    // same slice cap as /series, enforced INSIDE chartSvg's single
-    // limit-bounded execution — a separate probe query would double
-    // the endpoint's plan work and race a concurrent snapshot refresh
-    // between check and render
     (200, "image/svg+xml",
       serve.chartSvg(p("index"), p("start"), p("end"), maxSliceRows))
   }
@@ -211,8 +240,10 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
     val raw = p.getOrElse("k", "10")
     val k = raw.toIntOption.getOrElse(throw new BadRequest(s"k not an integer: $raw"))
     if (k <= 0 || k > 10000) throw new BadRequest(s"k out of range: $k")
-    (200, "application/json", jsonArray(serve.latest(p("index"), k)))
+    (200, "application/json", serve.index.latestJson(p("index"), k))
   }
+
+  handle("/metrics") { _ => (200, "application/json", metricsJson) }
 
   // POST-only: the snapshot swap mutates server state — a GET (link
   // prefetcher, monitoring crawl) must not trigger it
@@ -254,6 +285,10 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
 }
 
 object StarServeHttp {
+  /** Thrown by handlers for malformed CLIENT input → 400 (anything
+    * else thrown by the serve path stays a 500). */
+  private final class BadRequest(msg: String) extends RuntimeException(msg)
+
   /** Bind + start in one call; port 0 picks an ephemeral port. */
   def serve(s: StarServe, port: Int = 0): StarServeHttp =
     new StarServeHttp(s, port).start()

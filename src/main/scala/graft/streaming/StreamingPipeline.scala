@@ -687,11 +687,11 @@ object StreamingPipeline {
     readPointer(fs, out)
   }
 
-  /** Read the snapshot the `_LATEST` pointer names. Retries a missing
+  /** The snapshot name the `_LATEST` pointer names, retrying a missing
     * pointer briefly: writers flip it via delete→rename, and on object
     * stores the rename itself is non-atomic (copy+delete), so a reader
     * can catch the gap. */
-  def readLatestSnapshot(spark: SparkSession, outDir: String): DataFrame = {
+  def awaitLatestSnapshotName(spark: SparkSession, outDir: String): String = {
     val out = new Path(outDir)
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def readPtr(attempt: Int): String = readPointer(fs, out) match {
@@ -701,6 +701,11 @@ object StreamingPipeline {
       case None => throw new java.io.FileNotFoundException(
         s"$outDir/_LATEST still absent after retries")
     }
-    spark.read.parquet(s"$outDir/${readPtr(0)}")
+    readPtr(0)
   }
+
+  /** Read the snapshot the `_LATEST` pointer names (see
+    * [[awaitLatestSnapshotName]]). */
+  def readLatestSnapshot(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.parquet(s"$outDir/${awaitLatestSnapshotName(spark, outDir)}")
 }

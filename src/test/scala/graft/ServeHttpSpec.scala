@@ -116,6 +116,13 @@ class ServeHttpSpec extends AnyFunSuite {
       assert(bad.statusCode() == 400 && bad.body().contains("k out of range"))
       val nan = get(s"${http.url}/latest?index=%5EGSPC&k=abc")
       assert(nan.statusCode() == 400 && nan.body().contains("not an integer"))
+      // a date Spark's cast rejects (an ANSI CAST_INVALID_INPUT before
+      // the serving index) is the client's fault too, on either bound
+      val badDate = get(s"${http.url}/series?index=%5EGSPC&start=garbage&end=2024-01-19")
+      assert(badDate.statusCode() == 400 && badDate.body().contains("not a date: garbage"),
+        badDate.body())
+      val badEnd = get(s"${http.url}/chart?index=%5EGSPC&start=2024-01-10&end=2024-13-40")
+      assert(badEnd.statusCode() == 400, badEnd.body())
 
       // error bodies stay VALID JSON even when the message spans
       // lines or quotes identifiers (Spark exception messages do both)
@@ -277,6 +284,38 @@ class ServeHttpSpec extends AnyFunSuite {
       // after the swap completes, only the new snapshot serves
       assert(get(seriesUrl).body().contains("101.5"))
     } finally { http.stop(0); serve.release() }
+  }
+
+  test("GET /metrics: per-endpoint counts, status classes and latency; the index state") {
+    withServer { (http, serve) =>
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      def metrics() = mapper.readTree(get(s"${http.url}/metrics").body())
+      // nothing has used the fact yet: no index, no build
+      val before = metrics().get("index")
+      assert(before.get("builds").asLong == 0L && before.get("rows").isNull)
+
+      val ok = s"${http.url}/series?index=%5EGSPC&start=2024-01-10&end=2024-01-19"
+      assert(get(ok).statusCode() == 200 && get(ok).statusCode() == 200)
+      assert(get(s"${http.url}/series?index=%5EGSPC&start=x&end=y").statusCode() == 400)
+      assert(get(s"${http.url}/latest?index=%5EGSPC&k=3").statusCode() == 200)
+
+      val m = metrics()
+      val series = m.get("endpoints").get("/series")
+      assert(series.get("requests").asLong == 3L)
+      assert(series.get("status").get("2xx").asLong == 2L)
+      assert(series.get("status").get("4xx").asLong == 1L)
+      assert(series.get("status").get("5xx").asLong == 0L)
+      assert(series.get("latency_ms_sum").asDouble > 0.0)
+      assert(m.get("endpoints").get("/latest").get("requests").asLong == 1L)
+      assert(m.get("endpoints").get("/chart").get("requests").asLong == 0L)
+      val index = m.get("index")
+      assert(index.get("builds").asLong == 1L)
+      assert(index.get("rows").asLong == 120L) // 2 tickers × 60 days
+      assert(index.get("snapshot").isNull) // static star fact
+      assert(index.get("last_build_ms").asDouble > 0.0)
+      assert(index.get("age_s").asDouble >= 0.0)
+      assert(serve.indexState._2 == 1L)
+    }
   }
 
   test("concurrent clients: parallel requests all succeed with consistent bodies") {
