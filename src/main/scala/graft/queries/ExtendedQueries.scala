@@ -28,49 +28,209 @@ import org.apache.spark.sql.functions._
   */
 object ExtendedQueries {
 
-  /** Session-scoped memo for the shared cached frames (shingles, band
-    * table, candidate-restricted shingles). The queries are `(session,
-    * dir) => DataFrame` lambdas re-invoked per benchmark run; calling
-    * `.cache()` on a freshly built plan each time still resolves to the
-    * one materialization (CacheManager matches by plan), but every
-    * repeat call logs `WARN CacheManager: Asked to cache already cached
-    * data` — noise that has broken the driver's bench-tail JSON parse
-    * two rounds running. Memoizing the cached frame per (session, dir)
-    * requests caching exactly once and also skips plan re-analysis on
-    * repeat calls. Entries are dropped by [[releaseCaches]].
-    */
-  private val memoStore = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String),
-    org.apache.spark.sql.DataFrame]()
-  /** The FENCE on the untimed region (r18 verdict #6): every memo key
-    * any of the four session memo stores may hold. The memo stores are
-    * the mechanism by which work leaves a query's timed region (built
-    * once in Bench's disclosed warm-up, read by the timed runs), so an
-    * UNLISTED key is by construction new precomputation nobody
-    * reviewed — the entry points below reject it at build time, and
-    * MemoFenceSpec pins this set (plus Bench.prebuilt) against its own
-    * committed copy so widening it requires a visible two-file diff. */
-  private[graft] val allowedMemoKeys: Set[String] = Set(
-    // memoCache (cached frames; released by releaseCaches)
-    "bands", "bgcounts", "bgmodel", "candpairs", "cleancorpus", "doclens",
-    "docprof", "dupcc", "embednorm", "eventprof", "ivfassign", "jacpairs",
-    "mhsig", "restricted", "sheval", "shingles", "shsplit", "shtrain",
-    "simsig", "tfidfscore", "toktf",
-    // memoCount (scalar constants: corpus sizes)
-    "ndocs", "ntoks",
-    // memoBytes (small binary models)
-    "bloomfilter",
-    // memoPath (persisted layouts / lifecycle states)
-    "bucketjoin", "cleanids", "compactlayout", "compactpart", "ivfpqadv",
-    "ivfpqindex", "ivfpqleaf", "ivfpqrm", "jsonl", "medialayout", "scd2adv",
-    "sketchroll", "skiplayout", "streamagg", "streamband", "streamcdc",
-    "streamjsonl", "streamscd2")
-  private def fenceMemoKey(key: String): Unit =
-    require(allowedMemoKeys(key),
+  /** The session memo registry: every artifact a query shares across
+    * invocations (cached frames, corpus counts, small binary models,
+    * persisted layouts, the trained IVF quantizer) lives in ONE map
+    * keyed by (session, dir, key), built once by [[memo]] and dropped
+    * by [[releaseCaches]]. The queries are `(session, dir) =>
+    * DataFrame` lambdas re-invoked per benchmark run, so without the
+    * memo every call would re-pay the build — and a frame re-`cache()`d
+    * per call logs `WARN CacheManager: Asked to cache already cached
+    * data`, noise that has broken the driver's bench-tail JSON parse.
+    *
+    * The registry is also the FENCE on the untimed region (r18 verdict
+    * #6): memos are the mechanism by which work leaves a query's timed
+    * region (built once in Bench's disclosed warm-up, read by the timed
+    * runs), so a key missing from [[memoDecls]] is by construction new
+    * precomputation nobody reviewed — [[memo]] rejects it at build
+    * time, and MemoFenceSpec pins the declaration (and the
+    * `Bench.prebuilt` list derived from it) against its own committed
+    * copy, so widening it requires a visible two-file diff. */
+  private[graft] sealed trait MemoKind
+  private[graft] object MemoKind {
+    case object Frame extends MemoKind
+    case object Count extends MemoKind
+    case object Bytes extends MemoKind
+    case object Path extends MemoKind
+    case object Model extends MemoKind
+  }
+
+  /** A disclosed untimed artifact: its name in `Bench.prebuilt` and the
+    * declared query Bench's warm-up builds it with. */
+  private[graft] final case class Prebuilt(name: String, warmQuery: String)
+  private[graft] final case class MemoDecl(key: String, kind: MemoKind,
+      prebuilt: Option[Prebuilt] = None)
+
+  /** One declaration per memo key. The disclosed artifacts come first,
+    * in `Bench.prebuilt` (and warm-up) order. */
+  private[graft] val memoDecls: Seq[MemoDecl] = {
+    import MemoKind._
+    def disclosed(key: String, kind: MemoKind, name: String, query: String) =
+      MemoDecl(key, kind, Some(Prebuilt(name, query)))
+    def internal(kind: MemoKind)(keys: String*) = keys.map(MemoDecl(_, kind))
+    Seq(
+      disclosed("shingles", Frame, "shingle_cache", "q_text_fingerprint"),
+      disclosed("embednorm", Frame, "embed_norms_cache", "q_similarity_cosine"),
+      disclosed("toktf", Frame, "token_count_cache", "q_token_df"),
+      disclosed("skiplayout", Path, "skipping_layout", "q_skipping_prune"),
+      disclosed("ivfpqindex", Path, "ivfpq_index", "q_ivfpq_probe"),
+      disclosed("bucketjoin", Path, "bucket_join_tables", "q_bucket_join"),
+      disclosed("compactlayout", Path, "compacted_layout", "q_compact_scan"),
+      disclosed("compactpart", Path, "compact_partitioned_layout",
+        "q_compact_partitioned"),
+      disclosed("scd2adv", Path, "scd2_state", "q_scd2_advance"),
+      disclosed("sketchroll", Path, "sketch_rollup_state", "q_sketch_rollup_band"),
+      disclosed("streamcdc", Path, "stream_cdc_state", "q_stream_cdc_publish"),
+      disclosed("streamscd2", Path, "stream_scd2_state", "q_stream_scd2_publish"),
+      disclosed("streamagg", Path, "stream_agg_state", "q_stream_agg_publish"),
+      disclosed("streamband", Path, "stream_band_registry", "q_stream_band_publish"),
+      disclosed("cleancorpus", Frame, "cleaned_corpus_cache", "q_train_pipeline"),
+      disclosed("medialayout", Path, "media_layout", "q_media_meta"),
+      disclosed("ivfpqadv", Path, "ivfpq_advanced_index", "q_ivfpq_advance"),
+      disclosed("ivfpqrm", Path, "ivfpq_removed_index", "q_ivfpq_remove"),
+      disclosed("ivfpqleaf", Path, "ivfpq_leafwise_index", "q_ivfpq_leafwise"),
+      disclosed("jsonl", Path, "jsonl_layout", "q_jsonl_quarantine"),
+      disclosed("streamjsonl", Path, "stream_jsonl_state", "q_stream_jsonl_publish")
+    ) ++ internal(Frame)("bands", "bgcounts", "bgmodel", "candpairs",
+      "doclens", "docprof", "dupcc", "eventprof", "ivfassign", "jacpairs",
+      "mhsig", "restricted", "sheval", "shsplit", "shtrain", "simsig",
+      "tfidfscore") ++
+      internal(Count)("ndocs", "ntoks") ++ // corpus sizes
+      internal(Bytes)("bloomfilter") ++    // the bloom join sketch
+      internal(Path)("cleanids") ++        // the cleaned corpus's survivor ids
+      internal(Model)("ivfmodel")          // the trained IVF coarse quantizer
+  }
+  private[graft] val allowedMemoKeys: Map[String, MemoKind] =
+    memoDecls.map(m => m.key -> m.kind).toMap
+  private[graft] val prebuiltMemos: Seq[Prebuilt] = memoDecls.flatMap(_.prebuilt)
+
+  /** A registry value, one case per kind; each knows its own release. */
+  private[graft] sealed trait Memo { def release(): Unit = () }
+  private[graft] final case class FrameMemo(df: org.apache.spark.sql.DataFrame)
+      extends Memo {
+    // a stopped session's blocks died with its context
+    override def release(): Unit = if (!df.sparkSession.sparkContext.isStopped) {
+      df.unpersist()
+      // the dupcc frame reads from a localCheckpoint — its blocks are
+      // pinned on the RDD, not in the CacheManager (no-op for frames
+      // without LogicalRDD leaves)
+      graft.ops.Dedup.freeCheckpointBlocks(df)
+    }
+  }
+  private[graft] final case class CountMemo(n: Long) extends Memo
+  private[graft] final case class BytesMemo(bytes: Array[Byte]) extends Memo
+  /** A persisted layout in its own temp dir; release deletes the dir:
+    * the next consumer rebuilds into a FRESH one, so without this every
+    * release→rebuild cycle would abandon one dir (r14 verdict #7).
+    * Nothing can still be reading it — release runs between queries,
+    * and every consumer goes through [[memoPath]], which rebuilds. */
+  private[graft] final case class PathMemo(dir: String) extends Memo {
+    override def release(): Unit = deleteRecursively(dir)
+  }
+  private[graft] final case class ModelMemo(centroids: Seq[(Int, Seq[Double])])
+      extends Memo
+
+  private val memos = new java.util.concurrent.ConcurrentHashMap[
+    (org.apache.spark.sql.SparkSession, String, String), Memo]()
+
+  /** Get-or-build for every kind. NO computeIfAbsent: the builders nest
+    * (restrictedShingles → bandTable → shingles) and run Spark jobs,
+    * and mutating a ConcurrentHashMap from inside an in-flight mapping
+    * function violates its contract (recursive-update
+    * IllegalStateException / livelock). */
+  private[graft] def memo[M <: Memo](key: String, kind: MemoKind,
+      s: org.apache.spark.sql.SparkSession, d: String)(build: => M): M = {
+    require(allowedMemoKeys.contains(key),
       s"memo key '$key' is not in the committed untimed-region " +
-        "allowlist (ExtendedQueries.allowedMemoKeys, pinned by " +
+        "allowlist (ExtendedQueries.memoDecls, pinned by " +
         "MemoFenceSpec) — new precomputation must be reviewed in, " +
         "not slipped in")
+    require(allowedMemoKeys(key) == kind,
+      s"memo key '$key' is declared as ${allowedMemoKeys(key)}, not $kind")
+    val k = (s, d, key)
+    val hit = memos.get(k)
+    if (hit != null) return hit.asInstanceOf[M]
+    // evict entries of stopped sessions so a session-per-batch embedder
+    // that never calls releaseCaches cannot pin dead SparkSessions (and
+    // their plans and layout dirs) in this static map forever
+    memos.forEach { (ek, m) =>
+      if (ek._1.sparkContext.isStopped && memos.remove(ek, m)) m.release()
+    }
+    if (kind == MemoKind.Frame) {
+      // miss path under a reentrant lock: concurrent first-callers would
+      // otherwise both run build.cache(), and the loser's second cache()
+      // request logs the CacheManager WARN this memo exists to suppress.
+      // synchronized (not computeIfAbsent) because the builders nest —
+      // same-thread reentry is legal here, illegal in a CHM mapping fn.
+      memos.synchronized {
+        val raced = memos.get(k)
+        if (raced != null) raced.asInstanceOf[M]
+        else { val built = build; memos.put(k, built); built }
+      }
+    } else {
+      // built outside the map; the first putIfAbsent wins and a losing
+      // build is released (a path build deletes its temp dir)
+      val built = build
+      val raced = memos.putIfAbsent(k, built)
+      if (raced == null) built else { built.release(); raced.asInstanceOf[M] }
+    }
+  }
+
+  private[graft] def memoCache(key: String, s: org.apache.spark.sql.SparkSession, d: String)(
+      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    memo(key, MemoKind.Frame, s, d)(FrameMemo(build.cache())).df
+
+  private[graft] def memoCount(key: String, s: org.apache.spark.sql.SparkSession, d: String)(
+      build: => Long): Long =
+    memo(key, MemoKind.Count, s, d)(CountMemo(build)).n
+
+  private[graft] def memoBytes(key: String, s: org.apache.spark.sql.SparkSession, d: String)(
+      build: => Array[Byte]): Array[Byte] =
+    memo(key, MemoKind.Bytes, s, d)(BytesMemo(build)).bytes
+
+  /** A layout written once per (session, dir) into a fresh temp dir by
+    * `build(dir)`; returns the dir. */
+  private[graft] def memoPath(key: String, s: org.apache.spark.sql.SparkSession,
+      d: String)(build: String => Unit): String =
+    memo(key, MemoKind.Path, s, d) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_$key").toString
+      build(dir)
+      PathMemo(dir)
+    }.dir
+
+  /** Release every memo of (session, dir): frames are unpersisted,
+    * layout dirs deleted, and the entries dropped, so the next query
+    * call rebuilds from scratch. A long-lived session embedding this
+    * library should call this after a batch completes; cold-mode
+    * benchmarks call it before every query. */
+  def releaseCaches(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+    memos.forEach { (k, m) =>
+      if (k._1 == s && k._2 == d && memos.remove(k, m)) m.release()
+    }
+
+  /** The live memo keys of (session, dir) — a view for specs. */
+  private[graft] def liveMemoKeys(s: org.apache.spark.sql.SparkSession,
+      d: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    memos.keySet.asScala.collect { case (`s`, `d`, key) => key }.toSet
+  }
+
+  /** Best-effort recursive delete of a memoPath layout dir (children
+    * before parents; races with a concurrent external deletion are
+    * benign — deleteIfExists). */
+  private def deleteRecursively(dir: String): Unit = {
+    val p = java.nio.file.Paths.get(dir)
+    if (java.nio.file.Files.exists(p)) {
+      val walk = java.nio.file.Files.walk(p)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.toSeq
+          .sortBy(-_.getNameCount)
+          .foreach(f => java.nio.file.Files.deleteIfExists(f))
+      } finally walk.close()
+    }
+  }
+
   /** Fixed integer codebook for q_pq_encode (m=4, kc=4, dsub=16, flat
     * row-major): value(j,c,t) = first-6-hex(md5("pq:j:c:t")) − 2²³,
     * the [[graft.ops.Similarity.plane]] recipe. Data-independent and
@@ -163,39 +323,6 @@ object ExtendedQueries {
     "der" -> "de", "die" -> "de", "das" -> "de", "und" -> "de",
     "den" -> "de", "von" -> "de", "ist" -> "de", "nicht" -> "de")
 
-  private[queries] def memoCache(key: String, s: org.apache.spark.sql.SparkSession, d: String)(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    // NO computeIfAbsent: the builders nest (restrictedShingles →
-    // bandTable → shingles), and mutating a ConcurrentHashMap from
-    // inside an in-flight computeIfAbsent mapping function violates
-    // its contract (recursive-update IllegalStateException / livelock).
-    // get + putIfAbsent keeps every map mutation outside any mapping
-    // function; a lost race returns the winner's frame — both plans
-    // resolve to the one CacheManager entry, so nothing leaks.
-    fenceMemoKey(key)
-    val k = (s, d, key)
-    val existing = memoStore.get(k)
-    if (existing != null) return existing
-    // miss path under a reentrant lock: concurrent first-callers would
-    // otherwise both run build.cache(), and the loser's second cache()
-    // request logs the CacheManager WARN this memo exists to suppress.
-    // synchronized (not computeIfAbsent) because the builders nest —
-    // same-thread reentry is legal here, illegal in a CHM mapping fn.
-    memoStore.synchronized {
-      val raced = memoStore.get(k)
-      if (raced != null) raced
-      else {
-        // evict entries of stopped sessions so a session-per-batch
-        // embedder that never calls releaseCaches cannot pin dead
-        // SparkSessions (and their plans) in this static map forever
-        val it = memoStore.keySet.iterator
-        while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-        val built = build.cache()
-        memoStore.put(k, built)
-        built
-      }
-    }
-  }
 
   /** The survivor-id TABLE of the composed cleaning pipeline,
     * swap-published as parquet once per (session, dir) — the state
@@ -478,76 +605,6 @@ object ExtendedQueries {
           org.apache.spark.sql.expressions.Window.partitionBy(col("id"))))
     }
 
-  /** Session-scoped memo for shared SCALAR statistics (e.g. the corpus
-    * document count feeding TF-IDF's idf): computing one costs a full
-    * Spark job per query invocation otherwise. Same lifecycle as the
-    * frame memo — dropped by [[releaseCaches]] so cold-mode benchmarks
-    * charge the recount to the query that needs it. */
-  private val scalarStore = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), java.lang.Long]()
-  private[queries] def memoCount(key: String, s: org.apache.spark.sql.SparkSession, d: String)(
-      build: => Long): Long = {
-    fenceMemoKey(key)
-    val k = (s, d, key)
-    val existing = scalarStore.get(k)
-    if (existing != null) return existing
-    // builders may run whole Spark jobs — keep them outside any CHM
-    // mapping function (same reentrancy discipline as memoCache above)
-    val built = java.lang.Long.valueOf(build)
-    val raced = scalarStore.putIfAbsent(k, built)
-    if (raced != null) raced else built
-  }
-
-  /** Session-scoped memo for small binary MODELS (the bloom join
-    * sketch): built once per (session, dir), probed by every
-    * subsequent invocation as a literal — the same train-once/
-    * serve-many lifecycle as the IVF memo below, for artifacts that
-    * are plain bytes rather than frames. Dropped by [[releaseCaches]]. */
-  private val bytesStore = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), Array[Byte]]()
-  private[queries] def memoBytes(key: String, s: org.apache.spark.sql.SparkSession, d: String)(
-      build: => Array[Byte]): Array[Byte] = {
-    fenceMemoKey(key)
-    val k = (s, d, key)
-    val existing = bytesStore.get(k)
-    if (existing != null) return existing
-    val built = build
-    val raced = bytesStore.putIfAbsent(k, built)
-    if (raced != null) raced else built
-  }
-
-  /** Session-scoped memo for the skipping-demo LAYOUT PATH: a
-    * range-sharded copy of lineitem plus its min/max file manifest,
-    * written once per (session, dir) to a fresh temp directory and
-    * pruned-scanned by q_skipping_prune on every invocation — the
-    * build-index-once / probe-many lifecycle `etl.Skipping` exists
-    * for (same precedent as the ivfModel memo). The layout is fully
-    * deterministic: shard = l_orderkey div W (a pure row function —
-    * no range-partitioner SAMPLING, whose boundaries vary with rdd
-    * ids and would wobble the byte pins across sweeps), and the
-    * testdata's single input split writes exactly one file per shard
-    * directory. Dropped by [[releaseCaches]] so cold-mode benchmarks
-    * charge the layout + manifest build to the query; the release
-    * also DELETES the abandoned dir (r14 verdict #7 — a gate run's
-    * release→rebuild cycles must leave O(#memos) dirs on disk, not
-    * O(#memos × #rebuilds)). */
-  private val pathStore = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), String]()
-  private def memoPath(kind: String, s: org.apache.spark.sql.SparkSession,
-      d: String)(build: String => Unit): String = {
-    fenceMemoKey(kind)
-    val k = (s, d, kind)
-    val hit = pathStore.get(k)
-    if (hit != null) return hit
-    // build outside any CHM mapping function (runs Spark write jobs —
-    // same reentrancy discipline as memoCache); a lost race leaks one
-    // temp dir, never wrong data
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_$kind")
-      .toString
-    build(dir)
-    val raced = pathStore.putIfAbsent(k, dir)
-    if (raced != null) raced else dir
-  }
   /** The q_ivfpq_probe index: (vec_id, codes) persisted
     * `partitionBy("cid")` under the fixed integer coarse centroids +
     * PQ codebook — so the declared probe's `cid IN (...)` filter is
@@ -1063,6 +1120,20 @@ object ExtendedQueries {
       s.catalog.refreshByPath(dir)
     }
 
+  /** The skipping-demo LAYOUT: a range-sharded copy of lineitem plus
+    * its min/max file manifest, written once per (session, dir) to a fresh temp directory and
+    * pruned-scanned by q_skipping_prune on every invocation — the
+    * build-index-once / probe-many lifecycle `etl.Skipping` exists
+    * for (same precedent as the ivfModel memo). The layout is fully
+    * deterministic: shard = l_orderkey div W (a pure row function —
+    * no range-partitioner SAMPLING, whose boundaries vary with rdd
+    * ids and would wobble the byte pins across sweeps), and the
+    * testdata's single input split writes exactly one file per shard
+    * directory. Dropped by [[releaseCaches]] so cold-mode benchmarks
+    * charge the layout + manifest build to the query; the release
+    * also DELETES the abandoned dir (r14 verdict #7 — a gate run's
+    * release→rebuild cycles must leave O(#memos) dirs on disk, not
+    * O(#memos × #rebuilds)). */
   private[graft] def skipLayout(s: org.apache.spark.sql.SparkSession,
       d: String): String = memoPath("skiplayout", s, d) { dir =>
     val li = graft.queries.t(s, d, "lineitem")
@@ -1075,98 +1146,24 @@ object ExtendedQueries {
     graft.etl.Skipping.writeManifest(s, dir, Seq("l_orderkey", "l_quantity"))
   }
 
-  /** Session-scoped memo for the trained IVF coarse quantizer: an IVF
-    * index is trained once and probed many times, so the declared
-    * q_ivf_recall serves from this memo the way the dedup queries
-    * serve from the shingle store. Returns (model, cached (id, v, cid)
-    * corpus assignment). Deterministic (md5-seeded init, decimal-mean
-    * Lloyd), so memoization cannot change results. Dropped by
-    * [[releaseCaches]] — cold-mode benchmarks charge the training to
-    * the query. */
-  private val ivfModelStore = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Seq[(Int, Seq[Double])]]()
+  /** The trained IVF coarse quantizer, memoized: an IVF index is
+    * trained once and probed many times, so the declared q_ivf_recall
+    * serves from this memo the way the dedup queries serve from the
+    * shingle memo. Returns (model, cached (id, v, cid) corpus
+    * assignment). Deterministic (md5-seeded init, decimal-mean Lloyd),
+    * so memoization cannot change results. Dropped by [[releaseCaches]]
+    * — cold-mode benchmarks charge the training to the query. */
   private[queries] def ivfModel(s: org.apache.spark.sql.SparkSession, d: String)
       : (Seq[(Int, Seq[Double])], org.apache.spark.sql.DataFrame) = {
     val corpus = embedNorms(s, d).filter(col("vec_id") >= 10)
-    val key = (s, d)
-    val hit = ivfModelStore.get(key)
-    val model = if (hit != null) hit else {
-      val trained = graft.ops.Similarity.ivfCentroids(
-        corpus, col("vec_id"), col("v"), k = 16, iters = 2)
-      val raced = ivfModelStore.putIfAbsent(key, trained)
-      if (raced != null) raced else trained
-    }
+    val model = memo("ivfmodel", MemoKind.Model, s, d)(ModelMemo(
+      graft.ops.Similarity.ivfCentroids(
+        corpus, col("vec_id"), col("v"), k = 16, iters = 2))).centroids
     val assigned = memoCache("ivfassign", s, d) {
       graft.ops.Similarity.assignClusters(
         corpus.select(col("vec_id").as("id"), col("v")), model)
     }
     (model, assigned)
-  }
-
-  /** Release the session-pinned shingle/band/candidate caches (the
-    * declared dedup queries share them; a long-lived session embedding
-    * this library should call this after a dedup batch completes).
-    * Unpersists the memoized frames and drops the memo entries, so the
-    * next query call rebuilds and re-caches from scratch. */
-  def releaseCaches(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    Seq("restricted", "bands", "shingles", "embednorm", "toktf", "docprof",
-        "eventprof", "candpairs", "shsplit", "shtrain", "sheval", "mhsig",
-        "simsig", "bgcounts", "bgmodel", "jacpairs", "tfidfscore",
-        "ivfassign", "dupcc", "doclens", "cleancorpus").foreach { key =>
-      Option(memoStore.remove((s, d, key))).foreach { df =>
-        df.unpersist()
-        // the dupcc frame reads from a localCheckpoint — its blocks
-        // are pinned on the RDD, not in the CacheManager (no-op for
-        // frames without LogicalRDD leaves)
-        graft.ops.Dedup.freeCheckpointBlocks(df)
-      }
-    }
-    val it = scalarStore.keySet.iterator
-    while (it.hasNext) {
-      val k = it.next()
-      if (k._1 == s && k._2 == d) it.remove()
-    }
-    val it2 = ivfModelStore.keySet.iterator
-    while (it2.hasNext) {
-      val k = it2.next()
-      if (k._1 == s && k._2 == d) it2.remove()
-    }
-    val it3 = bytesStore.keySet.iterator
-    while (it3.hasNext) {
-      val k = it3.next()
-      if (k._1 == s && k._2 == d) it3.remove()
-    }
-    val it4 = pathStore.keySet.iterator
-    while (it4.hasNext) {
-      val k = it4.next()
-      if (k._1 == s && k._2 == d) {
-        // delete the persisted layout before dropping the entry: the
-        // next consumer rebuilds into a FRESH temp dir, so without
-        // this every release→rebuild cycle abandons one dir and a
-        // full gate run leaves O(#memos × #rebuilds) on disk (r14
-        // verdict #7). Nothing can still be reading it — release is
-        // only called between queries, and every consumer goes
-        // through memoPath, which will rebuild.
-        Option(pathStore.get(k)).foreach(deleteRecursively)
-        it4.remove()
-      }
-    }
-  }
-
-  /** Best-effort recursive delete of a memoPath layout dir (children
-    * before parents; races with a concurrent external deletion are
-    * benign — deleteIfExists). */
-  private def deleteRecursively(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } finally walk.close()
-    }
   }
 
   /** The q_media_meta MEDIA layout: one opaque-binary media row per

@@ -66,7 +66,8 @@ class StarServe(spark: SparkSession, starDir: String,
   /** Build the serving index of `snapshot`, the name the pointer gave
     * (never a second `_LATEST` lookup, which could name a newer one). */
   private def build(snapshot: Option[String]): ServeIndex = {
-    val i = ServeIndex.build(spark.read.parquet(factPath(snapshot)), snapshot, dims)
+    val i = ServeIndex.build(
+      graft.streaming.StreamingPipeline.readParquet(spark, factPath(snapshot)), snapshot, dims)
     builds += 1
     i
   }
@@ -89,17 +90,17 @@ class StarServe(spark: SparkSession, starDir: String,
     * same objects, app.py:75-95). */
   def fact: DataFrame = synchronized {
     factCache.getOrElse {
-      val f = spark.read.parquet(factPath(snapshot)).cache()
+      val f = graft.streaming.StreamingPipeline.readParquet(spark, factPath(snapshot)).cache()
       factCache = Some(f)
       f
     }
   }
 
   /** Snapshot mode: re-read the `_LATEST` pointer; when it names a new
-    * snapshot, build that snapshot's serving index (one scan job, after
-    * the schema read Spark's parquet source runs as a job of its own),
-    * publish it with one reference swap, record the new name, and drop
-    * the fact cache pin so the next `fact` call caches the new
+    * snapshot, build that snapshot's serving index (one scan job; the
+    * schema comes from a footer read on the driver), publish it with
+    * one reference swap, record the new name, and drop the fact cache
+    * pin so the next `fact` call caches the new
     * snapshot. Returns true when a swap happened. A build that throws
     * changes nothing — the previous index keeps serving and the
     * recorded name stays, so the next refresh() retries — and the
@@ -124,13 +125,19 @@ class StarServe(spark: SparkSession, starDir: String,
     }
   }
 
-  /** Cached star dimension frames. */
-  lazy val dimStockIndex: DataFrame =
-    spark.read.parquet(s"$starDir/dim_stock_index.parquet").cache()
-  lazy val dimDate: DataFrame =
-    spark.read.parquet(s"$starDir/dim_date.parquet").cache()
-  lazy val dimCountry: DataFrame =
-    spark.read.parquet(s"$starDir/dim_country.parquet").cache()
+  /** Cached star dimension frames, read on first use. */
+  lazy val dimStockIndex: DataFrame = dim("dim_stock_index")
+  lazy val dimDate: DataFrame = dim("dim_date")
+  lazy val dimCountry: DataFrame = dim("dim_country")
+
+  // the dims read so far: release() unpersists only these, so it never
+  // reads (and caches) a dimension just to drop it
+  private var readDims = List.empty[DataFrame]
+  private def dim(name: String): DataFrame = synchronized {
+    val f = spark.read.parquet(s"$starDir/$name.parquet").cache()
+    readDims ::= f
+    f
+  }
 
   /** IndexCode → IndexKey, the sidebar mapping (app.py:97-99), from
     * the dimension collected once. */
@@ -185,7 +192,8 @@ class StarServe(spark: SparkSession, starDir: String,
     factCache = None
     served = null
     recorded = None
-    Seq(dimStockIndex, dimDate, dimCountry).foreach(_.unpersist())
+    readDims.foreach(_.unpersist())
+    readDims = Nil
   }
 }
 

@@ -647,7 +647,7 @@ object StreamingPipeline {
     if (!prevSnapshot.contains(target)) {
       val merged = prevSnapshot match {
         case Some(p) =>
-          val prev = spark.read.parquet(s"$outDir/$p")
+          val prev = readParquet(spark, s"$outDir/$p")
           prev.join(batch, keyCols, "left_anti").unionByName(batch)
         case None => batch
       }
@@ -707,5 +707,27 @@ object StreamingPipeline {
   /** Read the snapshot the `_LATEST` pointer names (see
     * [[awaitLatestSnapshotName]]). */
   def readLatestSnapshot(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/${awaitLatestSnapshotName(spark, outDir)}")
+    readParquet(spark, s"$outDir/${awaitLatestSnapshotName(spark, outDir)}")
+
+  /** `spark.read.parquet(dir)` without Spark's schema-inference job:
+    * the schema is read on the driver from the footer of the dir's
+    * first data file by path — the one file Spark's own inference reads
+    * when `mergeSchema` is off. A dir with no top-level data file
+    * (absent, empty, or partitioned into subdirs) falls back to
+    * `spark.read.parquet`. */
+  private[graft] def readParquet(spark: SparkSession, dir: String): DataFrame = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val entries =
+      try fs.listStatus(path).toSeq.filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      } catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val first =
+      if (entries.exists(_.isDirectory)) None
+      else entries.minByOption(_.getPath.toString)
+    first.flatMap(org.apache.spark.sql.execution.datasources.parquet
+        .FooterBridge.schemaOf(spark, _))
+      .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+  }
 }

@@ -33,10 +33,27 @@ class CacheDisciplineSpec extends AnyFunSuite {
     val during = pinned
     assert((during -- before).nonEmpty,
       "queries are expected to pin shared artifacts while in use")
-    graft.queries.ExtendedQueries.releaseCaches(spark, sfTiny)
+    // one memo of every other kind: a count, a bytes model, a layout
+    // dir (q_ivf_recall above trained the IVF model)
+    val memos = graft.queries.ExtendedQueries
+    assert(memos.memoCount("ntoks", spark, sfTiny)(1L) == 1L)
+    assert(memos.memoBytes("bloomfilter", spark, sfTiny)(Array[Byte](1)).toSeq == Seq[Byte](1))
+    val layout = memos.memoPath("jsonl", spark, sfTiny) { dir =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part"), Array[Byte](1))
+    }
+    assert(Set("ntoks", "bloomfilter", "jsonl", "ivfmodel", "shingles")
+      .subsetOf(memos.liveMemoKeys(spark, sfTiny)))
+    memos.releaseCaches(spark, sfTiny)
     val after = pinned
     assert((after -- before).isEmpty,
       s"blocks still pinned after releaseCaches: ${after -- before}")
+    assert(memos.liveMemoKeys(spark, sfTiny).isEmpty,
+      s"memos still live after releaseCaches: ${memos.liveMemoKeys(spark, sfTiny)}")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(layout)),
+      s"released layout dir $layout is still on disk")
+    // released scalar and bytes memos rebuild from their new builders
+    assert(memos.memoCount("ntoks", spark, sfTiny)(2L) == 2L)
+    assert(memos.memoBytes("bloomfilter", spark, sfTiny)(Array[Byte](2)).toSeq == Seq[Byte](2))
     // the queries still work (and re-pin) after release
     assert(SparkEntry.queries("q_dedup_ngram_jaccard")(spark, sfTiny).count() > 0)
     graft.queries.ExtendedQueries.releaseCaches(spark, sfTiny)

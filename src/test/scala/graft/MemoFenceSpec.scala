@@ -3,14 +3,16 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The untimed-region fence (r18 verdict #6): Bench's disclosed
-  * `prebuilt` warm-up list and the session memo stores are the only
+  * `prebuilt` warm-up list and the session memo registry are the only
   * mechanisms by which work can leave a declared query's timed region.
   * Both are pinned here against a COMMITTED copy, so new
   * precomputation requires a reviewed diff in two files (the source
   * list and this spec) instead of slipping in as one silent line —
-  * and `ExtendedQueries.memoCache`/`memoCount`/`memoBytes`/`memoPath`
-  * reject an unlisted key at build time, so the fence holds even for
-  * code paths no spec exercises.
+  * and the memo registry (`ExtendedQueries.memo`, behind
+  * `memoCache`/`memoCount`/`memoBytes`/`memoPath`/`ivfModel`) rejects
+  * an unlisted key, or a key used as another kind than its declared
+  * one, at build time, so the fence holds even for code paths no spec
+  * exercises.
   *
   * Widening rule: adding a memo is sometimes the RIGHT change (the
   * build-once lifecycle states are all here) — the fence's job is to
@@ -31,17 +33,22 @@ class MemoFenceSpec extends AnyFunSuite {
     "ivfpq_removed_index", "ivfpq_leafwise_index", "jsonl_layout",
     "stream_jsonl_state")
 
-  private val expectedMemoKeys = Set(
-    "bands", "bgcounts", "bgmodel", "candpairs", "cleancorpus", "doclens",
-    "docprof", "dupcc", "embednorm", "eventprof", "ivfassign", "jacpairs",
-    "mhsig", "restricted", "sheval", "shingles", "shsplit", "shtrain",
-    "simsig", "tfidfscore", "toktf",
-    "ndocs", "ntoks",
-    "bloomfilter",
-    "bucketjoin", "cleanids", "compactlayout", "compactpart", "ivfpqadv",
-    "ivfpqindex", "ivfpqleaf", "ivfpqrm", "jsonl", "medialayout", "scd2adv",
-    "sketchroll", "skiplayout", "streamagg", "streamband", "streamcdc",
-    "streamjsonl", "streamscd2")
+  private val expectedMemoKeys: Map[String, ExtendedQueries.MemoKind] = {
+    import ExtendedQueries.MemoKind._
+    Seq(
+      "bands", "bgcounts", "bgmodel", "candpairs", "cleancorpus", "doclens",
+      "docprof", "dupcc", "embednorm", "eventprof", "ivfassign", "jacpairs",
+      "mhsig", "restricted", "sheval", "shingles", "shsplit", "shtrain",
+      "simsig", "tfidfscore", "toktf").map(_ -> Frame) ++
+    Seq("ndocs", "ntoks").map(_ -> Count) ++
+    Seq("bloomfilter").map(_ -> Bytes) ++
+    Seq(
+      "bucketjoin", "cleanids", "compactlayout", "compactpart", "ivfpqadv",
+      "ivfpqindex", "ivfpqleaf", "ivfpqrm", "jsonl", "medialayout", "scd2adv",
+      "sketchroll", "skiplayout", "streamagg", "streamband", "streamcdc",
+      "streamjsonl", "streamscd2").map(_ -> Path) ++
+    Seq("ivfmodel").map(_ -> Model)
+  }.toMap
 
   test("Bench.prebuilt matches the committed allowlist exactly") {
     assert(graft.Bench.prebuilt == expectedPrebuilt,
@@ -52,15 +59,36 @@ class MemoFenceSpec extends AnyFunSuite {
   test("memo key allowlist matches the committed copy exactly") {
     val actual = ExtendedQueries.allowedMemoKeys
     assert(actual == expectedMemoKeys,
-      s"memo allowlist drift — added: ${actual -- expectedMemoKeys}, " +
-        s"removed: ${expectedMemoKeys -- actual}")
+      s"memo allowlist drift — added: ${actual.toSet -- expectedMemoKeys}, " +
+        s"removed: ${expectedMemoKeys.toSet -- actual}")
   }
 
   test("an unlisted memo key is rejected at build time") {
-    val e = intercept[IllegalArgumentException] {
-      ExtendedQueries.memoCount("sneaky_precompute", spark, sfTiny) { 42L }
+    import ExtendedQueries.MemoKind._
+    def rejected(key: String)(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(key), e.getMessage)
     }
-    assert(e.getMessage.contains("sneaky_precompute"))
+    // every entry point, and the registry itself for every kind — the
+    // fence rejects before building, so no builder below ever runs
+    rejected("sneaky_precompute") {
+      ExtendedQueries.memoCache("sneaky_precompute", spark, sfTiny) { fail("built") } }
+    rejected("sneaky_precompute") {
+      ExtendedQueries.memoCount("sneaky_precompute", spark, sfTiny) { 42L } }
+    rejected("sneaky_precompute") {
+      ExtendedQueries.memoBytes("sneaky_precompute", spark, sfTiny) { fail("built") } }
+    rejected("sneaky_precompute") {
+      ExtendedQueries.memoPath("sneaky_precompute", spark, sfTiny) { _ => fail("built") } }
+    Seq(Frame, Count, Bytes, Path, Model).foreach { kind =>
+      rejected("sneaky_precompute") {
+        ExtendedQueries.memo[ExtendedQueries.Memo]("sneaky_precompute", kind, spark, sfTiny) {
+          fail("built") } }
+    }
+    // a listed key used as another kind than its declared one
+    rejected("ndocs") { ExtendedQueries.memoBytes("ndocs", spark, sfTiny) { fail("built") } }
+    rejected("shingles") { ExtendedQueries.memoCount("shingles", spark, sfTiny) { 42L } }
+    rejected("ivfmodel") {
+      ExtendedQueries.memoPath("ivfmodel", spark, sfTiny) { _ => fail("built") } }
     // and the listed keys still work (the fence rejects, not breaks) —
     // released right after so no scalar memo from this spec outlives it
     assert(ExtendedQueries.memoCount("ndocs", spark, sfTiny) { 7L } == 7L)

@@ -260,10 +260,40 @@ class ServeIndexSpec extends AnyFunSuite {
       }
       assert(reads == 0, s"$reads Spark jobs across 20 reads")
       batch(101.5, 1L)
-      // the build scans the snapshot in one job; Spark's parquet source
-      // infers the new snapshot's schema in a job of its own
+      // the build scans the snapshot in one job; its schema comes from a
+      // footer read on the driver, not from a schema-inference job
       val refresh = jobsDuring(assert(post(s"${http.url}/refresh").body() == """{"swapped":true}"""))
-      assert(refresh <= 2, s"$refresh jobs in one refresh")
+      assert(refresh <= 1, s"$refresh jobs in one refresh")
+    }
+    // releasing a serve layer that never read its dims or built its
+    // index reads nothing
+    val fresh = StarServe.fromStreamingSnapshots(spark, starDir, snapDir)
+    val release = jobsDuring(fresh.release())
+    assert(release == 0, s"$release jobs in release() of a fresh StarServe")
+  }
+
+  test("footer schema read: equals Spark's inferred schema, with no Spark job") {
+    val static = new StarServe(spark, starDir)
+    val key = static.indexKeyFor("^GSPC").get
+    static.release()
+    val wideDir = Files.createTempDirectory("graft_footer_wide").toString
+    StreamingPipeline.applyUpsertBatch(spark.read.parquet(s"$starDir/fact_table.parquet"),
+      0L, Seq("IndexKey", "DateKey"), wideDir, "wide")
+    val narrowDir = Files.createTempDirectory("graft_footer_narrow").toString
+    locally {
+      import spark.implicits._
+      StreamingPipeline.applyUpsertBatch(
+        Seq((key, java.sql.Date.valueOf("2024-03-01"), 100.0, null: java.lang.Double))
+          .toDF("IndexKey", "DateKey", "Close", "GDPGrowthRate"),
+        0L, Seq("IndexKey", "DateKey"), narrowDir, "narrow")
+    }
+    Seq(wideDir, narrowDir).foreach { d =>
+      val dir = s"$d/${StreamingPipeline.awaitLatestSnapshotName(spark, d)}"
+      var schema: org.apache.spark.sql.types.StructType = null
+      val jobs = jobsDuring { schema = StreamingPipeline.readParquet(spark, dir).schema }
+      assert(jobs == 0, s"$jobs jobs reading the schema of $dir")
+      assert(schema == spark.read.parquet(dir).schema, dir)
+      assert(schema.length == (if (d == wideDir) 12 else 4), schema)
     }
   }
 
