@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Per-stage byte counters fed by task-end events. Timing on this
@@ -62,77 +62,180 @@ object Bench {
     * it without running a bench. */
   val prebuilt: Seq[String] = graft.queries.ExtendedQueries.prebuiltMemos.map(_.name)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Log quieting lives in src/main/resources/graft-quiet-log4j2
-    // .properties (root=error), activated by the -Dlog4j2
-    // .configurationFile option build.sbt sets for `run`/`runMain` —
-    // it is NOT auto-discovered, so launching outside sbt (spark-
-    // submit / java -cp) must pass that option itself. A config
-    // present at logger init is the only thing that beats Spark's own
-    // default-config install, which happens during session
-    // construction — before setLogLevel could run.
-    // A/B knob for floor attribution (default = cpus, the committed
-    // methodology): how much of the per-query floor is reducer count?
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // A/B knob for the shuffle-block codec (optimization guide §2.3:
-    // "There is no universal answer — measure shuffle bytes written
-    // and stage time with each"). Default = Spark's own default (lz4)
-    // so the driver's bench and the byte pins are unchanged; zstd is
-    // the candidate where shuffle crosses a real network (better
-    // ratio for more CPU). Non-default values deactivate the plan
-    // pins below: shuffle_mb budgets are compressed-byte budgets.
-    val ioCodec = sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Always use the sort-based shuffle writer (1 data file + index
-      // per map task). The default bypass-merge path (kicks in ≤200
-      // reduce partitions) creates one file PER REDUCER per map task —
-      // 32×32 tiny file creates per shuffle, ~0.35 s/stage of pure
-      // filesystem metadata on this container; measured 3.5× faster
-      // per shuffle stage with the sort writer. Real clusters run
-      // >200 reduce partitions and take this path anyway.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.io.compression.codec", ioCodec)
-      .getOrCreate()
+  /** `SPARK_GRAFT_SF_DIR` (default sf0.1): the scale-factor dir Bench
+    * and Profile run against. */
+  def envSfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Bench's session: the shared policy at `SPARK_GRAFT_CPUS` cores.
+    * Log quieting lives in src/main/resources/graft-quiet-log4j2
+    * .properties (root=error), activated by the -Dlog4j2
+    * .configurationFile option build.sbt sets for `run`/`runMain` —
+    * it is NOT auto-discovered, so launching outside sbt (spark-
+    * submit / java -cp) must pass that option itself. A config
+    * present at logger init is the only thing that beats Spark's own
+    * default-config install, which happens during session
+    * construction — before setLogLevel could run. */
+  def session(): SparkSession = {
+    val spark = SparkEntry.session(SparkEntry.envCpus).getOrCreate()
     // Belt-and-braces with the resources config: the benchmark's only
     // contract is the one JSON result line, and any stray WARN
     // (CacheManager, WindowExec, Hadoop native-lib, …) on stderr has
     // broken the harness's tail parse before.
     spark.sparkContext.setLogLevel("ERROR")
-    // Untimed JVM warm-up: exercise codegen, shuffle, window, join and
-    // the parquet reader on the two tiny dimension tables so the first
-    // timed query doesn't absorb JIT + first-codegen cost.
-    locally {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      val r = spark.read.parquet(s"$sfDir/region.parquet")
-      val n = spark.read.parquet(s"$sfDir/nation.parquet")
-      n.join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name")).agg(count(lit(1)).as("c"), sum(col("n_nationkey")).as("s"))
-        // real partition key: partitionBy(lit) = "no partitioning" and
-        // logs a WindowExec WARN per run — noise in the driver's tail
-        .withColumn("rk", rank().over(Window.partitionBy(col("r_name")).orderBy(col("c"))))
-        .orderBy(col("r_name")).collect()
-      // Build every disclosed memo artifact (caches, persisted layouts,
-      // streamed-then-published states) with its cheapest consumer, in
-      // `prebuilt` order, so per-query timings measure the queries, not
-      // the one-time builds — a RUNS=1 sweep would otherwise charge each
-      // build to its query's only timed run. Declared in the emitted
-      // JSON as "warm_cache"/"prebuilt": the DuckDB oracle recomputes
-      // the equivalent work per query, so cross-engine totals differ by
-      // these one-time builds unless consumers account for them.
-      graft.queries.ExtendedQueries.prebuiltMemos.foreach(p =>
-        SparkEntry.queries(p.warmQuery)(spark, sfDir).count())
+    spark
+  }
+
+  /** Untimed JVM warm-up: exercise codegen, shuffle, window, join and
+    * the parquet reader on the two tiny dimension tables so the first
+    * timed query doesn't absorb JIT + first-codegen cost. */
+  def warmJvm(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    val r = spark.read.parquet(s"$sfDir/region.parquet")
+    val n = spark.read.parquet(s"$sfDir/nation.parquet")
+    n.join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
+      .groupBy(col("r_name")).agg(count(lit(1)).as("c"), sum(col("n_nationkey")).as("s"))
+      // real partition key: partitionBy(lit) = "no partitioning" and
+      // logs a WindowExec WARN per run — noise in the driver's tail
+      .withColumn("rk", rank().over(Window.partitionBy(col("r_name")).orderBy(col("c"))))
+      .orderBy(col("r_name")).collect()
+  }
+
+  /** The (shuffle MB, input MB, stages) budget maps pinned at `sfDir`'s
+    * scale factor, if it is one of the two pinned ones. */
+  private[graft] def budgetsFor(sfDir: String)
+      : Option[(Map[String, Double], Map[String, Double], Map[String, Int])] =
+    if (sfDir.endsWith("sf0.1"))
+      Some((PlanBudgets.shuffleMbAtSf01, PlanBudgets.inputMbAtSf01,
+        PlanBudgets.stagesAtSf01))
+    else if (sfDir.endsWith("sf0.01"))
+      Some((PlanBudgets.shuffleMbAtSf001, PlanBudgets.inputMbAtSf001,
+        PlanBudgets.stagesAtSf001))
+    else None
+
+  /** The plan-pin rule: budgets are baselined under the driver's exact
+    * configuration only — 32 reducers (leaf split planning, and with
+    * it map-side-combine output, is parallelism-dependent), AQE on,
+    * the lz4 codec (shuffle budgets are compressed-byte budgets), a
+    * full sweep, at a pinned SF. Any override (a `-Dspark.*` A/B, a
+    * BENCH_ONLY subset) legitimately changes bytes and stage counts,
+    * so it deactivates the pins rather than misfiring. A pure function
+    * of the conf values `pinConf` reads from the live session. */
+  private[graft] def planPinsActive(conf: Map[String, String], sfDir: String,
+      only: Set[String]): Boolean =
+    budgetsFor(sfDir).nonEmpty && only.isEmpty &&
+      conf.get("spark.sql.shuffle.partitions").contains("32") &&
+      conf.get("spark.sql.adaptive.enabled").contains("true") &&
+      conf.get("spark.io.compression.codec").contains("lz4")
+
+  /** The conf values `planPinsActive` reads, as the live session has
+    * them (Spark's defaults where unset). */
+  private[graft] def pinConf(spark: SparkSession): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> spark.conf.get("spark.sql.shuffle.partitions"),
+    "spark.sql.adaptive.enabled" -> spark.conf.get("spark.sql.adaptive.enabled"),
+    "spark.io.compression.codec" ->
+      spark.sparkContext.getConf.get("spark.io.compression.codec", "lz4"))
+
+  private[graft] def mb(b: Long): Double =
+    if (b < 0) -1.0 else math.round(b / 1048576.0 * 1000.0) / 1000.0
+
+  /** What one counting run of a query scheduled: its jobs (id → stage
+    * ids, as the status tracker lists them), their distinct stages, and
+    * the shuffle-write / input-read bytes summed over those stages. */
+  private[graft] final case class Counted(jobs: Seq[(Int, Seq[Int])],
+      stageIds: Seq[Int], shuffleWrite: Long, input: Long)
+
+  /** Counting runs: one run of a freshly built query under its own job
+    * group, its stages read from the public status tracker (includes
+    * stages skipped via shuffle reuse — "what the query schedules",
+    * which is what the floor multiplies) and its bytes from a
+    * [[StageBytesListener]], registered on construction. Task-end
+    * events are delivered async; the sums are read after a bounded
+    * settle loop (stage-completed coverage, with a long stability
+    * fallback — see `settle`) so a lagging bus cannot undercount.
+    * Skipped stages (shuffle reuse) have no task events and correctly
+    * contribute 0 — a counting run builds a FRESH frame, so its own
+    * exchanges all execute. Bench's stage/byte pass and
+    * `Profile jobs` both count through this. */
+  private[graft] final class Counter(spark: SparkSession) {
+    private val bytesListener = new StageBytesListener
+    spark.sparkContext.addSparkListener(bytesListener)
+
+    private def bytes(stageIds: Seq[Int]): (Long, Long) =
+      (stageIds.map(bytesListener.shuffleWrite.getOrElse(_, 0L)).sum,
+        stageIds.map(bytesListener.input.getOrElse(_, 0L)).sum)
+
+    // Settle on the task-count invariant, not value stability alone
+    // (r12 ADVICE: two identical readings 50 ms apart can coincide
+    // with a >50 ms bus stall or GC pause and silently undercount).
+    // Primary condition: every stage in the set has its
+    // stage-completed event delivered — by bus FIFO that implies all
+    // its task-end bytes are summed (see StageBytesListener.completed)
+    // — which is also the instant fast path for the common all-stages-
+    // executed case. Stages with NO events (shuffle-reuse skips never
+    // submit) can't complete, so for those fall back to a far longer
+    // stability horizon: 4 consecutive identical readings 100 ms
+    // apart (a stall must now span 400 ms, not 50, to fake
+    // quiescence). One settle per query covers both byte maps.
+    private def settle(stageIds: Seq[Int]): Unit = {
+      var stable = 0
+      var prev = (-1L, -1L)
+      var spins = 0
+      while (spins < 100 &&
+          !stageIds.forall(bytesListener.completed.contains) &&
+          stable < 4) {
+        val cur = bytes(stageIds)
+        stable = if (cur == prev) stable + 1 else 0
+        prev = cur
+        Thread.sleep(100)
+        spins += 1
+      }
     }
+
+    /** Build and run `name` once via [[benchAction]]; None when the
+      * build or the run failed. NonFatal only: a fatal error (OOM,
+      * interrupt) must propagate, not be read as a completed counting
+      * run. */
+    def run(name: String, build: => DataFrame): Option[Counted] = {
+      val sc = spark.sparkContext
+      val group = s"graft-bench-$name"
+      sc.setJobGroup(group, name)
+      try {
+        val ok =
+          try { benchAction(build); true }
+          catch { case scala.util.control.NonFatal(_) => false }
+        if (!ok) None
+        else {
+          val tr = sc.statusTracker
+          val jobs = tr.getJobIdsForGroup(group).toSeq.sorted.map(id =>
+            id -> tr.getJobInfo(id).toSeq.flatMap(_.stageIds.map(_.toInt)))
+          // distinct: AQE materializes each exchange as its own job,
+          // and jobs re-list upstream stages they share — summing per
+          // job would double-count the common prefix
+          val stageIds = jobs.flatMap(_._2).distinct
+          settle(stageIds)
+          val (shuffleWrite, input) = bytes(stageIds)
+          Some(Counted(jobs, stageIds, shuffleWrite, input))
+        }
+      } finally sc.clearJobGroup()
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = envSfDir
+    val spark = session()
+    warmJvm(spark, sfDir)
+    // Build every disclosed memo artifact (caches, persisted layouts,
+    // streamed-then-published states) with its cheapest consumer, in
+    // `prebuilt` order, so per-query timings measure the queries, not
+    // the one-time builds — a RUNS=1 sweep would otherwise charge each
+    // build to its query's only timed run. Declared in the emitted
+    // JSON as "warm_cache"/"prebuilt": the DuckDB oracle recomputes
+    // the equivalent work per query, so cross-engine totals differ by
+    // these one-time builds unless consumers account for them.
+    graft.queries.ExtendedQueries.prebuiltMemos.foreach(p =>
+      SparkEntry.queries(p.warmQuery)(spark, sfDir).count())
     // Three timed runs per query, min reported (declared in the JSON).
     // This VM shows multi-second scheduler stalls at random (observed
     // 2-4x inflation on single runs with an idle host); min-of-N keeps
@@ -146,13 +249,13 @@ object Bench {
     val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
-    // One timed query: the min of `runsN` runs, or the -1 sentinel when
+    // One timed query: the min of `runs` runs, or the -1 sentinel when
     // any run failed, with the failure's class and message kept in
     // `errors` (emitted on the full line). NonFatal only: a fatal error
     // (OOM, interrupt) must stop the sweep, not become a causeless -1.
     val errors = scala.collection.mutable.TreeMap[String, String]()
-    def timed(name: String, runsN: Int): Double = {
-      val times = (1 to runsN).map { _ =>
+    def timed(name: String): Double = {
+      val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
         try {
           benchAction(SparkEntry.queries(name)(spark, sfDir))
@@ -164,13 +267,6 @@ object Bench {
       }
       if (times.contains(-1.0)) -1.0 else times.min
     }
-    def timedPass(runsN: Int, coldEachQuery: Boolean): Map[String, Double] =
-      SparkEntry.queries.keys
-        .filter(name => only.isEmpty || only(name))
-        .map { name =>
-          if (coldEachQuery) graft.queries.ExtendedQueries.releaseCaches(spark, sfDir)
-          name -> timed(name, runsN)
-        }.toMap
     def toJson(m: Map[String, Double]): String =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     // Floor calibration: a constant two-stage query (tiny scan →
@@ -214,7 +310,7 @@ object Bench {
       .map { case ((name, _), i) =>
         if (i > 0 && i % probeEvery == 0) floorProbes += floorProbe()
         segmentOf(name) = floorProbes.size - 1
-        name -> timed(name, runs)
+        name -> timed(name)
       }.toMap
     // Final reading after the timed pass (r14 verdict #2) — with the
     // interleaved probes it closes the LAST segment's bracket; the
@@ -224,10 +320,8 @@ object Bench {
     val floorSec = floorProbes.head
     val floorSecAfter = floorProbes.last
     // Per-query PLANNED-STAGE counts, measured (not plan-guessed): one
-    // extra run per query under a job group, stages summed from the
-    // public status tracker (includes stages skipped via shuffle
-    // reuse — "what the query schedules", which is what the floor
-    // multiplies). Purpose: floor-normalize the per-query report.
+    // extra counting run per query (see Counter). Purpose: floor-
+    // normalize the per-query report.
     // floor_sec measures a TWO-stage probe, so floor_per_stage_sec =
     // floor_sec/2 is the scheduling cost of one materialized stage —
     // an UPPER bound per AQE stage (tiny AQE sub-stages run cheaper
@@ -237,79 +331,17 @@ object Bench {
     // DuckDB twin (q_intersect, q_except, …) carries no engine
     // signal.
     // The same counting run also yields each query's deterministic
-    // byte costs: its distinct stage IDs are summed against the
-    // listener's per-stage shuffle-write / input-read tallies. Task-end
-    // events are delivered async; the sums are read after a bounded
-    // settle loop (stage-completed coverage, with a long stability
-    // fallback — see settleStages) so a lagging bus cannot
-    // undercount. Skipped stages (shuffle reuse) have no
-    // task events and correctly contribute 0 — the counting run builds
-    // a FRESH frame, so its own exchanges all execute.
-    val bytesListener = new StageBytesListener
-    spark.sparkContext.addSparkListener(bytesListener)
-    // Settle on the task-count invariant, not value stability alone
-    // (r12 ADVICE: two identical readings 50 ms apart can coincide
-    // with a >50 ms bus stall or GC pause and silently undercount).
-    // Primary condition: every stage in the set has its
-    // stage-completed event delivered — by bus FIFO that implies all
-    // its task-end bytes are summed (see StageBytesListener.completed)
-    // — which is also the instant fast path for the common all-stages-
-    // executed case. Stages with NO events (shuffle-reuse skips never
-    // submit) can't complete, so for those fall back to a far longer
-    // stability horizon: 4 consecutive identical readings 100 ms
-    // apart (a stall must now span 400 ms, not 50, to fake
-    // quiescence). One settle per query covers both byte maps.
-    def settleStages(stageIds: Seq[Int]): Unit = {
-      def reading(): (Long, Long) =
-        (stageIds.map(bytesListener.shuffleWrite.getOrElse(_, 0L)).sum,
-          stageIds.map(bytesListener.input.getOrElse(_, 0L)).sum)
-      var stable = 0
-      var prev = (-1L, -1L)
-      var spins = 0
-      while (spins < 100 &&
-          !stageIds.forall(bytesListener.completed.contains) &&
-          stable < 4) {
-        val cur = reading()
-        stable = if (cur == prev) stable + 1 else 0
-        prev = cur
-        Thread.sleep(100)
-        spins += 1
-      }
-    }
+    // byte costs. A query whose counting run failed reports the
+    // sentinel -1 so a partial job/stage count is never mistaken for
+    // the planned-stage truth in the floor-normalization rule.
+    val counter = new Counter(spark)
     val stageStats: Map[String, (Int, Long, Long)] = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
-        val group = s"graft-bench-$name"
-        spark.sparkContext.setJobGroup(group, name)
-        val n = try {
-          // NonFatal only: a fatal error (OOM, interrupt) must
-          // propagate, not be read as a completed counting run. A
-          // query whose counting run failed reports the sentinel -1
-          // so a partial job/stage count is never mistaken for the
-          // planned-stage truth in the floor-normalization rule.
-          val ok =
-            try { benchAction(fn(spark, sfDir)); true }
-            catch { case scala.util.control.NonFatal(_) => false }
-          if (!ok) (-1, -1L, -1L)
-          else {
-            val tr = spark.sparkContext.statusTracker
-            // distinct: AQE materializes each exchange as its own job,
-            // and jobs re-list upstream stages they share — summing per
-            // job would double-count the common prefix
-            val stageIds = tr.getJobIdsForGroup(group).flatMap(id =>
-              tr.getJobInfo(id).toSeq.flatMap(_.stageIds.map(_.toInt)))
-              .distinct.toSeq
-            settleStages(stageIds)
-            (stageIds.length,
-              stageIds.map(bytesListener.shuffleWrite.getOrElse(_, 0L)).sum,
-              stageIds.map(bytesListener.input.getOrElse(_, 0L)).sum)
-          }
-        } finally spark.sparkContext.clearJobGroup()
-        name -> n
+        name -> counter.run(name, fn(spark, sfDir)).fold((-1, -1L, -1L))(c =>
+          (c.stageIds.length, c.shuffleWrite, c.input))
       }
     val stageCounts: Map[String, Int] = stageStats.map { case (k, v) => k -> v._1 }
-    def mb(b: Long): Double =
-      if (b < 0) -1.0 else math.round(b / 1048576.0 * 1000.0) / 1000.0
     val shuffleMb: Map[String, Double] =
       stageStats.map { case (k, v) => k -> mb(v._2) }
     val inputMb: Map[String, Double] =
@@ -363,29 +395,13 @@ object Bench {
     // 0.5 MB absolute floor (bytes) / measured + 1 (stages — a small
     // new exchange can hide under the byte floor but not from the
     // stage count); active only under the driver's exact
-    // configuration (sf0.1, full sweep, default CPUs) because leaf
-    // split planning — and with it map-side-combine output — is
-    // parallelism-dependent.
-    // The A/B knobs (reducer count, AQE off) legitimately change
-    // bytes and stage counts — pins are baselined under the driver's
-    // exact configuration only, so any override deactivates them
-    // rather than misfiring. Budgets exist for TWO scale factors
+    // configuration (see planPinsActive). Budgets exist for TWO scale factors
     // (r12 ADVICE: a single-config pin missed scale-dependent plan
     // regressions — broadcast-threshold flips, AQE coalesce changes):
     // sf0.1 (the driver's bench SF) and sf0.01 (the driver's
     // correctness SF, checked by gate.sh step 5's second sweep).
-    val budgetMaps: Option[(Map[String, Double], Map[String, Double], Map[String, Int])] =
-      if (sfDir.endsWith("sf0.1"))
-        Some((PlanBudgets.shuffleMbAtSf01, PlanBudgets.inputMbAtSf01,
-          PlanBudgets.stagesAtSf01))
-      else if (sfDir.endsWith("sf0.01"))
-        Some((PlanBudgets.shuffleMbAtSf001, PlanBudgets.inputMbAtSf001,
-          PlanBudgets.stagesAtSf001))
-      else None
-    val planPinsActive =
-      budgetMaps.nonEmpty && only.isEmpty && cpus == "32" &&
-        shufflePartitions == cpus && ioCodec == "lz4" &&
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true") == "true"
+    val budgetMaps = budgetsFor(sfDir)
+    val planPinsActive = Bench.planPinsActive(pinConf(spark), sfDir, only)
     def bytePinFailures(measured: Map[String, Double],
         budgets: Map[String, Double]): Seq[String] =
       if (!planPinsActive) Seq.empty
@@ -407,18 +423,6 @@ object Bench {
     // separately — a failed query must not SUBTRACT from the metric.
     val failed = results.values.count(_ < 0)
     val total = results.values.filter(_ >= 0).sum
-    // Disclosed cold mode (SPARK_GRAFT_BENCH_COLD=1): a second pass,
-    // single run per query, releasing the shared dedup caches before
-    // every query — i.e. each query pays its full input build with no
-    // cross-query reuse. Reported ALONGSIDE the warm numbers so both
-    // are on the record; the primary metric stays warm (matching the
-    // declared warm_cache flag the driver has graded two rounds).
-    val coldFields =
-      if (sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("1")) {
-        val cold = timedPass(1, coldEachQuery = true)
-        val coldTotal = cold.values.filter(_ >= 0).sum
-        s""","cold_total":$coldTotal,"cold_queries":${toJson(cold)}"""
-      } else ""
     val shuffleTotalMb = math.round(
       shuffleMb.values.filter(_ >= 0).sum * 1000.0) / 1000.0
     // Contention-self-normalizing engine signal (r15 verdict #4): the
@@ -451,8 +455,9 @@ object Bench {
         if (st > 0) math.max(0.0, w - st * floorPerStageFor(qn)) else w
     }.sum * 1000.0) / 1000.0
     // plan_pins_active is EMITTED (not just used): tools/gate.sh step 5
-    // asserts it true so an inherited SPARK_GRAFT_CPUS/SHUFFLE/AQE
-    // export can never make the gate pass vacuously with the budgets
+    // asserts it true so an inherited SPARK_GRAFT_CPUS/BENCH_ONLY
+    // export or -Dspark.* override can never make the gate pass
+    // vacuously with the budgets
     // silently deactivated (r12 ADVICE).
     val planPinFields = s""""plan_pins_active":$planPinsActive,"shuffle_pin_failures":[${shufflePinFailures.mkString(",")}],"input_pin_failures":[${inputPinFailures.mkString(",")}],"stage_pin_failures":[${stagePinFailures.mkString(",")}]"""
     // every interleaved reading, in sweep order — the archived
@@ -469,7 +474,7 @@ object Bench {
     val errorsJson = errors.map { case (q, e) => "\"" + q + "\":" + jsonString(e) }
       .mkString("{", ",", "}")
     val prebuiltJson = prebuilt.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"n_queries":${results.size},"runs_per_query":$runs,"agg":"min","warm_cache":true,"prebuilt":$prebuiltJson,"floor_sec":$floorSec,"floor_per_stage_sec":${floorSec / 2},"floor_after_sec":$floorSecAfter,"floor_probes":$floorProbesJson,"floorline_excess_sec":$floorlineExcessSec,"pin_failures":[${pinFailures.mkString(",")}],$planPinFields,"shuffle_mb_total":$shuffleTotalMb$coldFields,"queries":${toJson(results)},"stages":${toJsonInt(stageCounts)},"shuffle_mb":${toJson(shuffleMb)},"input_mb":${toJson(inputMb)},"sf":"$sfDir","errors":$errorsJson}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"n_queries":${results.size},"runs_per_query":$runs,"agg":"min","warm_cache":true,"prebuilt":$prebuiltJson,"floor_sec":$floorSec,"floor_per_stage_sec":${floorSec / 2},"floor_after_sec":$floorSecAfter,"floor_probes":$floorProbesJson,"floorline_excess_sec":$floorlineExcessSec,"pin_failures":[${pinFailures.mkString(",")}],$planPinFields,"shuffle_mb_total":$shuffleTotalMb,"queries":${toJson(results)},"stages":${toJsonInt(stageCounts)},"shuffle_mb":${toJson(shuffleMb)},"input_mb":${toJson(inputMb)},"sf":"$sfDir","errors":$errorsJson}"""
     println(fullLine)
     // Loss-proof copy of the FULL line (r18 verdict #1): the archived
     // BENCH_r17.json kept only the short re-emit because the full line

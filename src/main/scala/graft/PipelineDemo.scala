@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.etl.StarSchemaBuilder
 import graft.ops.{Dedup, Multimodal, Similarity}
@@ -13,14 +12,7 @@ import graft.ops.{Dedup, Multimodal, Similarity}
   * outputs, printed summaries. */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .getOrCreate()
+    val spark = SparkEntry.session(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val sf = "/root/testdata/sf0.001"

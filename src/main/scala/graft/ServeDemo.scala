@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import graft.etl.StarSchemaBuilder
 import graft.serve.{StarServe, StarServeHttp}
 
@@ -14,12 +13,7 @@ import graft.serve.{StarServe, StarServeHttp}
 object ServeDemo {
   def main(args: Array[String]): Unit = {
     val port = if (args.nonEmpty) args(0).toInt else 0
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val landing = Files.createTempDirectory("graft_servedemo_landing").toString

@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner: exercises SparkEntry.entry the way the driver's t1
   * gate does (rows > 0 on sf0.001) and prints the plan + row count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .getOrCreate()
+    val spark = SparkEntry.session(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     df.explain("formatted")

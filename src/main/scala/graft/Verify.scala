@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,28 +17,10 @@ object Verify {
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = SparkEntry.session(SparkEntry.envCpus)
       // Write micros (not INT96) so the driver's parquet reader sees the
       // same physical timestamp type DuckDB produces.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.parquet carries TIMESTAMP(NANOS): read as long, converted
-      // to micro timestamps in graft.queries.t().
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // sort-based shuffle writer: see Bench.scala — 3.5× less per-
-      // stage filesystem overhead than the ≤200-partition bypass path
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // Same A/B knob as Bench (r19, r18-verdict #5): default lz4 =
-      // Spark's default, so the driver's dump is byte-identical to
-      // before; non-default lets a zstd gate run prove the production
-      // codec candidate END-TO-END (oracle burnin over results
-      // computed under zstd shuffle), not just time it.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

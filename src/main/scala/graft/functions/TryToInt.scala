@@ -16,7 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * context — is constructed per failing row: measured ~8 µs/row,
   * which made q_try_semantics' 150 k all-failing rows cost 1.33 s of
   * pure exception churn inside an otherwise 0.2 s aggregate (r15
-  * honest-bench flag, 30× DuckDB — the probe is TimeProbe). DuckDB's
+  * honest-bench flag, 30× DuckDB — measured with `TimeProbe` of
+  * commit d8ec3f6, since deleted). DuckDB's
   * TRY_CAST returns its failure flag without unwinding, which is the
   * entire 30×. This kernel takes the same exception-free path Spark's
   * LEGACY cast uses — `UTF8String.trimAll().toInt(IntWrapper)`, a

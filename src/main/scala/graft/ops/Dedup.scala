@@ -601,7 +601,8 @@ object Dedup {
     // + aggregate out of the broadcast-build job; the default guards
     // the public API at candidate-bounded cost.
     val p = pairs.select(col("id1"), col("id2"))
-    val bp = broadcast(if (pairsDistinct) p else p.distinct())
+    val distinctPairs = if (pairsDistinct) p else p.distinct()
+    val bp = broadcast(distinctPairs)
     if (sh.columns.contains("n")) {
       // pre-sized input (a persisted sized-shingle table — the
       // repeated-verify shape): sizes ride THROUGH the intersection
@@ -622,9 +623,12 @@ object Dedup {
       // occurrence just to size the sets. The size table is semi-
       // joined down to candidate documents before broadcasting, so
       // both broadcasts stay candidate-bounded at any corpus size.
+      // candIds reads the UNHINTED pairs: under a projection and a
+      // union the broadcast hint is not on a join side, and Spark
+      // drops it with a HintErrorLogger WARN (IgnoredHintSpec).
       val plain = sh.select(col("id"), col("s"))
-      val candIds = bp.select(col("id1").as("id"))
-        .union(bp.select(col("id2").as("id"))).distinct()
+      val candIds = distinctPairs.select(col("id1").as("id"))
+        .union(distinctPairs.select(col("id2").as("id"))).distinct()
       val sizes = plain.join(candIds, Seq("id"), "left_semi")
         .groupBy(col("id")).agg(count(lit(1)).as("n"))
       bp.join(plain.select(col("id").as("id1"), col("s")), Seq("id1"))

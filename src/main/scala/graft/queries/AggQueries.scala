@@ -246,7 +246,8 @@ object AggQueries {
     // r15 re-plan (honest-bench flag, 30× DuckDB): TRY-mode string→int
     // on an all-failing column pays a CONSTRUCTED SparkNumberFormat-
     // Exception per row (~8 µs — 1.33 s of the query's 1.43 s,
-    // TimeProbe); `graft_try_to_int` is the exception-free kernel with
+    // `TimeProbe` of commit d8ec3f6, since deleted); `graft_try_to_int`
+    // is the exception-free kernel with
     // spec-pinned per-value parity against try_cast. The always-
     // castable substr branch and try_divide keep the literal try_
     // surface (their failure paths are exception-free already).

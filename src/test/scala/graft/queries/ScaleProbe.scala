@@ -22,12 +22,7 @@ object ScaleProbe {
   private val Work = "/tmp/graft_scale"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkEntry.session(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
 

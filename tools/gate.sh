@@ -34,17 +34,18 @@ echo "== [4/6] PlanAudit =="
 sbt -batch "Test/runMain graft.queries.PlanAudit"
 
 echo "== [5/6] plan-cost pins (shuffle/input/stage budgets, both pinned SFs) =="
-# Pin every knob that gates Bench's planPinsActive to the driver's
-# exact configuration (and clear BENCH_ONLY), so an inherited export
-# can never deactivate the budgets and let this step pass vacuously.
-# Bench emits plan_pins_active; the assert below is the backstop.
+# Pin the env knobs that gate Bench's planPinsActive to the driver's
+# exact configuration (32 CPUs, BENCH_ONLY cleared), so an inherited
+# export can never deactivate the budgets and let this step pass
+# vacuously. AQE and the shuffle codec are Spark's own conf at their
+# defaults; Bench emits plan_pins_active, and the assert below is the
+# backstop against a -Dspark.* override.
 # Two sweeps: sf0.1 (the driver's bench SF) and sf0.01 (the driver's
 # correctness SF) — the second config catches parallelism/scale-
 # dependent plan regressions a single-SF pin misses.
 for pinsf in sf0.1 sf0.01; do
   SPARK_GRAFT_SF_DIR=/root/testdata/${pinsf} SPARK_GRAFT_BENCH_RUNS=1 \
-    SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE=32 SPARK_GRAFT_AQE=true \
-    SPARK_GRAFT_BENCH_ONLY= SPARK_GRAFT_IO_CODEC=lz4 \
+    SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_ONLY= \
     sbt -batch "runMain graft.Bench" 2>&1 | grep -o '{"metric".*}' \
     > "/tmp/gate_bench_${pinsf}.json"
   GATE_PIN_SF="$pinsf" python3 - <<'PYEOF'
