@@ -1,36 +1,8 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
-/** Per-stage byte counters fed by task-end events. Timing on this
-  * host carries 2-4× contention noise (BASELINE.md; BENCH_r10/r11
-  * driver totals vs idle re-runs), but the BYTES a plan shuffles and
-  * scans are a function of plan + data alone — the contention-immune
-  * regression signal. Keyed by stageId (global, unique), summed over
-  * a query's own stage set so concurrent history can't bleed in. */
-private final class StageBytesListener extends SparkListener {
-  val shuffleWrite = scala.collection.concurrent.TrieMap.empty[Int, Long]
-  val input = scala.collection.concurrent.TrieMap.empty[Int, Long]
-  // Stage IDs whose SparkListenerStageCompleted has been delivered to
-  // THIS listener. The bus delivers events to a listener in post
-  // order, and the DAGScheduler posts every task-end of a stage before
-  // that stage's completed event — so membership here PROVES the byte
-  // sums above are final for that stage (the task-count invariant,
-  // without racing the status tracker's independently-drained queue).
-  val completed = scala.collection.concurrent.TrieMap.empty[Int, Unit]
-  override def onStageCompleted(
-      s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-    completed.put(s.stageInfo.stageId, ())
-  override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-    val m = t.taskMetrics
-    if (m != null) {
-      shuffleWrite.updateWith(t.stageId)(p =>
-        Some(p.getOrElse(0L) + m.shuffleWriteMetrics.bytesWritten))
-      input.updateWith(t.stageId)(p =>
-        Some(p.getOrElse(0L) + m.inputMetrics.bytesRead))
-    }
-  }
-}
+import org.apache.spark.status.StatusBridge
+import scala.collection.immutable.VectorMap
+import scala.util.{Failure, Success, Try}
 
 object Bench {
   /** The timed (and byte-counted) action: execute the query's OWN
@@ -50,7 +22,7 @@ object Bench {
     * describe the plan the hash verifies. BenchActionSpec gates the
     * distinction (declared plan's Window count vs the count() plan's).
     */
-  def benchAction(df: org.apache.spark.sql.DataFrame): Long =
+  def benchAction(df: DataFrame): Long =
     df.queryExecution.toRdd.count()
 
   /** The DISCLOSED untimed-warm-up artifact list, emitted verbatim in
@@ -140,86 +112,63 @@ object Bench {
   private[graft] def mb(b: Long): Double =
     if (b < 0) -1.0 else math.round(b / 1048576.0 * 1000.0) / 1000.0
 
-  /** What one counting run of a query scheduled: its jobs (id → stage
-    * ids, as the status tracker lists them), their distinct stages, and
-    * the shuffle-write / input-read bytes summed over those stages. */
-  private[graft] final case class Counted(jobs: Seq[(Int, Seq[Int])],
+  /** What one counting run scheduled: its jobs' store rows, their
+    * distinct stage ids, and the shuffle-write / input-read bytes summed
+    * over the rows of the stages some job ran. */
+  private[graft] final case class Counted(jobs: Seq[StatusBridge.JobRow],
       stageIds: Seq[Int], shuffleWrite: Long, input: Long)
 
-  /** Counting runs: one run of a freshly built query under its own job
-    * group, its stages read from the public status tracker (includes
-    * stages skipped via shuffle reuse — "what the query schedules",
-    * which is what the floor multiplies) and its bytes from a
-    * [[StageBytesListener]], registered on construction. Task-end
-    * events are delivered async; the sums are read after a bounded
-    * settle loop (stage-completed coverage, with a long stability
-    * fallback — see `settle`) so a lagging bus cannot undercount.
-    * Skipped stages (shuffle reuse) have no task events and correctly
-    * contribute 0 — a counting run builds a FRESH frame, so its own
-    * exchanges all execute. Bench's stage/byte pass and
-    * `Profile jobs` both count through this. */
-  private[graft] final class Counter(spark: SparkSession) {
-    private val bytesListener = new StageBytesListener
-    spark.sparkContext.addSparkListener(bytesListener)
+  private val countRunIds = new java.util.concurrent.atomic.AtomicLong
 
-    private def bytes(stageIds: Seq[Int]): (Long, Long) =
-      (stageIds.map(bytesListener.shuffleWrite.getOrElse(_, 0L)).sum,
-        stageIds.map(bytesListener.input.getOrElse(_, 0L)).sum)
-
-    // Settle on the task-count invariant, not value stability alone
-    // (r12 ADVICE: two identical readings 50 ms apart can coincide
-    // with a >50 ms bus stall or GC pause and silently undercount).
-    // Primary condition: every stage in the set has its
-    // stage-completed event delivered — by bus FIFO that implies all
-    // its task-end bytes are summed (see StageBytesListener.completed)
-    // — which is also the instant fast path for the common all-stages-
-    // executed case. Stages with NO events (shuffle-reuse skips never
-    // submit) can't complete, so for those fall back to a far longer
-    // stability horizon: 4 consecutive identical readings 100 ms
-    // apart (a stall must now span 400 ms, not 50, to fake
-    // quiescence). One settle per query covers both byte maps.
-    private def settle(stageIds: Seq[Int]): Unit = {
-      var stable = 0
-      var prev = (-1L, -1L)
-      var spins = 0
-      while (spins < 100 &&
-          !stageIds.forall(bytesListener.completed.contains) &&
-          stable < 4) {
-        val cur = bytes(stageIds)
-        stable = if (cur == prev) stable + 1 else 0
-        prev = cur
-        Thread.sleep(100)
-        spins += 1
+  /** Counting run: `action` under a job group of its own, a drain of
+    * the listener bus, then one read of Spark's status store. Stages are
+    * the distinct ids the group's jobs list, skipped ones included (what
+    * the query schedules, which is what the floor multiplies). Bytes sum
+    * the rows of the stages no job skipped: a skipped stage adds 0 and is
+    * not read, as the store evicts skipped rows first once it holds 1000
+    * stages (two concurrent jobs may share a skipped stage, and only the
+    * first to end lists it). Any other missing row fails the run. NonFatal
+    * failures are the Failure; fatal ones (OOM, interrupt) propagate. */
+  private[graft] def countRun[T](spark: SparkSession, name: String)(action: => T)
+      : Try[(T, Counted)] = {
+    val sc = spark.sparkContext
+    val group = s"graft-count-${countRunIds.incrementAndGet()}-$name"
+    sc.setJobGroup(group, name)
+    try Try {
+      val result = action
+      StatusBridge.drain(sc)
+      val jobs = sc.statusTracker.getJobIdsForGroup(group).toSeq.sorted
+        .map(StatusBridge.job(sc, _))
+      // distinct: AQE materializes each exchange as its own job, and a
+      // job re-lists the upstream stages it shares with earlier ones
+      val stageIds = jobs.flatMap(_.stageIds).distinct
+      val skipped = jobs.flatMap(_.skipped).toSet
+      val rows = stageIds.filterNot(skipped).flatMap { id =>
+        val attempts = StatusBridge.stageAttempts(sc, id)
+        if (attempts.isEmpty) throw new IllegalStateException(
+          s"stage $id of counting run $group has no row in Spark's status store")
+        attempts
       }
-    }
+      (result, Counted(jobs, stageIds, rows.map(_.shuffleWriteBytes).sum,
+        rows.map(_.inputBytes).sum))
+    } finally sc.clearJobGroup()
+  }
 
-    /** Build and run `name` once via [[benchAction]]; None when the
-      * build or the run failed. NonFatal only: a fatal error (OOM,
-      * interrupt) must propagate, not be read as a completed counting
-      * run. */
-    def run(name: String, build: => DataFrame): Option[Counted] = {
-      val sc = spark.sparkContext
-      val group = s"graft-bench-$name"
-      sc.setJobGroup(group, name)
-      try {
-        val ok =
-          try { benchAction(build); true }
-          catch { case scala.util.control.NonFatal(_) => false }
-        if (!ok) None
-        else {
-          val tr = sc.statusTracker
-          val jobs = tr.getJobIdsForGroup(group).toSeq.sorted.map(id =>
-            id -> tr.getJobInfo(id).toSeq.flatMap(_.stageIds.map(_.toInt)))
-          // distinct: AQE materializes each exchange as its own job,
-          // and jobs re-list upstream stages they share — summing per
-          // job would double-count the common prefix
-          val stageIds = jobs.flatMap(_._2).distinct
-          settle(stageIds)
-          val (shuffleWrite, input) = bytes(stageIds)
-          Some(Counted(jobs, stageIds, shuffleWrite, input))
-        }
-      } finally sc.clearJobGroup()
-    }
+  /** Bench's one JSON writer: a Map is an object in its iteration order
+    * (a VectorMap keeps insertion order), a Seq an array, a String a
+    * string with RFC 8259 escapes; numbers and booleans print as Scala
+    * renders them. */
+  private[graft] def json(v: Any): String = v match {
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => json(k.toString) + ":" + json(x) }.mkString("{", ",", "}")
+    case s: scala.collection.Seq[_] => s.map(json).mkString("[", ",", "]")
+    case s: String => "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    case x => x.toString
   }
 
   def main(args: Array[String]): Unit = {
@@ -254,6 +203,7 @@ object Bench {
     // `errors` (emitted on the full line). NonFatal only: a fatal error
     // (OOM, interrupt) must stop the sweep, not become a causeless -1.
     val errors = scala.collection.mutable.TreeMap[String, String]()
+    def cause(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
     def timed(name: String): Double = {
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
@@ -261,14 +211,12 @@ object Bench {
           benchAction(SparkEntry.queries(name)(spark, sfDir))
           (System.nanoTime() - t0) / 1e9
         } catch { case scala.util.control.NonFatal(e) =>
-          errors(name) = s"${e.getClass.getName}: ${e.getMessage}"
+          errors(name) = cause(e)
           -1.0
         }
       }
       if (times.contains(-1.0)) -1.0 else times.min
     }
-    def toJson(m: Map[String, Double]): String =
-      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     // Floor calibration: a constant two-stage query (tiny scan →
     // partial agg → one exchange → final agg) whose cost is pure Spark
     // job machinery — DAG scheduling, task launch, shuffle file churn —
@@ -320,7 +268,7 @@ object Bench {
     val floorSec = floorProbes.head
     val floorSecAfter = floorProbes.last
     // Per-query PLANNED-STAGE counts, measured (not plan-guessed): one
-    // extra counting run per query (see Counter). Purpose: floor-
+    // extra counting run per query (see `countRun`). Purpose: floor-
     // normalize the per-query report.
     // floor_sec measures a TWO-stage probe, so floor_per_stage_sec =
     // floor_sec/2 is the scheduling cost of one materialized stage —
@@ -333,21 +281,21 @@ object Bench {
     // The same counting run also yields each query's deterministic
     // byte costs. A query whose counting run failed reports the
     // sentinel -1 so a partial job/stage count is never mistaken for
-    // the planned-stage truth in the floor-normalization rule.
-    val counter = new Counter(spark)
+    // the planned-stage truth in the floor-normalization rule, and its
+    // cause goes to `errors` (a timed run's cause, if any, is kept).
     val stageStats: Map[String, (Int, Long, Long)] = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
-        name -> counter.run(name, fn(spark, sfDir)).fold((-1, -1L, -1L))(c =>
-          (c.stageIds.length, c.shuffleWrite, c.input))
+        name -> (countRun(spark, name)(benchAction(fn(spark, sfDir))) match {
+          case Success((_, c)) => (c.stageIds.length, c.shuffleWrite, c.input)
+          case Failure(e) => errors.getOrElseUpdate(name, cause(e)); (-1, -1L, -1L)
+        })
       }
     val stageCounts: Map[String, Int] = stageStats.map { case (k, v) => k -> v._1 }
     val shuffleMb: Map[String, Double] =
       stageStats.map { case (k, v) => k -> mb(v._2) }
     val inputMb: Map[String, Double] =
       stageStats.map { case (k, v) => k -> mb(v._3) }
-    def toJsonInt(m: Map[String, Int]): String =
-      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     // Regression pins (BASELINE.md §bench): per-query budgets in IDLE
     // seconds at sf0.1, floor-normalized — a contended host (floor_sec
     // above the documented 0.138 s idle reading) scales the budget up
@@ -384,8 +332,7 @@ object Bench {
     val pinFailures =
       if (!sfDir.endsWith("sf0.1")) Seq.empty
       else pins.toSeq.flatMap { case (qn, budget) =>
-        results.get(qn).filter(t => t >= 0 && t > budget * contentionScale)
-          .map(t => "\"" + qn + "\"")
+        results.get(qn).filter(t => t >= 0 && t > budget * contentionScale).map(_ => qn)
       }
     // Plan-cost pins: unlike the time pins these need NO floor
     // normalization — shuffle/input bytes and planned-stage counts
@@ -400,14 +347,18 @@ object Bench {
     // regressions — broadcast-threshold flips, AQE coalesce changes):
     // sf0.1 (the driver's bench SF) and sf0.01 (the driver's
     // correctness SF, checked by gate.sh step 5's second sweep).
+    // Measured tolerance (ROADMAP carried item): sweeps of one commit
+    // move cached-memo input by up to 2 KB, sf0.1 window shuffles by up
+    // to 6 KB, and q_corpus_clean/q_minhash_est stage counts by up to 6
+    // and 1 (concurrent AQE jobs sharing a skipped stage or not). The
+    // byte floor and stage margin absorb it; never widen a budget for it.
     val budgetMaps = budgetsFor(sfDir)
     val planPinsActive = Bench.planPinsActive(pinConf(spark), sfDir, only)
     def bytePinFailures(measured: Map[String, Double],
         budgets: Map[String, Double]): Seq[String] =
       if (!planPinsActive) Seq.empty
       else budgets.toSeq.flatMap { case (qn, budgetMb) =>
-        measured.get(qn).filter(m => m >= 0 && m > budgetMb)
-          .map(_ => "\"" + qn + "\"")
+        measured.get(qn).filter(m => m >= 0 && m > budgetMb).map(_ => qn)
       }
     val shufflePinFailures =
       bytePinFailures(shuffleMb, budgetMaps.map(_._1).getOrElse(Map.empty))
@@ -416,8 +367,7 @@ object Bench {
     val stagePinFailures =
       if (!planPinsActive) Seq.empty
       else budgetMaps.get._3.toSeq.flatMap { case (qn, budget) =>
-        stageCounts.get(qn).filter(n => n >= 0 && n > budget + 1)
-          .map(_ => "\"" + qn + "\"")
+        stageCounts.get(qn).filter(n => n >= 0 && n > budget + 1).map(_ => qn)
       }
     // failures (-1 sentinel) are excluded from the total and counted
     // separately — a failed query must not SUBTRACT from the metric.
@@ -454,62 +404,45 @@ object Bench {
         val st = stageCounts.getOrElse(qn, -1)
         if (st > 0) math.max(0.0, w - st * floorPerStageFor(qn)) else w
     }.sum * 1000.0) / 1000.0
-    // plan_pins_active is EMITTED (not just used): tools/gate.sh step 5
-    // asserts it true so an inherited SPARK_GRAFT_CPUS/BENCH_ONLY
-    // export or -Dspark.* override can never make the gate pass
-    // vacuously with the budgets
-    // silently deactivated (r12 ADVICE).
-    val planPinFields = s""""plan_pins_active":$planPinsActive,"shuffle_pin_failures":[${shufflePinFailures.mkString(",")}],"input_pin_failures":[${inputPinFailures.mkString(",")}],"stage_pin_failures":[${stagePinFailures.mkString(",")}]"""
-    // every interleaved reading, in sweep order — the archived
-    // evidence for how each segment's floorline was priced
-    val floorProbesJson = floorProbes
-      .map(p => math.round(p * 1000.0) / 1000.0).mkString("[", ",", "]")
-    // JSON string literal (RFC 8259 escapes) for the free-text causes
-    def jsonString(v: String): String = "\"" + v.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val errorsJson = errors.map { case (q, e) => "\"" + q + "\":" + jsonString(e) }
-      .mkString("{", ",", "}")
-    val prebuiltJson = prebuilt.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"n_queries":${results.size},"runs_per_query":$runs,"agg":"min","warm_cache":true,"prebuilt":$prebuiltJson,"floor_sec":$floorSec,"floor_per_stage_sec":${floorSec / 2},"floor_after_sec":$floorSecAfter,"floor_probes":$floorProbesJson,"floorline_excess_sec":$floorlineExcessSec,"pin_failures":[${pinFailures.mkString(",")}],$planPinFields,"shuffle_mb_total":$shuffleTotalMb,"queries":${toJson(results)},"stages":${toJsonInt(stageCounts)},"shuffle_mb":${toJson(shuffleMb)},"input_mb":${toJson(inputMb)},"sf":"$sfDir","errors":$errorsJson}"""
+    // The keys both lines share, in emitted order. plan_pins_active is
+    // EMITTED (not just used): tools/gate.sh step 5 asserts it true so
+    // an inherited SPARK_GRAFT_CPUS/BENCH_ONLY export or -Dspark.*
+    // override can never make the gate pass vacuously with the budgets
+    // silently deactivated (r12 ADVICE). floor_probes holds every
+    // interleaved reading, in sweep order — the archived evidence for
+    // how each segment's floorline was priced.
+    val summary = VectorMap[String, Any]("metric" -> "total", "value" -> total,
+      "unit" -> "sec", "failed" -> failed, "n_queries" -> results.size,
+      "runs_per_query" -> runs, "agg" -> "min", "warm_cache" -> true,
+      "prebuilt" -> prebuilt, "floor_sec" -> floorSec,
+      "floor_per_stage_sec" -> floorSec / 2, "floor_after_sec" -> floorSecAfter,
+      "floor_probes" -> floorProbes.map(p => math.round(p * 1000.0) / 1000.0),
+      "floorline_excess_sec" -> floorlineExcessSec, "pin_failures" -> pinFailures,
+      "plan_pins_active" -> planPinsActive, "shuffle_pin_failures" -> shufflePinFailures,
+      "input_pin_failures" -> inputPinFailures, "stage_pin_failures" -> stagePinFailures,
+      "shuffle_mb_total" -> shuffleTotalMb)
+    val fullLine = json(summary ++ VectorMap("queries" -> results, "stages" -> stageCounts,
+      "shuffle_mb" -> shuffleMb, "input_mb" -> inputMb, "sf" -> sfDir, "errors" -> errors))
     println(fullLine)
-    // Loss-proof copy of the FULL line (r18 verdict #1): the archived
-    // BENCH_r17.json kept only the short re-emit because the full line
-    // fell outside the driver's tail-capture window, which cost the
-    // r18 round its entire per-query round-over-round comparison
-    // (PERF_r18 n_common=0). The stdout contract is unchanged — this
-    // is a side copy on disk, so the per-query map survives any
-    // stdout truncation and a round can always be diffed against the
-    // previous one (each round commits its closing sweep's file under
-    // plans/<round>/bench/). Best-effort: a bench must never fail on
-    // an unwritable evidence path.
+    // Loss-proof copy of the full line on disk (r18 verdict #1: an
+    // archived round kept only the re-emit below when the full line fell
+    // outside the driver's tail-capture window). Best-effort: a bench
+    // must never fail on an unwritable evidence path.
     val fullOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON",
       "/tmp/graft_bench_full.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullOut),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] full-JSON side copy failed ($fullOut): $e") }
-    // The full line above grew past the driver's tail-capture window in
-    // round 3 and the LEADING total field was the part cut off. Re-emit
-    // the headline number as a short final line so any last-N-bytes
-    // capture always contains a parseable total — including BOTH pin
-    // alarms, which must survive any truncation. n_queries
-    // contextualizes the total across rounds: the declared set has
-    // grown every round (120 in r12, 126 in r13, …), so raw
-    // round-over-round totals are not comparable without it. The line must be SELF-SUFFICIENT for the archive
-    // (r12 verdict: only a 2000-char tail survives, and r11/r12 lost
-    // floor_sec + the wall map): it carries floor_sec,
-    // floor_per_stage_sec and the 5 slowest (query, wall, stages)
-    // triples, so every archived round is floor-normalizable from the
-    // tail alone.
+    // The short re-emit, last, so any last-N-bytes capture holds a
+    // parseable total (round 3 lost the full line's leading total), both
+    // pin alarms, n_queries (the declared set grows round over round),
+    // and floor_sec plus the 5 slowest (query, wall, stages) triples, so
+    // every archived round is floor-normalizable from the tail alone
+    // (r12 verdict: only a 2000-char tail survives).
     val slowest5 = results.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(5)
-      .map { case (q, w) =>
-        s"""["$q",$w,${stageCounts.getOrElse(q, -1)}]""" }
-      .mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"n_queries":${results.size},"runs_per_query":$runs,"warm_cache":true,"prebuilt":$prebuiltJson,"floor_sec":$floorSec,"floor_per_stage_sec":${floorSec / 2},"floor_after_sec":$floorSecAfter,"floor_probes":$floorProbesJson,"floorline_excess_sec":$floorlineExcessSec,"pin_failures":[${pinFailures.mkString(",")}],$planPinFields,"shuffle_mb_total":$shuffleTotalMb,"slowest":$slowest5,"sf":"$sfDir"}""")
+      .map { case (q, w) => Seq(q, w, stageCounts.getOrElse(q, -1)) }
+    println(json(summary - "agg" ++ VectorMap("slowest" -> slowest5, "sf" -> sfDir)))
     spark.stop()
   }
 }

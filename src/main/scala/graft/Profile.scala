@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import scala.util.{Failure, Success}
 
 /** Plan and profile declared queries in Bench's own session (shared
   * policy at `SPARK_GRAFT_CPUS`, against `SPARK_GRAFT_SF_DIR`), so the
@@ -12,7 +13,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *    `<outDir>/<q>_<suffix>.txt`, every declared query without a list
   *    — the plan evidence committed under `plans/`;
   *  - `jobs <q...>`: one warm run, then one counting run: a line per
-  *    job and the query's stage and byte totals;
+  *    job (stages, SQL execution id, callsite) and the query's stage
+  *    and byte totals;
   *  - `phases <q...>`: build/analyze/optimize/plan/exec, min of 3.
   * Single-query timing is Bench itself: `SPARK_GRAFT_BENCH_ONLY=q`. */
 object Profile {
@@ -62,31 +64,32 @@ object Profile {
     * the floor-multiplier map — counted through Bench's own counting
     * run. The warm run builds the query's session memos first (Bench's
     * prebuilt-artifact convention), so the counted run is the
-    * steady-state shape Bench times. */
+    * steady-state shape Bench times. Each job carries its SQL execution
+    * id: the jobs of one Dataset action run while the query is built (a
+    * memo build, a collect) share one; the counted `toRdd` action runs
+    * outside any SQL execution, so its jobs, like parquet schema reads,
+    * print `-`. */
   private def jobs(spark: SparkSession, names: Seq[String],
-      build: String => org.apache.spark.sql.DataFrame): Unit = {
-    val counter = new Bench.Counter(spark)
-    val tr = spark.sparkContext.statusTracker
+      build: String => org.apache.spark.sql.DataFrame): Unit =
     names.foreach { n =>
       Bench.benchAction(build(n))
       val t0 = System.nanoTime()
-      val counted = counter.run(n, build(n))
+      val counted = Bench.countRun(spark, n)(Bench.benchAction(build(n)))
       val wall = (System.nanoTime() - t0) / 1e9
       counted match {
-        case None => println(s"== $n: counting run FAILED ==")
-        case Some(c) =>
+        case Failure(e) => println(s"== $n: counting run FAILED: $e ==")
+        case Success((_, c)) =>
           println(f"== $n: ${c.jobs.size} jobs, ${c.stageIds.size} stages, " +
             f"shuffle ${Bench.mb(c.shuffleWrite)} MB, input ${Bench.mb(c.input)} MB, " +
-            f"wall $wall%.3f s (incl. settle) ==")
-          c.jobs.foreach { case (id, stages) =>
-            // the result stage's name carries the materializing callsite
-            val callsite = stages.maxOption.flatMap(tr.getStageInfo(_))
-              .map(_.name.takeWhile(_ != '\n')).getOrElse("")
-            println(f"  job $id%4d  stages=${stages.size}%3d  ${callsite.take(140)}")
+            f"wall $wall%.3f s ==")
+          c.jobs.foreach { j =>
+            // a job's name is its result stage's, the materializing callsite
+            val exec = j.sqlExecutionId.fold("-")(_.toString)
+            println(f"  job ${j.id}%4d  stages=${j.stageIds.size}%3d  exec=$exec%-4s " +
+              j.name.takeWhile(_ != '\n').take(130))
           }
       }
     }
-  }
 
   /** Per-phase wall, min of 3 fresh plans each: build the frame,
     * analyze, optimize, physical-plan, then execute the declared plan

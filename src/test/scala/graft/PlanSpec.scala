@@ -766,36 +766,22 @@ class PlanSpec extends AnyFunSuite {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
     }
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) read.addAndGet(m.inputMetrics.bytesRead)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (df, counted) = Bench.countRun(spark, "q_media_meta") {
       val df = q("q_media_meta") // the decode + checkpoint job runs here
       assert(df.collect().nonEmpty)
-      val p = plan(df)
-      assert(p.contains("rangepartitioning"),
-        s"terminal sort must be range-partitioned:\n$p")
-      assert(!p.contains("Exchange SinglePartition"),
-        s"single-partition gather crept back below the sort:\n$p")
-      assert(p.contains("ExistingRDD") || p.contains("Scan ExistingRDD"),
-        s"sort child must be the checkpointed metadata, not the codec chain:\n$p")
-      // task-end events arrive async — settle on 4 stable 100 ms reads
-      var stable = 0; var prev = -1L; var spins = 0
-      while (spins < 50 && stable < 4) {
-        val cur = read.get()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        Thread.sleep(100); spins += 1
-      }
-      // one payload scan + two tiny checkpoint-block re-reads; a
-      // second decode pass would push this past 2x the layout size
-      assert(read.get() < (layoutBytes * 1.6).toLong + 65536,
-        s"input bytes ${read.get()} vs layout $layoutBytes — payloads read more than once")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      df
+    }.get
+    val read = counted.input
+    val p = plan(df)
+    assert(p.contains("rangepartitioning"),
+      s"terminal sort must be range-partitioned:\n$p")
+    assert(!p.contains("Exchange SinglePartition"),
+      s"single-partition gather crept back below the sort:\n$p")
+    assert(p.contains("ExistingRDD") || p.contains("Scan ExistingRDD"),
+      s"sort child must be the checkpointed metadata, not the codec chain:\n$p")
+    // one payload scan + two tiny checkpoint-block re-reads; a
+    // second decode pass would push this past 2x the layout size
+    assert(read < (layoutBytes * 1.6).toLong + 65536,
+      s"input bytes $read vs layout $layoutBytes — payloads read more than once")
   }
 }

@@ -3,12 +3,9 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.status.StatusBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.StarSchemaBuilder
@@ -96,30 +93,15 @@ class ServeIndexSpec extends AnyFunSuite {
     try f(http) finally { http.stop(0); serve.release() }
   }
 
-  /** Spark jobs started while `body` runs, delimited by two marker jobs
-    * (listener events arrive in order, so once the second marker's
-    * start is seen every job before it has been counted). */
+  /** Spark jobs started while `body` runs, on any thread (HTTP handler
+    * threads carry no job group of the test's): job ids rise, so these are
+    * the status store's ids above its highest one before `body`. */
   private def jobsDuring(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val ids = new ConcurrentLinkedQueue[Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = ids.add(e.jobId)
-    }
-    def marker(tag: String): Int = {
-      sc.setJobGroup(s"index-spec-$tag", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      sc.statusTracker.getJobIdsForGroup(s"index-spec-$tag").max
-    }
-    sc.addSparkListener(listener)
-    try {
-      val m0 = marker("before")
-      body
-      val m1 = marker("after")
-      val deadline = System.nanoTime() + 30000000000L
-      while (!ids.contains(m1) && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(ids.contains(m1), "listener never saw the marker job")
-      ids.asScala.count(id => id > m0 && id < m1)
-    } finally sc.removeSparkListener(listener)
+    def jobIds(): Seq[Int] = { StatusBridge.drain(sc); StatusBridge.jobIds(sc) }
+    val before = jobIds().maxOption.getOrElse(-1)
+    body
+    jobIds().count(_ > before)
   }
 
   test("seeded random requests: every HTTP body is byte-identical to the Spark reference") {

@@ -192,9 +192,8 @@ object PlanAudit {
       case _ => false
     }
 
-  /** Physical-plan walk through the AQE wrappers (same shape as
-    * ScaleProbe.shuffleBytes). */
-  private def walkPhysical(p: org.apache.spark.sql.execution.SparkPlan)
+  /** Physical-plan walk through the AQE wrappers (the AQE-final plan). */
+  private[graft] def walkPhysical(p: org.apache.spark.sql.execution.SparkPlan)
       : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     p match {

@@ -56,11 +56,9 @@ object ScaleProbe {
           graft.Bench.benchAction(graft.SparkEntry.queries(q)(spark, d))
           (System.nanoTime() - t0) / 1e9
         }
-        // untimed metrics pass on a fresh frame (same toRdd action;
-        // fresh so its exchanges all execute rather than reuse)
-        val mdf = graft.SparkEntry.queries(q)(spark, d)
-        mdf.queryExecution.toRdd.count()
-        (runs.min, shuffleBytes(mdf))
+        // untimed counting run on a fresh frame (fresh so its
+        // exchanges all execute rather than reuse)
+        (runs.min, countedRun(spark, q)(graft.SparkEntry.queries(q)(spark, d))._2)
       }
       val t = res.map(_._1); val s = res.map(_._2 / 1e6)
       println(f"$q%-22s ${t(0)}%8.2f ${t(1)}%8.2f ${t(2)}%8.2f  ${t(1)/t(0)}%5.2f  ${t(2)/t(0)}%5.2f   ${s(0)}%.1f/${s(1)}%.1f/${s(2)}%.1f")
@@ -132,9 +130,7 @@ object ScaleProbe {
           graft.Bench.benchAction(graft.SparkEntry.queries(q)(spark, d))
           (System.nanoTime() - t0) / 1e9
         }
-        val mdf = graft.SparkEntry.queries(q)(spark, d)
-        mdf.queryExecution.toRdd.count()
-        (runs.min, shuffleBytes(mdf))
+        (runs.min, countedRun(spark, q)(graft.SparkEntry.queries(q)(spark, d))._2)
       }
       val t = res.map(_._1); val sh = res.map(_._2 / 1e6)
       println(f"$q%-20s ${t(0)}%8.2f ${t(1)}%8.2f ${t(2)}%8.2f  ${t(1)/t(0)}%5.2f  ${t(2)/t(0)}%5.2f   ${sh(0)}%.1f/${sh(1)}%.1f/${sh(2)}%.1f")
@@ -147,7 +143,7 @@ object ScaleProbe {
   // stay flat while bucket COUNT grows), the substring-span kernel
   // (linear in tokens), and the IVF probe (cost = nprobe/k share of
   // the corpus). Each op reports min-of-3 warm time, shuffle bytes of
-  // its final plan, and the occupancy stats (max bucket, Σ|bucket|
+  // its counting run, and the occupancy stats (max bucket, Σ|bucket|
   // choose 2 pair space, bucket count) that ARE the scale claim.
   // Copy construction is the same structure-preserving scheme as the
   // main probe; only documents/embeddings/events are built at ×16/×32.
@@ -472,21 +468,16 @@ object ScaleProbe {
       val res = dirs.map { case (_, d) =>
         graft.queries.ExtendedQueries.releaseCaches(spark, d)
         if (nRuns == 1) {
-          // one execution serves as both the timing and the metrics pass
-          val mdf = mk(d)
-          val t0 = System.nanoTime()
-          mdf.queryExecution.toRdd.count()
-          val t = (System.nanoTime() - t0) / 1e9
-          (t, shuffleBytes(mdf), statFn(d))
+          // one execution serves as both the timing and the counting run
+          val (t, sh) = countedRun(spark, name)(mk(d))
+          (t, sh, statFn(d))
         } else {
           val runs = (1 to nRuns).map { _ =>
             val t0 = System.nanoTime()
             graft.Bench.benchAction(mk(d))
             (System.nanoTime() - t0) / 1e9
           }
-          val mdf = mk(d)
-          mdf.queryExecution.toRdd.count()
-          (runs.min, shuffleBytes(mdf), statFn(d))
+          (runs.min, countedRun(spark, name)(mk(d))._2, statFn(d))
         }
       }
       val t = res.map(_._1); val s = res.map(_._2 / 1e6)
@@ -528,21 +519,6 @@ object ScaleProbe {
     val it1 = ivfRes.head._2
     for ((n, t, mx, cand) <- ivfRes)
       println(f"  x$n%-4s ${t}%8.2f s  t/t1=${t / it1}%5.2f  maxList=$mx candidates=$cand")
-  }
-
-  /** Sums shuffle WRITE bytes across every completed stage — the
-    * whole-pipeline counterpart of [[shuffleBytes]] (which reads one
-    * frame's final plan and so misses the jobs a multi-job stage —
-    * cache builds, the BPE merge loop, a parquet write — runs).
-    * Listener events are asynchronous; [[capstoneMain]] sleeps briefly
-    * around snapshots, good enough for a dev probe's attribution. */
-  private class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      ()
-    }
   }
 
   // ---------------------------------------------------------------
@@ -681,8 +657,6 @@ object ScaleProbe {
   // ---------------------------------------------------------------
   private def capstoneMain(spark: SparkSession): Unit = {
     import graft.ops.{Bpe, CorpusClean, TrainPrep}
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
     val out = s"$Work/capstone"
     // SPARK_GRAFT_CAPSTONE_SCALE: copy multiplier (default ×16; the
     // r11 verdict's ×64 run sets 64). SPARK_GRAFT_CAPSTONE_RUNS:
@@ -696,12 +670,18 @@ object ScaleProbe {
     val acc = scala.collection.mutable.LinkedHashMap[String,
       List[(Double, Long, Double)]]()
     var verbose = true
+    // each stage is one counting run (Bench.countRun): its wall, and the
+    // shuffle bytes of every job it ran — cache builds, the BPE merge
+    // loop and the parquet writes included
     def stage[T](name: String)(f: => (Long, T)): T = {
-      Thread.sleep(400); val b0 = tally.bytes.get
-      val t0 = System.nanoTime()
-      val (rows, r) = f
-      val t = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400); val sh = (tally.bytes.get - b0) / 1e6
+      var t = 0.0
+      val ((rows, r), c) = graft.Bench.countRun(spark, s"capstone-$name") {
+        val t0 = System.nanoTime()
+        val res = f
+        t = (System.nanoTime() - t0) / 1e9
+        res
+      }.get
+      val sh = c.shuffleWrite / 1e6
       acc(name) = (t, rows, sh) :: acc.getOrElse(name, Nil)
       if (verbose)
         println(f"[capstone] $name%-12s ${t}%8.2f s  rows=$rows%-9d shuffleMB=$sh%.1f")
@@ -918,22 +898,20 @@ object ScaleProbe {
     ()
   }
 
-  /** Total shuffle bytes written by an executed frame's final plan —
-    * the direct evidence for "exchanges carry aggregates, not rows":
-    * flat shuffle volume under ×4 data growth means the map side
-    * combined before the wire. Walks the AQE-final plan (query stages
-    * wrap the materialized exchanges). */
-  private def shuffleBytes(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => p +: walk(a.executedPlan)
-      case q: QueryStageExec => p +: walk(q.plan)
-      case other => other +: other.children.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan)
-      .flatMap(_.metrics.get("shuffleBytesWritten").map(_.value))
-      .sum
+  /** One counting run ([[graft.Bench.countRun]]) of `df`, built inside
+    * it: the action's wall in seconds and the shuffle bytes its jobs
+    * wrote — the direct evidence for "exchanges carry aggregates, not
+    * rows": flat shuffle volume under ×4 data growth means the map side
+    * combined before the wire. */
+  private def countedRun(spark: SparkSession, name: String)(df: => DataFrame)
+      : (Double, Long) = {
+    val (t, c) = graft.Bench.countRun(spark, name) {
+      val f = df
+      val t0 = System.nanoTime()
+      graft.Bench.benchAction(f)
+      (System.nanoTime() - t0) / 1e9
+    }.get
+    (t, c.shuffleWrite)
   }
 
   private def build(spark: SparkSession, n: Int): Unit = {

@@ -61,6 +61,12 @@ bad = {k: d[k] for k in
        if d.get(k)}
 if d.get("failed", 0):
     print(f"bench had {d['failed']} failed queries at {sf}"); sys.exit(1)
+# a failed counting run reports -1 stages/bytes, which the pins skip;
+# fail on it here so a broken counting pass cannot pass the pins
+uncounted = sorted(q for q, n in d.get("stages", {}).items() if n < 0)
+if uncounted:
+    print(f"counting run failed at {sf} for {uncounted}: "
+          f"{ {q: d.get('errors', {}).get(q) for q in uncounted} }"); sys.exit(1)
 if bad:
     print(f"plan-cost pin breach at {sf} (re-baseline PlanBudgets only "
           f"for an INTENDED plan change): {bad}"); sys.exit(1)
