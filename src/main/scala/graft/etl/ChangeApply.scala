@@ -1,8 +1,5 @@
 package graft.etl
 
-import java.net.URI
-
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,21 +105,13 @@ object ChangeApply {
   def advance(spark: SparkSession, path: String, changes: DataFrame,
       key: String, attrs: Seq[String], opCol: String = "op",
       tsCol: String = "ts"): Long = {
-    val fs = FileSystem.get(new URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(path)
-    val tmp = new Path(path + "__applying")
-    Swap.recover(fs, dir, tmp) // finish an interrupted publish first
+    val snapshot = Swap.open(spark, path, "__applying")
     val empty = changes
       .select(col(key) +: attrs.map(col) :+ col(tsCol).as("__ts") :+
         lit(false).as("__deleted"): _*)
       .limit(0)
-    val base = if (fs.exists(dir)) spark.read.parquet(path) else empty
-    val next = merge(base, changes, key, attrs, opCol, tsCol)
-    fs.delete(tmp, true)
-    next.write.mode("overwrite").parquet(tmp.toString)
-    val live = current(spark.read.parquet(tmp.toString)).count()
-    Swap.publish(fs, dir, tmp)
-    live
+    val base = snapshot.live.getOrElse(empty)
+    snapshot.publish(merge(base, changes, key, attrs, opCol, tsCol))(
+      current(_).count())
   }
 }

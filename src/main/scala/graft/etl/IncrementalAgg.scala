@@ -1,8 +1,5 @@
 package graft.etl
 
-import java.net.URI
-
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -82,22 +79,8 @@ object IncrementalAgg {
     * REGISTRIES.md) and swap-publish the
     * new state. Returns the group count after the fold. */
   def advance(spark: SparkSession, statePath: String, delta: DataFrame,
-      keys: Seq[String], valueCol: String): Long = {
-    val fs = FileSystem.get(new URI(statePath),
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(statePath)
-    val tmp = new Path(statePath + "__advancing")
-    Swap.recover(fs, dir, tmp) // finish an interrupted publish first
-    val deltaState = partialState(delta, keys, valueCol)
-    val next =
-      if (fs.exists(dir)) mergeState(spark.read.parquet(statePath), deltaState, keys)
-      else deltaState
-    fs.delete(tmp, true)
-    next.write.mode("overwrite").parquet(tmp.toString)
-    val groups = spark.read.parquet(tmp.toString).count()
-    Swap.publish(fs, dir, tmp)
-    groups
-  }
+      keys: Seq[String], valueCol: String): Long =
+    fold(spark, statePath, delta, keys, valueCol, None)
 
   /** [[advance]] for AT-LEAST-ONCE feeds (same contract as
     * `SketchRollup.advanceBatch`): moment state is ADDITIVE, so a
@@ -109,23 +92,17 @@ object IncrementalAgg {
     * run's markers. */
   def advanceBatch(spark: SparkSession, statePath: String,
       delta: DataFrame, keys: Seq[String], valueCol: String,
-      batchId: Long, runTag: String = "run"): Long = {
-    val fs = FileSystem.get(new URI(statePath),
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(statePath)
-    val tmp = new Path(statePath + "__advancing")
-    Swap.recover(fs, dir, tmp)
-    if (Swap.markerExists(fs, dir, runTag, batchId))
-      return spark.read.parquet(statePath).count()
+      batchId: Long, runTag: String = "run"): Long =
+    fold(spark, statePath, delta, keys, valueCol, Some((runTag, batchId)))
+
+  private def fold(spark: SparkSession, statePath: String,
+      delta: DataFrame, keys: Seq[String], valueCol: String,
+      batch: Option[(String, Long)]): Long = {
+    val state = Swap.open(spark, statePath)
+    if (batch.exists { case (tag, id) => state.applied(tag, id) })
+      return state.read().count()
     val deltaState = partialState(delta, keys, valueCol)
-    val next =
-      if (fs.exists(dir)) mergeState(spark.read.parquet(statePath), deltaState, keys)
-      else deltaState
-    fs.delete(tmp, true)
-    next.write.mode("overwrite").parquet(tmp.toString)
-    Swap.carryMarkers(fs, dir, tmp, Some(Swap.markerName(runTag, batchId)))
-    val groups = spark.read.parquet(tmp.toString).count()
-    Swap.publish(fs, dir, tmp)
-    groups
+    state.publish(state.live.fold(deltaState)(mergeState(_, deltaState, keys)),
+      marker = batch)(_.count())
   }
 }

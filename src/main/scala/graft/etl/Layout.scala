@@ -82,25 +82,18 @@ object Layout {
     * stays bounded no matter how large the table grows. */
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(path)
-    Swap.recover(fs, dir, new Path(path + "__compacting"))
-    val parts = fs.listStatus(dir).filter(s => s.isFile &&
+    val layout = Swap.open(spark, path, "__compacting")
+    def liveParts = layout.fs.listStatus(layout.path).filter(s => s.isFile &&
       s.getPath.getName.startsWith("part-"))
+    val parts = liveParts
     val total = parts.map(_.getLen).sum
     val want = math.max(1L, (total + targetFileBytes - 1) / targetFileBytes).toInt
     if (want >= parts.length) return (parts.length, parts.length)
 
-    val tmp = new Path(path + "__compacting")
-    fs.delete(tmp, true)
     // repartition (round-robin), not coalesce: coalesce would also
     // narrow the PARALLELISM of the read+decode work to `want` tasks
-    spark.read.parquet(path).repartition(want)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val after = fs.listStatus(tmp).count(s => s.isFile &&
-      s.getPath.getName.startsWith("part-"))
-    Swap.publish(fs, dir, tmp)
-    (parts.length, after)
+    layout.publish(layout.read().repartition(want))()
+    (parts.length, liveParts.length)
   }
 
   /** Compact every LEAF partition directory of a `partitionBy` layout

@@ -130,23 +130,13 @@ object Scd2 {
   def advance(spark: org.apache.spark.sql.SparkSession, path: String,
       updates: DataFrame, key: String, tsCol: String,
       attrs: Seq[String]): Long = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val fs = FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(path)
-    val tmp = new Path(path + "__merging")
-    Swap.recover(fs, dir, tmp) // finish an interrupted publish first
+    val dim = Swap.open(spark, path, "__merging")
     val empty = updates
       .select(col(key) +: attrs.map(col) :+ col(tsCol).as("valid_from") :+
         lit(null).cast("timestamp").as("valid_to"): _*)
       .limit(0)
-    val base = if (fs.exists(dir)) spark.read.parquet(path) else empty
-    val next = merge(base, updates, key, tsCol, attrs)
-    fs.delete(tmp, true)
-    next.write.mode("overwrite").parquet(tmp.toString)
-    val open = spark.read.parquet(tmp.toString)
-      .filter(col("valid_to").isNull).count()
-    Swap.publish(fs, dir, tmp)
-    open
+    val base = dim.live.getOrElse(empty)
+    dim.publish(merge(base, updates, key, tsCol, attrs))(
+      _.filter(col("valid_to").isNull).count())
   }
 }

@@ -1,8 +1,5 @@
 package graft.etl
 
-import java.net.URI
-
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -129,15 +126,8 @@ object SketchRollup {
     * count would lie). Drive replay-prone feeds through
     * [[advanceBatch]] instead. */
   def advance(spark: SparkSession, statePath: String, delta: DataFrame,
-      keys: Seq[String], cols: Columns): Long = {
-    val fs = FileSystem.get(new URI(statePath),
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(statePath)
-    val tmp = new Path(statePath + "__advancing")
-    Swap.recover(fs, dir, tmp)
-    val deltaState = partialState(delta, keys, cols)
-    advancePublish(spark, fs, dir, tmp, deltaState, keys, marker = None)
-  }
+      keys: Seq[String], cols: Columns): Long =
+    fold(spark, statePath, delta, keys, cols, None)
 
   /** Idempotent form for at-least-once feeds (foreachBatch replays a
     * micro-batch after a sink crash): an `_applied_<runTag>_<id>`
@@ -147,33 +137,17 @@ object SketchRollup {
     * can never diverge. A replayed (runTag, batchId) is a no-op. */
   def advanceBatch(spark: SparkSession, statePath: String,
       delta: DataFrame, keys: Seq[String], cols: Columns,
-      batchId: Long, runTag: String = "run"): Long = {
-    val fs = FileSystem.get(new URI(statePath),
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(statePath)
-    val tmp = new Path(statePath + "__advancing")
-    Swap.recover(fs, dir, tmp)
-    if (Swap.markerExists(fs, dir, runTag, batchId))
-      return spark.read.parquet(statePath).count()
-    val deltaState = partialState(delta, keys, cols)
-    advancePublish(spark, fs, dir, tmp, deltaState, keys,
-      Some(Swap.markerName(runTag, batchId)))
-  }
+      batchId: Long, runTag: String = "run"): Long =
+    fold(spark, statePath, delta, keys, cols, Some((runTag, batchId)))
 
-  /** Shared publish tail: merge → write tmp (carrying forward any
-    * existing applied-markers, plus `marker`) → atomic swap. */
-  private def advancePublish(spark: SparkSession, fs: FileSystem,
-      dir: Path, tmp: Path, deltaState: DataFrame, keys: Seq[String],
-      marker: Option[String]): Long = {
-    val next =
-      if (fs.exists(dir))
-        mergeState(spark.read.parquet(dir.toString), deltaState, keys)
-      else deltaState
-    fs.delete(tmp, true)
-    next.write.mode("overwrite").parquet(tmp.toString)
-    Swap.carryMarkers(fs, dir, tmp, marker)
-    val groups = spark.read.parquet(tmp.toString).count()
-    Swap.publish(fs, dir, tmp)
-    groups
+  private def fold(spark: SparkSession, statePath: String,
+      delta: DataFrame, keys: Seq[String], cols: Columns,
+      batch: Option[(String, Long)]): Long = {
+    val state = Swap.open(spark, statePath)
+    if (batch.exists { case (tag, id) => state.applied(tag, id) })
+      return state.read().count()
+    val deltaState = partialState(delta, keys, cols)
+    state.publish(state.live.fold(deltaState)(mergeState(_, deltaState, keys)),
+      marker = batch)(_.count())
   }
 }

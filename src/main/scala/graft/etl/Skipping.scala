@@ -85,11 +85,15 @@ object Skipping {
     * predicate still applied — costs speed, never rows). */
   private[graft] val encodingStamp = "_GRAFT_SKIPIDX_ENC_V2"
 
-  private def hasStamp(fs: FileSystem, dir: Path): Boolean =
-    fs.exists(new Path(dir, encodingStamp))
+  /** The manifest beside `dataPath`, opened (recovered) for a read
+    * or a publish. */
+  private def openManifest(spark: SparkSession, dataPath: String): Swap.Dir =
+    Swap.open(spark, manifestPath(dataPath), "__refreshing")
 
-  private def stamp(fs: FileSystem, dir: Path): Unit =
-    fs.create(new Path(dir, encodingStamp), true).close()
+  /** Publish a manifest frame: one output file (O(#files) rows), the
+    * stamp inside tmp so the rename publishes data + version together. */
+  private def publishManifest(man: Swap.Dir, next: DataFrame): Unit =
+    man.publish(next, stamps = Seq(encodingStamp), coalesce = Some(1))()
 
   /** Order-preserving double encoding of an indexable column:
     * numerics cast directly; DATE becomes epoch DAYS and TIMESTAMP
@@ -142,17 +146,15 @@ object Skipping {
     fileStats(spark.read.parquet(dataPath), cols)
   }
 
-  /** Build and persist the manifest beside the data; returns its path.
-    * O(#files) rows — a single output file is deliberate. */
+  /** Build the manifest and swap-publish it beside the data; returns
+    * its path. A rebuild never removes the live manifest under a
+    * concurrent [[prunedScan]] (only the rename gap, which opening
+    * recovers). */
   def writeManifest(spark: SparkSession, dataPath: String,
       cols: Seq[String]): String = {
-    val out = manifestPath(dataPath)
-    buildManifest(spark, dataPath, cols)
-      .coalesce(1).write.mode("overwrite").parquet(out)
-    val fs = FileSystem.get(new URI(out),
-      spark.sparkContext.hadoopConfiguration)
-    stamp(fs, new Path(out))
-    out
+    publishManifest(openManifest(spark, dataPath),
+      buildManifest(spark, dataPath, cols))
+    manifestPath(dataPath)
   }
 
   /** Incremental refresh: stat ONLY files the manifest doesn't cover
@@ -162,25 +164,22 @@ object Skipping {
     * no manifest exists. Returns (statted, dropped). */
   def refreshManifest(spark: SparkSession, dataPath: String,
       cols: Seq[String]): (Int, Int) = {
-    val manPath = manifestPath(dataPath)
-    val fs = FileSystem.get(new URI(dataPath),
-      spark.sparkContext.hadoopConfiguration)
-    // promote an interrupted publish BEFORE the existence probe — a
-    // crash in the delete->rename gap otherwise reads as "no manifest"
-    // and triggers the full rebuild this incremental path exists to
-    // avoid (at the documented scale, a full corpus re-scan)
-    Swap.recover(fs, new Path(manPath), new Path(manPath + "__refreshing"))
+    // opening promotes an interrupted publish BEFORE the existence
+    // probe — a crash in the delete->rename gap otherwise reads as "no
+    // manifest" and triggers the full rebuild this incremental path
+    // exists to avoid (at the documented scale, a full corpus re-scan)
+    val man = openManifest(spark, dataPath)
     // a manifest without the current encoding stamp was built under a
     // different stat encoding — its min/max are not comparable, so the
     // incremental path must not union against it: full rebuild
-    if (!fs.exists(new Path(manPath)) || !hasStamp(fs, new Path(manPath))) {
+    if (!man.has(encodingStamp)) {
       val n = liveParts(spark, dataPath).size
-      writeManifest(spark, dataPath, cols)
+      publishManifest(man, buildManifest(spark, dataPath, cols))
       return (n, 0)
     }
     val live = liveParts(spark, dataPath)
     val liveKeys = live.map(p => key(p.toString)).toSet
-    val old = spark.read.parquet(manPath)
+    val old = man.read()
     val oldFiles = old.select("file").collect().map(_.getString(0))
     val oldKeys = oldFiles.map(key).toSet
     val missing = live.filterNot(p => oldKeys(key(p.toString)))
@@ -194,13 +193,7 @@ object Skipping {
       else keptOld.unionByName(fileStats(
         spark.read.option("basePath", dataPath)
           .parquet(missing.map(_.toString): _*), cols))
-    val tmp = new Path(manPath + "__refreshing")
-    fs.delete(tmp, true)
-    next.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    // stamp rides in tmp so the atomic rename publishes data + version
-    // together (same crash-ordering as Swap.publishFold)
-    stamp(fs, tmp)
-    Swap.publish(fs, new Path(manPath), tmp)
+    publishManifest(man, next)
     (missing.size, (oldKeys -- liveKeys).size)
   }
 
@@ -244,15 +237,12 @@ object Skipping {
     val liveByKey = live.map(p => key(p.toString) -> p).toMap
     // same crash-window recovery as refreshManifest: a complete
     // orphaned tmp must serve reads, not FileNotFound
-    val mfs = FileSystem.get(new URI(dataPath),
-      spark.sparkContext.hadoopConfiguration)
-    Swap.recover(mfs, new Path(manifestPath(dataPath)),
-      new Path(manifestPath(dataPath) + "__refreshing"))
+    val man = openManifest(spark, dataPath)
     // no current-version encoding stamp ⇒ the manifest's stats live in
     // a different (or unknown) double domain — pruning against them
     // could drop matching rows. Disable pruning: every live file is
     // "uncovered" and read, the exact predicate still applies.
-    val usable = hasStamp(mfs, new Path(manifestPath(dataPath)))
+    val usable = man.has(encodingStamp)
     val (covered, surviving) =
       if (!usable) (Set.empty[String], Set.empty[String])
       else {
@@ -260,7 +250,7 @@ object Skipping {
         // at the documented 800 k-file scale the manifest is read once
         // per probe, not twice (and locally it's one fewer driver job
         // per prunedScan call)
-        val rows = spark.read.parquet(manifestPath(dataPath))
+        val rows = man.read()
           .select(col("file"),
             preds.map(_.overlaps).reduce(_ && _).as("survives"))
           .collect()

@@ -69,25 +69,18 @@ object BloomPrune {
     * half-written sketch to a concurrent reader. */
   def saveFilter(spark: org.apache.spark.sql.SparkSession, path: String,
       filter: Array[Byte]): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.etl.Swap
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val (dir, tmp) = (new Path(path), new Path(path + "__advancing"))
-    Swap.recover(fs, dir, tmp)
-    fs.delete(tmp, true)
     import spark.implicits._
-    Seq(Tuple1(filter)).toDF("bf")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    Swap.publish(fs, dir, tmp)
+    graft.etl.Swap.open(spark, path)
+      .publish(Seq(Tuple1(filter)).toDF("bf"), coalesce = Some(1))()
   }
 
-  /** Load a filter written by [[saveFilter]]. The bytes are the whole
+  /** Load a filter written by [[saveFilter]] (recovering an
+    * interrupted save first). The bytes are the whole
     * model — callers hold them driver-side and probe via
     * [[mightContain]], exactly as with a freshly built filter. */
   def loadFilter(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Byte] =
-    spark.read.parquet(path).head.getAs[Array[Byte]](0)
+    graft.etl.Swap.open(spark, path).read().head.getAs[Array[Byte]](0)
 
   /** Membership-test Column for a previously built filter: true when
     * `key` MIGHT be in the sketch (false ⇒ definitely absent). */

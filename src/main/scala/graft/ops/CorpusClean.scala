@@ -428,13 +428,10 @@ object CorpusClean {
           // the driver never holds the list
           val dir = dropListDir.getOrElse(java.nio.file.Files
             .createTempDirectory("graft_droplist").toString)
-          val live = new org.apache.hadoop.fs.Path(dir, "ids")
-          val tmp = new org.apache.hadoop.fs.Path(dir, "_tmp_ids")
-          val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(tmp, true)
-          dropIdsDf.write.mode("overwrite").parquet(tmp.toString)
-          graft.etl.Swap.publish(fs, live, tmp)
-          spark.read.parquet(live.toString)
+          val ids = graft.etl.Swap.open(spark,
+            new org.apache.hadoop.fs.Path(dir, "ids").toString)
+          ids.publish(dropIdsDf)()
+          ids.read()
         }
       } finally d.unpersist()
 

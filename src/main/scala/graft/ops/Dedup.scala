@@ -208,15 +208,15 @@ object Dedup {
       shingleLen: Int): String =
     s"_GRAFT_LSH_PARAMS_${numHashes}_${bands}_$shingleLen"
 
-  private def assertBandParams(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, statePath: String,
-      numHashes: Int, bands: Int, shingleLen: Int): Unit = {
-    if (!fs.exists(dir))
+  private def assertBandParams(registry: graft.etl.Swap.Dir,
+      statePath: String, numHashes: Int, bands: Int,
+      shingleLen: Int): Unit = {
+    if (!registry.exists)
       throw new java.io.FileNotFoundException(
         s"band registry at $statePath does not exist — fold a first " +
           "batch with advanceBandRegistry before loading")
     val want = bandRegistryMarker(numHashes, bands, shingleLen)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(dir, want)))
+    if (!registry.has(want))
       throw new IllegalStateException(
         s"band registry at $statePath has no $want stamp: it was " +
           "written under different (numHashes, bands, shingleLen) " +
@@ -237,41 +237,32 @@ object Dedup {
   def advanceBandRegistry(spark: org.apache.spark.sql.SparkSession,
       statePath: String, delta: DataFrame, textCol: Column, idCol: Column,
       numHashes: Int = 8, bands: Int = 2, shingleLen: Int = 3): Long = {
-    import org.apache.hadoop.fs.Path
-    import graft.etl.Swap
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(statePath)
-    val tmp = new Path(statePath + "__advancing")
-    Swap.recover(fs, dir, tmp)
+    val registry = graft.etl.Swap.open(spark, statePath)
     val deltaBands =
       lshBandKeys(delta, textCol, idCol, numHashes, bands, shingleLen)
     val next =
-      if (fs.exists(dir)) {
-        assertBandParams(fs, dir, statePath, numHashes, bands, shingleLen)
-        spark.read.parquet(statePath).unionByName(deltaBands).distinct()
+      if (registry.exists) {
+        assertBandParams(registry, statePath, numHashes, bands, shingleLen)
+        registry.read().unionByName(deltaBands).distinct()
       } else deltaBands.distinct()
-    Swap.publishFold(spark, fs, dir, tmp, next, None,
-      Seq(bandRegistryMarker(numHashes, bands, shingleLen)))
+    registry.publish(next,
+      stamps = Seq(bandRegistryMarker(numHashes, bands, shingleLen)))(
+      _.count())
   }
 
   /** Open a band registry written by [[advanceBandRegistry]],
     * asserting its params stamp matches — the only safe read path
     * (a silent params mismatch = zero candidates, not an error).
-    * Calls `Swap.recover` first, like every other entry point
+    * Opens through `Swap.open`, like every other entry point
     * (REGISTRIES.md): a crash in a publish's delete→rename gap leaves
     * the complete stamped fold under the tmp name, and without the
-    * recover this load would mistake it for a params mismatch. */
+    * recovery this load would mistake it for a params mismatch. */
   def loadBandRegistry(spark: org.apache.spark.sql.SparkSession,
       statePath: String, numHashes: Int = 8, bands: Int = 2,
       shingleLen: Int = 3): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(statePath)
-    graft.etl.Swap.recover(fs, dir,
-      new org.apache.hadoop.fs.Path(statePath + "__advancing"))
-    assertBandParams(fs, dir, statePath, numHashes, bands, shingleLen)
-    spark.read.parquet(statePath)
+    val registry = graft.etl.Swap.open(spark, statePath)
+    assertBandParams(registry, statePath, numHashes, bands, shingleLen)
+    registry.read()
   }
 
   /** Near-dup CANDIDATE pairs (new_id, hist_id) of a fresh batch

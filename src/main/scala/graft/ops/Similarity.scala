@@ -429,24 +429,18 @@ object Similarity {
     * probes. */
   def saveIvfModel(spark: org.apache.spark.sql.SparkSession, path: String,
       centroids: Seq[(Int, Seq[Double])]): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.etl.Swap
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val (dir, tmp) = (new Path(path), new Path(path + "__advancing"))
-    Swap.recover(fs, dir, tmp)
-    fs.delete(tmp, true)
     import spark.implicits._
-    centroids.map { case (cid, c) => (cid, c) }.toDF("cid", "c")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    Swap.publish(fs, dir, tmp)
+    graft.etl.Swap.open(spark, path).publish(
+      centroids.map { case (cid, c) => (cid, c) }.toDF("cid", "c"),
+      coalesce = Some(1))()
   }
 
-  /** Load a model written by [[saveIvfModel]], in the shape every
-    * probe/assign entry point takes. */
+  /** Load a model written by [[saveIvfModel]] (recovering an
+    * interrupted save first), in the shape every probe/assign entry
+    * point takes. */
   def loadIvfModel(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[(Int, Seq[Double])] =
-    spark.read.parquet(path).collect()
+    graft.etl.Swap.open(spark, path).read().collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toIndexedSeq))
       .sortBy(_._1).toIndexedSeq
 
@@ -836,26 +830,20 @@ object Similarity {
     * One row: (m, kc, dsub, flat codebook). */
   def savePqModel(spark: org.apache.spark.sql.SparkSession, path: String,
       model: PqModel): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.etl.Swap
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val (dir, tmp) = (new Path(path), new Path(path + "__advancing"))
-    Swap.recover(fs, dir, tmp)
-    fs.delete(tmp, true)
     import spark.implicits._
-    Seq((model.m, model.kc, model.dsub, model.codebookFlat))
-      .toDF("m", "kc", "dsub", "codebook")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    Swap.publish(fs, dir, tmp)
+    graft.etl.Swap.open(spark, path).publish(
+      Seq((model.m, model.kc, model.dsub, model.codebookFlat))
+        .toDF("m", "kc", "dsub", "codebook"),
+      coalesce = Some(1))()
   }
 
-  /** Load a model written by [[savePqModel]]. The PqModel constructor
+  /** Load a model written by [[savePqModel]] (recovering an
+    * interrupted save first). The PqModel constructor
     * re-validates the shape, so a torn or foreign file fails loudly
     * instead of ranking garbage. */
   def loadPqModel(spark: org.apache.spark.sql.SparkSession,
       path: String): PqModel = {
-    val r = spark.read.parquet(path)
+    val r = graft.etl.Swap.open(spark, path).read()
       .select(col("m"), col("kc"), col("dsub"), col("codebook")).head
     PqModel(r.getInt(0), r.getInt(1), r.getInt(2),
       r.getSeq[Double](3).toIndexedSeq)
@@ -930,26 +918,19 @@ object Similarity {
   def ivfPqAdvance(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batch: DataFrame, runTag: String,
       batchId: Long): Long = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(indexDir)
-    val tmp = new Path(indexDir + "_tmp")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverIndexDir(fs, indexDir)
-    if (graft.etl.Swap.markerExists(fs, live, runTag, batchId)) return -1L
+    val index = openIndexDir(spark, indexDir)
+    if (index.applied(runTag, batchId)) return -1L
     // normalize the batch projection BEFORE the empty-index branch:
     // fold 0 must publish the same (vec_id, cid int, codes) schema
     // every later fold unions on (r16 ADVICE — a long/string cid in
     // the first batch used to publish unnormalized on fold 0 only)
     val b = batch.select(col("vec_id"), col("cid").cast("int").as("cid"),
       col("codes"))
-    val next =
-      if (!fs.exists(live)) b
-      else spark.read.parquet(indexDir)
-        .select(col("vec_id"), col("cid").cast("int").as("cid"), col("codes"))
-        .unionByName(b)
-    graft.etl.Swap.publishFold(spark, fs, live, tmp, next,
-      Some(graft.etl.Swap.markerName(runTag, batchId)), Nil,
-      partitionCols = Seq("cid"))
+    val next = index.live.fold(b)(
+      _.select(col("vec_id"), col("cid").cast("int").as("cid"), col("codes"))
+        .unionByName(b))
+    index.publish(next, marker = Some((runTag, batchId)),
+      partitionBy = Seq("cid"))(_.count())
   }
 
   /** The REMOVE half of the index lifecycle (faiss `remove_ids`):
@@ -975,21 +956,16 @@ object Similarity {
   def ivfPqRemove(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, removeIds: DataFrame, runTag: String,
       batchId: Long): Long = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(indexDir)
-    val tmp = new Path(indexDir + "_tmp")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverIndexDir(fs, indexDir)
-    if (graft.etl.Swap.markerExists(fs, live, runTag, batchId)) return -1L
-    require(fs.exists(live),
+    val index = openIndexDir(spark, indexDir)
+    if (index.applied(runTag, batchId)) return -1L
+    require(index.exists,
       s"ivfPqRemove: no live index at $indexDir — nothing to remove from")
-    val next = spark.read.parquet(indexDir)
+    val next = index.read()
       .select(col("vec_id"), col("cid").cast("int").as("cid"), col("codes"))
       .join(broadcast(removeIds.select(col("vec_id"))),
         Seq("vec_id"), "left_anti")
-    graft.etl.Swap.publishFold(spark, fs, live, tmp, next,
-      Some(graft.etl.Swap.markerName(runTag, batchId)), Nil,
-      partitionCols = Seq("cid"))
+    index.publish(next, marker = Some((runTag, batchId)),
+      partitionBy = Seq("cid"))(_.count())
   }
 
   // ---- shared IVF-PQ index-dir crash recovery ----------------------
@@ -1018,11 +994,12 @@ object Similarity {
         s"leaf swap failed for ${d.getName}")
     }
 
-  /** Recover BOTH fold disciplines' crash windows before touching an
-    * index dir — the whole-swap orphan (live missing + complete
-    * `_tmp`) AND an interrupted leaf-wise swap loop (complete
-    * `_tmp_leaf` whose remaining cid dirs are exactly the unswapped
-    * suffix). EVERY fold entry point calls this first, so a crash in
+  /** Open an index dir, recovering BOTH fold disciplines' crash
+    * windows before anything touches it — the whole-swap orphan (live
+    * missing + complete `_tmp`, promoted by `Swap.open`) AND an
+    * interrupted leaf-wise swap loop (complete `_tmp_leaf` whose
+    * remaining cid dirs are exactly the unswapped suffix, resumed
+    * here). EVERY fold entry point opens through this, so a crash in
     * one discipline can never corrupt a later fold in the other (r17
     * ADVICE): without the first half, a leaf-wise call after a
     * crashed whole-swap publish would see no live index, publish its
@@ -1033,16 +1010,20 @@ object Similarity {
     * outdated cid dirs over post-fold lists (resurrecting removed
     * rows). An INCOMPLETE `_tmp_leaf` (no _SUCCESS — crash during the
     * tmp write, before any swap started) is garbage and is deleted. */
-  private def recoverIndexDir(fs: org.apache.hadoop.fs.FileSystem,
-      indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(indexDir)
-    graft.etl.Swap.recover(fs, live, new Path(indexDir + "_tmp"))
-    val tmpLeaf = new Path(indexDir + "_tmp_leaf")
-    if (fs.exists(new Path(tmpLeaf, "_SUCCESS")))
-      leafSwapLoop(fs, live, cidDirs(fs, tmpLeaf), Int.MaxValue)
-    fs.delete(tmpLeaf, true)
+  private def openIndexDir(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String): graft.etl.Swap.Dir = {
+    val index = graft.etl.Swap.open(spark, indexDir, "_tmp")
+    val fs = index.fs
+    val leafTmp = leafTmpDir(indexDir)
+    if (fs.exists(new org.apache.hadoop.fs.Path(leafTmp, "_SUCCESS")))
+      leafSwapLoop(fs, index.path, cidDirs(fs, leafTmp), Int.MaxValue)
+    fs.delete(leafTmp, true)
+    index
   }
+
+  /** The leaf-wise folds' staging dir (never swapped as a whole). */
+  private def leafTmpDir(indexDir: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(indexDir + "_tmp_leaf")
 
   /** LEAF-WISE add-batch — the production variant [[ivfPqAdvance]]'s
     * scaladoc promises: only the cid partitions PRESENT IN THE BATCH
@@ -1078,21 +1059,18 @@ object Similarity {
   def ivfPqAdvanceLeafwise(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batch: DataFrame, runTag: String, batchId: Long,
       failAfterSwaps: Int = Int.MaxValue): Long = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(indexDir)
-    val tmpRoot = new Path(indexDir + "_tmp_leaf")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // cross-discipline recovery (r17 ADVICE): promote a whole-swap
     // orphan AND resume an interrupted leaf loop before reading live
-    recoverIndexDir(fs, indexDir)
-    if (graft.etl.Swap.markerExists(fs, live, runTag, batchId)) return -1L
+    val index = openIndexDir(spark, indexDir)
+    val (fs, live, leafTmp) = (index.fs, index.path, leafTmpDir(indexDir))
+    if (index.applied(runTag, batchId)) return -1L
     val b = batch.select(col("vec_id"), col("cid").cast("int").as("cid"),
       col("codes"))
     val touched = b.select(col("cid")).distinct()
       .collect().map(_.getInt(0)).sorted // O(touched lists) — model-sized
     val liveTouched =
-      if (!fs.exists(live) || cidDirs(fs, live).isEmpty) None
-      else Some(spark.read.parquet(indexDir)
+      if (cidDirs(fs, live).isEmpty) None
+      else Some(index.read()
         .select(col("vec_id"), col("cid").cast("int").as("cid"), col("codes"))
         // real partition pruning: only the touched lists are read
         .filter(col("cid").isin(touched.map(Int.box): _*)))
@@ -1102,14 +1080,13 @@ object Similarity {
         old.join(broadcast(b.select(col("vec_id"))), Seq("vec_id"), "left_anti")
           .unionByName(b)
     }
-    next.write.mode("overwrite").partitionBy("cid").parquet(tmpRoot.toString)
-    val rows = spark.read.parquet(tmpRoot.toString).count()
-    leafSwapLoop(fs, live, cidDirs(fs, tmpRoot), failAfterSwaps)
-    fs.delete(tmpRoot, true)
-    // marker LAST, in the never-swapped root (carryMarkers with
-    // tmp = live prunes superseded per-tag markers in place)
-    graft.etl.Swap.carryMarkers(fs, live, live,
-      Some(graft.etl.Swap.markerName(runTag, batchId)))
+    next.write.mode("overwrite").partitionBy("cid").parquet(leafTmp.toString)
+    val rows = spark.read.parquet(leafTmp.toString).count()
+    leafSwapLoop(fs, live, cidDirs(fs, leafTmp), failAfterSwaps)
+    fs.delete(leafTmp, true)
+    // marker LAST, in the never-swapped root (superseded per-tag
+    // markers are pruned in place)
+    index.markApplied(runTag, batchId)
     rows
   }
 
@@ -1124,7 +1101,7 @@ object Similarity {
     *
     *  - touched lists whose next content is NON-empty move via the
     *    shared delete→rename leaf loop (resume-recovered by
-    *    [[recoverIndexDir]] from the complete tmp's remaining dirs);
+    *    [[openIndexDir]] from the complete tmp's remaining dirs);
     *  - a touched list the remove EMPTIES leaves no dir in tmp — its
     *    live dir is DELETED outright (delete-only phase, before the
     *    loop). These deletes are idempotent and re-derived by the
@@ -1146,13 +1123,10 @@ object Similarity {
   def ivfPqRemoveLeafwise(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, removeIds: DataFrame, runTag: String, batchId: Long,
       failAfterSwaps: Int = Int.MaxValue): Long = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(indexDir)
-    val tmpRoot = new Path(indexDir + "_tmp_leaf")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverIndexDir(fs, indexDir)
-    if (graft.etl.Swap.markerExists(fs, live, runTag, batchId)) return -1L
-    require(fs.exists(live) && cidDirs(fs, live).nonEmpty,
+    val index = openIndexDir(spark, indexDir)
+    val (fs, live, leafTmp) = (index.fs, index.path, leafTmpDir(indexDir))
+    if (index.applied(runTag, batchId)) return -1L
+    require(cidDirs(fs, live).nonEmpty,
       s"ivfPqRemoveLeafwise: no live index at $indexDir — nothing to " +
         "remove from")
     val tomb = removeIds.select(col("vec_id"))
@@ -1160,37 +1134,36 @@ object Similarity {
       if (removeIds.columns.contains("cid"))
         removeIds.select(col("cid").cast("int").as("cid")).distinct()
           .collect().map(_.getInt(0)).sorted
-      else spark.read.parquet(indexDir)
+      else index.read()
         .select(col("vec_id"), col("cid").cast("int").as("cid"))
         .join(broadcast(tomb), Seq("vec_id"), "left_semi")
         .select(col("cid")).distinct().collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) {
       // no tombstone lives in the index — the fold is a content no-op,
       // but the batch still gets its marker (redelivery must not rescan)
-      graft.etl.Swap.carryMarkers(fs, live, live,
-        Some(graft.etl.Swap.markerName(runTag, batchId)))
+      index.markApplied(runTag, batchId)
       return 0L
     }
-    val next = spark.read.parquet(indexDir)
+    val next = index.read()
       .select(col("vec_id"), col("cid").cast("int").as("cid"), col("codes"))
       .filter(col("cid").isin(touched.map(Int.box): _*))
       .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-    next.write.mode("overwrite").partitionBy("cid").parquet(tmpRoot.toString)
-    val tmpDirs = cidDirs(fs, tmpRoot)
+    next.write.mode("overwrite").partitionBy("cid").parquet(leafTmp.toString)
+    val tmpDirs = cidDirs(fs, leafTmp)
     val rows =
       if (tmpDirs.isEmpty) 0L
-      else spark.read.parquet(tmpRoot.toString).count()
+      else spark.read.parquet(leafTmp.toString).count()
     // delete-only phase: a fully-emptied touched list has no tmp dir
     // to rename over it — delete the live dir, or the dead rows survive
     val tmpNames = tmpDirs.map(_.getName).toSet
     touched.foreach { c =>
       val name = s"cid=$c"
-      if (!tmpNames.contains(name)) fs.delete(new Path(live, name), true)
+      if (!tmpNames.contains(name))
+        fs.delete(new org.apache.hadoop.fs.Path(live, name), true)
     }
     leafSwapLoop(fs, live, tmpDirs, failAfterSwaps)
-    fs.delete(tmpRoot, true)
-    graft.etl.Swap.carryMarkers(fs, live, live,
-      Some(graft.etl.Swap.markerName(runTag, batchId)))
+    fs.delete(leafTmp, true)
+    index.markApplied(runTag, batchId)
     rows
   }
 

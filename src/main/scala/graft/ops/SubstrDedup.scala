@@ -214,11 +214,10 @@ object SubstrDedup {
     * (the single-modulus range; a dual key `h1·P2 + h2` sits below
     * 2^30 only when h1 = 0 — for a whole registry that is ~2^(-30·n)).
     * An empty registry passes (nothing to mismatch). */
-  private def assertDualKeySpace(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path,
+  private def assertDualKeySpace(registry: graft.etl.Swap.Dir,
       statePath: String): Unit = {
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir, KeyspaceMarker))) return
-    val mx = spark.read.parquet(statePath).agg(max(col("whash"))).head
+    if (registry.has(KeyspaceMarker)) return
+    val mx = registry.read().agg(max(col("whash"))).head
     if (!mx.isNullAt(0) && mx.getLong(0) < (1L << 30))
       throw new IllegalStateException(
         s"spread registry at $statePath uses the legacy single-modulus " +
@@ -231,27 +230,18 @@ object SubstrDedup {
   private def advanceSpreadImpl(spark: org.apache.spark.sql.SparkSession,
       statePath: String, delta: DataFrame, textCol: Column,
       idCol: Column, w: Int, batch: Option[(String, Long)]): Long = {
-    import org.apache.hadoop.fs.Path
-    import graft.etl.Swap
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(statePath)
-    val tmp = new Path(statePath + "__advancing")
-    Swap.recover(fs, dir, tmp)
-    batch.foreach { case (tag, id) =>
-      if (Swap.markerExists(fs, dir, tag, id))
-        return spark.read.parquet(statePath).count()
-    }
+    val registry = graft.etl.Swap.open(spark, statePath)
+    if (batch.exists { case (tag, id) => registry.applied(tag, id) })
+      return registry.read().count()
     val deltaState = spreadState(delta, textCol, idCol, w)
     val next =
-      if (fs.exists(dir)) {
-        assertDualKeySpace(spark, fs, dir, statePath)
-        spark.read.parquet(statePath).unionByName(deltaState)
+      if (registry.exists) {
+        assertDualKeySpace(registry, statePath)
+        registry.read().unionByName(deltaState)
           .groupBy(col("whash")).agg(sum(col("n_docs")).as("n_docs"))
       } else deltaState
-    Swap.publishFold(spark, fs, dir, tmp, next,
-      batch.map { case (tag, id) => Swap.markerName(tag, id) },
-      Seq(KeyspaceMarker))
+    registry.publish(next, marker = batch, stamps = Seq(KeyspaceMarker))(
+      _.count())
   }
 
   /** Prune the persisted registry to hashes that can still influence
@@ -268,23 +258,16 @@ object SubstrDedup {
     * hidden). */
   def pruneRegistry(spark: org.apache.spark.sql.SparkSession,
       statePath: String, minDocs: Int = 2): Long = {
-    import org.apache.hadoop.fs.Path
-    import graft.etl.Swap
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(statePath)
-    val tmp = new Path(statePath + "__advancing")
-    Swap.recover(fs, dir, tmp)
-    assertDualKeySpace(spark, fs, dir, statePath)
-    val kept = spark.read.parquet(statePath)
-      .filter(col("n_docs") >= minDocs - 1)
-    Swap.publishFold(spark, fs, dir, tmp, kept, None, Seq(KeyspaceMarker))
+    val registry = graft.etl.Swap.open(spark, statePath)
+    assertDualKeySpace(registry, statePath)
+    val kept = registry.read().filter(col("n_docs") >= minDocs - 1)
+    registry.publish(kept, stamps = Seq(KeyspaceMarker))(_.count())
   }
 
   /** Open the persisted spread registry for READING, with the same
     * protections every writing entry point has (REGISTRIES.md):
-    * `Swap.recover` first (a crash in a publish's delete→rename gap
+    * `Swap.open`'s recovery first (a crash in a publish's delete→rename gap
     * leaves the complete fold under the tmp name), then the key-space
     * guard — a legacy single-modulus registry is REJECTED here
     * instead of silently scrubbing nothing (its keys would never
@@ -293,13 +276,9 @@ object SubstrDedup {
     * [[stripAgainstRegistry]]. */
   def loadRegistry(spark: org.apache.spark.sql.SparkSession,
       statePath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(statePath)
-    graft.etl.Swap.recover(fs, dir,
-      new org.apache.hadoop.fs.Path(statePath + "__advancing"))
-    assertDualKeySpace(spark, fs, dir, statePath)
-    spark.read.parquet(statePath)
+    val registry = graft.etl.Swap.open(spark, statePath)
+    assertDualKeySpace(registry, statePath)
+    registry.read()
   }
 
   /** Scrub `docs` against an EXTERNAL spread registry (e.g. the

@@ -417,21 +417,13 @@ object TrainPrep {
   def advanceEvalRegistry(spark: org.apache.spark.sql.SparkSession,
       statePath: String, evalDelta: DataFrame, textCol: Column,
       taskCol: Column, shingleLen: Int = 3): Long = {
-    import org.apache.hadoop.fs.Path
-    import graft.etl.Swap
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(statePath)
-    val tmp = new Path(statePath + "__advancing")
-    Swap.recover(fs, dir, tmp)
+    val registry = graft.etl.Swap.open(spark, statePath)
     val deltaSh = evalDelta.select(taskCol.as("task"),
         explode(Dedup.shingleArray(textCol, shingleLen)).as("s"))
       .distinct()
-    val next =
-      if (fs.exists(dir))
-        spark.read.parquet(statePath).unionByName(deltaSh).distinct()
-      else deltaSh
-    Swap.publishFold(spark, fs, dir, tmp, next, None, Nil)
+    registry.publish(
+      registry.live.fold(deltaSh)(_.unionByName(deltaSh).distinct()))(
+      _.count())
   }
 
   /** [[decontaminate]] over pre-computed shingle rows: `trainShingles`

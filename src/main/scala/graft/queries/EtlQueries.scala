@@ -145,7 +145,7 @@ object EtlQueries {
     },
 
     // COMPACTION INVARIANCE under the oracle (r14 — Layout.compact +
-    // Swap.publish were LayoutSpec-gated only): the declared query
+    // its swap-publish were LayoutSpec-gated only): the declared query
     // aggregates a copy of lineitem that was written as 24 small
     // files and then compacted + swap-published in place, so the
     // small-file-maintenance lifecycle — the operation an incremental
@@ -245,7 +245,7 @@ object EtlQueries {
     // declares the on-disk state LIFECYCLE): three Scd2.advance
     // batches (orders split at 1995/1997), each a real
     // bootstrap-or-read → merge → swap-publish of parquet state with
-    // Swap.recover first, then a point-in-time read of the PERSISTED
+    // Swap.open's recovery first, then a point-in-time read of the PERSISTED
     // chain. Oracle = per-(key, period) last updates chained by
     // lead(ts) over the unioned feed + the asOf validity filter —
     // the same equivalence argument as q_scd2_asof, one period wider.

@@ -125,7 +125,8 @@ object ExtendedQueries {
     * Nothing can still be reading it — release runs between queries,
     * and every consumer goes through [[memoPath]], which rebuilds. */
   private[graft] final case class PathMemo(dir: String) extends Memo {
-    override def release(): Unit = deleteRecursively(dir)
+    override def release(): Unit =
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
   private[graft] final case class ModelMemo(centroids: Seq[(Int, Seq[Double])])
       extends Memo
@@ -213,22 +214,6 @@ object ExtendedQueries {
       d: String): Set[String] = {
     import scala.jdk.CollectionConverters._
     memos.keySet.asScala.collect { case (`s`, `d`, key) => key }.toSet
-  }
-
-  /** Best-effort recursive delete of a memoPath layout dir (children
-    * before parents; races with a concurrent external deletion are
-    * benign — deleteIfExists). */
-  private def deleteRecursively(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } finally walk.close()
-    }
   }
 
   /** Fixed integer codebook for q_pq_encode (m=4, kc=4, dsub=16, flat
@@ -342,12 +327,8 @@ object ExtendedQueries {
     memoPath("cleanids", s, d) { dir =>
       val docs = docProfile(s, d).select(col("doc_id"), col("text"))
       val cleaned = graft.ops.CorpusClean.clean(docs, col("text"), col("doc_id"))
-      val live = new org.apache.hadoop.fs.Path(dir, "ids")
-      val tmp = new org.apache.hadoop.fs.Path(dir, "_tmp_ids")
-      val fs = live.getFileSystem(s.sparkContext.hadoopConfiguration)
-      cleaned.docs.select(col("doc_id"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      graft.etl.Swap.publish(fs, live, tmp)
+      graft.etl.Swap.open(s, new org.apache.hadoop.fs.Path(dir, "ids").toString)
+        .publish(cleaned.docs.select(col("doc_id")))()
       cleaned.release()
     }
 
@@ -850,7 +831,7 @@ object ExtendedQueries {
     * written as 24 small files, then rewritten by `Layout.compact` and
     * swap-published IN PLACE — the declared query scans the compacted
     * directory, so the whole compact → publish lifecycle (including
-    * `Swap.recover`'s crash-window handling running first) sits under
+    * `Swap.open`'s crash-window recovery running first) sits under
     * the oracle: compaction is IO-only, any row lost or duplicated by
     * the rewrite/swap is a hash mismatch against the PLAIN scan.
     * LayoutSpec asserts the file count actually fell on this exact
@@ -870,7 +851,7 @@ object ExtendedQueries {
   /** The q_scd2_advance state: a versioned "current order" dimension
     * built by THREE `Scd2.advance` calls — each a real bootstrap-or-
     * read → merge → write-temp → atomic swap-publish of on-disk
-    * parquet state (with `Swap.recover` running first, so the crash
+    * parquet state (with `Swap.open`'s recovery running first, so the crash
     * window is on the declared path) — over orders updates split at
     * 1995-01-01 / 1997-01-01. The declared query reads the PERSISTED
     * chain back and serves a point-in-time `asOf`; the in-session

@@ -135,7 +135,7 @@ object CorpusIO {
     *    (raw_line, file) — the band-registry class; a dead letter is
     *    a fact, re-observing it changes nothing.
     *
-    * Both sides go through `Swap.publishFold` (recover → fold →
+    * Both sides go through `Swap.open` (recover → fold →
     * atomic swap), so each is complete-or-absent under crashes; the
     * two publishes are NOT mutually atomic — a crash between them
     * redelivers the batch and both folds converge (the no-marker
@@ -143,30 +143,15 @@ object CorpusIO {
     * quarantine lines) published. */
   def advanceIntake(spark: SparkSession, destDir: String, keyCol: String,
       clean: DataFrame, quarLines: DataFrame): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
-    import graft.etl.Swap
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(destDir),
-      spark.sparkContext.hadoopConfiguration)
-    val cleanDir = new Path(destDir, "clean")
-    val cleanTmp = new Path(destDir, "clean__advancing")
-    Swap.recover(fs, cleanDir, cleanTmp)
-    val nextClean =
-      if (fs.exists(cleanDir))
-        spark.read.parquet(cleanDir.toString)
-          .join(clean.select(col(keyCol)), Seq(keyCol), "left_anti")
-          .unionByName(clean)
-      else clean
-    val nClean = Swap.publishFold(spark, fs, cleanDir, cleanTmp,
-      nextClean, None, Nil)
-    val quarDir = new Path(destDir, "quarantine")
-    val quarTmp = new Path(destDir, "quarantine__advancing")
-    Swap.recover(fs, quarDir, quarTmp)
-    val nextQuar =
-      if (fs.exists(quarDir))
-        spark.read.parquet(quarDir.toString).unionByName(quarLines).distinct()
-      else quarLines.distinct()
-    val nQuar = Swap.publishFold(spark, fs, quarDir, quarTmp,
-      nextQuar, None, Nil)
+    def open(side: String) = graft.etl.Swap.open(spark,
+      new org.apache.hadoop.fs.Path(destDir, side).toString)
+    val cleanDir = open("clean")
+    val nClean = cleanDir.publish(cleanDir.live.fold(clean)(
+      _.join(clean.select(col(keyCol)), Seq(keyCol), "left_anti")
+        .unionByName(clean)))(_.count())
+    val quarDir = open("quarantine")
+    val nQuar = quarDir.publish(quarDir.live.fold(quarLines.distinct())(
+      _.unionByName(quarLines).distinct()))(_.count())
     (nClean, nQuar)
   }
 

@@ -439,7 +439,7 @@ object StreamingPipeline {
     * stored `__ts`, so re-applying a batch is a no-op) and
     * batch-slicing invariant (a restart that re-slices the source
     * converges to the same snapshot). The publish crash window is
-    * closed by `Swap.recover` inside `advance`. Read the live table
+    * closed by `Swap.open`'s recovery inside `advance`. Read the live table
     * with `ChangeApply.current(spark.read.parquet(outDir))`. */
   def cdcApplySink(changes: DataFrame, key: String, attrs: Seq[String],
       outDir: String, checkpointDir: String,
