@@ -154,20 +154,15 @@ object Bench {
     } finally sc.clearJobGroup()
   }
 
-  /** Bench's one JSON writer: a Map is an object in its iteration order
-    * (a VectorMap keeps insertion order), a Seq an array, a String a
-    * string with RFC 8259 escapes; numbers and booleans print as Scala
-    * renders them. */
+  /** The one JSON writer of Bench and Verify: a Map is an object in
+    * its iteration order (a VectorMap keeps insertion order), a Seq an
+    * array, a String a string through `StarServeHttp.jsonEsc`; numbers
+    * and booleans print as Scala renders them. */
   private[graft] def json(v: Any): String = v match {
     case m: scala.collection.Map[_, _] =>
       m.map { case (k, x) => json(k.toString) + ":" + json(x) }.mkString("{", ",", "}")
     case s: scala.collection.Seq[_] => s.map(json).mkString("[", ",", "]")
-    case s: String => "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    case s: String => "\"" + graft.serve.StarServeHttp.jsonEsc(s) + "\""
     case x => x.toString
   }
 

@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
   *    batch) accretes small files, and at scale the scan cost becomes
   *    listing + task-launch overhead, not bytes. `compact` rewrites a
   *    directory to size-targeted files, swap-published.
-  *  - **Z-order clustering**: sort by an interleaved-bit key over two
+  *  - **Z-order clustering**: sort by an interleaved-bit key over the
   *    range-filtered columns before writing, so parquet row-group
-  *    min/max stats stay tight on BOTH columns — a selective filter
-  *    on either prunes row groups the linear sort order would
+  *    min/max stats stay tight on EVERY one of them — a selective
+  *    filter on any prunes row groups the linear sort order would
   *    scatter across the whole file.
   *
   * LayoutSpec asserts the plan/IO effects of each (no Exchange under
@@ -184,58 +184,24 @@ object Layout {
       .parquet(path)
   }
 
-  /** Morton (Z-order) key over two columns, each linearly bucketed
-    * into `bits` bits by its [min,max] range, bits interleaved with
-    * the classic mask-spread — a handful of codegen'd bitwise ops per
-    * row, no UDF. Linear bucketing is order-preserving and cheap; for
-    * heavily skewed columns substitute quantile boundaries for the
-    * min/max scale (same interleave).
+  /** N-column Morton (Z-order) key: each column linearly bucketed
+    * into `bits` bits by its (lo, hi) range, bits interleaved
+    * round-robin — bit j of column i lands at position j·n + i, so
+    * every column contributes equally at every scale of the curve.
+    * The interleave is `bits` shift-or terms per column — all
+    * codegen'd integer expressions, no UDF. Linear bucketing is
+    * order-preserving and cheap; for heavily skewed columns substitute
+    * quantile boundaries for the min/max scale (same interleave).
+    * n·bits must fit a signed long (≤ 63). More columns on the same
+    * 63-bit budget means fewer bits each (n=3 → ≤21 bits/col):
+    * per-column pruning granularity falls as n grows — the standard
+    * Z-order dilution, which is why clustering beyond 3-4 columns
+    * stops paying.
     *
-    * `bounds` carries (minA, maxA, minB, maxB) — the one tiny
-    * aggregate the caller computes once (the "model", like the IVF
-    * centroids); constant-folded into the row expression. */
-  def zvalue(a: Column, b: Column,
-      bounds: (Double, Double, Double, Double), bits: Int = 20): Column = {
-    require(bits >= 1 && bits <= 31, s"bits=$bits outside [1,31]")
-    val scaleMax = (1L << bits) - 1
-    def bucket(c: Column, lo: Double, hi: Double): Column =
-      if (hi == lo) lit(0L)
-      else {
-        // clamp in DOUBLE space and neutralize NaN BEFORE the long
-        // cast: under ANSI (the Spark 4 default) casting NaN or an
-        // out-of-range double throws and fails the whole write — and
-        // clamping AFTER the cast can never see those values. NaN
-        // data (or NaN bounds from a max() over NaN-bearing data)
-        // buckets to 0 deterministically.
-        val scaled = (c.cast("double") - lit(lo)) / lit(hi - lo) * lit(scaleMax.toDouble)
-        least(lit(scaleMax.toDouble),
-          greatest(lit(0.0), nanvl(scaled, lit(0.0)))).cast("long")
-      }
-    // spread the low 31 bits of x so bit i lands at position 2i
-    def spread(x: Column): Column = {
-      var v = x.bitwiseAND(lit(0x7FFFFFFFL))
-      v = (v.bitwiseOR(shiftleft(v, 16))).bitwiseAND(lit(0x0000FFFF0000FFFFL))
-      v = (v.bitwiseOR(shiftleft(v, 8))).bitwiseAND(lit(0x00FF00FF00FF00FFL))
-      v = (v.bitwiseOR(shiftleft(v, 4))).bitwiseAND(lit(0x0F0F0F0F0F0F0F0FL))
-      v = (v.bitwiseOR(shiftleft(v, 2))).bitwiseAND(lit(0x3333333333333333L))
-      (v.bitwiseOR(shiftleft(v, 1))).bitwiseAND(lit(0x5555555555555555L))
-    }
-    spread(bucket(a, bounds._1, bounds._2))
-      .bitwiseOR(shiftleft(spread(bucket(b, bounds._3, bounds._4)), 1))
-  }
-
-  /** N-column Morton key: each column linearly bucketed into `bits`
-    * bits by its (lo, hi) range, bits interleaved round-robin — bit j
-    * of column i lands at position j·n + i, so every column
-    * contributes equally at every scale of the curve. The 2-column
-    * [[zvalue]] keeps its mask-spread fast path; this general form
-    * builds the interleave as `bits` shift-or terms per column — all
-    * codegen'd integer expressions, no UDF. n·bits must fit a signed
-    * long (≤ 63). More columns on the same 63-bit budget means fewer
-    * bits each (n=3 → ≤21 bits/col): per-column pruning granularity
-    * falls as n grows — the standard Z-order dilution, which is why
-    * clustering beyond 3-4 columns stops paying. */
-  def zvalueN(cols: Seq[Column], bounds: Seq[(Double, Double)],
+    * `bounds` carries each column's (lo, hi) — the one tiny aggregate
+    * the caller computes once (the "model", like the IVF centroids);
+    * constant-folded into the row expression. */
+  def zvalue(cols: Seq[Column], bounds: Seq[(Double, Double)],
       bits: Int = 20): Column = {
     require(cols.nonEmpty && cols.length == bounds.length,
       s"${cols.length} columns vs ${bounds.length} bounds")
@@ -265,31 +231,21 @@ object Layout {
     }.reduce(_.bitwiseOR(_))
   }
 
-  /** [[zorderWrite]] over N columns: bounds from one min/max
-    * aggregate, then the range exchange on the N-ary Morton key. */
-  def zorderWriteN(df: DataFrame, path: String, columns: Seq[String],
+  /** Write `df` clustered by the Z-order of `columns`: bounds from one
+    * min/max aggregate, one range exchange on the z-key (the same
+    * exchange a plain sorted write pays), then parquet whose row-group
+    * min/max stats are tight on EVERY column. Readers filtering a
+    * range of any of them skip row groups via the pushed predicate —
+    * multi-dimensional pruning from a 1-D sort, the standard lakehouse
+    * clustering trade. */
+  def zorderWrite(df: DataFrame, path: String, columns: Seq[String],
       bits: Int = 20, options: Map[String, String] = Map.empty): Unit = {
     val aggs = columns.flatMap(c =>
       Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
     val r = df.agg(aggs.head, aggs.tail: _*).head
     val bounds = columns.indices.map(i =>
       (r.getDouble(2 * i), r.getDouble(2 * i + 1)))
-    df.sort(zvalueN(columns.map(col), bounds, bits))
-      .write.mode("overwrite").options(options).parquet(path)
-  }
-
-  /** Write `df` clustered by the Z-order of (`colA`, `colB`): one
-    * range exchange on the z-key (the same exchange a plain sorted
-    * write pays), then parquet whose row-group min/max stats are
-    * tight on BOTH columns. Readers filtering a range of EITHER
-    * column skip row groups via the pushed predicate — 2-D pruning
-    * from a 1-D sort, the standard lakehouse clustering trade. */
-  def zorderWrite(df: DataFrame, path: String, colA: String, colB: String,
-      bits: Int = 20, options: Map[String, String] = Map.empty): Unit = {
-    val r = df.agg(min(col(colA)).cast("double"), max(col(colA)).cast("double"),
-      min(col(colB)).cast("double"), max(col(colB)).cast("double")).head
-    val bounds = (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-    df.sort(zvalue(col(colA), col(colB), bounds, bits))
+    df.sort(zvalue(columns.map(col), bounds, bits))
       .write.mode("overwrite").options(options).parquet(path)
   }
 }

@@ -60,7 +60,7 @@ private[graft] object Swap {
 
     /** Mark (runTag, batchId) applied IN the live dir, pruning the
       * tag's superseded markers — for folds whose root is never
-      * swapped (the leaf-wise IVF-PQ folds write it last). */
+      * swapped (the IVF-PQ index folds write it last). */
     def markApplied(runTag: String, batchId: Long): Unit =
       carryMarkers(fs, path, path, Some((runTag, batchId)))
 

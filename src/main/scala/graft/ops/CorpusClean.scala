@@ -286,12 +286,12 @@ object CorpusClean {
     * default, 4M longs ≈ 32 MB, is comfortably broadcast-sized);
     * above it the ids are swap-published as parquet and joined
     * distributed. `dropListDir`: where the spilled list publishes —
-    * on a LOCAL master it defaults to a JVM-temp dir (fine within one
-    * driver's lifetime; cleanup is the caller's once the returned
-    * frame is consumed), but on a real cluster that default is
-    * driver-local: executors would write their task files to their
-    * OWN disks under the same path and the published list would be
-    * partial — a silent drop undercount. So a non-local master
+    * on a LOCAL master it defaults to a dir under the per-JVM
+    * scratch root (`etl.Scratch`, deleted at JVM exit), but on a
+    * real cluster that default is driver-local: executors would
+    * write their task files to their OWN disks under the same path
+    * and the published list would be partial — a silent drop
+    * undercount. So a non-local master
     * REQUIRES an explicit, cluster-visible dir up front (r17 ADVICE;
     * fail-fast at entry, not after the expensive probe action). */
   /** The [[accounting]] entry guard, pure so the spec can pin both
@@ -426,8 +426,7 @@ object CorpusClean {
           // unbounded — swap-publish the ids once (complete-or-absent
           // under the _SUCCESS-gated rename) and join DISTRIBUTED;
           // the driver never holds the list
-          val dir = dropListDir.getOrElse(java.nio.file.Files
-            .createTempDirectory("graft_droplist").toString)
+          val dir = dropListDir.getOrElse(graft.etl.Scratch.dir("droplist"))
           val ids = graft.etl.Swap.open(spark,
             new org.apache.hadoop.fs.Path(dir, "ids").toString)
           ids.publish(dropIdsDf)()

@@ -160,7 +160,7 @@ object Dedup {
     * MinHash minima ARRAY column — the one minima→band-hash
     * construction in the library ([[minHashBandHash]] over each
     * band's `r = numHashes/bands` consecutive minima, exploded from
-    * band structs), shared by [[lshBandKeys]] and
+    * band structs), shared by [[lshBandKeys]], [[lshBands]] and
     * `CorpusClean.accounting` so the declared accounting's banding
     * can never silently drift from the clean()-pipeline hashing it
     * claims to describe (r16 ADVICE). Short docs surface as null
@@ -294,16 +294,11 @@ object Dedup {
   private def minHashBandHash(cols: Seq[Column]): Column =
     md5(concat(cols: _*).cast("binary"))
 
-  /** LSH banding over a MinHash signature frame: (id, band, h). */
-  def lshBands(mh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    (0 until bands).map { b =>
-      val cols = (b * r until (b + 1) * r).map(j => col(s"m$j"))
-      mh.select(col("id"), lit(b.toLong).as("band"),
-        minHashBandHash(cols).as("h"))
-    }.reduce(_ union _)
-  }
+  /** LSH banding over a MinHash signature frame (id, m0 … m{n−1}):
+    * (id, band, h) through [[bandKeysFromMinima]]. */
+  def lshBands(mh: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    bandKeysFromMinima(mh, col("id"),
+      array((0 until numHashes).map(j => col(s"m$j")): _*), numHashes, bands)
 
   /** Candidate near-dup pairs (id1 < id2) sharing ≥1 LSH bucket.
     * Candidate threshold ≈ (1/bands)^(bands/numHashes).

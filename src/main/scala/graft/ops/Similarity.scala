@@ -894,81 +894,7 @@ object Similarity {
     }.sorted.take(nprobe).map(_._2)
   }
 
-  /** Fold a new ENCODED batch (vec_id, cid, codes) into a published
-    * cid-partitioned IVF-PQ index — the add-batch half of the index
-    * lifecycle (faiss `add`), delivered with the same crash/replay
-    * discipline every persisted registry in this library uses
-    * (`etl.Swap`): recover an interrupted publish first, return −1
-    * as a marker no-op when this (runTag, batchId) is already folded
-    * (at-least-once redelivery MUST not duplicate code rows — a dup
-    * shifts every downstream ADC top-k), else read the live index,
-    * union the batch, write tmp `partitionBy("cid")`, carry markers +
-    * the new one, and atomically swap-publish. Returns the published
-    * row count.
-    *
-    * Scale shape: this test-scale form rewrites the whole index per
-    * fold — the registry convention (band/spread/eval registries do
-    * the same), honest here because PQ codes are ~64× smaller than
-    * the vectors they index (the rewrite unit is 1/64th of corpus
-    * bytes, and an index fold is a rare, batched maintenance event).
-    * When even that rewrite is too large, use
-    * [[ivfPqAdvanceLeafwise]] (r17): only the batch's cid partitions
-    * rewrite, under a per-cid upsert + resume-recovery discipline
-    * instead of this one-rename swap. */
-  def ivfPqAdvance(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, batch: DataFrame, runTag: String,
-      batchId: Long): Long = {
-    val index = openIndexDir(spark, indexDir)
-    if (index.applied(runTag, batchId)) return -1L
-    // normalize the batch projection BEFORE the empty-index branch:
-    // fold 0 must publish the same (vec_id, cid int, codes) schema
-    // every later fold unions on (r16 ADVICE — a long/string cid in
-    // the first batch used to publish unnormalized on fold 0 only)
-    val b = batch.select(col("vec_id"), col("cid").cast("int").as("cid"),
-      col("codes"))
-    val next = index.live.fold(b)(
-      _.select(col("vec_id"), col("cid").cast("int").as("cid"), col("codes"))
-        .unionByName(b))
-    index.publish(next, marker = Some((runTag, batchId)),
-      partitionBy = Seq("cid"))(_.count())
-  }
-
-  /** The REMOVE half of the index lifecycle (faiss `remove_ids`):
-    * drop a batch of vec_ids from a published cid-partitioned IVF-PQ
-    * index, under the same crash/replay discipline as
-    * [[ivfPqAdvance]] — recover an interrupted publish first, return
-    * −1 as a marker no-op when this (runTag, batchId) is already
-    * folded (a replayed delete must not be re-applied after
-    * intervening adds re-insert an id: delete-ness is a statement
-    * about a POINT in the fold sequence, which is exactly what the
-    * monotone marker encodes), else anti-join the live index against
-    * the tombstone ids and swap-publish the survivors. Share the
-    * runTag with the add folds: markers are monotone PER TAG, so
-    * adds and removes interleave under one sequence number line.
-    *
-    * Scale shape: same test-scale full-rewrite fold as
-    * [[ivfPqAdvance]] (honest at 1/64th of corpus bytes); when a
-    * remove must only touch the cid partitions its tombstones live
-    * in, use [[ivfPqRemoveLeafwise]] (r18 — the O(touched lists)
-    * port of the leaf-wise discipline). The tombstone side of the
-    * anti-join is a delete batch — broadcast-sized by construction,
-    * so the index never shuffles. */
-  def ivfPqRemove(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, removeIds: DataFrame, runTag: String,
-      batchId: Long): Long = {
-    val index = openIndexDir(spark, indexDir)
-    if (index.applied(runTag, batchId)) return -1L
-    require(index.exists,
-      s"ivfPqRemove: no live index at $indexDir — nothing to remove from")
-    val next = index.read()
-      .select(col("vec_id"), col("cid").cast("int").as("cid"), col("codes"))
-      .join(broadcast(removeIds.select(col("vec_id"))),
-        Seq("vec_id"), "left_anti")
-    index.publish(next, marker = Some((runTag, batchId)),
-      partitionBy = Seq("cid"))(_.count())
-  }
-
-  // ---- shared IVF-PQ index-dir crash recovery ----------------------
+  // ---- IVF-PQ index maintenance -----------------------------------
 
   /** The `cid=*` partition dirs directly under `root`. */
   private def cidDirs(fs: org.apache.hadoop.fs.FileSystem,
@@ -978,9 +904,9 @@ object Similarity {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cid="))
       .map(_.getPath).toSeq
 
-  /** The leaf-wise publish loop: for each tmp cid dir, delete the
-    * live counterpart then rename the tmp dir into place. `failAfter`
-    * is the test-only crash injection for the resume invariant. */
+  /** The leaf publish loop: for each tmp cid dir, delete the live
+    * counterpart then rename the tmp dir into place. `failAfter` is
+    * the test-only crash injection for the resume invariant. */
   private def leafSwapLoop(fs: org.apache.hadoop.fs.FileSystem,
       live: org.apache.hadoop.fs.Path,
       dirs: Seq[org.apache.hadoop.fs.Path], failAfter: Int): Unit =
@@ -994,76 +920,70 @@ object Similarity {
         s"leaf swap failed for ${d.getName}")
     }
 
-  /** Open an index dir, recovering BOTH fold disciplines' crash
-    * windows before anything touches it — the whole-swap orphan (live
-    * missing + complete `_tmp`, promoted by `Swap.open`) AND an
-    * interrupted leaf-wise swap loop (complete `_tmp_leaf` whose
-    * remaining cid dirs are exactly the unswapped suffix, resumed
-    * here). EVERY fold entry point opens through this, so a crash in
-    * one discipline can never corrupt a later fold in the other (r17
-    * ADVICE): without the first half, a leaf-wise call after a
-    * crashed whole-swap publish would see no live index, publish its
-    * batch as a FRESH index, and strand the whole prior index in
-    * `_tmp`; without the second, a whole-swap fold after a crashed
-    * leaf loop would fold the half-swapped live and a LATER leaf-wise
-    * call would then resume the stale suffix over it — renaming
-    * outdated cid dirs over post-fold lists (resurrecting removed
-    * rows). An INCOMPLETE `_tmp_leaf` (no _SUCCESS — crash during the
-    * tmp write, before any swap started) is garbage and is deleted. */
+  /** Open an index dir, first resuming an interrupted leaf loop: a
+    * complete `_tmp_leaf` holds exactly the unswapped suffix of the
+    * crashed fold's touched lists (a completed swap consumes its tmp
+    * dir), so the loop finishes verbatim. An INCOMPLETE `_tmp_leaf`
+    * (no _SUCCESS — a crash during the tmp write, before any swap) is
+    * garbage and is deleted. `Swap.open` covers the one case with no
+    * live root at all — a first fold that crashed before its first
+    * swap — by promoting the complete tmp whole, which is the same
+    * resume. Both folds open through this. */
   private def openIndexDir(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): graft.etl.Swap.Dir = {
-    val index = graft.etl.Swap.open(spark, indexDir, "_tmp")
-    val fs = index.fs
-    val leafTmp = leafTmpDir(indexDir)
+    val index = graft.etl.Swap.open(spark, indexDir, "_tmp_leaf")
+    val (fs, leafTmp) = (index.fs, leafTmpDir(indexDir))
     if (fs.exists(new org.apache.hadoop.fs.Path(leafTmp, "_SUCCESS")))
       leafSwapLoop(fs, index.path, cidDirs(fs, leafTmp), Int.MaxValue)
     fs.delete(leafTmp, true)
     index
   }
 
-  /** The leaf-wise folds' staging dir (never swapped as a whole). */
+  /** The folds' staging dir (never swapped as a whole). */
   private def leafTmpDir(indexDir: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(indexDir + "_tmp_leaf")
 
-  /** LEAF-WISE add-batch — the production variant [[ivfPqAdvance]]'s
-    * scaladoc promises: only the cid partitions PRESENT IN THE BATCH
-    * are rewritten, so a fold's IO is O(touched lists), not O(index)
-    * — at 100 TB an add touching 3 of 10⁴ coarse lists rewrites 3
-    * directories. The discipline necessarily differs from the
-    * whole-index swap (one atomic rename can't cover many dirs), so
-    * correctness rests on two invariants instead:
+  /** Fold a new ENCODED batch (vec_id, cid, codes) into a
+    * cid-partitioned IVF-PQ index — the add-batch half of the index
+    * lifecycle (faiss `add`). Only the cid partitions PRESENT IN THE
+    * BATCH are rewritten, so a fold's IO is O(touched lists), not
+    * O(index) — at 100 TB an add touching 3 of 10⁴ coarse lists
+    * rewrites 3 directories. One atomic rename can't cover many
+    * dirs, so correctness rests on two invariants:
     *
     *  - **per-cid UPSERT, not blind union**: each touched list's next
     *    content is (live rows whose vec_id is NOT in the batch) ∪
     *    batch — so re-folding the same batch converges instead of
     *    duplicating, which is what makes every crash point below
-    *    safe to replay;
+    *    safe to replay. Re-adding an existing vec_id therefore
+    *    REPLACES its row (an upsert), never duplicates it;
     *  - **resume-recovery of the swap loop**: touched lists move via
     *    delete(live/cid=K) → rename(tmp/cid=K). A crash mid-loop
     *    leaves a _SUCCESS-complete tmp whose REMAINING cid dirs are
-    *    exactly the unswapped suffix (a completed swap consumes its
-    *    tmp dir), so the next call first resumes that loop verbatim,
-    *    then re-runs the fold — which the upsert makes a content
-    *    no-op. Without the resume, the delete→rename gap would lose
-    *    a list's NON-batch rows.
+    *    exactly the unswapped suffix, so the next call first resumes
+    *    that loop verbatim ([[openIndexDir]]), then re-runs the fold
+    *    — which the upsert makes a content no-op. Without the resume,
+    *    the delete→rename gap would lose a list's NON-batch rows.
     *
     * The applied-batch marker lives in the (never-swapped) index root
-    * and is written LAST — here it is an optimization that
-    * short-circuits clean replays, not the correctness mechanism the
-    * whole-index folds need (their union fold does NOT converge under
-    * replay; this one does). `failAfterSwaps` is the test-only crash
-    * injection for the loop invariant. Batch vec_ids must be unique
-    * (an index key); the batch must carry its cid assignment, same as
-    * [[ivfPqAdvance]]. Returns the touched lists' published row
-    * count, or −1 on a marker no-op. */
-  def ivfPqAdvanceLeafwise(spark: org.apache.spark.sql.SparkSession,
+    * and is written LAST: a marked (runTag, batchId) returns −1, so
+    * at-least-once redelivery short-circuits. Markers are monotone
+    * PER TAG (`Swap.Dir.applied`), so adds and removes sharing a
+    * runTag interleave under one sequence number line. Fold 0 into a
+    * missing index creates it. A reader can observe a
+    * partially-applied batch mid-fold (no multi-directory atomicity).
+    * `failAfterSwaps` is the test-only crash injection for the loop
+    * invariant. Batch vec_ids must be unique (an index key); the
+    * batch carries its cid assignment. Returns the touched lists'
+    * published row count, or −1 on a marker no-op. */
+  def ivfPqAdvance(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batch: DataFrame, runTag: String, batchId: Long,
       failAfterSwaps: Int = Int.MaxValue): Long = {
-    // cross-discipline recovery (r17 ADVICE): promote a whole-swap
-    // orphan AND resume an interrupted leaf loop before reading live
     val index = openIndexDir(spark, indexDir)
     val (fs, live, leafTmp) = (index.fs, index.path, leafTmpDir(indexDir))
     if (index.applied(runTag, batchId)) return -1L
+    // normalize the batch projection: every fold publishes the same
+    // (vec_id, cid int, codes) schema, fold 0 included
     val b = batch.select(col("vec_id"), col("cid").cast("int").as("cid"),
       col("codes"))
     val touched = b.select(col("cid")).distinct()
@@ -1090,14 +1010,16 @@ object Similarity {
     rows
   }
 
-  /** LEAF-WISE remove — the O(touched lists) variant of
-    * [[ivfPqRemove]] the latter's scaladoc promises: tombstones only
-    * rewrite the cid partitions they live in, so a GDPR-era delete
-    * batch touching 3 of 10⁴ coarse lists rewrites 3 directories, not
-    * the index. Same two invariants as [[ivfPqAdvanceLeafwise]], and
-    * removal is idempotent at the row level (an anti-join of
-    * already-cleaned rows is a no-op), so every crash point replays
-    * convergently:
+  /** The REMOVE half of the index lifecycle (faiss `remove_ids`):
+    * tombstones only rewrite the cid partitions they live in, so a
+    * GDPR-era delete batch touching 3 of 10⁴ coarse lists rewrites 3
+    * directories, not the index. Same two invariants and marker
+    * contract as [[ivfPqAdvance]] (a replayed remove must not be
+    * re-applied after intervening adds re-insert an id: delete-ness
+    * is a POINT in the fold sequence, which is exactly what the
+    * monotone marker encodes), and removal is idempotent at the row
+    * level (an anti-join of already-cleaned rows is a no-op), so
+    * every crash point replays convergently:
     *
     *  - touched lists whose next content is NON-empty move via the
     *    shared delete→rename leaf loop (resume-recovered by
@@ -1114,21 +1036,18 @@ object Similarity {
     * lists); without it, one column-pruned (vec_id, cid) scan of the
     * index locates the tombstones. A WRONG caller-provided cid leaves
     * that tombstone alive in its real list — omit the column when
-    * unsure. Marker discipline, root placement and the monotone
-    * replay contract match [[ivfPqAdvanceLeafwise]]; as there, a
-    * reader can observe a partially-applied batch mid-fold (no
-    * multi-directory atomicity — the documented leaf-wise caveat).
-    * Returns the touched lists' surviving row count, or −1 on a
-    * marker no-op. */
-  def ivfPqRemoveLeafwise(spark: org.apache.spark.sql.SparkSession,
+    * unsure. The tombstone side of every join is a delete batch —
+    * broadcast-sized by construction, so the index never shuffles.
+    * Removing from a missing index raises. Returns the touched lists'
+    * surviving row count, or −1 on a marker no-op. */
+  def ivfPqRemove(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, removeIds: DataFrame, runTag: String, batchId: Long,
       failAfterSwaps: Int = Int.MaxValue): Long = {
     val index = openIndexDir(spark, indexDir)
     val (fs, live, leafTmp) = (index.fs, index.path, leafTmpDir(indexDir))
     if (index.applied(runTag, batchId)) return -1L
     require(cidDirs(fs, live).nonEmpty,
-      s"ivfPqRemoveLeafwise: no live index at $indexDir — nothing to " +
-        "remove from")
+      s"ivfPqRemove: no live index at $indexDir — nothing to remove from")
     val tomb = removeIds.select(col("vec_id"))
     val touched: Array[Int] =
       if (removeIds.columns.contains("cid"))

@@ -30,40 +30,13 @@ object TableProfile {
   /** DataFrame form for the declared/oracle path (`q_profile`): per
     * column — row count, null count, EXACT distinct count, min/max as
     * strings — as a long (col_name, n_rows, n_null, n_distinct,
-    * min_s, max_s) report. ONE aggregate job over ONE scan: the
-    * multi-distinct expands rows internally (Expand ×|columns| — the
-    * documented cost of exactness; [[profile]] keeps the HLL sketch
-    * for the 100 TB discovery path where estimates suffice), but
-    * never re-reads the table per column or per metric — the
-    * single-scan shape is plan-gated. Restrict `columns` to integer /
-    * string columns when oracle-comparing: float→string formatting is
-    * engine-specific. */
-  def profileFrame(df: DataFrame, columns: Seq[String]): DataFrame = {
-    require(columns.nonEmpty, "profileFrame requires explicit columns")
-    // input refs via df(name) (exact-name resolution) and internal
-    // names by INDEX: composing "__n_" + name and re-parsing with
-    // col() would treat a dotted column name as struct-field access
-    val aggs: Seq[Column] = count(lit(1)).as("__rows") +:
-      columns.zipWithIndex.flatMap { case (name, i) =>
-        val c = df(name)
-        Seq(
-          sum(when(c.isNull, 1L).otherwise(0L)).as(s"__n_$i"),
-          count_distinct(c).as(s"__d_$i"),
-          min(c).cast("string").as(s"__lo_$i"),
-          max(c).cast("string").as(s"__hi_$i"))
-      }
-    val one = df.agg(aggs.head, aggs.tail: _*)
-    val entries = columns.zipWithIndex.map { case (name, i) =>
-      struct(lit(name).as("col_name"), col("__rows").as("n_rows"),
-        col(s"__n_$i").as("n_null"), col(s"__d_$i").as("n_distinct"),
-        col(s"__lo_$i").as("min_s"), col(s"__hi_$i").as("max_s"))
-    }
-    one.select(explode(array(entries: _*)).as("p")).select(col("p.*"))
-  }
-
-  /** The same exact long report as [[profileFrame]], as one
-    * SINGLE-COLUMN one-distinct aggregate per column, unioned — the
-    * COLUMNAR-source shape, and the declared q_profile plan since
+    * min_s, max_s) report ([[profile]] keeps the HLL sketch for the
+    * 100 TB discovery path where estimates suffice). Restrict
+    * `columns` to integer / string columns when oracle-comparing:
+    * float→string formatting is engine-specific.
+    *
+    * One SINGLE-COLUMN one-distinct aggregate per column, unioned —
+    * the COLUMNAR-source shape, and the declared q_profile plan since
     * r15. Measured at sf0.1 (600 k rows × 6 columns, idle, min-of-9):
     * the one-scan multi-distinct form costs 9.0 s — its Expand
     * multiplies every row ×(|columns|+1) through the first aggregate,
@@ -73,9 +46,7 @@ object TableProfile {
     * source) and each branch plans as the classic two-phase
     * one-distinct aggregate: partial hash by value (map-side
     * combine ⇒ the exchange carries |distinct|, not |rows|), then the
-    * 1-row fold. All branches execute inside ONE union job. The
-    * Expand form remains for genuinely row-oriented inputs where a
-    * second pass would re-read the whole row.
+    * 1-row fold. All branches execute inside ONE union job.
     *
     * SETTLED r18 (do not re-attempt): folding the branches into one
     * grouped aggregate — stack the columns into (col_name, value)
@@ -121,7 +92,7 @@ object TableProfile {
 
     val aggs: Seq[Column] = count(lit(1)).as("__rows") +: fields.flatMap { f =>
       // df(name), not col(name): col() re-parses a dotted column name
-      // as struct-field access (the hazard profileFrame documents)
+      // as struct-field access
       val c = df(f.name)
       Seq(
         sum(when(c.isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"),

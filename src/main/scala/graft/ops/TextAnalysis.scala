@@ -14,17 +14,8 @@ object TextAnalysis {
     * split is the literal ' ' — runs of spaces yield empty-string
     * tokens and tabs/newlines do not split — because every declared
     * query's DuckDB oracle mirrors this exact split and the synthetic
-    * corpora are single-space normalized. Real-world text should pass
-    * through [[normalizeWhitespace]] upstream ONCE (cheaper than
-    * regex-splitting in every operator, and it keeps all downstream
-    * token counts consistent with each other). */
+    * corpora are single-space normalized. */
   def tokens(text: Column): Column = split(text, " ")
-
-  /** Collapse all whitespace runs to single spaces and trim — the
-    * one-time normalization that makes raw text satisfy [[tokens]]'
-    * single-space contract. */
-  def normalizeWhitespace(text: Column): Column =
-    trim(regexp_replace(text, "\\s+", " "))
 
   /** All row-local token statistics in ONE codegen pass — the
     * `graft.functions.TokenStats` kernel: `STRUCT<n_tokens,
@@ -44,10 +35,6 @@ object TextAnalysis {
   /** Whitespace token count. */
   def tokenCount(text: Column): Column =
     tokenStats(text).getField("n_tokens")
-
-  /** BPE-style token estimate: ≈ one token per 4 characters. */
-  def bpeTokenEstimate(nChars: Column): Column =
-    ((nChars + lit(3)) / lit(4)).cast("long")
 
   /** Stopword ratio against a given vocabulary. */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
@@ -173,12 +160,4 @@ object TextAnalysis {
     regexp_replace(
       regexp_replace(text, UrlRe, "<URL>"),
       EmailRe, "<EMAIL>")
-
-  /** Winnowing-style minimum shingle-hash fingerprint per document
-    * (robust to suffix edits, unlike the full-content hash). */
-  def minShingleFingerprint(docs: DataFrame, text: Column, id: Column,
-      shingleLen: Int = 3): DataFrame =
-    Dedup.shingles(docs, text, id, shingleLen)
-      .groupBy(col("id"))
-      .agg(min(md5(col("s").cast("binary"))).as("fp_min"))
 }

@@ -81,10 +81,12 @@ object EtlQueries {
     // (same literals, same association) so both engines compute
     // bit-identical scaled values; DuckDB's double→BIGINT CAST rounds
     // where Spark's ANSI cast truncates, so the oracle goes through
-    // trunc() explicitly. Everything after the bucket is integer.
+    // trunc() explicitly. Everything after the bucket is integer. The
+    // oracle interleaves with the classic mask-spread, an independent
+    // construction of the key zvalue builds bit by bit.
     "q_zorder_key" -> { (s, d) =>
-      val z = graft.etl.Layout.zvalue(col("l_orderkey"), col("l_quantity"),
-        (0.0, 200000.0, 0.0, 60.0), bits = 20)
+      val z = graft.etl.Layout.zvalue(Seq(col("l_orderkey"), col("l_quantity")),
+        Seq((0.0, 200000.0), (0.0, 60.0)), bits = 20)
       t(s, d, "lineitem")
         .select(col("l_returnflag"), z.as("zv"))
         .groupBy(col("l_returnflag"))
@@ -95,9 +97,7 @@ object EtlQueries {
         .orderBy(col("l_returnflag"))
     },
 
-    // The GENERAL N-column Z-order path under the oracle (r14 —
-    // q_zorder_key covers only the 2-column mask-spread fast path;
-    // Layout.zvalueN's round-robin interleave was spec-only): 3-D
+    // The Z-order key at n = 3 under the oracle (r14): 3-D
     // Morton key over (l_orderkey, l_quantity, l_extendedprice) at 21
     // bits/column (3·21 = 63, the full signed-long budget), folded
     // through the same order-independent exact aggregates. Bucket
@@ -106,7 +106,7 @@ object EtlQueries {
     // the interleave is pure integer shift/mask on both engines —
     // bit j of column i lands at position j·3 + i.
     "q_zorder3_key" -> { (s, d) =>
-      val z = graft.etl.Layout.zvalueN(
+      val z = graft.etl.Layout.zvalue(
         Seq(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),
         Seq((0.0, 200000.0), (0.0, 60.0), (0.0, 200000.0)), bits = 21)
       t(s, d, "lineitem")
@@ -452,8 +452,9 @@ object EtlQueries {
 
   val sql: Map[String, String] = Map(
     "q_zorder_key" -> {
-      // Layout.zvalue's exact mask-spread, one CTE per step (textual
-      // inlining would double the expression at every level); every
+      // the classic 2-column mask-spread interleave, one CTE per step
+      // (textual inlining would double the expression at every level)
+      // — independent of Layout.zvalue's per-bit form, same key; every
       // double literal CAST to DOUBLE (bare DuckDB numerics are
       // DECIMAL — the q_bm25 mirroring rule), trunc() because DuckDB's
       // double→BIGINT CAST rounds where Spark's ANSI cast truncates.
@@ -484,7 +485,7 @@ object EtlQueries {
     },
 
     "q_zorder3_key" -> {
-      // zvalueN's general interleave, mirrored: the bucket is the
+      // zvalue's per-bit interleave, mirrored: the bucket is the
       // q_zorder_key expression at 21 bits; bit j of column i lands at
       // key position j·3 + i (63 shift-or terms, generated — textual
       // but mechanical, exactly the Column expressions Spark builds).

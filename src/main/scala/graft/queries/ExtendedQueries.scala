@@ -189,12 +189,12 @@ object ExtendedQueries {
       build: => Array[Byte]): Array[Byte] =
     memo(key, MemoKind.Bytes, s, d)(BytesMemo(build)).bytes
 
-  /** A layout written once per (session, dir) into a fresh temp dir by
-    * `build(dir)`; returns the dir. */
+  /** A layout written once per (session, dir) into a fresh dir under
+    * the per-JVM scratch root by `build(dir)`; returns the dir. */
   private[graft] def memoPath(key: String, s: org.apache.spark.sql.SparkSession,
       d: String)(build: String => Unit): String =
     memo(key, MemoKind.Path, s, d) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_$key").toString
+      val dir = graft.etl.Scratch.dir(key)
       build(dir)
       PathMemo(dir)
     }.dir
@@ -484,23 +484,17 @@ object ExtendedQueries {
     * one-pass typed MinHash sketch (graft.functions.MinHashAgg —
     * ObjectHashAggregate, not the SortAggregate the 8-column
     * min(md5hex) formulation forces; byte-identical per MinHashAggSpec),
-    * then one explode emitting both band rows (vs two projections + a
-    * union — fewer codegen stages). cache(): both sides of the LSH
-    * self-join read it, and BOTH declared dedup queries (minhash-lsh
-    * candidates, ngram-jaccard candidate generation) share the exact
-    * same plan, so the CacheManager serves one materialization to all.
-    * At scale this is "materialize signatures before LSH" — the
-    * standard shape. */
+    * then `Dedup.lshBands` — the library's one minima→band-hash
+    * construction, one explode emitting both band rows. cache(): both
+    * sides of the LSH self-join read it, and BOTH declared dedup
+    * queries (minhash-lsh candidates, ngram-jaccard candidate
+    * generation) share the exact same plan, so the CacheManager serves
+    * one materialization to all. At scale this is "materialize
+    * signatures before LSH" — the standard shape. */
   private def bandTable(s: org.apache.spark.sql.SparkSession, d: String) =
     memoCache("bands", s, d) {
-      val mh = mhSignatures(s, d).withColumnRenamed("id", "doc_id")
-      mh.select(col("doc_id"), explode(array(
-          struct(lit(1L).as("band"),
-            md5(concat_ws("", col("m0"), col("m1"), col("m2"), col("m3")).cast("binary")).as("h")),
-          struct(lit(2L).as("band"),
-            md5(concat_ws("", col("m4"), col("m5"), col("m6"), col("m7")).cast("binary")).as("h"))))
-          .as("bh"))
-        .select(col("doc_id"), col("bh.band").as("band"), col("bh.h").as("h"))
+      graft.ops.Dedup.lshBands(mhSignatures(s, d), 8, 2)
+        .withColumnRenamed("id", "doc_id")
     }
 
   /** vec_id + double-cast vector + L2 norm — the shared base of the
@@ -599,6 +593,17 @@ object ExtendedQueries {
       .write.partitionBy("cid").mode("overwrite").parquet(dir)
   }
 
+  /** The declared IVF-PQ probe over a persisted (vec_id, cid, codes)
+    * index: the cid filter on the 2 oracle lists (partition pruning on
+    * the cid dirs), ADC against the fixed query LUT, exact top-10. */
+  private def ivfPqProbe(index: org.apache.spark.sql.DataFrame) =
+    index.filter(col("cid").isin(ivfOracleProbe.map(Int.box): _*))
+      .select(col("vec_id"), col("cid").cast("int").as("cid"),
+        graft.functions.GraftFunctions.pqAdc(
+          col("codes"), adcOracleLut, 4).as("adc"))
+      .orderBy(col("adc").desc, col("vec_id"))
+      .limit(10)
+
   /** The (vec_id, cid, codes) encoding the IVF-PQ memos persist:
     * L2 argmin against the ±1 centroids, lower cid on ties — NOT
     * Similarity.assignClusters (cosine), because the oracle mirrors
@@ -627,10 +632,9 @@ object ExtendedQueries {
     * pattern): batch 0 (even vec_ids) folded into an empty index,
     * batch 1 (odd vec_ids) folded on top, then batch 1 deliberately
     * REPLAYED — the applied-batch-marker no-op is on the declared
-    * path (a non-idempotent fold would duplicate every odd vector's
-    * code row and shift the probe's top-k). Index lives at
-    * `<memo>/index`, cid-partitioned like the one-shot build, so the
-    * declared probe keeps real partition pruning. */
+    * path. Index lives at `<memo>/index`, cid-partitioned like the
+    * one-shot build, so the declared probe keeps real partition
+    * pruning. */
   private[graft] def ivfPqAdvancePath(s: org.apache.spark.sql.SparkSession,
       d: String): String = memoPath("ivfpqadv", s, d) { dir =>
     val enc = ivfPqEncode(s, d)
@@ -639,7 +643,7 @@ object ExtendedQueries {
       enc.filter(col("vec_id") % 2 === 0), "adv", 0L)
     val n1 = graft.ops.Similarity.ivfPqAdvance(s, idx,
       enc.filter(col("vec_id") % 2 =!= 0), "adv", 1L)
-    require(n0 > 0 && n1 > n0, s"ivfPqAdvance: fold sizes $n0 -> $n1")
+    require(n0 > 0 && n1 > 0, s"ivfPqAdvance: fold sizes $n0, $n1")
     val replay = graft.ops.Similarity.ivfPqAdvance(s, idx,
       enc.filter(col("vec_id") % 2 =!= 0), "adv", 1L)
     require(replay == -1L,
@@ -667,7 +671,7 @@ object ExtendedQueries {
       enc.filter(col("vec_id") % 4 === 0).select(col("vec_id")), "lc", 1L)
     val n2 = graft.ops.Similarity.ivfPqAdvance(s, idx,
       enc.filter(col("vec_id") % 2 =!= 0), "lc", 2L)
-    require(n1 < n0 && n2 > n1,
+    require(n1 < n0 && n2 > 0,
       s"ivfPqRemove lifecycle: fold sizes $n0 -> $n1 -> $n2")
     val replay = graft.ops.Similarity.ivfPqRemove(s, idx,
       enc.filter(col("vec_id") % 4 === 0).select(col("vec_id")), "lc", 1L)
@@ -676,47 +680,42 @@ object ExtendedQueries {
   }
 
   /** The q_ivfpq_leafwise index: the add→remove lifecycle of
-    * [[ivfPqRemovePath]], but through the LEAF-WISE folds — the
-    * O(touched lists) production maintenance shape
-    * (`Similarity.ivfPqAdvanceLeafwise` / `ivfPqRemoveLeafwise`) —
-    * with a CRASH on the declared path: the odds' fold first runs
-    * with an injected mid-swap-loop crash (failAfterSwaps = 1),
-    * leaving some lists new, some old and a complete `_tmp_leaf`;
-    * the redelivery resumes the interrupted loop and re-folds (the
-    * per-cid upsert makes that a content no-op for the already-
-    * swapped lists). The leaf-wise remove then drops the multiples
-    * of 4 with tombstones CARRYING their cid (the production
-    * reverse-lookup shape — no locate scan), and is deliberately
-    * replayed (must be a marker no-op). Every fold discipline in
-    * this family converges to the same content, so the oracle is
+    * [[ivfPqRemovePath]] with a CRASH on the declared path: the odds'
+    * fold first runs with an injected mid-swap-loop crash
+    * (failAfterSwaps = 1), leaving some lists new, some old and a
+    * complete `_tmp_leaf`; the redelivery resumes the interrupted
+    * loop and re-folds (the per-cid upsert makes that a content
+    * no-op for the already-swapped lists). The remove then drops the
+    * multiples of 4 with tombstones CARRYING their cid (the
+    * production reverse-lookup shape — no locate scan), and is
+    * deliberately replayed (must be a marker no-op). The oracle is
     * the q_ivfpq_remove recompute verbatim (surviving set:
     * vec_id % 4 ≠ 0). */
   private[graft] def ivfPqLeafwisePath(s: org.apache.spark.sql.SparkSession,
       d: String): String = memoPath("ivfpqleaf", s, d) { dir =>
     val enc = ivfPqEncode(s, d)
     val idx = s"$dir/index"
-    val n0 = graft.ops.Similarity.ivfPqAdvanceLeafwise(s, idx,
+    val n0 = graft.ops.Similarity.ivfPqAdvance(s, idx,
       enc.filter(col("vec_id") % 2 === 0), "lw", 0L)
-    require(n0 > 0, s"ivfPqAdvanceLeafwise: empty fold 0 ($n0)")
+    require(n0 > 0, s"ivfPqAdvance: empty fold 0 ($n0)")
     val odds = enc.filter(col("vec_id") % 2 =!= 0)
     // injected crash after one leaf swap — fires whenever the batch
     // touches ≥ 2 lists (every shipped SF); a single-list batch just
     // completes, and the getOrElse below keeps the build total
     val attempt =
-      try Some(graft.ops.Similarity.ivfPqAdvanceLeafwise(s, idx, odds,
+      try Some(graft.ops.Similarity.ivfPqAdvance(s, idx, odds,
         "lw", 1L, failAfterSwaps = 1))
       catch { case _: IllegalStateException => None }
     val n1 = attempt.getOrElse(
-      graft.ops.Similarity.ivfPqAdvanceLeafwise(s, idx, odds, "lw", 1L))
-    require(n1 > 0, s"ivfPqAdvanceLeafwise: resume fold returned $n1")
+      graft.ops.Similarity.ivfPqAdvance(s, idx, odds, "lw", 1L))
+    require(n1 > 0, s"ivfPqAdvance: resume fold returned $n1")
     val tomb = enc.filter(col("vec_id") % 4 === 0)
       .select(col("vec_id"), col("cid"))
-    val n2 = graft.ops.Similarity.ivfPqRemoveLeafwise(s, idx, tomb, "lw", 2L)
-    require(n2 >= 0, s"ivfPqRemoveLeafwise returned $n2")
-    val replay = graft.ops.Similarity.ivfPqRemoveLeafwise(s, idx, tomb,
-      "lw", 2L)
+    val n2 = graft.ops.Similarity.ivfPqRemove(s, idx, tomb, "lw", 2L)
+    require(n2 >= 0, s"ivfPqRemove returned $n2")
+    val replay = graft.ops.Similarity.ivfPqRemove(s, idx, tomb, "lw", 2L)
     require(replay == -1L,
-      s"ivfPqRemoveLeafwise: replay was not a marker no-op ($replay)")
+      s"ivfPqRemove: replay was not a marker no-op ($replay)")
   }
 
   /** The q_jsonl_quarantine layout: the documents corpus exported as
@@ -741,6 +740,22 @@ object ExtendedQueries {
       .select(expr("substring(l, 1, length(l) - 1)").as("value"))
       .coalesce(1).write.mode("append")
       .option("compression", "gzip").text(shards)
+  }
+
+  /** Run a stream memo's sink to completion under
+    * Trigger.AvailableNow, then stop it. The lifecycle claim is
+    * "micro-batchES": the source must have sliced the feed into ≥ 3
+    * batches, not swallowed it in one. */
+  private def runAvailableNow(sink: org.apache.spark.sql.streaming
+      .DataStreamWriter[org.apache.spark.sql.Row], name: String): Unit = {
+    val q = sink.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try {
+      q.awaitTermination()
+      require(q.lastProgress != null && q.lastProgress.batchId >= 2,
+        s"$name: expected >= 3 micro-batches, last batchId = " +
+          s"${Option(q.lastProgress).map(_.batchId)}")
+    } finally q.stop()
   }
 
   /** The q_stream_jsonl_publish state: the SAME corrupted JSONL
@@ -774,18 +789,10 @@ object ExtendedQueries {
     }
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("lang", StringType), StructField("text", StringType)))
-    val q = graft.streaming.StreamingPipeline.jsonlIntakeSink(
+    runAvailableNow(graft.streaming.StreamingPipeline.jsonlIntakeSink(
         graft.sources.CorpusIO.readJsonlStream(s, feed, schema,
           maxFilesPerTrigger = 1),
-        schema, "doc_id", s"$dir/pub", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      require(q.lastProgress != null && q.lastProgress.batchId >= 2,
-        s"streamJsonlPath: expected >= 3 micro-batches, last batchId = " +
-          s"${Option(q.lastProgress).map(_.batchId)}")
-    } finally q.stop()
+        schema, "doc_id", s"$dir/pub", s"$dir/ckpt"), "streamJsonlPath")
     // the declared replay: re-fold the WHOLE feed through the batch
     // reader — upsert + set-fold must both be content no-ops
     val (cleanAll, quarAll) =
@@ -928,21 +935,11 @@ object ExtendedQueries {
       ch.filter(col("ts") % 3 === i).coalesce(1)
         .write.mode("append").parquet(feed)
     }
-    val q = graft.streaming.StreamingPipeline.cdcApplySink(
+    runAvailableNow(graft.streaming.StreamingPipeline.cdcApplySink(
         s.readStream.schema(ch.schema)
           .option("maxFilesPerTrigger", "1").parquet(feed),
         "o_custkey", Seq("cur_price", "cur_status"),
-        s"$dir/snap", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      // the lifecycle claim is "micro-batchES": availableNow must have
-      // sliced the feed, not swallowed it in one batch
-      require(q.lastProgress != null && q.lastProgress.batchId >= 2,
-        s"streamCdcPath: expected >= 3 micro-batches, last batchId = " +
-          s"${Option(q.lastProgress).map(_.batchId)}")
-    } finally q.stop()
+        s"$dir/snap", s"$dir/ckpt"), "streamCdcPath")
   }
 
   /** The q_stream_agg_publish state: the SAME three lineitem deltas
@@ -970,19 +967,11 @@ object ExtendedQueries {
       li.filter(col("l_orderkey") % 3 === i).coalesce(1)
         .write.mode("append").parquet(feed)
     }
-    val q = graft.streaming.StreamingPipeline.incrementalAggSink(
+    runAvailableNow(graft.streaming.StreamingPipeline.incrementalAggSink(
         s.readStream.schema(li.schema)
           .option("maxFilesPerTrigger", "1").parquet(feed),
         Seq("l_returnflag", "l_linestatus"), "l_quantity",
-        s"$dir/state", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      require(q.lastProgress != null && q.lastProgress.batchId >= 2,
-        s"streamAggPath: expected >= 3 micro-batches, last batchId = " +
-          s"${Option(q.lastProgress).map(_.batchId)}")
-    } finally q.stop()
+        s"$dir/state", s"$dir/ckpt"), "streamAggPath")
   }
 
   /** The q_stream_scd2_publish state: the SAME orders update feed as
@@ -1028,19 +1017,11 @@ object ExtendedQueries {
         stamped += f.getName
       }
     }
-    val q = graft.streaming.StreamingPipeline.scd2Sink(
+    runAvailableNow(graft.streaming.StreamingPipeline.scd2Sink(
         s.readStream.schema(upd.schema)
           .option("maxFilesPerTrigger", "1").parquet(feed),
         "o_custkey", "ts", Seq("o_orderkey", "o_totalprice"),
-        s"$dir/dim", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      require(q.lastProgress != null && q.lastProgress.batchId >= 2,
-        s"streamScd2Path: expected >= 3 micro-batches, last batchId = " +
-          s"${Option(q.lastProgress).map(_.batchId)}")
-    } finally q.stop()
+        s"$dir/dim", s"$dir/ckpt"), "streamScd2Path")
   }
 
   /** The q_stream_band_publish state: the documents corpus delivered
@@ -1063,18 +1044,10 @@ object ExtendedQueries {
       docs.filter(col("doc_id") % 3 === i).coalesce(1)
         .write.mode("append").parquet(feed)
     }
-    val q = graft.streaming.StreamingPipeline.bandRegistrySink(
+    runAvailableNow(graft.streaming.StreamingPipeline.bandRegistrySink(
         s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1").parquet(feed),
-        "text", "doc_id", s"$dir/reg", s"$dir/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      require(q.lastProgress != null && q.lastProgress.batchId >= 2,
-        s"streamBandPath: expected >= 3 micro-batches, last batchId = " +
-          s"${Option(q.lastProgress).map(_.batchId)}")
-    } finally q.stop()
+        "text", "doc_id", s"$dir/reg", s"$dir/ckpt"), "streamBandPath")
     // the declared replay: re-fold batch 0 — a set-fold no-op
     graft.ops.Dedup.advanceBandRegistry(s, s"$dir/reg",
       docs.filter(col("doc_id") % 3 === 0), col("text"), col("doc_id"))
@@ -1609,13 +1582,7 @@ object ExtendedQueries {
     // DuckDB independently recomputes assignment, probe, codes, LUT
     // and the ADC sums from the same literals — all exact integers.
     "q_ivfpq_probe" -> { (s, d) =>
-      s.read.parquet(ivfPqIndexPath(s, d))
-        .filter(col("cid").isin(ivfOracleProbe.map(Int.box): _*))
-        .select(col("vec_id"), col("cid").cast("int").as("cid"),
-          graft.functions.GraftFunctions.pqAdc(
-            col("codes"), adcOracleLut, 4).as("adc"))
-        .orderBy(col("adc").desc, col("vec_id"))
-        .limit(10)
+      ivfPqProbe(s.read.parquet(ivfPqIndexPath(s, d)))
     },
 
     // Index MAINTENANCE under the oracle (r16 — the add-batch half of
@@ -1623,19 +1590,12 @@ object ExtendedQueries {
     // q_ivfpq_probe, but over an index built by TWO
     // `Similarity.ivfPqAdvance` folds (even vec_ids, then odd) plus a
     // deliberate REPLAY of the second batch on the declared path —
-    // the applied-batch marker must make the redelivery a no-op, or
-    // duplicated code rows shift the ADC top-k and hash-mismatch.
+    // the applied-batch marker must make the redelivery a no-op.
     // Oracle = the q_ivfpq_probe recompute verbatim: the folds
     // converge to the one-shot build. Same real partition pruning
-    // (cid dirs survive the swap-publish; gated in PlanSpec).
+    // (the leaf swaps keep the cid dirs; gated in PlanSpec).
     "q_ivfpq_advance" -> { (s, d) =>
-      s.read.parquet(s"${ivfPqAdvancePath(s, d)}/index")
-        .filter(col("cid").isin(ivfOracleProbe.map(Int.box): _*))
-        .select(col("vec_id"), col("cid").cast("int").as("cid"),
-          graft.functions.GraftFunctions.pqAdc(
-            col("codes"), adcOracleLut, 4).as("adc"))
-        .orderBy(col("adc").desc, col("vec_id"))
-        .limit(10)
+      ivfPqProbe(s.read.parquet(s"${ivfPqAdvancePath(s, d)}/index"))
     },
 
     // The REMOVE half of the index lifecycle under the oracle (r17 —
@@ -1648,15 +1608,9 @@ object ExtendedQueries {
     // recomputes the probe over the SURVIVING set (vec_id % 4 ≠ 0)
     // from the same integer literals; any code row the tombstone
     // anti-join wrongly kept, dropped or duplicated hash-mismatches.
-    // Same real cid partition pruning (dirs survive each swap).
+    // Same real cid partition pruning (dirs survive each fold).
     "q_ivfpq_remove" -> { (s, d) =>
-      s.read.parquet(s"${ivfPqRemovePath(s, d)}/index")
-        .filter(col("cid").isin(ivfOracleProbe.map(Int.box): _*))
-        .select(col("vec_id"), col("cid").cast("int").as("cid"),
-          graft.functions.GraftFunctions.pqAdc(
-            col("codes"), adcOracleLut, 4).as("adc"))
-        .orderBy(col("adc").desc, col("vec_id"))
-        .limit(10)
+      ivfPqProbe(s.read.parquet(s"${ivfPqRemovePath(s, d)}/index"))
     },
 
     // JSONL corpus interchange under the oracle (r18 — the
@@ -1687,27 +1641,18 @@ object ExtendedQueries {
         .orderBy(col("doc_id"))
     },
 
-    // The LEAF-WISE fold discipline under the oracle (r18 — the
-    // O(touched lists) production maintenance shape, vs the
-    // whole-index swap folds q_ivfpq_advance/q_ivfpq_remove drive):
-    // the same probe over an index maintained by
-    // `Similarity.ivfPqAdvanceLeafwise` / `ivfPqRemoveLeafwise`, with
-    // an injected mid-swap-loop CRASH and its resume-recovery on the
-    // declared path, plus the replayed remove (marker no-op). Every
-    // fold discipline converges to the same content, so the oracle is
+    // The index folds' CRASH recovery under the oracle (r18): the
+    // same probe over an index maintained by `Similarity.ivfPqAdvance`
+    // / `ivfPqRemove` with an injected mid-swap-loop CRASH and its
+    // resume-recovery on the declared path, plus the replayed remove
+    // (marker no-op) of tombstones carrying their cid. The oracle is
     // the q_ivfpq_remove recompute verbatim (surviving set:
     // vec_id % 4 ≠ 0) — a list the resume loop lost, a row the per-cid
     // upsert duplicated, or a tombstone the cid-carrying remove missed
     // all shift the ADC top-k and hash-mismatch. Same real cid
     // partition pruning (the leaf swaps preserve the dir layout).
     "q_ivfpq_leafwise" -> { (s, d) =>
-      s.read.parquet(s"${ivfPqLeafwisePath(s, d)}/index")
-        .filter(col("cid").isin(ivfOracleProbe.map(Int.box): _*))
-        .select(col("vec_id"), col("cid").cast("int").as("cid"),
-          graft.functions.GraftFunctions.pqAdc(
-            col("codes"), adcOracleLut, 4).as("adc"))
-        .orderBy(col("adc").desc, col("vec_id"))
-        .limit(10)
+      ivfPqProbe(s.read.parquet(s"${ivfPqLeafwisePath(s, d)}/index"))
     },
 
     // Int8 scalar quantization of the embedding column — the ANN
@@ -2469,11 +2414,11 @@ object ExtendedQueries {
         | WHERE doc_id % 97 = 0
         |ORDER BY doc_id""".stripMargin,
 
-    // the leaf-wise folds converge to the SAME surviving set as the
-    // whole-swap lifecycle (add evens → crash-resumed add odds →
-    // remove multiples of 4), so the oracle is the same restricted
-    // probe recompute — the crash/resume and upsert disciplines are
-    // exactly what the hash holds to account
+    // the crash-resumed lifecycle (add evens → crash-resumed add odds
+    // → remove multiples of 4) converges to the SAME surviving set as
+    // q_ivfpq_remove, so the oracle is the same restricted probe
+    // recompute — the crash/resume and upsert invariants are exactly
+    // what the hash holds to account
     "q_ivfpq_leafwise" -> ivfPqProbeOracle(" WHERE vec_id % 4 <> 0"),
 
 

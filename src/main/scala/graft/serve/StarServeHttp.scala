@@ -340,9 +340,10 @@ object StarServeHttp {
       |</script></body></html>
       |""".stripMargin
 
-  /** JSON string escape incl. control characters — Spark exception
-    * messages routinely span lines; a raw newline inside the string
-    * literal would make the error body unparseable. */
+  /** The library's one JSON string escape (error bodies here,
+    * `Bench.json`'s strings), incl. control characters — Spark
+    * exception messages routinely span lines; a raw newline inside the
+    * string literal would make the error body unparseable. */
   private[graft] def jsonEsc(msg: String): String = {
     val sb = new StringBuilder
     msg.foreach {

@@ -69,6 +69,6 @@ class BenchCountSpec extends AnyFunSuite {
         scala.collection.mutable.TreeMap("q_b" -> "E: \"x\"\\y\n")))
     assert(line == """{"metric":"total","value":1.5,"failed":0,"ok":true,""" +
       """"probes":[0.25,1.0E-4],"slowest":[["q_a",2.0,3]],""" +
-      "\"errors\":{\"q_b\":\"E: \\\"x\\\"\\\\y\\u000a\"}}")
+      "\"errors\":{\"q_b\":\"E: \\\"x\\\"\\\\y\\n\"}}")
   }
 }

@@ -103,7 +103,7 @@ class IvfPqSpec extends AnyFunSuite {
       .select(col("vec_id"), col("cid").cast("int"),
         hex(col("codes"))).collect().toSet
     assert(adv == oneShot)
-    // cid partition dirs survive the swap-publish → pruning still real
+    // cid partition dirs survive the leaf swaps → pruning still real
     val probed = spark.read.parquet(idx).filter(col("cid").isin(0, 1))
     probed.collect()
     val scanLine = probed.queryExecution.executedPlan.toString
@@ -112,32 +112,43 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("ivfPqAdvance: an interrupted publish (live gone, complete tmp) recovers on the next fold") {
-    // the Swap crash window: delete→rename means a crash between the
-    // two leaves the state only under the tmp name. The next advance
-    // must promote the complete (_SUCCESS-marked) orphan BEFORE
-    // reading — otherwise it would fold into an empty index and
-    // silently drop every previously-published code row.
+    // the fold's crash windows: a first fold that crashed before its
+    // first leaf swap leaves NO live index, only the complete tmp; a
+    // later fold that crashed mid-loop leaves some lists new, some old
+    // and a complete tmp holding the unswapped suffix. The next call
+    // must recover either BEFORE reading — otherwise it would fold
+    // into an empty index, or lose the unswapped lists' non-batch rows
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_crash").toString
     val idx = s"$dir/index"
     val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
-    assert(Similarity.ivfPqAdvance(spark, idx,
-      enc.filter(col("vec_id") % 2 === 0), "t", 0L) == 250L)
-    // simulate the crash: rename live back to tmp (exactly the state
-    // after delete(live) + a successful tmp write, pre-rename)
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(idx),
-      new org.apache.hadoop.fs.Path(idx + "_tmp")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx)))
-    // next fold recovers the orphan, then folds batch 1 on top of the
-    // RECOVERED 250 rows — 500 total, marker state intact
-    assert(Similarity.ivfPqAdvance(spark, idx,
-      enc.filter(col("vec_id") % 2 =!= 0), "t", 1L) == 500L)
-    assert(Similarity.ivfPqAdvance(spark, idx,
-      enc.filter(col("vec_id") % 2 === 0), "t", 0L) == -1L,
+    val tmpDone = new org.apache.hadoop.fs.Path(idx + "_tmp_leaf/_SUCCESS")
+    val evens = enc.filter(col("vec_id") % 2 === 0)
+    intercept[IllegalStateException] {
+      Similarity.ivfPqAdvance(spark, idx, evens, "t", 0L, failAfterSwaps = 0)
+    }
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx)) && fs.exists(tmpDone))
+    // the redelivered batch 0 lands on the RECOVERED lists (the
+    // per-cid upsert makes the re-fold a content no-op)
+    assert(Similarity.ivfPqAdvance(spark, idx, evens, "t", 0L) == 250L)
+    // batch 1 touches every cid; inject a crash after ONE list swapped
+    val odds = enc.filter(col("vec_id") % 2 =!= 0)
+    intercept[IllegalStateException] {
+      Similarity.ivfPqAdvance(spark, idx, odds, "t", 1L, failAfterSwaps = 1)
+    }
+    assert(fs.exists(tmpDone), "crash simulation must leave the complete tmp behind")
+    // the next call resumes the interrupted swap loop, then re-folds
+    assert(Similarity.ivfPqAdvance(spark, idx, odds, "t", 1L) == 500L)
+    assert(spark.read.parquet(idx)
+      .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
+      .collect().toSet == enc
+      .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
+      .collect().toSet)
+    // batch 0's marker survived (root markers are never swapped away)
+    assert(Similarity.ivfPqAdvance(spark, idx, evens, "t", 0L) == -1L,
       "batch 0's applied marker must survive the recovery")
-    assert(spark.read.parquet(idx).count() == 500L)
   }
 
   test("ivfPqRemove: tombstones drop, adds interleave, a replayed remove is a monotone no-op") {
@@ -168,7 +179,7 @@ class IvfPqSpec extends AnyFunSuite {
       .select(col("vec_id"), col("cid").cast("int"),
         hex(col("codes"))).collect().toSet
     assert(got == want)
-    // cid partition dirs survive the remove's swap-publish
+    // cid partition dirs survive the remove's leaf swaps
     val probed = spark.read.parquet(idx).filter(col("cid").isin(0, 1))
     probed.collect()
     val scanLine = probed.queryExecution.executedPlan.toString
@@ -186,27 +197,29 @@ class IvfPqSpec extends AnyFunSuite {
       Similarity.ivfPqRemove(spark, idx,
         enc.select(col("vec_id")).limit(1), "t", 0L)
     }
-    assert(Similarity.ivfPqAdvance(spark, idx,
-      enc.filter(col("vec_id") % 2 === 0), "t", 0L) == 250L)
-    // simulate the crash window: live renamed back to tmp (the state
-    // after delete(live), before the rename lands)
+    assert(Similarity.ivfPqAdvance(spark, idx, enc, "t", 0L) == 500L)
+    // tombstones touch every list; crash after ONE list swapped
+    val tomb = enc.filter(col("vec_id") % 4 === 0).select(col("vec_id"))
+    intercept[IllegalStateException] {
+      Similarity.ivfPqRemove(spark, idx, tomb, "t", 1L, failAfterSwaps = 1)
+    }
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(idx),
-      new org.apache.hadoop.fs.Path(idx + "_tmp")))
-    // the next REMOVE must recover the orphan first, then fold —
-    // otherwise it would raise on the missing live dir (or worse,
-    // fold against nothing) despite 250 published rows existing
-    assert(Similarity.ivfPqRemove(spark, idx,
-      enc.filter(col("vec_id") % 4 === 0).select(col("vec_id")), "t", 1L)
-      == 125L)
-    assert(Similarity.ivfPqAdvance(spark, idx,
-      enc.filter(col("vec_id") % 2 === 0), "t", 0L) == -1L,
-      "batch 0's applied marker must survive the recovery")
-    assert(spark.read.parquet(idx).count() == 125L)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(idx + "_tmp_leaf/_SUCCESS")))
+    // the replayed remove resumes the loop, then re-folds (idempotent)
+    assert(Similarity.ivfPqRemove(spark, idx, tomb, "t", 1L) >= 0L)
+    val got = spark.read.parquet(idx)
+      .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
+      .collect().toSet
+    val want = enc.filter(col("vec_id") % 4 =!= 0)
+      .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
+      .collect().toSet
+    assert(got == want)
+    assert(Similarity.ivfPqAdvance(spark, idx, enc, "t", 0L) == -1L,
+      "batch 0's marker must survive the crash + resume")
   }
 
-  test("ivfPqAdvanceLeafwise: only touched lists rewrite; upsert replay converges") {
+  test("ivfPqAdvance: only touched lists rewrite; upsert replay converges") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_leaf").toString
     val idx = s"$dir/index"
@@ -219,17 +232,18 @@ class IvfPqSpec extends AnyFunSuite {
       else fs.listStatus(p).map(s => (s.getPath.getName, s.getModificationTime))
         .toSeq.sortBy(_._1)
     }
-    val n0 = Similarity.ivfPqAdvanceLeafwise(spark, idx,
+    val n0 = Similarity.ivfPqAdvance(spark, idx,
       enc.filter(col("vec_id") % 2 === 0), "t", 0L)
     assert(n0 == 250L)
     val untouchedBefore = (1 to 3).map(leafFiles)
-    // second fold touches ONLY cid 0 — the leaf-wise claim is that the
-    // other lists' files are not rewritten (same names, same mtimes)
+    // second fold touches ONLY cid 0 — the O(touched lists) claim is
+    // that the other lists' files are not rewritten (same names and
+    // mtimes)
     val batch1 = enc.filter(col("vec_id") % 2 =!= 0 && col("cid") === 0)
-    val n1 = Similarity.ivfPqAdvanceLeafwise(spark, idx, batch1, "t", 1L)
+    val n1 = Similarity.ivfPqAdvance(spark, idx, batch1, "t", 1L)
     assert(n1 > 0L)
     assert((1 to 3).map(leafFiles) == untouchedBefore,
-      "an untouched cid list was rewritten by a leaf-wise fold")
+      "an untouched cid list was rewritten by a fold")
     // content = evens ∪ (odds assigned to cid 0), exactly once each
     val got = spark.read.parquet(idx)
       .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
@@ -246,123 +260,20 @@ class IvfPqSpec extends AnyFunSuite {
       .map(_.getPath.getName).filter(_.startsWith("_applied_")).toSeq
     assert(markers == Seq("_applied_t_1"), markers.toString)
     // marker no-op on clean replay...
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx, batch1, "t", 1L) == -1L)
-    // ...and CONVERGENCE when the marker is gone (the leaf-wise
+    assert(Similarity.ivfPqAdvance(spark, idx, batch1, "t", 1L) == -1L)
+    // ...and CONVERGENCE when the marker is gone (the fold's
     // correctness story: the per-cid upsert, not the marker — a
-    // whole-index union fold would duplicate every batch row here)
+    // blind union fold would duplicate every batch row here)
     fs.listStatus(new org.apache.hadoop.fs.Path(idx))
       .filter(_.getPath.getName.startsWith("_applied_"))
       .foreach(m => fs.delete(m.getPath, false))
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx, batch1, "t", 1L) == n1)
+    assert(Similarity.ivfPqAdvance(spark, idx, batch1, "t", 1L) == n1)
     assert(spark.read.parquet(idx)
       .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
       .collect().toSet == want)
   }
 
-  test("ivfPqAdvanceLeafwise: a crash mid-swap-loop resumes and converges") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_leafcrash").toString
-    val idx = s"$dir/index"
-    val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx,
-      enc.filter(col("vec_id") % 2 === 0), "t", 0L) == 250L)
-    // batch touches every cid; inject a crash after ONE list swapped —
-    // the state a real crash leaves: some lists new, some old, a
-    // _SUCCESS-complete tmp holding the unswapped suffix, no marker
-    val batch1 = enc.filter(col("vec_id") % 2 =!= 0)
-    intercept[IllegalStateException] {
-      Similarity.ivfPqAdvanceLeafwise(spark, idx, batch1, "t", 1L,
-        failAfterSwaps = 1)
-    }
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(idx + "_tmp_leaf/_SUCCESS")),
-      "crash simulation must leave the complete tmp behind")
-    // the next call resumes the interrupted swap loop, then re-folds
-    // (the upsert makes the re-fold a content no-op for the lists the
-    // crashed run already swapped)
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx, batch1, "t", 1L) == 500L)
-    val got = spark.read.parquet(idx)
-      .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
-      .collect().toSet
-    val want = enc
-      .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
-      .collect().toSet
-    assert(got == want)
-    // batch 0's marker survived (root markers are never swapped away)
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx,
-      enc.filter(col("vec_id") % 2 === 0), "t", 0L) == -1L)
-  }
-
-  test("cross-discipline: a crashed whole-swap publish recovers on the next LEAF-WISE fold") {
-    // r17 ADVICE (medium): without Swap.recover in the leaf-wise entry
-    // point, this fold would see no live index, publish the batch as a
-    // FRESH index, and silently strand the prior 250 rows in _tmp
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_xswap").toString
-    val idx = s"$dir/index"
-    val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
-    assert(Similarity.ivfPqAdvance(spark, idx,
-      enc.filter(col("vec_id") % 2 === 0), "t", 0L) == 250L)
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the whole-swap crash window: live gone, complete _tmp orphan
-    assert(fs.rename(new org.apache.hadoop.fs.Path(idx),
-      new org.apache.hadoop.fs.Path(idx + "_tmp")))
-    val n1 = Similarity.ivfPqAdvanceLeafwise(spark, idx,
-      enc.filter(col("vec_id") % 2 =!= 0), "t", 1L)
-    assert(n1 > 0L)
-    assert(spark.read.parquet(idx).count() == 500L,
-      "the leaf-wise fold must land on the RECOVERED index")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx + "_tmp")),
-      "no stranded whole-swap tmp may remain")
-    // batch 0's marker rode through the recovery
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx,
-      enc.filter(col("vec_id") % 2 === 0), "t", 0L) == -1L)
-  }
-
-  test("cross-discipline: a crashed leaf loop is resumed by the next WHOLE-SWAP fold, not resurrected later") {
-    // r17 ADVICE (medium), scenario (b): a whole-swap fold that ignores
-    // a complete _tmp_leaf leaves the stale suffix lying around; a
-    // later leaf-wise call would resume it and rename OUTDATED cid dirs
-    // over the post-fold live lists — resurrecting removed rows
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_xleaf").toString
-    val idx = s"$dir/index"
-    val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx,
-      enc.filter(col("vec_id") % 2 === 0), "t", 0L) == 250L)
-    // crash a leaf-wise add of the odds after one swap
-    intercept[IllegalStateException] {
-      Similarity.ivfPqAdvanceLeafwise(spark, idx,
-        enc.filter(col("vec_id") % 2 =!= 0), "t", 1L, failAfterSwaps = 1)
-    }
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(idx + "_tmp_leaf/_SUCCESS")))
-    // the next WHOLE-SWAP fold must consume that suffix FIRST: it
-    // resumes the odds' swap loop, then removes the multiples of 4
-    assert(Similarity.ivfPqRemove(spark, idx,
-      enc.filter(col("vec_id") % 4 === 0).select(col("vec_id")), "t", 2L)
-      > 0L)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx + "_tmp_leaf")),
-      "the stale leaf tmp must be consumed, not left to resurrect rows")
-    // the feed's replay of crashed batch 1 is a MONOTONE no-op: its
-    // content was fully applied by the resume, and the remove's later
-    // marker (t_2) covers id 1 — applied-ness is a point on the per-tag
-    // sequence line, so an older batch never re-folds over a newer one
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx,
-      enc.filter(col("vec_id") % 2 =!= 0), "t", 1L) == -1L)
-    val got = spark.read.parquet(idx)
-      .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
-      .collect().toSet
-    val want = enc.filter(col("vec_id") % 4 =!= 0)
-      .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
-      .collect().toSet
-    assert(got == want)
-  }
-
-  test("ivfPqRemoveLeafwise: only tombstoned lists rewrite; an emptied list's dir is deleted") {
+  test("ivfPqRemove: only tombstoned lists rewrite; an emptied list's dir is deleted") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_rmleaf").toString
     val idx = s"$dir/index"
@@ -375,19 +286,19 @@ class IvfPqSpec extends AnyFunSuite {
       else fs.listStatus(p).map(s => (s.getPath.getName, s.getModificationTime))
         .toSeq.sortBy(_._1)
     }
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx, enc, "t", 0L) == 500L)
+    assert(Similarity.ivfPqAdvance(spark, idx, enc, "t", 0L) == 500L)
     val untouchedBefore = (2 to 3).map(leafFiles)
     // tombstones: every cid-1 row (empties the list) + the even ids of
     // cid 0 (partial) — cids 2,3 are untouched and must not rewrite
     val tomb = enc.filter(col("cid") === 1 ||
         (col("cid") === 0 && col("vec_id") % 2 === 0))
       .select(col("vec_id"))
-    val n1 = Similarity.ivfPqRemoveLeafwise(spark, idx, tomb, "t", 1L)
+    val n1 = Similarity.ivfPqRemove(spark, idx, tomb, "t", 1L)
     val wantSurvivors = enc.filter(col("cid") === 0 && col("vec_id") % 2 =!= 0)
       .count()
     assert(n1 == wantSurvivors, s"touched-list survivors: $n1")
     assert((2 to 3).map(leafFiles) == untouchedBefore,
-      "an untombstoned cid list was rewritten by a leaf-wise remove")
+      "an untombstoned cid list was rewritten by a remove")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/cid=1")),
       "a fully-emptied list's live dir must be deleted")
     val got = spark.read.parquet(idx)
@@ -399,28 +310,28 @@ class IvfPqSpec extends AnyFunSuite {
       .collect().toSet
     assert(got == want)
     // replay: marker no-op, then marker-less convergence (row-level
-    // idempotence of removal — the leaf-wise correctness story)
-    assert(Similarity.ivfPqRemoveLeafwise(spark, idx, tomb, "t", 1L) == -1L)
+    // idempotence of removal — the fold's correctness story)
+    assert(Similarity.ivfPqRemove(spark, idx, tomb, "t", 1L) == -1L)
     fs.listStatus(new org.apache.hadoop.fs.Path(idx))
       .filter(_.getPath.getName.startsWith("_applied_"))
       .foreach(m => fs.delete(m.getPath, false))
-    Similarity.ivfPqRemoveLeafwise(spark, idx, tomb, "t", 1L)
+    Similarity.ivfPqRemove(spark, idx, tomb, "t", 1L)
     assert(spark.read.parquet(idx)
       .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
       .collect().toSet == want)
   }
 
-  test("ivfPqRemoveLeafwise: caller-provided cid column skips the index scan; unknown tombstones are a marked no-op") {
+  test("ivfPqRemove: caller-provided cid column skips the index scan; unknown tombstones are a marked no-op") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_rmleafcid").toString
     val idx = s"$dir/index"
     val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx, enc, "t", 0L) == 500L)
+    assert(Similarity.ivfPqAdvance(spark, idx, enc, "t", 0L) == 500L)
     // tombstones WITH their cid assignment (the production reverse-
     // lookup shape): only cid 2's evens go
     val tomb = enc.filter(col("cid") === 2 && col("vec_id") % 2 === 0)
       .select(col("vec_id"), col("cid"))
-    val n1 = Similarity.ivfPqRemoveLeafwise(spark, idx, tomb, "t", 1L)
+    val n1 = Similarity.ivfPqRemove(spark, idx, tomb, "t", 1L)
     assert(n1 == enc.filter(col("cid") === 2 && col("vec_id") % 2 =!= 0).count())
     val got = spark.read.parquet(idx)
       .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
@@ -434,37 +345,8 @@ class IvfPqSpec extends AnyFunSuite {
     // still marks (redelivery must not rescan the index)
     import spark.implicits._
     val ghost = Seq(100000L, 100001L).toDF("vec_id")
-    assert(Similarity.ivfPqRemoveLeafwise(spark, idx, ghost, "t", 2L) == 0L)
-    assert(Similarity.ivfPqRemoveLeafwise(spark, idx, ghost, "t", 2L) == -1L)
-  }
-
-  test("ivfPqRemoveLeafwise: a crash mid-swap-loop resumes and converges") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_rmleafcrash").toString
-    val idx = s"$dir/index"
-    val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx, enc, "t", 0L) == 500L)
-    // tombstones touch every list; crash after ONE list swapped
-    val tomb = enc.filter(col("vec_id") % 4 === 0).select(col("vec_id"))
-    intercept[IllegalStateException] {
-      Similarity.ivfPqRemoveLeafwise(spark, idx, tomb, "t", 1L,
-        failAfterSwaps = 1)
-    }
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(idx + "_tmp_leaf/_SUCCESS")))
-    // the replayed remove resumes the loop, then re-folds (idempotent)
-    val n1 = Similarity.ivfPqRemoveLeafwise(spark, idx, tomb, "t", 1L)
-    assert(n1 >= 0L)
-    val got = spark.read.parquet(idx)
-      .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
-      .collect().toSet
-    val want = enc.filter(col("vec_id") % 4 =!= 0)
-      .select(col("vec_id"), col("cid").cast("int"), hex(col("codes")))
-      .collect().toSet
-    assert(got == want)
-    assert(Similarity.ivfPqAdvanceLeafwise(spark, idx, enc, "t", 0L) == -1L,
-      "batch 0's marker must survive the crash + resume")
+    assert(Similarity.ivfPqRemove(spark, idx, ghost, "t", 2L) == 0L)
+    assert(Similarity.ivfPqRemove(spark, idx, ghost, "t", 2L) == -1L)
   }
 
   test("the DECLARED q_ivfpq_remove probes the surviving set and partition-prunes") {
@@ -483,10 +365,9 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("the DECLARED q_ivfpq_leafwise equals q_ivfpq_remove and partition-prunes") {
-    // the two fold disciplines converge to the same surviving set, so
-    // the leafwise-maintained index must reproduce the whole-swap
-    // lifecycle's probe row for row — including through the injected
-    // crash + resume on the leafwise build path
+    // the crash-and-resume build converges to the same surviving set,
+    // so its index must reproduce the q_ivfpq_remove lifecycle's probe
+    // row for row
     val lw = SparkEntry.queries("q_ivfpq_leafwise")(spark, sf)
     val rm = SparkEntry.queries("q_ivfpq_remove")(spark, sf)
     assert(lw.collect().toSeq == rm.collect().toSeq)

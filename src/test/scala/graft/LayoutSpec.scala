@@ -124,7 +124,7 @@ class LayoutSpec extends AnyFunSuite {
     // NaN propagates into the max() bounds AND appears per row; the
     // clamp-after-cast formulation threw SparkArithmeticException and
     // failed the whole write
-    etl.Layout.zorderWrite(df, dir, "x", "y")
+    etl.Layout.zorderWrite(df, dir, Seq("x", "y"))
     assert(spark.read.parquet(dir).count() == 3)
   }
 
@@ -141,7 +141,7 @@ class LayoutSpec extends AnyFunSuite {
       "parquet.page.size" -> (4 * 1024).toString)
     ev.coalesce(1).sortWithinPartitions("user_id")
       .write.mode("overwrite").options(opts).parquet(lin)
-    etl.Layout.zorderWrite(ev.coalesce(1), zo, "user_id", "value", options = opts)
+    etl.Layout.zorderWrite(ev.coalesce(1), zo, Seq("user_id", "value"), options = opts)
 
     def scanned(path: String, pred: org.apache.spark.sql.Column): (Long, Long) = {
       val df = spark.read.parquet(path).filter(pred)
@@ -182,47 +182,13 @@ class LayoutSpec extends AnyFunSuite {
     assert(zoCountU == ev.filter(predU).count())
   }
 
-  test("zvalueN: n=2 equals the mask-spread zvalue; n=3 matches a scalar reference") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val rows = (1 to 300).map(_ =>
-      (rnd.nextDouble() * 1000, rnd.nextDouble() * 1000, rnd.nextDouble() * 1000))
-    val df = rows.toDF("a", "b", "c")
-    val bounds2 = (0.0, 1000.0, 0.0, 1000.0)
-    val both = df.select(
-        etl.Layout.zvalue(col("a"), col("b"), bounds2).as("z2"),
-        etl.Layout.zvalueN(Seq(col("a"), col("b")),
-          Seq((0.0, 1000.0), (0.0, 1000.0))).as("zn"))
-      .collect()
-    both.foreach(r => assert(r.getLong(0) == r.getLong(1)))
-    // scalar 3-way reference: bit j of column i at position j*3+i
-    val bits = 20
-    def bucketRef(v: Double): Long = math.min((1L << bits) - 1,
-      math.max(0L, (v / 1000.0 * ((1L << bits) - 1)).toLong))
-    def zRef(vs: Seq[Double]): Long =
-      (for (i <- vs.indices; j <- 0 until bits) yield
-        (((bucketRef(vs(i)) >>> j) & 1L) << (j * 3 + i))).sum
-    val z3 = df.select(etl.Layout.zvalueN(
-        Seq(col("a"), col("b"), col("c")),
-        Seq.fill(3)((0.0, 1000.0)), bits).as("z"))
-      .collect().map(_.getLong(0))
-    z3.zip(rows).foreach { case (z, (a, b, c)) =>
-      assert(z == zRef(Seq(a, b, c)), s"($a,$b,$c)")
-    }
-    // budget guard
-    intercept[IllegalArgumentException] {
-      etl.Layout.zvalueN(Seq(col("a"), col("b"), col("c")),
-        Seq.fill(3)((0.0, 1.0)), bits = 22)
-    }
-  }
-
-  test("zorderWriteN: 3-column layout prunes row groups on every dimension") {
+  test("zorderWrite: 3-column layout prunes row groups on every dimension") {
     val zo = java.nio.file.Files.createTempDirectory("graft_zo3").toString
     val ev = queries.t(spark, "/root/testdata/sf0.01", "events")
       .select("event_id", "user_id", "value")
     val opts = Map("parquet.block.size" -> (16 * 1024).toString,
       "parquet.page.size" -> (4 * 1024).toString)
-    etl.Layout.zorderWriteN(ev.coalesce(1), zo,
+    etl.Layout.zorderWrite(ev.coalesce(1), zo,
       Seq("event_id", "user_id", "value"), options = opts)
     def scanned(pred: org.apache.spark.sql.Column): (Long, Long) = {
       val df = spark.read.parquet(zo).filter(pred)
@@ -277,31 +243,47 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("zvalue matches an independent per-bit Morton reference") {
-    val bounds = (0.0, 1023.0, 0.0, 1023.0)
     import spark.implicits._
-    // independent reference: same bucket arithmetic, naive bit loop
-    // instead of the mask-spread
-    def bucketRef(v: Double): Long = math.min(1023L, math.max(0L,
-      ((v - 0.0) / 1023.0 * 1023.0).toLong))
-    def zRef(a: Double, b: Double): Long =
-      (0 until 31).foldLeft(0L) { (acc, i) =>
-        acc | ((bucketRef(a) >> i & 1L) << (2 * i)) |
-          ((bucketRef(b) >> i & 1L) << (2 * i + 1))
-      }
+    // independent reference: same bucket arithmetic, naive bit loop —
+    // bit j of column i at key position j*n + i
+    def bucketRef(v: Double, hi: Double, bits: Int): Long =
+      math.min((1L << bits) - 1, math.max(0L,
+        ((v - 0.0) / hi * ((1L << bits) - 1)).toLong))
+    def zRef(vs: Seq[Double], hi: Double, bits: Int): Long =
+      (for (i <- vs.indices; j <- 0 until bits) yield
+        ((bucketRef(vs(i), hi, bits) >>> j) & 1L) << (j * vs.length + i)).sum
+    // n = 2 over an integer grid, 10 bits per column
+    val bounds2 = Seq.fill(2)((0.0, 1023.0))
     val grid = for (a <- 0L to 1023L by 89L; b <- 0L to 1023L by 97L) yield (a, b)
     val got = grid.toDF("a", "b")
-      .select(etl.Layout.zvalue(col("a"), col("b"), bounds, bits = 10).as("z"))
+      .select(etl.Layout.zvalue(Seq(col("a"), col("b")), bounds2, bits = 10).as("z"))
       .collect().map(_.getLong(0))
     grid.zip(got).foreach { case ((a, b), z) =>
-      assert(z == zRef(a.toDouble, b.toDouble), s"($a,$b)")
+      assert(z == zRef(Seq(a.toDouble, b.toDouble), 1023.0, 10), s"($a,$b)")
     }
     // exact corners: (0,0) -> 0; (max,0) -> even bits; (0,max) -> odd
     // bits; (max,max) -> all 20 bits
     val corners = Seq((0L, 0L), (1023L, 0L), (0L, 1023L), (1023L, 1023L))
       .toDF("a", "b")
-      .select(etl.Layout.zvalue(col("a"), col("b"), bounds, bits = 10).as("z"))
+      .select(etl.Layout.zvalue(Seq(col("a"), col("b")), bounds2, bits = 10).as("z"))
       .collect().map(_.getLong(0)).toSeq
     assert(corners == Seq(0L, 0x55555L, 0xAAAAAL, 0xFFFFFL))
+    // n = 3 over random doubles at the default 20 bits
+    val rnd = new scala.util.Random(7)
+    val rows = (1 to 300).map(_ =>
+      (rnd.nextDouble() * 1000, rnd.nextDouble() * 1000, rnd.nextDouble() * 1000))
+    val z3 = rows.toDF("a", "b", "c")
+      .select(etl.Layout.zvalue(Seq(col("a"), col("b"), col("c")),
+        Seq.fill(3)((0.0, 1000.0))).as("z"))
+      .collect().map(_.getLong(0))
+    z3.zip(rows).foreach { case (z, (a, b, c)) =>
+      assert(z == zRef(Seq(a, b, c), 1000.0, 20), s"($a,$b,$c)")
+    }
+    // budget guard: n·bits must fit a signed long
+    intercept[IllegalArgumentException] {
+      etl.Layout.zvalue(Seq(col("a"), col("b"), col("c")),
+        Seq.fill(3)((0.0, 1.0)), bits = 22)
+    }
   }
 
   test("q_compact_scan's declared layout genuinely compacted (fewer files, swap clean)") {

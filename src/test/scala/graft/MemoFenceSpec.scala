@@ -94,4 +94,15 @@ class MemoFenceSpec extends AnyFunSuite {
     assert(ExtendedQueries.memoCount("ndocs", spark, sfTiny) { 7L } == 7L)
     ExtendedQueries.releaseCaches(spark, sfTiny)
   }
+
+  test("path memos share the one per-JVM scratch root") {
+    // a registry key only: the no-op builders below never read it
+    val d = "memo-fence-scratch"
+    val dirs = Seq("jsonl", "cleanids").map(k =>
+      ExtendedQueries.memoPath(k, spark, d) { _ => () })
+    try dirs.foreach(dir => assert(
+      java.nio.file.Paths.get(dir).getParent == graft.etl.Scratch.root, dir))
+    finally ExtendedQueries.releaseCaches(spark, d)
+    assert(!dirs.exists(dir => java.nio.file.Files.exists(java.nio.file.Paths.get(dir))))
+  }
 }

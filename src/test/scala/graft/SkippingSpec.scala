@@ -22,7 +22,7 @@ class SkippingSpec extends AnyFunSuite {
     // coalesce this tiny sort shuffle back to one partition)
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try etl.Layout.zorderWrite(li, d, "l_quantity", "l_extendedprice")
+    try etl.Layout.zorderWrite(li, d, Seq("l_quantity", "l_extendedprice"))
     finally {
       spark.conf.set("spark.sql.shuffle.partitions", "4")
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -174,7 +174,7 @@ class SkippingSpec extends AnyFunSuite {
     val li = queries.t(spark, sfTiny, "lineitem")
       .select("l_orderkey", "l_quantity", "l_extendedprice")
     etl.Layout.zorderWrite(li.filter(col("l_quantity") > 5), d,
-      "l_quantity", "l_extendedprice")
+      Seq("l_quantity", "l_extendedprice"))
     Skipping.writeManifest(spark, d, Seq("l_quantity"))
     // append rows INSIDE the query range with no manifest rebuild
     li.filter(col("l_quantity") <= 5).coalesce(1)

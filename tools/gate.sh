@@ -3,7 +3,8 @@
 # canonical sequence from .claude/skills/verify/SKILL.md). Runs:
 #   1. the full scalatest suite (incl. plan-shape gates)
 #   2. Verify + DuckDB burnin at sf0.001, sf0.01 AND sf0.1 (sf0.1 has
-#      caught divergences the smaller scales missed)
+#      caught divergences the smaller scales missed); a Verify run that
+#      leaves more /tmp/graft_* dirs than were there before it fails
 #   3. the partitioning-invariance probe (different CPU counts)
 #   4. the PlanAudit 4-sweep regression gate
 #   5. the plan-cost pins: one full-sweep Bench at sf0.1, failing on
@@ -20,9 +21,18 @@ echo "== [1/6] sbt test =="
 sbt -batch test
 
 echo "== [2/6] Verify + burnin at three scale factors =="
+# A Verify run must leave no scratch dir behind: its memo dirs live
+# under one per-JVM root that is deleted at exit.
+graft_tmp_dirs() { find /tmp -maxdepth 1 -type d -name 'graft_*' | wc -l; }
 for sf in sf0.001 sf0.01 sf0.1; do
   out="/tmp/gate_${sf}"
+  before=$(graft_tmp_dirs)
   sbt -batch "runMain graft.Verify /root/testdata/${sf} ${out}"
+  after=$(graft_tmp_dirs)
+  if [ "$after" -gt "$before" ]; then
+    echo "Verify at ${sf} left $((after - before)) /tmp/graft_* dirs behind"
+    exit 1
+  fi
   python3 tools/burnin.py "/root/testdata/${sf}" "${out}"
 done
 
