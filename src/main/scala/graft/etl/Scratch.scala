@@ -3,7 +3,7 @@ package graft.etl
 import java.nio.file.{Files, Path}
 
 /** The one per-JVM root of graft's scratch dirs (path memos, the
-  * spilled drop list): made on first use under `java.io.tmpdir` and
+  * spilled drop list, the specs' dirs): made on first use under `java.io.tmpdir` and
   * deleted when the JVM exits, so a run that never releases its memos
   * (a main that just exits, a test suite) leaves nothing behind. */
 private[graft] object Scratch {

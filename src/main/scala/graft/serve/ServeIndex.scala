@@ -3,6 +3,7 @@ package graft.serve
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The in-memory serving index of ONE published fact snapshot: what
@@ -20,20 +21,34 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Immutable once built: [[StarServe]] publishes a new one with a
   * single volatile reference swap, so a reader holding an index always
-  * answers from one complete snapshot.
+  * answers from one complete snapshot. A snapshot that extends the
+  * held one by delta layers (`StreamingPipeline.upsertSink`'s chain)
+  * becomes a new index through [[withDelta]], which reads only the
+  * delta and copies only the arrays of the codes it touches.
   */
 private[graft] final class ServeIndex private (
     /** The `_LATEST` target this index was built from (None: the
       * static star fact). */
     val snapshot: Option[String],
+    /** The layers of the snapshot's chain this index holds, base first
+      * (one: a lone base, or the static star fact). */
+    val layers: Seq[String],
     /** Fact rows held (every snapshot row, joined or not). */
     val rows: Int,
     val buildMs: Double,
     val builtAtNanos: Long,
+    /** Rows of the delta this index applied to the previous one (None:
+      * a full build). */
+    val deltaRows: Option[Int],
     dims: ServeIndex.Dims,
+    schema: StructType,
     byCode: Map[String, Array[ServeIndex.Entry]],
-    lo: java.sql.Date,
-    hi: java.sql.Date) {
+    /** Rows per (IndexKey, epoch day) whose IndexKey is not in the
+      * dimension: the rows no code holds that a delta can replace. */
+    unjoined: Map[(String, Long), Int],
+    /** Min/max epoch day over every row (lo > hi: no dated row). */
+    lo: Long,
+    hi: Long) {
   import ServeIndex._
 
   /** The `/indexes` body: `dim_stock_index` as a JSON array. */
@@ -41,7 +56,9 @@ private[graft] final class ServeIndex private (
 
   /** Min/max `DateKey` over the whole fact (nulls when it is empty, as
     * the `min`/`max` aggregate returns). */
-  def bounds: (java.sql.Date, java.sql.Date) = (lo, hi)
+  def bounds: (java.sql.Date, java.sql.Date) =
+    if (lo > hi) (null, null)
+    else (DateTimeUtils.toJavaDate(lo.toInt), DateTimeUtils.toJavaDate(hi.toInt))
 
   /** Rows of `code` with `start <= DateKey <= end`, at most `maxRows`
     * of them. Dates parse with Spark's own string-to-date cast rule. */
@@ -74,15 +91,75 @@ private[graft] final class ServeIndex private (
       maxRows: Int = Int.MaxValue): String =
     ChartRender.dualAxis(s"Close Price and GDP Growth - ${dims.nameFor(code)}",
       slice(code, start, end, maxRows).map(e => (e.day, e.close, e.gdp)).toSeq)
+
+  /** This index with the delta layer `layer` (read as `delta`) applied
+    * the way the upsert merge applies it to the fact: a held row whose
+    * `IndexKey` and `DateKey` (both non-null) some delta row holds is
+    * dropped, and every delta row is added after the held rows of its
+    * day, so the result equals a full build of the longer chain. One
+    * Spark job (the delta's collect); only the entry arrays of the
+    * codes the delta touches are copied. None when the delta's columns
+    * differ from the fact's: only a full build renders that union. */
+  def withDelta(delta: DataFrame, layer: String,
+      maxRows: Int = MaxIndexRows): Option[ServeIndex] = {
+    def cols(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+    if (cols(delta.schema) != cols(schema)) None
+    else Some(plus(Some(layer), layers :+ layer, delta, isDelta = true, maxRows))
+  }
+
+  /** This index plus the rows of `frame` (collected at most
+    * `maxRows + 1` of them in one job), replacing held rows by key. */
+  private def plus(snapshot: Option[String], layers: Seq[String],
+      frame: DataFrame, isDelta: Boolean, maxRows: Int): ServeIndex = {
+    val t0 = System.nanoTime()
+    val got = collectEntries(frame, schema.fieldNames.toSeq, maxRows)
+    // an empty index (a full build) holds nothing to replace
+    val replaced =
+      if (rows == 0) Set.empty[(String, Long)]
+      else got.iterator.filter(e => e.key != null && e.day != Long.MinValue)
+        .map(e => (e.key, e.day)).toSet
+    // a replaced joined row sits in the array of each code its key
+    // pairs with, once per pairing: count it in the first code's
+    val removed = replaced.iterator.map { case kd @ (k, d) =>
+      dims.codesOfKey.get(k) match {
+        case Some(codes) =>
+          val es = byCode.getOrElse(codes.head, Array.empty[Entry])
+          (lowerBound(es, d) until lowerBound(es, d + 1)).count(es(_).key == k) /
+            codes.count(_ == codes.head)
+        case None => unjoined.getOrElse(kd, 0)
+      }
+    }.sum
+    val total = rows.toLong - removed + got.length
+    if (total > maxRows)
+      throw new IllegalStateException(
+        s"fact ${snapshot.getOrElse("fact_table")} holds more than " +
+          s"ServeIndex.MaxIndexRows = $maxRows rows, the serving index's " +
+          "driver-heap bound; serve it through a paged API instead")
+    val added = got.toSeq
+      .flatMap(e => Option(e.key).toSeq.flatMap(dims.codesOfKey.getOrElse(_, Nil)).map(_ -> e))
+      .groupMap(_._1)(_._2)
+    val nextByCode = byCode ++ added.map { case (c, es) =>
+      c -> (byCode.getOrElse(c, Array.empty[Entry])
+        .filterNot(e => replaced((e.key, e.day))) ++ es).sortBy(_.day)
+    }
+    val nextUnjoined = (unjoined -- replaced) ++ got.toSeq
+      .filter(e => e.key != null && e.day != Long.MinValue && !dims.codesOfKey.contains(e.key))
+      .groupMapReduce(e => (e.key, e.day))(_ => 1)(_ + _)
+    val days = got.iterator.map(_.day).filter(_ != Long.MinValue).toSeq
+    new ServeIndex(snapshot, layers, total.toInt, (System.nanoTime() - t0) / 1e6,
+      System.nanoTime(), if (isDelta) Some(got.length) else None, dims, schema,
+      nextByCode, nextUnjoined, (days :+ lo).min, (days :+ hi).max)
+  }
 }
 
 private[graft] object ServeIndex {
   /** The most fact rows an index holds. Spark's `SizeEstimator` puts
     * an index of the star fact (twelve columns; ServeIndexSpec's
-    * fixture, which re-checks the arithmetic below) at 504 bytes of
+    * fixture, which re-checks the arithmetic below) at 508 bytes of
     * driver heap per row: two JSON strings (about 60 and 250
-    * characters), the row object and two boxed doubles. 400,000 rows
-    * is then about 200 MB, inside a 256 MB budget with a fifth to spare
+    * characters), the row object, its reference to the interned
+    * `IndexKey` and two boxed doubles. 400,000 rows is then about
+    * 203 MB, inside a 256 MB budget with a fifth to spare
     * for values that render longer — twenty times the reference
     * dashboard's whole fact (3 tickers × 25 years).
     *
@@ -93,10 +170,11 @@ private[graft] object ServeIndex {
     * a fact ran one Spark job per read). Serve it through a paged API. */
   val MaxIndexRows: Int = 400000
 
-  /** One fact row under one `IndexCode`; `day` is the epoch day, with
-    * a null `DateKey` as `Long.MinValue` (before every real day, so it
-    * is never in a date slice and comes last in `/latest`). */
-  private[serve] final case class Entry(day: Long, close: Option[Double],
+  /** One fact row under one `IndexCode`: its `IndexKey` (interned, so
+    * entries share one string per key) and epoch day, with a null
+    * `DateKey` as `Long.MinValue` (before every real day, so it is
+    * never in a date slice and comes last in `/latest`). */
+  private[serve] final case class Entry(key: String, day: Long, close: Option[Double],
       gdp: Option[Double], series: String, latest: String)
 
   /** `dim_stock_index` on the driver (KB-sized, static for the star's
@@ -136,42 +214,36 @@ private[graft] object ServeIndex {
     a
   }
 
-  /** Build the index of `fact` in one collect: the scan runs as one
-    * task (`coalesce(1)`) and stops after `maxRows + 1` rows, so the
-    * driver never holds more than the bound. The join to the dimension
-    * runs on the driver over [[Dims]]. */
-  def build(fact: DataFrame, snapshot: Option[String],
-      dims: Dims, maxRows: Int = MaxIndexRows): ServeIndex = {
-    val t0 = System.nanoTime()
-    // the accessors' column order: `chartSeries` selects these three;
-    // `latest` is a USING join on IndexKey, which puts it first
-    val latestCols = "IndexKey" +: fact.columns.filterNot(_ == "IndexKey").toSeq
-    val got = fact.coalesce(1).select(
+  /** The rows of `frame` as entries (a null `IndexKey` kept as null),
+    * in one collect:
+    * the scan runs as one task (`coalesce(1)`) and stops after
+    * `maxRows + 1` rows, so the driver never holds more than the bound.
+    * `columns` is the fact's column order, which `/latest` renders
+    * after a leading `IndexKey` (the accessor's USING join puts it
+    * first); `/series` renders the three `chartSeries` selects. */
+  private def collectEntries(frame: DataFrame, columns: Seq[String],
+      maxRows: Int): Array[Entry] = {
+    val latestCols = "IndexKey" +: columns.filterNot(_ == "IndexKey")
+    def opt(r: org.apache.spark.sql.Row, i: Int) =
+      if (r.isNullAt(i)) None else Some(r.getDouble(i))
+    frame.coalesce(1).select(
         col("IndexKey"), unix_date(col("DateKey")),
         col("Close").cast("double"), col("GDPGrowthRate").cast("double"),
         to_json(struct(col("DateKey"), col("Close"), col("GDPGrowthRate"))),
         to_json(struct(latestCols.map(col): _*)))
-      .limit(maxRows + 1).collect()
-    if (got.length > maxRows)
-      throw new IllegalStateException(
-        s"fact ${snapshot.getOrElse("fact_table")} holds more than " +
-          s"ServeIndex.MaxIndexRows = $maxRows rows, the serving index's " +
-          "driver-heap bound; serve it through a paged API instead")
-    def opt(r: org.apache.spark.sql.Row, i: Int) =
-      if (r.isNullAt(i)) None else Some(r.getDouble(i))
-    val entries = got.iterator.map { r =>
-      (Option(r.getString(0)), Entry(if (r.isNullAt(1)) Long.MinValue else r.getInt(1).toLong,
-        opt(r, 2), opt(r, 3), r.getString(4), r.getString(5)))
-    }.toSeq
-    val byCode = entries
-      .flatMap { case (k, e) => k.toSeq.flatMap(dims.codesOfKey.getOrElse(_, Nil)).map(_ -> e) }
-      .groupBy(_._1)
-      .map { case (c, es) => c -> es.map(_._2).sortBy(_.day).toArray }
-    val days = entries.map(_._2.day).filter(_ != Long.MinValue)
-    val (lo, hi) =
-      if (days.isEmpty) (null, null)
-      else (DateTimeUtils.toJavaDate(days.min.toInt), DateTimeUtils.toJavaDate(days.max.toInt))
-    new ServeIndex(snapshot, got.length, (System.nanoTime() - t0) / 1e6,
-      System.nanoTime(), dims, byCode, lo, hi)
+      .limit(maxRows + 1).collect().map { r =>
+        Entry(Option(r.getString(0)).map(_.intern()).orNull,
+          if (r.isNullAt(1)) Long.MinValue else r.getInt(1).toLong,
+          opt(r, 2), opt(r, 3), r.getString(4), r.getString(5))
+      }
   }
+
+  /** Build the index of `fact` (the chain `layers`, folded) in one
+    * collect; the join to the dimension runs on the driver over
+    * [[Dims]]. */
+  def build(fact: DataFrame, snapshot: Option[String], layers: Seq[String],
+      dims: Dims, maxRows: Int = MaxIndexRows): ServeIndex =
+    new ServeIndex(snapshot, layers, 0, 0.0, 0L, None, dims, fact.schema, Map.empty,
+      Map.empty, Long.MaxValue, Long.MinValue)
+      .plus(snapshot, layers, fact, isDelta = false, maxRows)
 }

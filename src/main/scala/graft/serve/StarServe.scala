@@ -3,6 +3,8 @@ package graft.serve
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.StreamingPipeline
+
 /** Serving path over the published star schema — SURVEY §3 E3.
   *
   * The reference dashboard (streamlit/app.py:90) loads the ENTIRE fact
@@ -23,8 +25,9 @@ import org.apache.spark.sql.functions._
   *  - the dashboard's reads (`chartSvg`, `factDateBounds`, and every
   *    [[StarServeHttp]] endpoint) answer from a [[ServeIndex]] of the
   *    recorded snapshot, built by one scan on the first such read and
-  *    again when `refresh()` sees the pointer move: a read is a binary
-  *    search, not a Spark job. `fact`, `factSlice`,
+  *    moved when `refresh()` sees the pointer move (by reading only
+  *    the new delta layers when the upsert chain grew): a read is a
+  *    binary search, not a Spark job. `fact`, `factSlice`,
   *    `chartSeries`, `latest` and the dim frames stay the composable
   *    DataFrame API the index is checked against.
   */
@@ -43,7 +46,9 @@ class StarServe(spark: SparkSession, starDir: String,
   // guarded by `this`.
   private var recorded: Option[Option[String]] = None
   @volatile private var served: ServeIndex = null
-  @volatile private var builds = 0L
+  @volatile private var fullBuilds = 0L
+  @volatile private var deltaApplies = 0L
+  @volatile private var lastDeltaRows: Option[Int] = None
   private var factCache: Option[DataFrame] = None
 
   private lazy val dims = ServeIndex.dims(dimStockIndex)
@@ -52,24 +57,49 @@ class StarServe(spark: SparkSession, starDir: String,
   private def snapshot: Option[String] = synchronized {
     recorded.getOrElse {
       val p = factSnapshotDir.map(d =>
-        graft.streaming.StreamingPipeline.awaitLatestSnapshotName(spark, d))
+        StreamingPipeline.awaitLatestSnapshotName(spark, d))
       recorded = Some(p)
       p
     }
   }
 
-  private def factPath(snapshot: Option[String]): String = factSnapshotDir match {
-    case Some(d) => s"$d/${snapshot.get}" // snapshot mode always records one
-    case None => s"$starDir/fact_table.parquet"
-  }
+  /** The fact frame of `snapshot` and the chain layers it folds. */
+  private def factOf(snapshot: Option[String]): (DataFrame, Seq[String]) =
+    factSnapshotDir match {
+      case Some(d) => // snapshot mode always records one
+        val c = StreamingPipeline.snapshotChain(spark, d, snapshot.get)
+        (StreamingPipeline.readChain(spark, d, c), c.layers)
+      case None =>
+        (StreamingPipeline.readParquet(spark, s"$starDir/fact_table.parquet"),
+          Seq("fact_table.parquet"))
+    }
 
   /** Build the serving index of `snapshot`, the name the pointer gave
     * (never a second `_LATEST` lookup, which could name a newer one). */
   private def build(snapshot: Option[String]): ServeIndex = {
-    val i = ServeIndex.build(
-      graft.streaming.StreamingPipeline.readParquet(spark, factPath(snapshot)), snapshot, dims)
-    builds += 1
+    val (fact, layers) = factOf(snapshot)
+    val i = ServeIndex.build(fact, snapshot, layers, dims)
+    fullBuilds += 1
     i
+  }
+
+  /** The index of snapshot `name` of `dir` made from `held` by
+    * applying only the delta layers its chain adds to the one `held`
+    * holds (one small job each). None — a full build is due — unless
+    * the chain extends `held`'s and its deltas replace rows on the
+    * index's own key, (IndexKey, DateKey). */
+  private def extend(held: ServeIndex, dir: String, name: String): Option[ServeIndex] = {
+    val c = StreamingPipeline.snapshotChain(spark, dir, name)
+    val fresh = c.layers.drop(held.layers.size)
+    if (fresh.isEmpty || !c.layers.startsWith(held.layers) ||
+        c.keys.toSet != Set("IndexKey", "DateKey")) None
+    else fresh.foldLeft(Option(held)) { (i, l) =>
+        i.flatMap(_.withDelta(StreamingPipeline.readParquet(spark, s"$dir/$l"), l))
+      }.map { i =>
+        deltaApplies += fresh.size
+        lastDeltaRows = i.deltaRows
+        i
+      }
   }
 
   /** The serving index of the recorded snapshot, built on first use. */
@@ -82,26 +112,31 @@ class StarServe(spark: SparkSession, starDir: String,
     }
   }
 
-  /** The index if one is built, and how many builds ran: a metrics
-    * view that never triggers a build. */
-  private[graft] def indexState: (Option[ServeIndex], Long) = (Option(served), builds)
+  /** The index if one is built, and the builds so far: a metrics view
+    * that never triggers a build. */
+  private[graft] def indexState: StarServe.IndexState =
+    StarServe.IndexState(Option(served), fullBuilds, deltaApplies, lastDeltaRows)
 
   /** Cached fact frame of the recorded snapshot (reference reads the
     * same objects, app.py:75-95). */
   def fact: DataFrame = synchronized {
     factCache.getOrElse {
-      val f = graft.streaming.StreamingPipeline.readParquet(spark, factPath(snapshot)).cache()
+      val f = factOf(snapshot)._1.cache()
       factCache = Some(f)
       f
     }
   }
 
   /** Snapshot mode: re-read the `_LATEST` pointer; when it names a new
-    * snapshot, build that snapshot's serving index (one scan job; the
-    * schema comes from a footer read on the driver), publish it with
-    * one reference swap, record the new name, and drop the fact cache
-    * pin so the next `fact` call caches the new
-    * snapshot. Returns true when a swap happened. A build that throws
+    * snapshot, make that snapshot's serving index, publish it with one
+    * reference swap, record the new name, and drop the fact cache pin
+    * so the next `fact` call caches the new snapshot. When the new
+    * chain extends the served one by deltas, only those deltas are
+    * read and applied ([[ServeIndex.withDelta]]: one small job each);
+    * otherwise (first use, after a fold, an unrelated pointer) the
+    * whole chain is scanned (one job for a lone base; the schema comes
+    * from a footer read on the driver). Returns true when a swap
+    * happened. A build that throws
     * changes nothing — the previous index keeps serving and the
     * recorded name stays, so the next refresh() retries — and the
     * error propagates. An absent pointer (a writer's delete→rename
@@ -113,10 +148,10 @@ class StarServe(spark: SparkSession, starDir: String,
       case None => false
       case Some(d) =>
         val current = snapshot
-        val p = graft.streaming.StreamingPipeline.latestSnapshotName(spark, d)
+        val p = StreamingPipeline.latestSnapshotName(spark, d)
         if (p.isEmpty || p == current) false
         else {
-          served = build(p)
+          served = Option(served).flatMap(extend(_, d, p.get)).getOrElse(build(p))
           recorded = Some(p)
           factCache.foreach(_.unpersist())
           factCache = None
@@ -205,6 +240,14 @@ object StarServe {
   def fromStreamingSnapshots(spark: SparkSession, starDir: String,
       snapshotDir: String): StarServe =
     new StarServe(spark, starDir, Some(snapshotDir))
+
+  /** What `/metrics` reports of the serving index: the index if one is
+    * built, full builds and delta applies so far, and the rows of the
+    * last delta applied. */
+  private[graft] final case class IndexState(index: Option[ServeIndex],
+      fullBuilds: Long, deltaApplies: Long, lastDeltaRows: Option[Int]) {
+    def builds: Long = fullBuilds + deltaApplies
+  }
 
   /** A requested slice exceeds the serving-tier row cap — thrown
     * before the oversized slice is materialized; the HTTP facade maps

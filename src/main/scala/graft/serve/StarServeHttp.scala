@@ -37,8 +37,10 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *  - `POST /refresh` — snapshot-mode pointer poll
   *    ([[StarServe.refresh]]); the Streamlit analogue is a page rerun.
   *  - `GET /metrics` — per endpoint: requests, responses by status
-  *    class, summed latency; for the serving index: builds, the last
-  *    build's time, rows held, snapshot name, seconds since the swap.
+  *    class, summed latency; for the serving index: builds (full
+  *    builds plus delta applies), the rows of the last delta applied,
+  *    the last build's time, rows held, snapshot name, the layers of
+  *    its upsert chain, seconds since the swap.
   *  - `GET /health` — liveness.
   *
   * Every read endpoint answers from [[StarServe.index]], the
@@ -200,14 +202,16 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
       s""""$path":{"requests":${s.requests.sum},"status":{$classes},""" +
         s""""latency_ms_sum":${num(s.nanos.sum / 1e6)}}"""
     }.mkString(",")
-    val (built, builds) = serve.indexState
-    val index = built match {
-      case None => s"""{"builds":$builds,"last_build_ms":null,"rows":null,""" +
-        """"snapshot":null,"age_s":null}"""
+    val st = serve.indexState
+    val counts = s""""builds":${st.builds},"full_builds":${st.fullBuilds},""" +
+      s""""delta_applies":${st.deltaApplies},"last_delta_rows":${st.lastDeltaRows.getOrElse("null")}"""
+    val index = st.index match {
+      case None => s"""{$counts,"last_build_ms":null,"rows":null,""" +
+        """"snapshot":null,"chain_layers":null,"age_s":null}"""
       case Some(i) =>
         val snap = i.snapshot.map(n => s""""${StarServeHttp.jsonEsc(n)}"""").getOrElse("null")
-        s"""{"builds":$builds,"last_build_ms":${num(i.buildMs)},""" +
-          s""""rows":${i.rows},"snapshot":$snap,""" +
+        s"""{$counts,"last_build_ms":${num(i.buildMs)},""" +
+          s""""rows":${i.rows},"snapshot":$snap,"chain_layers":${i.layers.size},""" +
           s""""age_s":${num((System.nanoTime() - i.builtAtNanos) / 1e9)}}"""
     }
     s"""{"endpoints":{$eps},"index":$index}"""

@@ -105,15 +105,12 @@ object ExternalAdapters {
       // (correct for any landing contents) instead.
       val lastLanded: Option[java.sql.Date] =
         watermark.flatMap { wm =>
-          val newestMax = Option(spark.read
-            .option("header", "true")
-            .schema(graft.etl.StarSchemaBuilder.stocksSchema)
-            .csv(s"$landingDir/${prefix}_$wm.csv")
-            .agg(max(col("Date"))).head.getDate(0))
-          newestMax.orElse(Option(
-            graft.etl.StarSchemaBuilder.readLanding(spark, landingDir,
-                prefix, graft.etl.StarSchemaBuilder.stocksSchema)
-              .agg(max(col("Date"))).head.getDate(0)))
+          maxDate(spark.read
+              .option("header", "true")
+              .schema(graft.etl.StarSchemaBuilder.stocksSchema)
+              .csv(s"$landingDir/${prefix}_$wm.csv"))
+            .orElse(maxDate(graft.etl.StarSchemaBuilder.readLanding(spark,
+              landingDir, prefix, graft.etl.StarSchemaBuilder.stocksSchema)))
         }
       val increment = lastLanded match {
         case Some(d) => stacked.filter(col("Date") > lit(d))
@@ -124,6 +121,18 @@ object ExternalAdapters {
       if (increment.isEmpty) None
       else Some(graft.etl.Landing.appendDay(increment, landingDir, prefix, today))
     }
+  }
+
+  /** `max(Date)` over `landed` (None: no non-null date) in one Spark
+    * job with no exchange: each task reduces its split to its own
+    * max, and the driver takes the max of those. A `max` aggregate
+    * plans a partial and a final stage, which AQE runs as two jobs. */
+  private def maxDate(landed: DataFrame): Option[java.sql.Date] = {
+    import landed.sparkSession.implicits._
+    landed.select(unix_date(col("Date"))).as[Option[Int]]
+      .mapPartitions(days => Iterator(days.flatten.maxOption))
+      .collect().flatten.maxOption
+      .map(org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaDate)
   }
 
   /** Full world-bank ingest task (fetch_stocks.py:81-119) with

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -355,33 +355,45 @@ object StreamingPipeline {
     * recompute (fetch_stocks.py:152-161). The stream runs in UPDATE
     * mode — watermarks stay effective (late data is dropped, closed
     * windows evict from state, so state is bounded by open windows,
-    * not stream lifetime). Each micro-batch merges its changed keys
-    * into the previous snapshot (anti-join out the updated keys, union
-    * the new rows) and publishes the result as a fresh snapshot
-    * directory; the `_LATEST` pointer is written to a temp name and
-    * RENAMED over.
+    * not stream lifetime).
+    *
+    * A published snapshot is a CHAIN of layer directories: a base,
+    * then deltas in order. Each micro-batch writes only its own rows,
+    * as one new delta layer (one Spark job), whose `_CHAIN` file names
+    * the key columns and the layers beneath it; the `_LATEST` pointer,
+    * written to a temp name and RENAMED over, names the newest layer.
+    * Readers ([[readLatestSnapshot]], the serve layer) fold the chain
+    * with the merge a batch used to apply to the whole snapshot: each
+    * layer anti-joins out the keys the next one holds, then unions it,
+    * so every row of the newest layer that holds a key wins (duplicate
+    * keys within one batch all survive, as before). Once the deltas'
+    * bytes pass [[FoldRatio]] × the base's bytes, the next batch folds
+    * the chain and itself into a new base instead, so the chain, and
+    * the read of it, stays bounded.
     *
     * Recovery contract: foreachBatch is AT-LEAST-ONCE — after a crash
     * between the pointer flip and the checkpoint commit the same
-    * batchId re-runs, and the previous snapshot it would read IS the
-    * directory it would overwrite. Snapshot names carry a run tag
-    * (derived from the checkpoint location) besides the batchId, and
-    * the replay guard skips the re-apply when the batch's own snapshot
-    * is already the newest COMPLETE one — the run tag keeps a fresh
+    * batchId re-runs. Layer names carry a run tag (derived from the
+    * streaming query id) besides the batchId, and the replay guard
+    * skips the re-apply when the batch's own layer is already in the
+    * chain of the newest COMPLETE layer — the run tag keeps a fresh
     * stream (new checkpoint, restarted batch ids) over an existing
     * outDir from mistaking the old run's batches for its own replays.
-    * A crash in the delete→rename pointer window loses only the
-    * pointer, not the data: the writer falls back to the newest
-    * complete (_SUCCESS-marked) snapshot as the merge base and
-    * re-flips the pointer.
+    * A crash before the flip leaves the pointer on the old chain (an
+    * unflipped delta or a half-written fold is rewritten by the
+    * replay). A crash in the delete→rename pointer window loses only
+    * the pointer, not the data: the writer falls back to the newest
+    * complete (_SUCCESS-marked) layer, whose `_CHAIN` is written
+    * before its data, and re-flips the pointer.
     *
     * Pointer atomicity: rename is atomic on HDFS/local filesystems, so
     * readers there see either the old or the new pointer. On S3A,
     * rename is copy+delete and there is additionally a delete→rename
     * window — `readLatestSnapshot` retries on a missing pointer to
-    * cover both. Superseded snapshots are retired (keeping one grace
-    * copy for in-flight readers). Swap the directory flip for a
-    * transactional table format where one is available. */
+    * cover both. Layers of neither the new chain nor the previous one
+    * are retired (the previous chain is the grace copy for in-flight
+    * readers). Swap the directory flip for a transactional table
+    * format where one is available. */
   /** Replay-protection run tag for a foreachBatch sink. Derived from
     * the streaming query id persisted in `<checkpointDir>/metadata` —
     * stable across restarts of the same checkpoint, but FRESH when an
@@ -612,9 +624,59 @@ object StreamingPipeline {
     if (digits.isEmpty) None else scala.util.Try(digits.toLong).toOption
   }
 
+  /** A chain folds into a new base once its deltas' data bytes pass
+    * this multiple of its base's: a read of the chain then scans at
+    * most about twice the bytes of one folded snapshot, and the fold's
+    * full rewrite is paid once per base-sized run of deltas. */
+  private[graft] val FoldRatio: Double = 1.0
+
+  /** A published snapshot as its layers, base first, and the key
+    * columns its deltas replace rows on (empty for a lone base). */
+  private[graft] final case class Chain(layers: Seq[String], keys: Seq[String])
+
+  /** The chain whose newest layer is `name`: the layers its `_CHAIN`
+    * file lists, then `name`. A layer without the file (a base, or a
+    * name with no directory) is a chain of one. */
+  private def chainOf(fs: FileSystem, out: Path, name: String): Chain =
+    try {
+      val in = fs.open(new Path(new Path(out, name), "_CHAIN"))
+      val lines = try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
+        finally in.close()
+      def field(kind: String) = lines.filter(_.startsWith(kind + "\t")).map(_.drop(kind.length + 1))
+      Chain(field("layer") :+ name, field("key"))
+    } catch { case _: java.io.FileNotFoundException => Chain(Seq(name), Nil) }
+
+  /** The chain of the snapshot `name` under `outDir`. */
+  private[graft] def snapshotChain(spark: SparkSession, outDir: String,
+      name: String): Chain = {
+    val out = new Path(outDir)
+    chainOf(out.getFileSystem(spark.sparkContext.hadoopConfiguration), out, name)
+  }
+
+  /** The snapshot `chain` holds: its layers folded oldest first with
+    * the upsert merge. */
+  private[graft] def readChain(spark: SparkSession, outDir: String,
+      chain: Chain): DataFrame =
+    chain.layers.map(l => readParquet(spark, s"$outDir/$l"))
+      .reduceLeft(merge(_, _, chain.keys))
+
+  /** The upsert merge: the rows of `prev` whose key `next` does not
+    * hold, then every row of `next`. */
+  private def merge(prev: DataFrame, next: DataFrame,
+      keyCols: Seq[String]): DataFrame =
+    prev.join(next, keyCols, "left_anti").unionByName(next)
+
+  /** Bytes of the data files of layer `name` (not `_`/`.` files). */
+  private def dataBytes(fs: FileSystem, out: Path, name: String): Long =
+    fs.listStatus(new Path(out, name)).iterator.filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }.map(_.getLen).sum
+
   /** One micro-batch of the upsert sink (see `upsertSink` scaladoc for
-    * the recovery/atomicity contract). Idempotent per (runTag,
-    * batchId) — replaying an already-applied batch is a no-op. */
+    * the chain and the recovery/atomicity contract). Idempotent per
+    * (runTag, batchId) — replaying an already-applied batch is a
+    * no-op. */
   private[graft] def applyUpsertBatch(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], outDir: String, runTag: String = "run"): Unit = {
     val spark = batch.sparkSession
@@ -626,12 +688,13 @@ object StreamingPipeline {
     val currentPtr = readPointer(fs, out)
     def isComplete(name: String): Boolean =
       fs.exists(new Path(out, s"$name/_SUCCESS"))
-    // merge base: the pointer's target, or — writer recovery after a
-    // crash inside the pointer window — our own target if it completed
-    // (crash was mid-flip), else the newest complete snapshot of THIS
-    // run, else (genuine cross-run continuation) the newest of any run.
-    // Never a raw max-by-id across runs first: a fresh run's low batch
-    // ids must not lose to a previous run's high ones.
+    // chain head to build on: the pointer's target, or — writer
+    // recovery after a crash inside the pointer window — our own layer
+    // if it completed (crash was mid-flip), else the newest complete
+    // layer of THIS run, else (genuine cross-run continuation) the
+    // newest of any run. Never a raw max-by-id across runs first: a
+    // fresh run's low batch ids must not lose to a previous run's
+    // high ones.
     val prevSnapshot = currentPtr.filter(isComplete).orElse {
       if (!fs.exists(out)) None
       else {
@@ -643,33 +706,51 @@ object StreamingPipeline {
           .orElse(complete.sortBy(n => snapId(n).get).lastOption)
       }
     }
-    // replay guard: this (runTag, batchId) already wrote its snapshot
-    if (!prevSnapshot.contains(target)) {
-      val merged = prevSnapshot match {
-        case Some(p) =>
-          val prev = readParquet(spark, s"$outDir/$p")
-          prev.join(batch, keyCols, "left_anti").unionByName(batch)
-        case None => batch
-      }
-      merged.write.mode("overwrite").parquet(s"$outDir/$target")
+    val prev = prevSnapshot.map(chainOf(fs, out, _))
+    val next = prev match {
+      // replay guard: this (runTag, batchId) already wrote a layer of
+      // the chain
+      case Some(c) if c.layers.contains(target) => c
+      case _ =>
+        val (rows, chain) = prev match {
+          case Some(c) if c.layers.size > 1 && c.keys != keyCols ||
+              c.layers.tail.map(dataBytes(fs, out, _)).sum >
+                FoldRatio * dataBytes(fs, out, c.layers.head) =>
+            (merge(readChain(spark, outDir, c), batch, keyCols), Chain(Seq(target), Nil))
+          case Some(c) => (batch, Chain(c.layers :+ target, keyCols))
+          case None => (batch, Chain(Seq(target), Nil))
+        }
+        val dir = new Path(out, target)
+        fs.delete(dir, true)
+        // the chain file goes in BEFORE the data: a complete
+        // (_SUCCESS-marked) delta is never mistaken for a base
+        if (chain.layers.size > 1) {
+          val f = fs.create(new Path(dir, "_CHAIN"), true)
+          try f.write((keyCols.map("key\t" + _) ++ chain.layers.init.map("layer\t" + _))
+            .mkString("", "\n", "\n").getBytes("UTF-8"))
+          finally f.close()
+        }
+        rows.write.mode("append").parquet(dir.toString)
+        chain
     }
-    if (!currentPtr.contains(target)) {
+    val head = next.layers.last
+    if (!currentPtr.contains(head)) {
       // (re-)flip pointer: write temp, rename over _LATEST
       val tmp = new Path(out, s"_LATEST.tmp_$batchId")
       val ptr = fs.create(tmp, true)
-      try ptr.write(target.getBytes("UTF-8")) finally ptr.close()
+      try ptr.write(head.getBytes("UTF-8")) finally ptr.close()
       fs.delete(ptrPath, false)
       if (!fs.rename(tmp, ptrPath))
         throw new java.io.IOException(
-          s"failed to flip _LATEST to $target (rename returned false)")
+          s"failed to flip _LATEST to $head (rename returned false)")
     }
-    // retire everything but the current snapshot and its merge base
-    // (the base is the grace copy for in-flight readers of the old
-    // pointer). Keying on names, not this run's batch counter, retires
-    // a previous run's high-id snapshots immediately — they would
+    // retire every layer of neither the new chain nor the previous one
+    // (the previous chain is the grace copy for in-flight readers of
+    // the old pointer). Keying on names, not this run's batch counter,
+    // retires a previous run's high-id layers immediately — they would
     // otherwise linger (and poison the pointer-loss fallback above).
     // Foreign non-snapshot names are ignored rather than crash-looping.
-    val keep = (prevSnapshot.toSet + target)
+    val keep = prev.fold(Set.empty[String])(_.layers.toSet) ++ next.layers
     fs.listStatus(out).foreach { st =>
       val name = st.getPath.getName
       if (name.startsWith("snapshot_") && snapId(name).isDefined && !keep(name))
@@ -705,9 +786,10 @@ object StreamingPipeline {
   }
 
   /** Read the snapshot the `_LATEST` pointer names (see
-    * [[awaitLatestSnapshotName]]). */
+    * [[awaitLatestSnapshotName]]): its chain, folded. */
   def readLatestSnapshot(spark: SparkSession, outDir: String): DataFrame =
-    readParquet(spark, s"$outDir/${awaitLatestSnapshotName(spark, outDir)}")
+    readChain(spark, outDir,
+      snapshotChain(spark, outDir, awaitLatestSnapshotName(spark, outDir)))
 
   /** `spark.read.parquet(dir)` without Spark's schema-inference job:
     * the schema is read on the driver from the footer of the dir's

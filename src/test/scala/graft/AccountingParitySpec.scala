@@ -95,8 +95,7 @@ class AccountingParitySpec extends AnyFunSuite {
           .head.getString(0)
         (stats, digest)
       } finally cleaned.release()
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_droplist_spec").toString
+    val dir = graft.etl.Scratch.dir("graft_droplist_spec")
     val acc = ops.CorpusClean.accounting(docs, col("text"), col("doc_id"),
         dropListThreshold = 0, dropListDir = Some(dir))
       .orderBy(col("stage")).collect()

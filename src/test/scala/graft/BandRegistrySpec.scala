@@ -23,8 +23,7 @@ class BandRegistrySpec extends AnyFunSuite {
     (3L, doc(3)), (4L, doc(4))).toDF("doc_id", "text")
 
   test("fold history, surface a fresh batch's near-dups, replay is a no-op") {
-    val path = java.nio.file.Files.createTempDirectory("bandreg")
-      .resolve("reg").toString
+    val path = graft.etl.Scratch.dir("bandreg") + "/reg"
     val n1 = Dedup.advanceBandRegistry(spark, path, batch1,
       col("text"), col("doc_id"))
     val n2 = Dedup.advanceBandRegistry(spark, path, batch2,
@@ -65,7 +64,7 @@ class BandRegistrySpec extends AnyFunSuite {
   test("streaming sink converges to the batch registry; restart replays are free") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("bandreg_s")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("bandreg_s"))
     val batchPath = base.resolve("batch").toString
     val streamPath = base.resolve("stream").toString
     val all = batch1.unionByName(batch2)
@@ -100,7 +99,7 @@ class BandRegistrySpec extends AnyFunSuite {
   }
 
   test("params mismatch and unstamped registries are rejected fast") {
-    val base = java.nio.file.Files.createTempDirectory("bandreg2")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("bandreg2"))
     val path = base.resolve("reg").toString
     Dedup.advanceBandRegistry(spark, path, batch1,
       col("text"), col("doc_id"), numHashes = 8, bands = 2)
@@ -124,7 +123,7 @@ class BandRegistrySpec extends AnyFunSuite {
   }
 
   test("load recovers an interrupted publish instead of misreading it as a params mismatch") {
-    val base = java.nio.file.Files.createTempDirectory("bandreg3")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("bandreg3"))
     val path = base.resolve("reg").toString
     Dedup.advanceBandRegistry(spark, path, batch1, col("text"), col("doc_id"))
     val expected = Dedup.loadBandRegistry(spark, path).count()

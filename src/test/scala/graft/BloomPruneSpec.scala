@@ -76,7 +76,7 @@ class BloomPruneSpec extends AnyFunSuite {
   }
 
   test("saved filter reloads byte-identical and prunes across sessions") {
-    val dir = java.nio.file.Files.createTempDirectory("bloomreuse").toFile
+    val dir = new java.io.File(graft.etl.Scratch.dir("bloomreuse"))
     val path = s"${dir.getAbsolutePath}/active_keys.bloom"
     val keys = spark.read.parquet(s"$sfTiny/part.parquet")
       .filter(col("p_partkey") % 20 === 0).select(col("p_partkey"))

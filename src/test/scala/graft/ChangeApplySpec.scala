@@ -103,8 +103,7 @@ class ChangeApplySpec extends AnyFunSuite {
   }
 
   test("persisted advance bootstraps, folds order-events, and reports live count") {
-    val path = java.nio.file.Files.createTempDirectory("graft_cdc")
-      .resolve("snap").toString
+    val path = graft.etl.Scratch.dir("graft_cdc") + "/snap"
     val o = queries.t(spark, sfTiny, "orders")
       .select(col("o_orderkey").cast("string").as("k"),
         col("o_orderstatus").as("v"))
@@ -125,8 +124,7 @@ class ChangeApplySpec extends AnyFunSuite {
   }
 
   test("advance recovers a publish interrupted between delete and rename") {
-    val path = java.nio.file.Files.createTempDirectory("graft_cdc_crash")
-      .resolve("snap").toString
+    val path = graft.etl.Scratch.dir("graft_cdc_crash") + "/snap"
     ChangeApply.advance(spark, path, changes(("a", "a1", "I", 1)), key, attrs)
     // simulate a crash inside the swap window: the live dir is gone,
     // the fully-written next version sits under the tmp name

@@ -26,7 +26,7 @@ class ContinuousIntakeSpec extends AnyFunSuite {
   private val cols = SketchRollup.Columns("doc_id", "doc_id", "text")
 
   test("streamed intake converges to the one-shot batch states") {
-    val base = java.nio.file.Files.createTempDirectory("graft_intake")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_intake"))
     val inDir = base.resolve("in"); java.nio.file.Files.createDirectory(inDir)
     val sketchPath = base.resolve("sketch").toString
     val registryPath = base.resolve("registry").toString

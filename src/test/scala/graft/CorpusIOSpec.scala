@@ -20,7 +20,7 @@ class CorpusIOSpec extends AnyFunSuite {
     StructField("lang", StringType)))
 
   test("malformed lines are quarantined with their source file, clean rows parse") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val dir = graft.etl.Scratch.dir("graft_jsonl")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "shard0.jsonl"),
       """{"doc_id": 1, "text": "hello world", "lang": "en"}
@@ -48,7 +48,7 @@ class CorpusIOSpec extends AnyFunSuite {
     // `null` is VALID JSON, so from_json yields a null STRUCT instead
     // of a corrupt record — unguarded, it passed the corrupt filter
     // and materialized as a silent all-null "clean" document
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_null").toString
+    val dir = graft.etl.Scratch.dir("graft_jsonl_null")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "shard0.jsonl"),
       """{"doc_id": 1, "text": "real", "lang": "en"}
@@ -61,8 +61,7 @@ class CorpusIOSpec extends AnyFunSuite {
   }
 
   test("write/read round-trip through zstd shards preserves the corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_rt")
-      .resolve("out").toString
+    val dir = graft.etl.Scratch.dir("graft_jsonl_rt") + "/out"
     val docs = queries.t(spark, sfTiny, "documents")
       .select("doc_id", "text", "lang")
     CorpusIO.writeJsonl(docs, dir, shards = 3)
@@ -81,7 +80,7 @@ class CorpusIOSpec extends AnyFunSuite {
     // codec is resolved per FILE from its extension, so a corpus
     // re-exported incrementally under different codecs stays one
     // readable directory
-    val base = java.nio.file.Files.createTempDirectory("graft_jsonl_mix")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_jsonl_mix"))
     val mixed = base.resolve("mixed"); java.nio.file.Files.createDirectory(mixed)
     val docs = queries.t(spark, sfTiny, "documents")
       .select("doc_id", "text", "lang")
@@ -109,7 +108,7 @@ class CorpusIOSpec extends AnyFunSuite {
   }
 
   test("streaming intake splits arriving shards into clean and quarantine") {
-    val base = java.nio.file.Files.createTempDirectory("graft_jsonl_s")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_jsonl_s"))
     val inDir = base.resolve("in"); java.nio.file.Files.createDirectory(inDir)
     val ckpt = base.resolve("ckpt").toString
     val parsed = CorpusIO.readJsonlStream(spark, inDir.toString, schema)
@@ -164,7 +163,7 @@ class CorpusIOSpec extends AnyFunSuite {
 
   test("intake folds: clean upserts by key, dead letters set-fold, redelivery is a no-op") {
     import spark.implicits._
-    val dest = java.nio.file.Files.createTempDirectory("graft_intake").toString
+    val dest = graft.etl.Scratch.dir("graft_intake")
     val cleanA = Seq((1L, "en", "one"), (2L, "fr", "two"))
       .toDF("doc_id", "lang", "text")
     val quarA = Seq(("{bad1", "f0")).toDF("raw_line", "file")

@@ -52,8 +52,7 @@ class IncrementalAggSpec extends AnyFunSuite {
   }
 
   test("persisted advance round-trip matches, and state stays group-sized") {
-    val statePath = java.nio.file.Files.createTempDirectory("graft_incr")
-      .resolve("state").toString
+    val statePath = graft.etl.Scratch.dir("graft_incr") + "/state"
     var groups = 0L
     for (b <- batches)
       groups = IncrementalAgg.advance(spark, statePath, b, keys, "o_totalprice")
@@ -66,8 +65,7 @@ class IncrementalAggSpec extends AnyFunSuite {
   }
 
   test("advanceBatch is idempotent: a replayed (runTag, batchId) is a no-op") {
-    val statePath = java.nio.file.Files.createTempDirectory("graft_incr_b")
-      .resolve("state").toString
+    val statePath = graft.etl.Scratch.dir("graft_incr_b") + "/state"
     for ((b, i) <- batches.zipWithIndex)
       IncrementalAgg.advanceBatch(spark, statePath, b, keys,
         "o_totalprice", i.toLong)
@@ -91,7 +89,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_incr_s")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_incr_s"))
     val statePath = base.resolve("state").toString
     val ckpt = base.resolve("ckpt").toString
     val mem = MemoryStream[(String, String, Double)]

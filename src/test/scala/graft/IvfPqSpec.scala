@@ -47,8 +47,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("a cid-partitioned index gives the probe PARTITION PRUNING") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_idx").toString
+    val dir = graft.etl.Scratch.dir("graft_ivfpq_idx")
     index.write.mode("overwrite").partitionBy("cid").parquet(dir)
     val persisted = spark.read.parquet(dir)
     val probed = Similarity.ivfPqTopK(persisted, q, 10, centroids, model,
@@ -80,8 +79,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("ivfPqAdvance: folds converge to the one-shot index, replay is a marker no-op, pruning survives the swap") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_adv").toString
+    val dir = graft.etl.Scratch.dir("graft_ivfpq_adv")
     val idx = s"$dir/index"
     val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
     val n0 = Similarity.ivfPqAdvance(spark, idx,
@@ -118,8 +116,7 @@ class IvfPqSpec extends AnyFunSuite {
     // and a complete tmp holding the unswapped suffix. The next call
     // must recover either BEFORE reading — otherwise it would fold
     // into an empty index, or lose the unswapped lists' non-batch rows
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_crash").toString
+    val dir = graft.etl.Scratch.dir("graft_ivfpq_crash")
     val idx = s"$dir/index"
     val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
     val fs = new org.apache.hadoop.fs.Path(idx)
@@ -152,8 +149,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("ivfPqRemove: tombstones drop, adds interleave, a replayed remove is a monotone no-op") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_rm").toString
+    val dir = graft.etl.Scratch.dir("graft_ivfpq_rm")
     val idx = s"$dir/index"
     val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
     // add(evens) → remove(multiples of 4) → add(odds), one marker line
@@ -188,8 +184,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("ivfPqRemove: recovers an interrupted publish; removing from a missing index raises") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_rmcrash").toString
+    val dir = graft.etl.Scratch.dir("graft_ivfpq_rmcrash")
     val idx = s"$dir/index"
     val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
     // a remove with NO index at all is a caller bug, not a no-op
@@ -220,8 +215,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("ivfPqAdvance: only touched lists rewrite; upsert replay converges") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_leaf").toString
+    val dir = graft.etl.Scratch.dir("graft_ivfpq_leaf")
     val idx = s"$dir/index"
     val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
     val fs = new org.apache.hadoop.fs.Path(idx)
@@ -274,8 +268,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("ivfPqRemove: only tombstoned lists rewrite; an emptied list's dir is deleted") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_rmleaf").toString
+    val dir = graft.etl.Scratch.dir("graft_ivfpq_rmleaf")
     val idx = s"$dir/index"
     val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
     val fs = new org.apache.hadoop.fs.Path(idx)
@@ -322,8 +315,7 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("ivfPqRemove: caller-provided cid column skips the index scan; unknown tombstones are a marked no-op") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_rmleafcid").toString
+    val dir = graft.etl.Scratch.dir("graft_ivfpq_rmleafcid")
     val idx = s"$dir/index"
     val enc = index.select(col("id").as("vec_id"), col("cid"), col("codes"))
     assert(Similarity.ivfPqAdvance(spark, idx, enc, "t", 0L) == 500L)

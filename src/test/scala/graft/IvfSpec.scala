@@ -21,8 +21,7 @@ class IvfSpec extends AnyFunSuite {
   test("model save/load round-trips exactly (cross-session serve path)") {
     val trained = ops.Similarity.ivfCentroids(
       corpus, col("vec_id"), col("embedding"), k = 8, iters = 2)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf")
-      .resolve("model").toString
+    val path = graft.etl.Scratch.dir("graft_ivf") + "/model"
     ops.Similarity.saveIvfModel(spark, path, trained)
     val loaded = ops.Similarity.loadIvfModel(spark, path)
     assert(loaded == trained)

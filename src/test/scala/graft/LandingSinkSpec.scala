@@ -47,7 +47,7 @@ class LandingSinkSpec extends AnyFunSuite {
   }
 
   test("appendDay lands a CSV object that readLanding and the watermark both see") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_land_sink").toString
+    val dir = graft.etl.Scratch.dir("graft_land_sink")
     val day1 = ExternalAdapters.stackYfinance(wideFrame(Seq("2024-03-01")), tickers)
     Landing.appendDay(day1, dir, "stocks", LocalDate.parse("2024-03-01"))
     assert(StarSchemaBuilder.lastSavedDate(spark, dir, "stocks")
@@ -68,7 +68,7 @@ class LandingSinkSpec extends AnyFunSuite {
   }
 
   test("readLanding fails fast on header drift instead of misassigning columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_land_drift").toString
+    val dir = graft.etl.Scratch.dir("graft_land_drift")
     // a landed object whose column ORDER drifted (Ticker before Date):
     // positional schema application would silently put tickers in the
     // Date column — the landing contract demands a red load instead
@@ -88,7 +88,7 @@ class LandingSinkSpec extends AnyFunSuite {
   }
 
   test("fetchStocksIncrement: watermark gate + fetch window + landed increment") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_land_incr").toString
+    val dir = graft.etl.Scratch.dir("graft_land_incr")
     var fetchedWindow: Option[(LocalDate, LocalDate)] = None
     val fetch = (_: Seq[String], start: LocalDate, end: LocalDate) => {
       fetchedWindow = Some((start, end))
@@ -136,7 +136,7 @@ class LandingSinkSpec extends AnyFunSuite {
 
   test("fetchWorldBank renames indicator columns and lands") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_land_wb").toString
+    val dir = graft.etl.Scratch.dir("graft_land_wb")
     val canned = Seq(("2024-01-01", 2.5, 3.1), ("2023-01-01", 1.9, 6.5))
       .toDF("Date", "GDP Growth", "Inflation, Consumer Prices")
     ExternalAdapters.fetchWorldBank(spark, dir, () => canned,

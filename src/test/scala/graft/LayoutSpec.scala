@@ -40,7 +40,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("date-partitioned layout prunes partitions for a date filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = graft.etl.Scratch.dir("graft_part")
     val ev = queries.t(spark, sfTiny, "events")
       .withColumn("d", to_date(col("ts")))
     etl.Layout.writePartitioned(ev, dir, "d")
@@ -54,7 +54,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compact rewrites a small-file directory to the target count, byte-identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = graft.etl.Scratch.dir("graft_compact")
     val ev = queries.t(spark, sfTiny, "events")
     ev.repartition(32).write.mode("overwrite").parquet(dir)
     val checksum = spark.read.parquet(dir)
@@ -71,7 +71,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compactPartitioned compacts each leaf partition independently") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_part").toString
+    val dir = graft.etl.Scratch.dir("graft_compact_part")
     val ev = queries.t(spark, sfTiny, "events")
       .withColumn("d", to_date(col("ts")))
     // simulate many tiny incremental loads per partition
@@ -83,7 +83,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compactPartitioned reaches the leaves of a MULTI-column partitionBy layout") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_multi").toString
+    val dir = graft.etl.Scratch.dir("graft_compact_multi")
     val ev = queries.t(spark, sfTiny, "events").limit(2000)
       .withColumn("d", to_date(col("ts")))
       .withColumn("g", (col("user_id") % 2).cast("int"))
@@ -118,7 +118,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("zorderWrite survives NaN data under ANSI (clamp before the cast)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_z_nan").toString
+    val dir = graft.etl.Scratch.dir("graft_z_nan")
     val df = Seq((1L, 1.0, 2.0), (2L, Double.NaN, 3.0), (3L, 5.0, Double.NaN))
       .toDF("id", "x", "y")
     // NaN propagates into the max() bounds AND appears per row; the
@@ -129,8 +129,8 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("z-order layout prunes row groups on BOTH range columns") {
-    val lin = java.nio.file.Files.createTempDirectory("graft_lin").toString
-    val zo = java.nio.file.Files.createTempDirectory("graft_zo").toString
+    val lin = graft.etl.Scratch.dir("graft_lin")
+    val zo = graft.etl.Scratch.dir("graft_zo")
     // sf0.01: 10k events, user_id 0..149, value 0..~490 — enough rows
     // for many row groups at a small block size
     val ev = queries.t(spark, "/root/testdata/sf0.01", "events")
@@ -183,7 +183,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("zorderWrite: 3-column layout prunes row groups on every dimension") {
-    val zo = java.nio.file.Files.createTempDirectory("graft_zo3").toString
+    val zo = graft.etl.Scratch.dir("graft_zo3")
     val ev = queries.t(spark, "/root/testdata/sf0.01", "events")
       .select("event_id", "user_id", "value")
     val opts = Map("parquet.block.size" -> (16 * 1024).toString,
@@ -219,7 +219,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("writeBloom rejects columns absent from the schema (case-sensitive)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
+    val dir = graft.etl.Scratch.dir("graft_bloom")
     val ev = queries.t(spark, sfTiny, "events").select("event_id", "user_id")
     // parquet matches the '#<col>' option suffix case-sensitively, so a
     // wrong-case name would silently write no filter — must be refused
@@ -233,7 +233,7 @@ class LayoutSpec extends AnyFunSuite {
     // dotted paths resolve nested struct fields (valid parquet option
     // keys), while a dotted path with a bad leaf is still refused
     val nested = ev.select(struct(col("event_id"), col("user_id")).as("meta"))
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_bloom2").toString
+    val dir2 = graft.etl.Scratch.dir("graft_bloom2")
     etl.Layout.writeBloom(nested, dir2, Map("meta.user_id" -> 1000L))
     assert(spark.read.parquet(dir2).count() == nested.count())
     val e2 = intercept[IllegalArgumentException] {

@@ -203,8 +203,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("model persists and loads bit-identically (swap-published)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_model")
-      .toString + "/model"
+    val dir = graft.etl.Scratch.dir("graft_pq_model") + "/model"
     Similarity.savePqModel(spark, dir, model)
     assert(Similarity.loadPqModel(spark, dir) == model)
     // re-publish over the live model (the retrain path): still loads

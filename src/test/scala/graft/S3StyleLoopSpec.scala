@@ -32,7 +32,7 @@ class S3StyleLoopSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def mkLanding(): String = {
-    val dir = Files.createTempDirectory("graft_s3loop").toString
+    val dir = graft.etl.Scratch.dir("graft_s3loop")
     val dates = Iterator.iterate(java.time.LocalDate.parse("2024-01-01"))(_.plusDays(1))
       .takeWhile(!_.isAfter(java.time.LocalDate.parse("2024-01-31"))).toSeq
     val rows = for {
@@ -63,7 +63,7 @@ class S3StyleLoopSpec extends AnyFunSuite {
 
     // full build: glob scan + filename column + parquet publish, all
     // through grafts3:// (the publish exercises create/rename commit)
-    val outLocal = Files.createTempDirectory("graft_s3star").toString
+    val outLocal = graft.etl.Scratch.dir("graft_s3star")
     val star = StarSchemaBuilder.build(spark, landing, s"grafts3://$outLocal")
     assert(star("dim_stock_index").count() == 2)
 

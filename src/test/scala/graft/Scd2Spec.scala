@@ -125,8 +125,7 @@ class Scd2Spec extends AnyFunSuite {
   }
 
   test("persisted advance bootstraps, folds update batches, reports open count") {
-    val path = java.nio.file.Files.createTempDirectory("graft_scd2_adv")
-      .resolve("dim").toString
+    val path = graft.etl.Scratch.dir("graft_scd2_adv") + "/dim"
     val u1 = Seq((1L, "berlin", ts("2024-01-01 00:00:00")),
       (2L, "paris", ts("2024-01-01 00:00:00"))).toDF("k", "city", "ts")
     assert(Scd2.advance(spark, path, u1, "k", "ts", Seq("city")) == 2)
@@ -145,8 +144,7 @@ class Scd2Spec extends AnyFunSuite {
   }
 
   test("advance recovers a publish interrupted between delete and rename") {
-    val path = java.nio.file.Files.createTempDirectory("graft_scd2_crash")
-      .resolve("dim").toString
+    val path = graft.etl.Scratch.dir("graft_scd2_crash") + "/dim"
     val u1 = Seq((1L, "berlin", ts("2024-01-01 00:00:00"))).toDF("k", "city", "ts")
     Scd2.advance(spark, path, u1, "k", "ts", Seq("city"))
     // simulate a crash inside the swap window: the live dir is gone,

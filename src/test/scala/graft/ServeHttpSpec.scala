@@ -17,7 +17,7 @@ class ServeHttpSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private lazy val starDir: String = {
-    val landing = Files.createTempDirectory("graft_http_landing").toString
+    val landing = graft.etl.Scratch.dir("graft_http_landing")
     val dates = Iterator.iterate(java.time.LocalDate.parse("2024-01-01"))(_.plusDays(1))
       .takeWhile(!_.isAfter(java.time.LocalDate.parse("2024-02-29"))).toSeq
     val rows = for {
@@ -31,7 +31,7 @@ class ServeHttpSpec extends AnyFunSuite {
       ("Date,Ticker,Open,High,Low,Close,AdjClose,Volume" +: rows).mkString("\n").getBytes)
     Files.write(Paths.get(landing, "world_bank_2024-02-29.csv"),
       "date,GDPGrowthRate,InflationRate\n2024-01-01,2.5,3.1".getBytes)
-    val out = Files.createTempDirectory("graft_http_star").toString
+    val out = graft.etl.Scratch.dir("graft_http_star")
     StarSchemaBuilder.build(spark, landing, out)
     out
   }
@@ -177,7 +177,7 @@ class ServeHttpSpec extends AnyFunSuite {
 
   test("snapshot mode over HTTP: POST /refresh swaps to the latest upsert") {
     import graft.streaming.StreamingPipeline
-    val snapDir = Files.createTempDirectory("graft_http_snap").toString
+    val snapDir = graft.etl.Scratch.dir("graft_http_snap")
     val static = new StarServe(spark, starDir)
     val key = static.indexKeyFor("^GSPC").get
     static.release()
@@ -241,7 +241,7 @@ class ServeHttpSpec extends AnyFunSuite {
 
   test("refresh race: reads concurrent with a snapshot swap see exactly one of the two snapshots") {
     import graft.streaming.StreamingPipeline
-    val snapDir = Files.createTempDirectory("graft_http_race").toString
+    val snapDir = graft.etl.Scratch.dir("graft_http_race")
     val static = new StarServe(spark, starDir)
     val key = static.indexKeyFor("^GSPC").get
     static.release()
@@ -314,8 +314,44 @@ class ServeHttpSpec extends AnyFunSuite {
       assert(index.get("snapshot").isNull) // static star fact
       assert(index.get("last_build_ms").asDouble > 0.0)
       assert(index.get("age_s").asDouble >= 0.0)
-      assert(serve.indexState._2 == 1L)
+      assert(index.get("full_builds").asLong == 1L && index.get("delta_applies").asLong == 0L)
+      assert(index.get("last_delta_rows").isNull && index.get("chain_layers").asLong == 1L)
+      assert(serve.indexState.builds == 1L)
     }
+    // snapshot mode: one full build on first use, then one delta refresh
+    import graft.streaming.StreamingPipeline
+    val snapDir = graft.etl.Scratch.dir("graft_http_metrics")
+    val static = new StarServe(spark, starDir)
+    val key = static.indexKeyFor("^GSPC").get
+    static.release()
+    def batch(batchId: Long, days: String*) = {
+      import spark.implicits._
+      StreamingPipeline.applyUpsertBatch(
+        days.map(d => (key, java.sql.Date.valueOf(d), 100.0, 2.5))
+          .toDF("IndexKey", "DateKey", "Close", "GDPGrowthRate"),
+        batchId, Seq("IndexKey", "DateKey"), snapDir, "metrics")
+    }
+    batch(0L, "2024-03-01", "2024-03-04")
+    val serve = StarServe.fromStreamingSnapshots(spark, starDir, snapDir)
+    val http = StarServeHttp.serve(serve)
+    try {
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      def index() = mapper.readTree(get(s"${http.url}/metrics").body()).get("index")
+      assert(get(s"${http.url}/bounds").statusCode() == 200)
+      val full = index()
+      assert(full.get("full_builds").asLong == 1L && full.get("delta_applies").asLong == 0L)
+      assert(full.get("last_delta_rows").isNull && full.get("chain_layers").asLong == 1L)
+      batch(1L, "2024-03-05")
+      assert(client.send(HttpRequest.newBuilder(URI.create(s"${http.url}/refresh"))
+        .POST(HttpRequest.BodyPublishers.noBody()).build(),
+        HttpResponse.BodyHandlers.ofString()).body() == """{"swapped":true}""")
+      val delta = index()
+      assert(delta.get("builds").asLong == 2L)
+      assert(delta.get("full_builds").asLong == 1L && delta.get("delta_applies").asLong == 1L)
+      assert(delta.get("last_delta_rows").asLong == 1L && delta.get("chain_layers").asLong == 2L)
+      assert(delta.get("rows").asLong == 3L)
+      assert(delta.get("snapshot").asText == "snapshot_1_metrics")
+    } finally { http.stop(0); serve.release() }
   }
 
   test("concurrent clients: parallel requests all succeed with consistent bodies") {

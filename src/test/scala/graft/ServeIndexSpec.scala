@@ -5,7 +5,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.status.StatusBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.StarSchemaBuilder
@@ -25,7 +24,7 @@ class ServeIndexSpec extends AnyFunSuite {
   /** Three tickers over 2023-11-01..2024-03-31 with an econ row for
     * 2024 only, so every 2023 fact row has a null GDPGrowthRate. */
   private lazy val starDir: String = {
-    val landing = Files.createTempDirectory("graft_index_landing").toString
+    val landing = graft.etl.Scratch.dir("graft_index_landing")
     val dates = Iterator.iterate(java.time.LocalDate.parse("2023-11-01"))(_.plusDays(1))
       .takeWhile(!_.isAfter(java.time.LocalDate.parse("2024-03-31"))).toSeq
     val rng = new scala.util.Random(7)
@@ -40,7 +39,7 @@ class ServeIndexSpec extends AnyFunSuite {
       ("Date,Ticker,Open,High,Low,Close,AdjClose,Volume" +: rows).mkString("\n").getBytes)
     Files.write(Paths.get(landing, "world_bank_2024-03-31.csv"),
       "date,GDPGrowthRate,InflationRate\n2024-01-01,2.5,3.1".getBytes)
-    val out = Files.createTempDirectory("graft_index_star").toString
+    val out = graft.etl.Scratch.dir("graft_index_star")
     StarSchemaBuilder.build(spark, landing, out)
     out
   }
@@ -93,16 +92,7 @@ class ServeIndexSpec extends AnyFunSuite {
     try f(http) finally { http.stop(0); serve.release() }
   }
 
-  /** Spark jobs started while `body` runs, on any thread (HTTP handler
-    * threads carry no job group of the test's): job ids rise, so these are
-    * the status store's ids above its highest one before `body`. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    def jobIds(): Seq[Int] = { StatusBridge.drain(sc); StatusBridge.jobIds(sc) }
-    val before = jobIds().maxOption.getOrElse(-1)
-    body
-    jobIds().count(_ > before)
-  }
+  import TestSpark.jobsDuring
 
   test("seeded random requests: every HTTP body is byte-identical to the Spark reference") {
     val serve = new StarServe(spark, starDir)
@@ -147,7 +137,7 @@ class ServeIndexSpec extends AnyFunSuite {
   }
 
   test("narrow-schema upsert snapshot: bodies match the reference before and after a refresh") {
-    val snapDir = Files.createTempDirectory("graft_index_snap").toString
+    val snapDir = graft.etl.Scratch.dir("graft_index_snap")
     val static = new StarServe(spark, starDir)
     val key = static.indexKeyFor("^GSPC").get
     static.release()
@@ -181,8 +171,78 @@ class ServeIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("base+delta chain: the delta-refreshed index equals a fresh full build and the Spark reference") {
+    val snapDir = graft.etl.Scratch.dir("graft_index_chain")
+    val static = new StarServe(spark, starDir)
+    val (gspc, dji) = (static.indexKeyFor("^GSPC").get, static.indexKeyFor("^DJI").get)
+    static.release()
+    val stray = "0" * 28 + "dead" // an IndexKey the dimension lacks
+    def batch(batchId: Long, rows: (String, String, Double, java.lang.Double)*): Unit = {
+      import spark.implicits._
+      StreamingPipeline.applyUpsertBatch(
+        rows.map { case (k, d, c, g) => (k, Option(d).map(java.sql.Date.valueOf).orNull, c, g) }
+          .toDF("IndexKey", "DateKey", "Close", "GDPGrowthRate"),
+        batchId, Seq("IndexKey", "DateKey"), snapDir, "chain")
+    }
+    // 2024-02-01..2024-03-20: a base big enough that two small deltas
+    // stay under its bytes (no fold)
+    val days = Iterator.iterate(java.time.LocalDate.parse("2024-02-01"))(_.plusDays(1))
+      .takeWhile(!_.isAfter(java.time.LocalDate.parse("2024-03-20"))).map(_.toString).toSeq
+    batch(0L, (days.flatMap(d => Seq((gspc, d, 100.0, 2.5: java.lang.Double),
+        (dji, d, 300.0, null: java.lang.Double))) ++
+      Seq((stray, "2024-03-05", 1.0, null: java.lang.Double),
+        (gspc, null: String, 99.0, 2.5: java.lang.Double))): _*)
+    val serve = StarServe.fromStreamingSnapshots(spark, starDir, snapDir)
+    withServer(serve) { http =>
+      def all(): Unit = {
+        Seq(("series", "2024-01-01", "2024-03-31"), ("series", "2024-03-04", "2024-03-04"),
+          ("chart", "2024-03-01", "2024-03-31"), ("chart", "2024-01-01", "2024-02-02"))
+          .foreach { case (kind, s, e) =>
+            Seq("^GSPC", "^DJI", "^NDX").foreach(assertParity(http, serve, kind, _, s, e, 0))
+          }
+        Seq(1, 3, 100).foreach { k =>
+          Seq("^GSPC", "^DJI").foreach(assertParity(http, serve, "latest", _, "", "", k))
+        }
+        val b = serve.fact.agg(min(col("DateKey")), max(col("DateKey"))).head
+        assert(get(s"${http.url}/bounds").body() ==
+          s"""{"start":"${b.getDate(0)}","end":"${b.getDate(1)}"}""")
+        assert(serve.index.rows == serve.fact.count())
+      }
+      all()
+      // a replacing delta: new rows, replaced rows (a coded key, the
+      // stray key), a null DateKey, and bounds moved by the stray key
+      batch(1L, (gspc, "2024-03-04", 101.0, 2.5), (gspc, "2024-03-25", 102.0, 2.5),
+        (dji, "2024-03-10", 301.0, null), (dji, null, 298.0, null),
+        (stray, "2024-03-05", 2.0, null), (stray, "2024-01-15", 3.0, null))
+      assert(post(s"${http.url}/refresh").body() == """{"swapped":true}""")
+      // a key the two later deltas both overwrite
+      batch(2L, (gspc, "2024-03-04", 103.0, 2.5), (dji, "2024-03-21", 302.0, null))
+      assert(post(s"${http.url}/refresh").body() == """{"swapped":true}""")
+      val st = serve.indexState
+      assert((st.fullBuilds, st.deltaApplies, st.lastDeltaRows) == (1L, 2L, Some(2)))
+      assert(serve.index.rows == 2 * days.size + 2 - 3 + 6 - 1 + 2)
+      all()
+      val fresh = StarServe.fromStreamingSnapshots(spark, starDir, snapDir)
+      try {
+        val (a, b) = (serve.index, fresh.index)
+        assert(a.layers == (0 to 2).map(i => s"snapshot_${i}_chain") && b.layers == a.layers)
+        assert(fresh.indexState.fullBuilds == 1L)
+        assert(a.rows == b.rows && a.bounds == b.bounds && a.indexesJson == b.indexesJson)
+        for {
+          code <- Seq("^GSPC", "^DJI", "^NDX")
+          (s, e) <- Seq(("2024-01-01", "2024-12-31"), ("2024-03-04", "2024-03-10"))
+        } {
+          assert(a.seriesJson(code, s, e) == b.seriesJson(code, s, e), s"$code $s..$e")
+          assert(a.chartSvg(code, s, e) == b.chartSvg(code, s, e), s"$code $s..$e")
+        }
+        for (code <- Seq("^GSPC", "^DJI"); k <- Seq(1, 5, 100))
+          assert(a.latestJson(code, k) == b.latestJson(code, k), s"$code k=$k")
+      } finally fresh.release()
+    }
+  }
+
   test("a failed build on refresh keeps the old index serving; a later refresh succeeds") {
-    val snapDir = Files.createTempDirectory("graft_index_fail").toString
+    val snapDir = graft.etl.Scratch.dir("graft_index_fail")
     val static = new StarServe(spark, starDir)
     val key = static.indexKeyFor("^GSPC").get
     static.release()
@@ -213,12 +273,12 @@ class ServeIndexSpec extends AnyFunSuite {
       batch(101.5, 1L)
       assert(post(s"${http.url}/refresh").body() == """{"swapped":true}""")
       assert(get(seriesUrl).body().contains("101.5"))
-      assert(serve.indexState._2 == 2L, "one build on first use, one good refresh")
+      assert(serve.indexState.builds == 2L, "one build on first use, one good refresh")
     }
   }
 
   test("reads run zero Spark jobs: 20 reads after warm-up, and a refresh runs only its build") {
-    val snapDir = Files.createTempDirectory("graft_index_jobs").toString
+    val snapDir = graft.etl.Scratch.dir("graft_index_jobs")
     val static = new StarServe(spark, starDir)
     val key = static.indexKeyFor("^GSPC").get
     static.release()
@@ -258,10 +318,10 @@ class ServeIndexSpec extends AnyFunSuite {
     val static = new StarServe(spark, starDir)
     val key = static.indexKeyFor("^GSPC").get
     static.release()
-    val wideDir = Files.createTempDirectory("graft_footer_wide").toString
+    val wideDir = graft.etl.Scratch.dir("graft_footer_wide")
     StreamingPipeline.applyUpsertBatch(spark.read.parquet(s"$starDir/fact_table.parquet"),
       0L, Seq("IndexKey", "DateKey"), wideDir, "wide")
-    val narrowDir = Files.createTempDirectory("graft_footer_narrow").toString
+    val narrowDir = graft.etl.Scratch.dir("graft_footer_narrow")
     locally {
       import spark.implicits._
       StreamingPipeline.applyUpsertBatch(
@@ -284,10 +344,10 @@ class ServeIndexSpec extends AnyFunSuite {
     try {
       val fact = spark.read.parquet(s"$starDir/fact_table.parquet")
       val dims = ServeIndex.dims(serve.dimStockIndex)
-      val e = intercept[IllegalStateException](ServeIndex.build(fact, None, dims, maxRows = 100))
+      val e = intercept[IllegalStateException](ServeIndex.build(fact, None, Seq("fact_table"), dims, maxRows = 100))
       assert(e.getMessage.contains("MaxIndexRows = 100"), e.getMessage)
       // at the bound itself the build fits
-      assert(ServeIndex.build(fact, None, dims, maxRows = 3 * 152).rows == 3 * 152)
+      assert(ServeIndex.build(fact, None, Seq("fact_table"), dims, maxRows = 3 * 152).rows == 3 * 152)
       // the bound's arithmetic holds on this fact: MaxIndexRows rows of
       // its size fit the 256 MB driver-heap budget
       val idx = serve.index

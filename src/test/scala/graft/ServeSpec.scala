@@ -14,7 +14,7 @@ class ServeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private lazy val starDir: String = {
-    val landing = Files.createTempDirectory("graft_serve_landing").toString
+    val landing = graft.etl.Scratch.dir("graft_serve_landing")
     val dates = Iterator.iterate(java.time.LocalDate.parse("2024-01-01"))(_.plusDays(1))
       .takeWhile(!_.isAfter(java.time.LocalDate.parse("2024-02-29"))).toSeq
     val rows = for {
@@ -28,7 +28,7 @@ class ServeSpec extends AnyFunSuite {
       ("Date,Ticker,Open,High,Low,Close,AdjClose,Volume" +: rows).mkString("\n").getBytes)
     Files.write(Paths.get(landing, "world_bank_2024-02-29.csv"),
       "date,GDPGrowthRate,InflationRate\n2024-01-01,2.5,3.1".getBytes)
-    val out = Files.createTempDirectory("graft_serve_star").toString
+    val out = graft.etl.Scratch.dir("graft_serve_star")
     StarSchemaBuilder.build(spark, landing, out)
     out
   }
@@ -76,7 +76,7 @@ class ServeSpec extends AnyFunSuite {
 
   test("snapshot mode serves the latest upsert and swaps on refresh()") {
     import graft.streaming.StreamingPipeline
-    val snapDir = Files.createTempDirectory("graft_serve_snap").toString
+    val snapDir = graft.etl.Scratch.dir("graft_serve_snap")
     // fact-shaped upsert batches keyed on (IndexKey, DateKey): the
     // round trip is upsert sink → _LATEST pointer → served slice
     val static = new StarServe(spark, starDir)
@@ -109,7 +109,7 @@ class ServeSpec extends AnyFunSuite {
     import graft.streaming.StreamingPipeline
     import java.util.concurrent.ConcurrentLinkedQueue
     import java.util.concurrent.atomic.AtomicInteger
-    val snapDir = Files.createTempDirectory("graft_serve_race").toString
+    val snapDir = graft.etl.Scratch.dir("graft_serve_race")
     val static = new StarServe(spark, starDir)
     val key = static.indexKeyFor("^GSPC").get
     static.release()

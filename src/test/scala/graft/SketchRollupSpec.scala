@@ -76,8 +76,7 @@ class SketchRollupSpec extends AnyFunSuite {
   }
 
   test("persisted advance round-trip matches, state stays group-sized") {
-    val statePath = java.nio.file.Files.createTempDirectory("graft_sketch")
-      .resolve("state").toString
+    val statePath = graft.etl.Scratch.dir("graft_sketch") + "/state"
     var groups = 0L
     for (b <- batches)
       groups = SketchRollup.advance(spark, statePath, b, keys, cols)
@@ -89,8 +88,7 @@ class SketchRollupSpec extends AnyFunSuite {
   }
 
   test("advanceBatch is idempotent: a replayed (runTag, batchId) is a no-op") {
-    val statePath = java.nio.file.Files.createTempDirectory("graft_sketch_b")
-      .resolve("state").toString
+    val statePath = graft.etl.Scratch.dir("graft_sketch_b") + "/state"
     for ((b, i) <- batches.zipWithIndex)
       SketchRollup.advanceBatch(spark, statePath, b, keys, cols, i.toLong)
     val before = detFields(spark.read.parquet(statePath))
@@ -111,7 +109,7 @@ class SketchRollupSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_sketch_s")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_sketch_s"))
     val statePath = base.resolve("state").toString
     val ckpt = base.resolve("ckpt").toString
     val mem = MemoryStream[(String, Long, Long, String)]

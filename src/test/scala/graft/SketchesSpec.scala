@@ -83,7 +83,7 @@ class SketchesSpec extends AnyFunSuite {
     val sk = Sketches.kllSketchBy(li, Seq(col("l_returnflag")),
       col("l_extendedprice"))
     // the state survives a parquet round-trip (the persist/serve split)
-    val dir = java.nio.file.Files.createTempDirectory("graft_kll").toString
+    val dir = graft.etl.Scratch.dir("graft_kll")
     sk.write.mode("overwrite").parquet(dir)
     val est = Sketches.kllQuantiles(spark.read.parquet(dir), Seq(0.5))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap

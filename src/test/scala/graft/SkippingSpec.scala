@@ -15,7 +15,7 @@ class SkippingSpec extends AnyFunSuite {
   import TestSpark._
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_skip").toString
+    val d = graft.etl.Scratch.dir("graft_skip")
     val li = queries.t(spark, sfTiny, "lineitem")
       .select("l_orderkey", "l_quantity", "l_extendedprice")
     // 16 output files so pruning has granularity to show (AQE would
@@ -76,7 +76,7 @@ class SkippingSpec extends AnyFunSuite {
   }
 
   test("pruned scan works over a partitionBy layout (recursive listing + basePath)") {
-    val d = java.nio.file.Files.createTempDirectory("graft_skip_part").toString
+    val d = graft.etl.Scratch.dir("graft_skip_part")
     val ev = queries.t(spark, sfTiny, "events")
       .select(col("event_id"), col("value"), col("ts"))
       .withColumn("d", to_date(col("ts"))).drop("ts")
@@ -95,7 +95,7 @@ class SkippingSpec extends AnyFunSuite {
   }
 
   test("date/timestamp columns index as epoch days/micros (ANSI rejects blanket double casts)") {
-    val d = java.nio.file.Files.createTempDirectory("graft_skip_date").toString
+    val d = graft.etl.Scratch.dir("graft_skip_date")
     val ev = queries.t(spark, sfTiny, "events")
       .select(to_date(col("ts")).as("d"), col("ts"), col("event_id"))
     spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -138,7 +138,7 @@ class SkippingSpec extends AnyFunSuite {
   }
 
   test("refreshManifest stats only new files, drops dead entries, equals a full rebuild") {
-    val d = java.nio.file.Files.createTempDirectory("graft_skip_refresh").toString
+    val d = graft.etl.Scratch.dir("graft_skip_refresh")
     val li = queries.t(spark, sfTiny, "lineitem")
       .select("l_orderkey", "l_quantity")
     li.filter(col("l_quantity") > 10).repartition(3)
@@ -170,7 +170,7 @@ class SkippingSpec extends AnyFunSuite {
   }
 
   test("files appended after the manifest are always read (stale index loses speed, never rows)") {
-    val d = java.nio.file.Files.createTempDirectory("graft_skip_stale").toString
+    val d = graft.etl.Scratch.dir("graft_skip_stale")
     val li = queries.t(spark, sfTiny, "lineitem")
       .select("l_orderkey", "l_quantity", "l_extendedprice")
     etl.Layout.zorderWrite(li.filter(col("l_quantity") > 5), d,
@@ -193,7 +193,7 @@ class SkippingSpec extends AnyFunSuite {
     // not prune against them (read everything — speed, never rows) and
     // refreshManifest must force a FULL rebuild, not union against
     // incomparable stats.
-    val d = java.nio.file.Files.createTempDirectory("graft_skip_enc").toString
+    val d = graft.etl.Scratch.dir("graft_skip_enc")
     val li = queries.t(spark, sfTiny, "lineitem")
       .select("l_orderkey", "l_quantity")
     li.repartition(4).write.mode("overwrite").parquet(d)
@@ -244,7 +244,7 @@ class SkippingSpec extends AnyFunSuite {
     // offset and files that match can be silently skipped. The
     // encoding must be a pure function of the wall-clock value.
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_skip_ntz").toString
+    val d = graft.etl.Scratch.dir("graft_skip_ntz")
     val rows = (0 until 64).map { i =>
       (i.toLong, java.time.LocalDateTime.of(2024, 1, 1 + i % 28, i % 24, 30,
         15, 123456000))

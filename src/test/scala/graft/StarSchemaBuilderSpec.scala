@@ -14,7 +14,7 @@ class StarSchemaBuilderSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def mkLanding(): String = {
-    val dir = Files.createTempDirectory("graft_landing").toString
+    val dir = graft.etl.Scratch.dir("graft_landing")
     val dates = Iterator.iterate(java.time.LocalDate.parse("2023-12-15"))(_.plusDays(1))
       .takeWhile(!_.isAfter(java.time.LocalDate.parse("2024-01-31"))).toSeq
     val rows = for {
@@ -47,7 +47,7 @@ class StarSchemaBuilderSpec extends AnyFunSuite {
 
   test("star build: dims and fact match reference semantics") {
     val dir = mkLanding()
-    val out = Files.createTempDirectory("graft_star").toString
+    val out = graft.etl.Scratch.dir("graft_star")
     val star = StarSchemaBuilder.build(spark, dir, out)
 
     val dimDate = star("dim_date").cache()

@@ -52,7 +52,7 @@ class StateBackendSpec extends AnyFunSuite {
   test("session windows under RocksDB agree with the batch analog") {
     val prior = StateBackend.useRocksDB(spark, memoryBudgetMB = 64)
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft_rocks_sess").toString
+      val dir = graft.etl.Scratch.dir("graft_rocks_sess")
       graft.queries.t(spark, TestSpark.sfTiny, "events")
         .withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
         .write.mode("overwrite").parquet(dir)

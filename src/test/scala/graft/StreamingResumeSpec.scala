@@ -28,7 +28,7 @@ class StreamingResumeSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_cdc_resume")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_cdc_resume"))
     val outDir = base.resolve("snap").toString
     val ckpt = base.resolve("ckpt").toString
     val mem = MemoryStream[(String, String, String, Long)]
@@ -78,7 +78,7 @@ class StreamingResumeSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_incr_resume")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_incr_resume"))
     val statePath = base.resolve("state").toString
     val ckpt = base.resolve("ckpt").toString
     val keys = Seq("g")
@@ -121,7 +121,7 @@ class StreamingResumeSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_sketch_resume")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_sketch_resume"))
     val statePath = base.resolve("state").toString
     val ckpt = base.resolve("ckpt").toString
     val keys = Seq("lang")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingPipeline
@@ -13,7 +12,7 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private lazy val fixtureDir: String = {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = graft.etl.Scratch.dir("graft_stream")
     graft.queries.t(spark, TestSpark.sfTiny, "events")
       .withColumn("ts", col("ts").cast("timestamp"))
       .write.mode("overwrite").parquet(dir)
@@ -356,8 +355,8 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val out = Files.createTempDirectory("graft_upsert").toString
-    val ckpt = Files.createTempDirectory("graft_upsert_ckpt").toString
+    val out = graft.etl.Scratch.dir("graft_upsert")
+    val ckpt = graft.etl.Scratch.dir("graft_upsert_ckpt")
     val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
     val q = StreamingPipeline.upsertSink(
       StreamingPipeline.tumblingHourly(mem.toDF.toDF("ts", "event_type", "value")),
@@ -380,7 +379,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("upsert batch replay is idempotent (at-least-once foreachBatch recovery)") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_upsert_replay").toString
+    val out = graft.etl.Scratch.dir("graft_upsert_replay")
     val b0 = Seq(("k1", 1L), ("k2", 1L)).toDF("k", "n")
     StreamingPipeline.applyUpsertBatch(b0, 0L, Seq("k"), out)
     val b1 = Seq(("k2", 5L), ("k3", 1L)).toDF("k", "n")
@@ -439,7 +438,7 @@ class StreamingSpec extends AnyFunSuite {
         mem.toDF.toDF("event_id", "ts", "value"), Seq("event_id"))
       .writeStream.outputMode("append").format("noop")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_dedup_plateau").toString)
+        graft.etl.Scratch.dir("graft_dedup_plateau"))
       .start()
     try {
       val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
@@ -465,7 +464,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val out = Files.createTempDirectory("graft_upsert_recover").toString
+    val out = graft.etl.Scratch.dir("graft_upsert_recover")
     StreamingPipeline.applyUpsertBatch(
       Seq(("k1", 1L)).toDF("k", "n"), 0L, Seq("k"), out, runTag = "aaaa")
     StreamingPipeline.applyUpsertBatch(
@@ -487,11 +486,139 @@ class StreamingSpec extends AnyFunSuite {
     assert(snap() == Map("k1" -> 9L, "k2" -> 2L, "k3" -> 3L))
   }
 
+  // ---- the upsert snapshot as a base plus a chain of deltas ----------
+
+  private lazy val hadoopFs = new org.apache.hadoop.fs.Path("/").getFileSystem(
+    spark.sparkContext.hadoopConfiguration)
+
+  /** A base of `filler` rows under keys `f0`.. (batch 0 of `tag`), big
+    * enough that the small batches after it stay deltas: their bytes
+    * stay under the base's until `StreamingPipeline.FoldRatio` trips. */
+  private def upsertBase(out: String, filler: Int, tag: String): Unit = {
+    import spark.implicits._
+    StreamingPipeline.applyUpsertBatch((0 until filler).map(i => (s"f$i", i.toLong))
+      .toDF("k", "n"), 0L, Seq("k"), out, tag)
+  }
+
+  private def upsert(out: String, batchId: Long, tag: String, rows: (String, Long)*): Unit = {
+    import spark.implicits._
+    StreamingPipeline.applyUpsertBatch(rows.toDF("k", "n"), batchId, Seq("k"), out, tag)
+  }
+
+  private def chainNow(out: String): StreamingPipeline.Chain =
+    StreamingPipeline.snapshotChain(spark, out,
+      StreamingPipeline.awaitLatestSnapshotName(spark, out))
+
+  /** The published view without the filler, as sorted (k, n) pairs, so
+    * a duplicated key shows. */
+  private def viewOf(out: String): Seq[(String, Long)] =
+    StreamingPipeline.readLatestSnapshot(spark, out).filter(!col("k").startsWith("f"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
+
+  private def pointTo(out: String, name: String): Unit = {
+    val ptr = hadoopFs.create(new org.apache.hadoop.fs.Path(out, "_LATEST"), true)
+    try ptr.write(name.getBytes("UTF-8")) finally ptr.close()
+  }
+
+  test("delta chain: each batch writes only its rows; replay of any chained batch is a no-op") {
+    val out = graft.etl.Scratch.dir("graft_chain_replay")
+    upsertBase(out, 2000, "run")
+    upsert(out, 1L, "run", ("k1", 1L), ("k2", 1L))
+    upsert(out, 2L, "run", ("k2", 5L), ("k3", 1L))
+    upsert(out, 3L, "run", ("k4", 1L))
+    val chain = chainNow(out)
+    assert(chain.layers == (0 to 3).map(i => s"snapshot_${i}_run"), chain)
+    assert(chain.keys == Seq("k"))
+    // a delta holds its batch's rows only
+    assert(spark.read.parquet(s"$out/snapshot_2_run").count() == 2L)
+    val applied = viewOf(out)
+    assert(applied == Seq("k1" -> 1L, "k2" -> 5L, "k3" -> 1L, "k4" -> 1L))
+    assert(StreamingPipeline.readLatestSnapshot(spark, out).count() == 2004L)
+    // the head's and an older layer's batch re-run: nothing moves
+    upsert(out, 3L, "run", ("k4", 1L))
+    upsert(out, 2L, "run", ("k2", 5L), ("k3", 1L))
+    assert(chainNow(out) == chain)
+    assert(viewOf(out) == applied)
+  }
+
+  test("delta chain: a lost pointer falls back to the newest complete layer; a fresh run extends the chain") {
+    val out = graft.etl.Scratch.dir("graft_chain_recover")
+    upsertBase(out, 2000, "aaaa")
+    upsert(out, 1L, "aaaa", ("k1", 1L))
+    upsert(out, 2L, "aaaa", ("k2", 2L))
+    upsert(out, 3L, "aaaa", ("k3", 3L))
+    hadoopFs.delete(new org.apache.hadoop.fs.Path(out, "_LATEST"), false)
+    upsert(out, 4L, "aaaa", ("k4", 4L))
+    assert(chainNow(out).layers.size == 5)
+    assert(viewOf(out) == Seq("k1" -> 1L, "k2" -> 2L, "k3" -> 3L, "k4" -> 4L))
+    // a fresh stream's batch 0 is a new delta on the old run's chain
+    upsert(out, 0L, "bbbb", ("k1", 9L))
+    assert(chainNow(out).layers.last == "snapshot_0_bbbb")
+    assert(chainNow(out).layers.size == 6)
+    assert(viewOf(out) == Seq("k1" -> 9L, "k2" -> 2L, "k3" -> 3L, "k4" -> 4L))
+  }
+
+  test("delta chain: a crash after the delta write and before the flip") {
+    val out = graft.etl.Scratch.dir("graft_chain_noflip")
+    upsertBase(out, 2000, "run")
+    (1L to 3L).foreach(i => upsert(out, i, "run", (s"k$i", i)))
+    val before = viewOf(out)
+    // batch 4 writes its delta, then the writer dies before the flip:
+    // the disk holds the complete delta, the pointer the old head
+    upsert(out, 4L, "run", ("k1", 40L), ("k5", 5L))
+    pointTo(out, "snapshot_3_run")
+    assert(viewOf(out) == before, "readers keep the old chain")
+    // the stream re-runs batch 4
+    upsert(out, 4L, "run", ("k1", 40L), ("k5", 5L))
+    assert(chainNow(out).layers == (0 to 4).map(i => s"snapshot_${i}_run"))
+    assert(viewOf(out) == Seq("k1" -> 40L, "k2" -> 2L, "k3" -> 3L, "k5" -> 5L))
+  }
+
+  test("delta chain: a crash in the middle of a fold leaves the old chain serving") {
+    val out = graft.etl.Scratch.dir("graft_chain_fold")
+    upsertBase(out, 1, "run")
+    // a delta bigger than the base: the next batch folds
+    upsert(out, 1L, "run", (0 until 200).map(i => (s"k$i", i.toLong)): _*)
+    assert(chainNow(out).layers.size == 2)
+    val before = viewOf(out)
+    // batch 2's fold dies mid-write (a torn part file, no _SUCCESS),
+    // and the pointer is lost with it
+    val fold = new java.io.File(out, "snapshot_2_run")
+    assert(fold.mkdir())
+    java.nio.file.Files.write(new java.io.File(fold, "part-00000-torn.snappy.parquet").toPath,
+      Array[Byte](1, 2, 3))
+    hadoopFs.delete(new org.apache.hadoop.fs.Path(out, "_LATEST"), false)
+    // the re-run falls back to the complete chain and redoes the fold
+    upsert(out, 2L, "run", ("k0", 100L), ("knew", 1L))
+    val folded = chainNow(out)
+    assert(folded.layers == Seq("snapshot_2_run") && folded.keys.isEmpty, folded)
+    assert(!new java.io.File(fold, "part-00000-torn.snappy.parquet").exists())
+    assert(viewOf(out) == (before.filter(_._1 != "k0") ++ Seq("k0" -> 100L, "knew" -> 1L)).sorted)
+    assert(StreamingPipeline.readLatestSnapshot(spark, out).count() == 202L)
+    // the old chain stays as the grace copy, then retires
+    assert(new java.io.File(out, "snapshot_1_run").exists())
+    upsert(out, 3L, "run", ("k1", 7L))
+    assert(!new java.io.File(out, "snapshot_1_run").exists())
+    assert(!new java.io.File(out, "snapshot_0_run").exists())
+  }
+
+  test("delta chain: the newest layer holding a key wins, duplicates within one batch included") {
+    val out = graft.etl.Scratch.dir("graft_chain_wins")
+    upsertBase(out, 2000, "run")
+    upsert(out, 1L, "run", ("k1", 1L), ("k2", 1L))
+    upsert(out, 2L, "run", ("k1", 2L))
+    upsert(out, 3L, "run", ("k1", 3L), ("k5", 1L), ("k5", 2L))
+    assert(chainNow(out).layers.size == 4)
+    assert(viewOf(out) == Seq("k1" -> 3L, "k2" -> 1L, "k5" -> 1L, "k5" -> 2L))
+    upsert(out, 4L, "run", ("k5", 7L))
+    assert(viewOf(out) == Seq("k1" -> 3L, "k2" -> 1L, "k5" -> 7L))
+  }
+
   test("run tag tracks the streaming query id, not the checkpoint path") {
     // a wiped-and-reused checkpoint restarts batch ids at 0 under a NEW
     // query id; a path-derived tag would match the old run's markers
     // and silently skip those batches (round-7 ADVICE)
-    val ckpt = Files.createTempDirectory("graft_runtag").toString
+    val ckpt = graft.etl.Scratch.dir("graft_runtag")
     val meta = new java.io.File(ckpt, "metadata")
     def writeMeta(id: String): Unit = {
       val w = new java.io.PrintWriter(meta, "UTF-8")
@@ -564,7 +691,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_cdc_stream")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_cdc_stream"))
     val outDir = base.resolve("snap").toString
     val ckpt = base.resolve("ckpt").toString
     val mem = MemoryStream[(String, String, String, Long)]
@@ -593,7 +720,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_scd2_stream")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_scd2_stream"))
     val outDir = base.resolve("dim").toString
     val ckpt = base.resolve("ckpt").toString
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)]

@@ -85,8 +85,7 @@ class SubstrDedupSpec extends AnyFunSuite {
   }
 
   test("incremental registry equals the one-shot spread; new batch scrubbed against history") {
-    val statePath = java.nio.file.Files.createTempDirectory("graft_substr")
-      .resolve("registry").toString
+    val statePath = graft.etl.Scratch.dir("graft_substr") + "/registry"
     // fold the corpus in two append-only halves
     val (b1, b2) = (docsDf.filter(col("doc_id") <= 2),
       docsDf.filter(col("doc_id") > 2))
@@ -111,7 +110,7 @@ class SubstrDedupSpec extends AnyFunSuite {
   test("advanceSpreadBatch replay is a no-op; streaming sink folds like one batch") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_substr_s")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("graft_substr_s"))
     val statePath = base.resolve("registry").toString
     val ckpt = base.resolve("ckpt").toString
     // batch-guarded folds: replaying batch 0 must not double counts
@@ -148,7 +147,7 @@ class SubstrDedupSpec extends AnyFunSuite {
   }
 
   test("legacy single-modulus registry is rejected fast; publishes stamp the key space") {
-    val base = java.nio.file.Files.createTempDirectory("sdks")
+    val base = java.nio.file.Paths.get(graft.etl.Scratch.dir("sdks"))
     // forge a legacy registry: plausible rows, every whash < 2^30,
     // and no keyspace stamp — what the pre-dual build persisted
     val legacyPath = base.resolve("legacy").toString
@@ -188,8 +187,7 @@ class SubstrDedupSpec extends AnyFunSuite {
   }
 
   test("pruneRegistry keeps forward-relevant hashes, drops the dead tail") {
-    val statePath = java.nio.file.Files.createTempDirectory("graft_substr_p")
-      .resolve("registry").toString
+    val statePath = graft.etl.Scratch.dir("graft_substr_p") + "/registry"
     SubstrDedup.advanceSpread(spark, statePath, docsDf,
       col("text"), col("doc_id"), w)
     val before = spark.read.parquet(statePath)
@@ -263,8 +261,7 @@ class SubstrDedupSpec extends AnyFunSuite {
   }
 
   test("applied-batch markers stay bounded: one per runTag, replay still guarded") {
-    val statePath = java.nio.file.Files.createTempDirectory("graft_substr_m")
-      .resolve("registry").toString
+    val statePath = graft.etl.Scratch.dir("graft_substr_m") + "/registry"
     for (b <- 0 to 3)
       SubstrDedup.advanceSpreadBatch(spark, statePath,
         docsDf.filter(col("doc_id") === b + 1), col("text"), col("doc_id"),

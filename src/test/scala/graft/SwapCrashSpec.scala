@@ -156,8 +156,8 @@ class SwapCrashSpec extends AnyFunSuite {
 
   for (s <- stores)
     test(s"${s.name}: the next entry point recovers a crash in the publish gap") {
-      val (crashed, clean) = (Files.createTempDirectory("graft_swap_crash").toString,
-        Files.createTempDirectory("graft_swap_clean").toString)
+      val (crashed, clean) = (graft.etl.Scratch.dir("graft_swap_crash"),
+        graft.etl.Scratch.dir("graft_swap_clean"))
       try {
         s.publish(crashed)
         s.publish(clean)

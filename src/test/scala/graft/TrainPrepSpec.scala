@@ -289,8 +289,7 @@ class TrainPrepSpec extends AnyFunSuite {
   test("eval registry: repeated audits read the registry only, never eval text") {
     import spark.implicits._
     import graft.ops.Dedup
-    val regPath = java.nio.file.Files.createTempDirectory("evalreg")
-      .resolve("registry").toString
+    val regPath = graft.etl.Scratch.dir("evalreg") + "/registry"
     val train = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "one two three four five six seven eight"),
@@ -356,7 +355,7 @@ class TrainPrepSpec extends AnyFunSuite {
   }
 
   test("exportShards: key locality, within-file order, no global sort in the plan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val dir = graft.etl.Scratch.dir("graft_shards")
     val docs = queries.t(spark, sfTiny, "documents")
       .select(col("doc_id"), col("lang"), length(col("text")).as("len"))
     TrainPrep.exportShards(docs, dir, col("lang"), col("doc_id"), 4)

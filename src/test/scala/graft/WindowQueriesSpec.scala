@@ -32,7 +32,7 @@ class WindowQueriesSpec extends AnyFunSuite {
       .withColumn("ts", to_timestamp(col("ts_s")))
     const.createOrReplaceTempView("events_const")
     // reuse the decimal-Σ formulation through a temp parquet round-trip
-    val dir = java.nio.file.Files.createTempDirectory("graft_const").toString
+    val dir = graft.etl.Scratch.dir("graft_const")
     const.select("event_id", "ts", "user_id", "value").write.mode("overwrite")
       .parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("q_window_rolling_std")(spark, dir)

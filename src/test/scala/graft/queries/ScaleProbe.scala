@@ -544,8 +544,7 @@ object ScaleProbe {
     import graft.streaming.{StateBackend, StreamingPipeline}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    def ckpt(): String = java.nio.file.Files
-      .createTempDirectory("graft_stream_probe").toString
+    def ckpt(): String = graft.etl.Scratch.dir("graft_stream_probe")
 
     // Synthetic events: batch b advances event time by one hour, so a
     // 1-hour watermark passes batch b's horizon during batch b+2 and

@@ -1,7 +1,8 @@
 #!/bin/bash
 # Full round gate for the graft engine, in one command (dev tool; the
 # canonical sequence from .claude/skills/verify/SKILL.md). Runs:
-#   1. the full scalatest suite (incl. plan-shape gates)
+#   1. the full scalatest suite (incl. plan-shape gates); a run that
+#      leaves more /tmp/graft_* dirs than were there before it fails
 #   2. Verify + DuckDB burnin at sf0.001, sf0.01 AND sf0.1 (sf0.1 has
 #      caught divergences the smaller scales missed); a Verify run that
 #      leaves more /tmp/graft_* dirs than were there before it fails
@@ -17,13 +18,20 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# A test or Verify run must leave no scratch dir behind: specs' and
+# memos' dirs live under one per-JVM root that is deleted at exit.
+graft_tmp_dirs() { find /tmp -maxdepth 1 -type d -name 'graft_*' | wc -l; }
+
 echo "== [1/6] sbt test =="
+before=$(graft_tmp_dirs)
 sbt -batch test
+after=$(graft_tmp_dirs)
+if [ "$after" -gt "$before" ]; then
+  echo "sbt test left $((after - before)) /tmp/graft_* dirs behind"
+  exit 1
+fi
 
 echo "== [2/6] Verify + burnin at three scale factors =="
-# A Verify run must leave no scratch dir behind: its memo dirs live
-# under one per-JVM root that is deleted at exit.
-graft_tmp_dirs() { find /tmp -maxdepth 1 -type d -name 'graft_*' | wc -l; }
 for sf in sf0.001 sf0.01 sf0.1; do
   out="/tmp/gate_${sf}"
   before=$(graft_tmp_dirs)
