@@ -95,8 +95,9 @@ private[graft] final class ServeIndex private (
   /** This index with the delta layer `layer` (read as `delta`) applied
     * the way the upsert merge applies it to the fact: a held row whose
     * `IndexKey` and `DateKey` (both non-null) some delta row holds is
-    * dropped, and every delta row is added after the held rows of its
-    * day, so the result equals a full build of the longer chain. One
+    * dropped and every delta row is added, so the result equals a full
+    * build of the longer chain (rows of one day are ordered by their
+    * rendered `/latest` row, not by the order a read returns them). One
     * Spark job (the delta's collect); only the entry arrays of the
     * codes the delta touches are copied. None when the delta's columns
     * differ from the fact's: only a full build renders that union. */
@@ -140,7 +141,7 @@ private[graft] final class ServeIndex private (
       .groupMap(_._1)(_._2)
     val nextByCode = byCode ++ added.map { case (c, es) =>
       c -> (byCode.getOrElse(c, Array.empty[Entry])
-        .filterNot(e => replaced((e.key, e.day))) ++ es).sortBy(_.day)
+        .filterNot(e => replaced((e.key, e.day))) ++ es).sortBy(e => (e.day, e.latest))
     }
     val nextUnjoined = (unjoined -- replaced) ++ got.toSeq
       .filter(e => e.key != null && e.day != Long.MinValue && !dims.codesOfKey.contains(e.key))

@@ -48,7 +48,6 @@ class StarServe(spark: SparkSession, starDir: String,
   @volatile private var served: ServeIndex = null
   @volatile private var fullBuilds = 0L
   @volatile private var deltaApplies = 0L
-  @volatile private var lastDeltaRows: Option[Int] = None
   private var factCache: Option[DataFrame] = None
 
   private lazy val dims = ServeIndex.dims(dimStockIndex)
@@ -97,7 +96,6 @@ class StarServe(spark: SparkSession, starDir: String,
         i.flatMap(_.withDelta(StreamingPipeline.readParquet(spark, s"$dir/$l"), l))
       }.map { i =>
         deltaApplies += fresh.size
-        lastDeltaRows = i.deltaRows
         i
       }
   }
@@ -114,8 +112,10 @@ class StarServe(spark: SparkSession, starDir: String,
 
   /** The index if one is built, and the builds so far: a metrics view
     * that never triggers a build. */
-  private[graft] def indexState: StarServe.IndexState =
-    StarServe.IndexState(Option(served), fullBuilds, deltaApplies, lastDeltaRows)
+  private[graft] def indexState: StarServe.IndexState = {
+    val i = Option(served)
+    StarServe.IndexState(i, fullBuilds, deltaApplies, i.flatMap(_.deltaRows))
+  }
 
   /** Cached fact frame of the recorded snapshot (reference reads the
     * same objects, app.py:75-95). */
@@ -243,7 +243,7 @@ object StarServe {
 
   /** What `/metrics` reports of the serving index: the index if one is
     * built, full builds and delta applies so far, and the rows of the
-    * last delta applied. */
+    * delta the index applied last (None: it is a full build). */
   private[graft] final case class IndexState(index: Option[ServeIndex],
       fullBuilds: Long, deltaApplies: Long, lastDeltaRows: Option[Int]) {
     def builds: Long = fullBuilds + deltaApplies

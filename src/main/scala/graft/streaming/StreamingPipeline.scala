@@ -351,49 +351,6 @@ object StreamingPipeline {
       }
   }
 
-  /** Incremental upsert sink: replaces the reference's daily full
-    * recompute (fetch_stocks.py:152-161). The stream runs in UPDATE
-    * mode — watermarks stay effective (late data is dropped, closed
-    * windows evict from state, so state is bounded by open windows,
-    * not stream lifetime).
-    *
-    * A published snapshot is a CHAIN of layer directories: a base,
-    * then deltas in order. Each micro-batch writes only its own rows,
-    * as one new delta layer (one Spark job), whose `_CHAIN` file names
-    * the key columns and the layers beneath it; the `_LATEST` pointer,
-    * written to a temp name and RENAMED over, names the newest layer.
-    * Readers ([[readLatestSnapshot]], the serve layer) fold the chain
-    * with the merge a batch used to apply to the whole snapshot: each
-    * layer anti-joins out the keys the next one holds, then unions it,
-    * so every row of the newest layer that holds a key wins (duplicate
-    * keys within one batch all survive, as before). Once the deltas'
-    * bytes pass [[FoldRatio]] × the base's bytes, the next batch folds
-    * the chain and itself into a new base instead, so the chain, and
-    * the read of it, stays bounded.
-    *
-    * Recovery contract: foreachBatch is AT-LEAST-ONCE — after a crash
-    * between the pointer flip and the checkpoint commit the same
-    * batchId re-runs. Layer names carry a run tag (derived from the
-    * streaming query id) besides the batchId, and the replay guard
-    * skips the re-apply when the batch's own layer is already in the
-    * chain of the newest COMPLETE layer — the run tag keeps a fresh
-    * stream (new checkpoint, restarted batch ids) over an existing
-    * outDir from mistaking the old run's batches for its own replays.
-    * A crash before the flip leaves the pointer on the old chain (an
-    * unflipped delta or a half-written fold is rewritten by the
-    * replay). A crash in the delete→rename pointer window loses only
-    * the pointer, not the data: the writer falls back to the newest
-    * complete (_SUCCESS-marked) layer, whose `_CHAIN` is written
-    * before its data, and re-flips the pointer.
-    *
-    * Pointer atomicity: rename is atomic on HDFS/local filesystems, so
-    * readers there see either the old or the new pointer. On S3A,
-    * rename is copy+delete and there is additionally a delete→rename
-    * window — `readLatestSnapshot` retries on a missing pointer to
-    * cover both. Layers of neither the new chain nor the previous one
-    * are retired (the previous chain is the grace copy for in-flight
-    * readers). Swap the directory flip for a transactional table
-    * format where one is available. */
   /** Replay-protection run tag for a foreachBatch sink. Derived from
     * the streaming query id persisted in `<checkpointDir>/metadata` —
     * stable across restarts of the same checkpoint, but FRESH when an
@@ -429,6 +386,53 @@ object StreamingPipeline {
         .map(b => f"$b%02x").mkString)
   }
 
+  /** Incremental upsert sink: replaces the reference's daily full
+    * recompute (fetch_stocks.py:152-161). The stream runs in UPDATE
+    * mode — watermarks stay effective (late data is dropped, closed
+    * windows evict from state, so state is bounded by open windows,
+    * not stream lifetime).
+    *
+    * A published snapshot is a CHAIN of layer directories: a base,
+    * then deltas in order. Each micro-batch writes only its own rows,
+    * as one new delta layer (one Spark job). Every layer's `_CHAIN`
+    * file holds its publish sequence number (one more than the layer
+    * it was published on), and a delta's also the key columns and the
+    * layers beneath it; the `_LATEST` pointer, written to a temp name
+    * and RENAMED over, names the newest layer. Readers
+    * ([[readLatestSnapshot]], the serve layer) read the chain in one
+    * pass with the merge a batch used to apply to the whole snapshot:
+    * every row of the newest layer that holds a key wins (duplicate
+    * keys within one batch all survive, as before; a row with a null
+    * key column is never replaced). Once the deltas' bytes pass
+    * [[FoldRatio]] × the base's bytes, the next batch folds the chain
+    * and itself into a new base instead, so the chain, and the read of
+    * it, stays bounded.
+    *
+    * Recovery contract: foreachBatch is AT-LEAST-ONCE — after a crash
+    * between the pointer flip and the checkpoint commit the same
+    * batchId re-runs. Layer names carry a run tag (derived from the
+    * streaming query id) besides the batchId, and the replay guard
+    * skips the re-apply when the batch's own layer is already in the
+    * chain of the newest COMPLETE layer — the run tag keeps a fresh
+    * stream (new checkpoint, restarted batch ids) over an existing
+    * outDir from mistaking the old run's batches for its own replays.
+    * A crash before the flip leaves the pointer on the old chain (an
+    * unflipped delta or a half-written fold is rewritten by the
+    * replay). A crash in the delete→rename pointer window loses only
+    * the pointer, not the data: the writer falls back to the complete
+    * (_SUCCESS-marked) layer with the highest publish sequence, whose
+    * `_CHAIN` is written before its data, and re-flips the pointer.
+    * Batch ids do not order layers across runs (a fresh run restarts
+    * them at 0 on the old run's chain); the sequence does.
+    *
+    * Pointer atomicity: rename is atomic on HDFS/local filesystems, so
+    * readers there see either the old or the new pointer. On S3A,
+    * rename is copy+delete and there is additionally a delete→rename
+    * window — `readLatestSnapshot` retries on a missing pointer to
+    * cover both. Layers of neither the new chain nor the previous one
+    * are retired (the previous chain is the grace copy for in-flight
+    * readers). Swap the directory flip for a transactional table
+    * format where one is available. */
   def upsertSink(agg: DataFrame, keyCols: Seq[String], outDir: String,
       checkpointDir: String) = {
     agg.writeStream
@@ -630,21 +634,22 @@ object StreamingPipeline {
     * full rewrite is paid once per base-sized run of deltas. */
   private[graft] val FoldRatio: Double = 1.0
 
-  /** A published snapshot as its layers, base first, and the key
-    * columns its deltas replace rows on (empty for a lone base). */
-  private[graft] final case class Chain(layers: Seq[String], keys: Seq[String])
+  /** A published snapshot as its layers, base first, the key columns
+    * its deltas replace rows on (empty for a lone base), and the
+    * publish sequence number of its newest layer. */
+  private[graft] final case class Chain(layers: Seq[String], keys: Seq[String], seq: Long)
 
   /** The chain whose newest layer is `name`: the layers its `_CHAIN`
-    * file lists, then `name`. A layer without the file (a base, or a
-    * name with no directory) is a chain of one. */
+    * file lists, then `name`. A layer without the file (a name with no
+    * directory) is a chain of one at sequence 0. */
   private def chainOf(fs: FileSystem, out: Path, name: String): Chain =
     try {
       val in = fs.open(new Path(new Path(out, name), "_CHAIN"))
       val lines = try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
         finally in.close()
       def field(kind: String) = lines.filter(_.startsWith(kind + "\t")).map(_.drop(kind.length + 1))
-      Chain(field("layer") :+ name, field("key"))
-    } catch { case _: java.io.FileNotFoundException => Chain(Seq(name), Nil) }
+      Chain(field("layer") :+ name, field("key"), field("seq").headOption.fold(0L)(_.toLong))
+    } catch { case _: java.io.FileNotFoundException => Chain(Seq(name), Nil, 0L) }
 
   /** The chain of the snapshot `name` under `outDir`. */
   private[graft] def snapshotChain(spark: SparkSession, outDir: String,
@@ -653,18 +658,45 @@ object StreamingPipeline {
     chainOf(out.getFileSystem(spark.sparkContext.hadoopConfiguration), out, name)
   }
 
-  /** The snapshot `chain` holds: its layers folded oldest first with
-    * the upsert merge. */
+  /** The snapshot `chain` holds, its layers merged in one pass. */
   private[graft] def readChain(spark: SparkSession, outDir: String,
       chain: Chain): DataFrame =
-    chain.layers.map(l => readParquet(spark, s"$outDir/$l"))
-      .reduceLeft(merge(_, _, chain.keys))
+    if (chain.layers.size == 1) readParquet(spark, s"$outDir/${chain.layers.head}")
+    else newestWins(tagged(spark, outDir, chain.layers), chain.keys)
 
-  /** The upsert merge: the rows of `prev` whose key `next` does not
-    * hold, then every row of `next`. */
-  private def merge(prev: DataFrame, next: DataFrame,
-      keyCols: Seq[String]): DataFrame =
-    prev.join(next, keyCols, "left_anti").unionByName(next)
+  /** The column [[tagged]] holds a row's layer ordinal in. */
+  private val Ord = "_graft_layer"
+
+  /** The rows of `layers` (oldest first), each with its layer's
+    * ordinal in column [[Ord]]: one scan of all their files when the
+    * layers' footers agree on the columns (a file's layer is its
+    * parent dir), else a union of one scan per layer. */
+  private def tagged(spark: SparkSession, outDir: String, layers: Seq[String]): DataFrame = {
+    val schemas = layers.map(l => footerSchema(spark, s"$outDir/$l"))
+    def cols(s: StructType) = s.fields.toSeq.map(c => c.name -> c.dataType)
+    schemas.head.filter(h => schemas.forall(_.exists(cols(_) == cols(h)))) match {
+      case Some(schema) =>
+        spark.read.schema(schema).parquet(layers.map(l => s"$outDir/$l"): _*)
+          .withColumn(Ord, element_at(typedLit(layers.zipWithIndex.toMap),
+            regexp_extract(col("_metadata.file_path"), "([^/]+)/[^/]*$", 1)))
+      case None =>
+        layers.zipWithIndex.map { case (l, i) => readParquet(spark, s"$outDir/$l").withColumn(Ord, lit(i)) }
+          .reduceLeft(_.unionByName(_))
+    }
+  }
+
+  /** The upsert merge of `tagged` rows: every row of the newest layer
+    * ([[Ord]]) that holds its key, and every row with a null key
+    * column (an equi-join matches none, so no later layer replaces
+    * it). One window over the key: one exchange whatever the layer
+    * count. */
+  private def newestWins(tagged: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val top = "_graft_top"
+    tagged.withColumn(top, max(col(Ord)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(keyCols.map(col): _*)))
+      .filter(keyCols.map(col(_).isNull).reduce(_ || _) || col(Ord) === col(top))
+      .drop(Ord, top)
+  }
 
   /** Bytes of the data files of layer `name` (not `_`/`.` files). */
   private def dataBytes(fs: FileSystem, out: Path, name: String): Long =
@@ -686,25 +718,21 @@ object StreamingPipeline {
     val ptrPath = new Path(out, "_LATEST")
     val target = s"snapshot_${batchId}_$runTag"
     val currentPtr = readPointer(fs, out)
-    def isComplete(name: String): Boolean =
-      fs.exists(new Path(out, s"$name/_SUCCESS"))
+    def success(name: String) = new Path(out, s"$name/_SUCCESS")
+    def isComplete(name: String): Boolean = fs.exists(success(name))
     // chain head to build on: the pointer's target, or — writer
-    // recovery after a crash inside the pointer window — our own layer
-    // if it completed (crash was mid-flip), else the newest complete
-    // layer of THIS run, else (genuine cross-run continuation) the
-    // newest of any run. Never a raw max-by-id across runs first: a
-    // fresh run's low batch ids must not lose to a previous run's
-    // high ones.
+    // recovery after a crash inside the pointer window — the complete
+    // layer published last: the highest publish sequence, the newer
+    // _SUCCESS breaking a tie (a layer a crashed run wrote and never
+    // flipped to carries the same sequence as the one published after
+    // it). Never the highest batch id: a fresh run restarts its ids at
+    // 0 on top of a previous run's chain.
     val prevSnapshot = currentPtr.filter(isComplete).orElse {
       if (!fs.exists(out)) None
-      else {
-        val complete = fs.listStatus(out).toSeq.map(_.getPath.getName)
-          .filter(n => n.startsWith("snapshot_") && snapId(n).isDefined && isComplete(n))
-        complete.find(_ == target)
-          .orElse(complete.filter(_.endsWith(s"_$runTag"))
-            .sortBy(n => snapId(n).get).lastOption)
-          .orElse(complete.sortBy(n => snapId(n).get).lastOption)
-      }
+      else fs.listStatus(out).toSeq.map(_.getPath.getName)
+        .filter(n => n.startsWith("snapshot_") && snapId(n).isDefined && isComplete(n))
+        .maxByOption(n => (chainOf(fs, out, n).seq,
+          fs.getFileStatus(success(n)).getModificationTime))
     }
     val prev = prevSnapshot.map(chainOf(fs, out, _))
     val next = prev match {
@@ -712,24 +740,28 @@ object StreamingPipeline {
       // the chain
       case Some(c) if c.layers.contains(target) => c
       case _ =>
+        val seq = prev.fold(0L)(_.seq + 1)
         val (rows, chain) = prev match {
           case Some(c) if c.layers.size > 1 && c.keys != keyCols ||
               c.layers.tail.map(dataBytes(fs, out, _)).sum >
                 FoldRatio * dataBytes(fs, out, c.layers.head) =>
-            (merge(readChain(spark, outDir, c), batch, keyCols), Chain(Seq(target), Nil))
-          case Some(c) => (batch, Chain(c.layers :+ target, keyCols))
-          case None => (batch, Chain(Seq(target), Nil))
+            val below =
+              if (c.keys == keyCols) tagged(spark, outDir, c.layers)
+              else readChain(spark, outDir, c).withColumn(Ord, lit(c.layers.size - 1))
+            (newestWins(below.unionByName(batch.withColumn(Ord, lit(c.layers.size))), keyCols),
+              Chain(Seq(target), Nil, seq))
+          case Some(c) => (batch, Chain(c.layers :+ target, keyCols, seq))
+          case None => (batch, Chain(Seq(target), Nil, seq))
         }
         val dir = new Path(out, target)
         fs.delete(dir, true)
         // the chain file goes in BEFORE the data: a complete
-        // (_SUCCESS-marked) delta is never mistaken for a base
-        if (chain.layers.size > 1) {
-          val f = fs.create(new Path(dir, "_CHAIN"), true)
-          try f.write((keyCols.map("key\t" + _) ++ chain.layers.init.map("layer\t" + _))
-            .mkString("", "\n", "\n").getBytes("UTF-8"))
-          finally f.close()
-        }
+        // (_SUCCESS-marked) layer always has its sequence, and a
+        // complete delta is never mistaken for a base
+        val f = fs.create(new Path(dir, "_CHAIN"), true)
+        try f.write((s"seq\t$seq" +: (chain.keys.map("key\t" + _) ++
+            chain.layers.init.map("layer\t" + _))).mkString("", "\n", "\n").getBytes("UTF-8"))
+        finally f.close()
         rows.write.mode("append").parquet(dir.toString)
         chain
     }
@@ -746,10 +778,9 @@ object StreamingPipeline {
     }
     // retire every layer of neither the new chain nor the previous one
     // (the previous chain is the grace copy for in-flight readers of
-    // the old pointer). Keying on names, not this run's batch counter,
-    // retires a previous run's high-id layers immediately — they would
-    // otherwise linger (and poison the pointer-loss fallback above).
-    // Foreign non-snapshot names are ignored rather than crash-looping.
+    // the old pointer): a superseded chain, or a layer a crashed run
+    // wrote and never flipped to. Foreign non-snapshot names are
+    // ignored rather than crash-looping.
     val keep = prev.fold(Set.empty[String])(_.layers.toSet) ++ next.layers
     fs.listStatus(out).foreach { st =>
       val name = st.getPath.getName
@@ -786,18 +817,22 @@ object StreamingPipeline {
   }
 
   /** Read the snapshot the `_LATEST` pointer names (see
-    * [[awaitLatestSnapshotName]]): its chain, folded. */
+    * [[awaitLatestSnapshotName]]): its chain, merged. */
   def readLatestSnapshot(spark: SparkSession, outDir: String): DataFrame =
     readChain(spark, outDir,
       snapshotChain(spark, outDir, awaitLatestSnapshotName(spark, outDir)))
 
   /** `spark.read.parquet(dir)` without Spark's schema-inference job:
-    * the schema is read on the driver from the footer of the dir's
-    * first data file by path — the one file Spark's own inference reads
-    * when `mergeSchema` is off. A dir with no top-level data file
-    * (absent, empty, or partitioned into subdirs) falls back to
+    * the schema is [[footerSchema]]'s. A dir with no top-level data
+    * file (absent, empty, or partitioned into subdirs) falls back to
     * `spark.read.parquet`. */
-  private[graft] def readParquet(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def readParquet(spark: SparkSession, dir: String): DataFrame =
+    footerSchema(spark, dir).fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+
+  /** The schema in the footer of `dir`'s first data file by path, read
+    * on the driver — the one file Spark's own inference reads when
+    * `mergeSchema` is off. None when `dir` has no top-level data file. */
+  private def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val entries =
@@ -809,7 +844,6 @@ object StreamingPipeline {
       if (entries.exists(_.isDirectory)) None
       else entries.minByOption(_.getPath.toString)
     first.flatMap(org.apache.spark.sql.execution.datasources.parquet
-        .FooterBridge.schemaOf(spark, _))
-      .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+      .FooterBridge.schemaOf(spark, _))
   }
 }

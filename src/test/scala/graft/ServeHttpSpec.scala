@@ -351,6 +351,18 @@ class ServeHttpSpec extends AnyFunSuite {
       assert(delta.get("last_delta_rows").asLong == 1L && delta.get("chain_layers").asLong == 2L)
       assert(delta.get("rows").asLong == 3L)
       assert(delta.get("snapshot").asText == "snapshot_1_metrics")
+      // a delta past the base's bytes makes the next batch a fold: its
+      // refresh is a full build, which applied no delta
+      batch(2L, (1 to 28).map(d => f"2024-04-$d%02d"): _*)
+      batch(3L, "2024-05-01")
+      assert(StreamingPipeline.latestSnapshotName(spark, snapDir).contains("snapshot_3_metrics"))
+      assert(client.send(HttpRequest.newBuilder(URI.create(s"${http.url}/refresh"))
+        .POST(HttpRequest.BodyPublishers.noBody()).build(),
+        HttpResponse.BodyHandlers.ofString()).body() == """{"swapped":true}""")
+      val folded = index()
+      assert(folded.get("full_builds").asLong == 2L && folded.get("delta_applies").asLong == 1L)
+      assert(folded.get("last_delta_rows").isNull && folded.get("chain_layers").asLong == 1L)
+      assert(folded.get("rows").asLong == 3L + 28L + 1L)
     } finally { http.stop(0); serve.release() }
   }
 

@@ -614,6 +614,81 @@ class StreamingSpec extends AnyFunSuite {
     assert(viewOf(out) == Seq("k1" -> 3L, "k2" -> 1L, "k5" -> 7L))
   }
 
+  private def lostPointer(out: String): Unit =
+    hadoopFs.delete(new org.apache.hadoop.fs.Path(out, "_LATEST"), false)
+
+  test("delta chain: a lost pointer after a second run extended the chain keeps that run's layers") {
+    val out = graft.etl.Scratch.dir("graft_chain_tworuns")
+    upsertBase(out, 2000, "aaaa")
+    (1L to 4L).foreach(i => upsert(out, i, "aaaa", (s"k$i", i)))
+    (0L to 2L).foreach(i => upsert(out, i, "bbbb", (s"k${i + 1}", 10 + i)))
+    val before = viewOf(out)
+    assert(before == Seq("k1" -> 10L, "k2" -> 11L, "k3" -> 12L, "k4" -> 4L))
+    // bbbb dies in the pointer window of its batch 2; a third run finds
+    // no pointer and no layer of its own: it must build on bbbb's
+    // batch 2, not on aaaa's higher batch id 4
+    lostPointer(out)
+    upsert(out, 0L, "cccc", ("k5", 5L))
+    assert(chainNow(out).layers == (0 to 4).map(i => s"snapshot_${i}_aaaa") ++
+      (0 to 2).map(i => s"snapshot_${i}_bbbb") :+ "snapshot_0_cccc")
+    assert(viewOf(out) == before :+ ("k5" -> 5L))
+    // retirement kept bbbb's layers: the next batch still reads them
+    upsert(out, 1L, "cccc", ("k6", 6L))
+    assert(viewOf(out) == before ++ Seq("k5" -> 5L, "k6" -> 6L))
+  }
+
+  test("delta chain: a lost pointer after a fold falls back to the new base, not the longer grace chain") {
+    val out = graft.etl.Scratch.dir("graft_chain_foldloss")
+    upsertBase(out, 1, "aaaa")
+    upsert(out, 1L, "aaaa", (0 until 200).map(i => (s"k$i", i.toLong)): _*)
+    // a fresh run's batch 0 folds the chain into a new base; the old
+    // chain stays as the grace copy
+    upsert(out, 0L, "bbbb", ("k0", 100L))
+    assert(chainNow(out).layers == Seq("snapshot_0_bbbb"))
+    assert(new java.io.File(out, "snapshot_1_aaaa").exists())
+    val before = viewOf(out)
+    assert(before.contains("k0" -> 100L))
+    lostPointer(out)
+    upsert(out, 0L, "cccc", ("knew", 1L))
+    assert(chainNow(out).layers == Seq("snapshot_0_bbbb", "snapshot_0_cccc"))
+    assert(viewOf(out) == (before :+ ("knew" -> 1L)).sorted)
+  }
+
+  test("delta chain: a lost pointer prefers the published layer over an unflipped one of the same depth") {
+    val out = graft.etl.Scratch.dir("graft_chain_orphan")
+    upsertBase(out, 2000, "aaaa")
+    (1L to 2L).foreach(i => upsert(out, i, "aaaa", (s"k$i", i)))
+    // aaaa writes its batch 3, then dies before the flip
+    upsert(out, 3L, "aaaa", ("k1", 30L))
+    pointTo(out, "snapshot_2_aaaa")
+    def path(name: String) = new org.apache.hadoop.fs.Path(out, name)
+    // a fresh run publishes on the old head; its retirement would
+    // delete the unflipped layer, so keep that aside and restore it,
+    // as a crash in bbbb's pointer window before retirement leaves it
+    assert(hadoopFs.rename(path("snapshot_3_aaaa"), path("aside")))
+    upsert(out, 0L, "bbbb", ("k2", 20L))
+    assert(hadoopFs.rename(path("aside"), path("snapshot_3_aaaa")))
+    val before = viewOf(out)
+    assert(before == Seq("k1" -> 1L, "k2" -> 20L))
+    lostPointer(out)
+    upsert(out, 0L, "cccc", ("k5", 5L))
+    assert(chainNow(out).layers.takeRight(2) == Seq("snapshot_0_bbbb", "snapshot_0_cccc"))
+    assert(viewOf(out) == before :+ ("k5" -> 5L))
+    assert(!new java.io.File(out, "snapshot_3_aaaa").exists())
+  }
+
+  test("delta chain: a read runs the same jobs at 3 and at 12 layers") {
+    def jobsAt(layers: Int): Int = {
+      val out = graft.etl.Scratch.dir(s"graft_chain_read_$layers")
+      upsertBase(out, 5000, "run")
+      (1 until layers).foreach(i => upsert(out, i.toLong, "run", (s"k$i", i.toLong)))
+      assert(chainNow(out).layers.size == layers)
+      TestSpark.jobsDuring(StreamingPipeline.readLatestSnapshot(spark, out).collect(): Unit)
+    }
+    val (short, long) = (jobsAt(3), jobsAt(12))
+    assert(short == long && long <= 2, s"$short jobs reading 3 layers, $long reading 12")
+  }
+
   test("run tag tracks the streaming query id, not the checkpoint path") {
     // a wiped-and-reused checkpoint restarts batch ids at 0 under a NEW
     // query id; a path-derived tag would match the old run's markers
