@@ -677,6 +677,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(!new java.io.File(out, "snapshot_3_aaaa").exists())
   }
 
+  test("delta chain: a delta whose column type is wider than the base's reads widened") {
+    import spark.implicits._
+    val out = graft.etl.Scratch.dir("graft_chain_types")
+    StreamingPipeline.applyUpsertBatch((0 until 2000).map(i => (s"f$i", i)).toDF("k", "n"),
+      0L, Seq("k"), out, "run")
+    upsert(out, 1L, "run", ("f1", 1L << 40), ("k1", 1L))
+    assert(chainNow(out).layers.size == 2)
+    val snap = StreamingPipeline.readLatestSnapshot(spark, out)
+    assert(snap.schema("n").dataType == org.apache.spark.sql.types.LongType)
+    assert(snap.filter(col("k") === "f1").collect().map(_.getLong(1)).toSeq == Seq(1L << 40))
+    assert(snap.count() == 2001L)
+  }
+
   test("delta chain: a read runs the same jobs at 3 and at 12 layers") {
     def jobsAt(layers: Int): Int = {
       val out = graft.etl.Scratch.dir(s"graft_chain_read_$layers")
