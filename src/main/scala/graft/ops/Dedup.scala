@@ -161,9 +161,9 @@ object Dedup {
     * construction in the library ([[minHashBandHash]] over each
     * band's `r = numHashes/bands` consecutive minima, exploded from
     * band structs), shared by [[lshBandKeys]], [[lshBands]] and
-    * `CorpusClean.accounting` so the declared accounting's banding
-    * can never silently drift from the clean()-pipeline hashing it
-    * claims to describe (r16 ADVICE). Short docs surface as null
+    * CorpusClean's near-dup step, so the corpus pipeline's banding
+    * can never silently drift from the library's other MinHash band
+    * keys (r16 ADVICE). Short docs surface as null
     * band hashes (null minima null the concat inside
     * minHashBandHash) and are filtered on the CHEAP generated
     * attribute AFTER the explode, where the predicate cannot be

@@ -404,9 +404,10 @@ object StreamingPipeline {
     * every row of the newest layer that holds a key wins (duplicate
     * keys within one batch all survive, as before; a row with a null
     * key column is never replaced). Once the deltas' bytes pass
-    * [[FoldRatio]] × the base's bytes, the next batch folds the chain
-    * and itself into a new base instead, so the chain, and the read of
-    * it, stays bounded.
+    * [[FoldRatio]] × the base's bytes, or the chain holds [[MaxLayers]]
+    * layers, the next batch folds the chain and itself into a new base
+    * instead, so the chain, and the read of it, stays bounded in bytes
+    * and in layers.
     *
     * Recovery contract: foreachBatch is AT-LEAST-ONCE — after a crash
     * between the pointer flip and the checkpoint commit the same
@@ -634,6 +635,15 @@ object StreamingPipeline {
     * full rewrite is paid once per base-sized run of deltas. */
   private[graft] val FoldRatio: Double = 1.0
 
+  /** A chain also folds once it holds this many layers, whatever their
+    * bytes: the writer lists every delta on every batch and a cold
+    * read opens one footer per layer, so tiny deltas over a large base
+    * (about base bytes / 3 KB of them before [[FoldRatio]] trips)
+    * would grow both costs with the base. Set above the longest chain the
+    * dashboard benchmark's writer builds (a base plus one delta per
+    * writer day: ten layers). */
+  private[graft] val MaxLayers: Int = 16
+
   /** A published snapshot as its layers, base first, the key columns
     * its deltas replace rows on (empty for a lone base), and the
     * publish sequence number of its newest layer. */
@@ -743,6 +753,7 @@ object StreamingPipeline {
         val seq = prev.fold(0L)(_.seq + 1)
         val (rows, chain) = prev match {
           case Some(c) if c.layers.size > 1 && c.keys != keyCols ||
+              c.layers.size >= MaxLayers ||
               c.layers.tail.map(dataBytes(fs, out, _)).sum >
                 FoldRatio * dataBytes(fs, out, c.layers.head) =>
             val below =

@@ -159,6 +159,32 @@ class CorpusCleanSpec extends AnyFunSuite {
     }
   }
 
+  test("clean's spilled drop list: same survivors, published under the scratch root, nothing pinned after release") {
+    // dropListThreshold = 0 forces clean() through the size guard's
+    // publish arm — the drop list clean() broadcast unguarded before
+    // it shared accounting()'s drop-list step
+    def pinned: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    def dropLists: Set[java.io.File] = Option(graft.etl.Scratch.root.toFile.listFiles())
+      .fold(Set.empty[java.io.File])(_.filter(_.getName.startsWith("droplist")).toSet)
+    val docs = spark.read.parquet(TestSpark.sfTiny + "/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    def survivors(cfg: CorpusClean.Config): Array[Long] = {
+      val out = CorpusClean.clean(docs, col("text"), col("doc_id"), cfg)
+      try out.docs.select(col("doc_id")).collect().map(_.getLong(0)).sorted
+      finally out.release()
+    }
+    val expected = survivors(CorpusClean.Config())
+    val (listsBefore, pinnedBefore) = (dropLists, pinned)
+    val spilled = survivors(CorpusClean.Config(dropListThreshold = 0))
+    assert(spilled.sameElements(expected),
+      s"spilled arm keeps ${spilled.length} docs, the gathered arm ${expected.length}")
+    val published = dropLists -- listsBefore
+    assert(published.size == 1 && new java.io.File(published.head, "ids/_SUCCESS").exists(),
+      s"expected one published drop list under ${graft.etl.Scratch.root}: $published")
+    assert((pinned -- pinnedBefore).isEmpty,
+      s"blocks still pinned after release: ${pinned -- pinnedBefore}")
+  }
+
   test("cleanedCorpus memo serves exactly CorpusClean.clean's survivor set") {
     // the clean-once/derive-many memo (q_train_pipeline's input)
     // swap-publishes the survivor ids as parquet, releases the

@@ -702,6 +702,25 @@ class StreamingSpec extends AnyFunSuite {
     assert(short == long && long <= 2, s"$short jobs reading 3 layers, $long reading 12")
   }
 
+  test("delta chain: tiny deltas over a large base fold at MaxLayers with the same view") {
+    val out = graft.etl.Scratch.dir("graft_chain_cap")
+    upsertBase(out, 5000, "run")
+    val cap = StreamingPipeline.MaxLayers
+    (1 until cap).foreach(i => upsert(out, i.toLong, "run", (s"k$i", i.toLong)))
+    // the deltas' bytes stay far under the base's: only the cap folds
+    assert(chainNow(out).layers.size == cap)
+    val before = viewOf(out)
+    val rows = StreamingPipeline.readLatestSnapshot(spark, out).count()
+    upsert(out, cap.toLong, "run", ("k1", 100L))
+    val folded = chainNow(out)
+    assert(folded.layers == Seq(s"snapshot_${cap}_run") && folded.keys.isEmpty, folded)
+    assert(viewOf(out) == before.map { case ("k1", _) => "k1" -> 100L; case r => r })
+    assert(StreamingPipeline.readLatestSnapshot(spark, out).count() == rows)
+    // the new base grows a chain again
+    upsert(out, cap + 1L, "run", ("knew", 1L))
+    assert(chainNow(out).layers.size == 2)
+  }
+
   test("run tag tracks the streaming query id, not the checkpoint path") {
     // a wiped-and-reused checkpoint restarts batch ids at 0 under a NEW
     // query id; a path-derived tag would match the old run's markers
