@@ -9,13 +9,16 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** MinHash sketch as a single-pass typed aggregate.
+/** MinHash sketch as a single-pass typed aggregate — for signatures
+  * that are a real aggregate over many documents (`SketchRollup`'s
+  * per-group sketch). A per-DOCUMENT signature is row-local and runs
+  * the [[MinHashMinima]] kernel instead (`Dedup.minHashSignatures`).
   *
-  * Semantics are IDENTICAL to the column formulation in
-  * `graft.ops.Dedup.minHashSignatures` — for seed j, the lexicographic
-  * minimum of `md5hex("{j}|{value}")` over the group — but all
-  * `numHashes` minima live in ONE fixed-size buffer updated in one
-  * pass. Planner-wise that means a single ObjectHashAggregate instead
+  * Semantics are IDENTICAL to the column formulation
+  * `min(md5(concat_ws("|", lit(j), value)))` per seed j — the
+  * lexicographic minimum of `md5hex("{j}|{value}")` over the group
+  * (the MinHashAggSpec reference) — but all `numHashes` minima live
+  * in ONE fixed-size buffer updated in one pass. Planner-wise that means a single ObjectHashAggregate instead
   * of `numHashes` variable-width string-min buffers, which Spark's
   * HashAggregate cannot hold (it falls back to SortAggregate — a sort
   * per grouping on both the partial and final sides).

@@ -9,13 +9,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native one-pass MinHash minima over a shingle array: the
   * `numHashes`-element array whose j-th entry is
-  * `min(md5Hex("{j}|" + shingle))` — byte-identical to the HOF
-  * formulation `array_min(transform(sh, s => md5(concat_ws("|",
-  * lit(j), s))))` that `Dedup.minOverShingleArray` evaluated once PER
-  * PERMUTATION (lowercase-hex md5 strings compare lexicographically
-  * exactly as their digest bytes compare unsigned, so tracking the
-  * 16-byte digests and hex-encoding the winners at the end is the
-  * same minimum).
+  * `min(md5Hex("{j}|" + shingle))` — byte-identical to the column
+  * formulation `min(md5(concat_ws("|", lit(j), s)))` per permutation
+  * over the exploded shingles (lowercase-hex md5 strings compare
+  * lexicographically exactly as their digest bytes compare unsigned,
+  * so tracking the 16-byte digests and hex-encoding the winners at the
+  * end is the same minimum).
   *
   * Why a kernel: the row-local (stateless, stream-safe) MinHash path
   * ran `numHashes` separate interpreted HOF transforms per document,
@@ -30,9 +29,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Null array → null; a null element → null (the HOF form's null
   * element poisons `array_min` to null silently for that permutation
-  * — null is the loud, row-uniform version). Batch signatures stay on
-  * [[MinHashAgg]] (map-side-combinable typed aggregate); this kernel
-  * is the stream-side twin behind `Dedup.lshBandKeys`.
+  * — null is the loud, row-uniform version). This kernel is the one
+  * per-document MinHash path: `Dedup.minHashSignatures`,
+  * `Dedup.lshBandKeys` and CorpusClean's near-dup step all run it,
+  * batch and stream alike. [[MinHashAgg]] is for signatures that are
+  * a real aggregate over MANY documents (`SketchRollup`'s per-group
+  * sketch).
   */
 case class MinHashMinima(child: Expression, numHashes: Int)
     extends UnaryExpression {

@@ -9,9 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen SimHash signature from per-token md5-hex prefixes:
   * the `nBits`-char '0'/'1' string whose bit j is the sign of
-  * `Σ_tokens (((nibble(hx, j/4) >> (j%4)) & 1) · 2 − 1)` — exactly
-  * the per-bit HOF folds of `Dedup.simHashRowLocal`, which this
-  * kernel replaces as ONE pass over the token array.
+  * `Σ_tokens (((nibble(hx, j/4) >> (j%4)) & 1) · 2 − 1)` — the
+  * signature behind `Dedup.simHashSignatures`, computed as ONE pass
+  * over the token array (it replaced nBits per-bit HOF folds).
   *
   * Why a kernel: the row-local (stream-safe, stateless) signature
   * path evaluated `nBits` separate `aggregate()` higher-order folds
@@ -26,11 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * and measure nothing): 26.1 s HOF → 1.45 s kernel, and the
   * remainder is the per-token md5-hex build the kernel consumes.
   *
-  * Byte-identical to both the aggregate signature form and the old
-  * HOF row-local form (OpsSpec gates row-local == aggregate at 32 and
-  * 64 bits, plus band-key parity): same nibble order (hex char j/4),
-  * same LSB-first bit-in-nibble order (j%4), same `sum > 0 → '1'`
-  * threshold. Input is the materialized `__hx` column (each element
+  * Byte-identical to the DuckDB oracle's explode → per-token count →
+  * per-bit sum formulation (OpsSpec gates the library's only SimHash
+  * path against it at 32 and 64 bits, plus band-key parity): same
+  * nibble order (hex char j/4), same LSB-first bit-in-nibble order
+  * (j%4), same `sum > 0 → '1'` threshold. Input is the materialized `__hx` column (each element
   * an `nBits/4`-char lowercase-hex md5 prefix, built once per token).
   * Null array → null; a null element or a non-hex byte → null (the
   * HOF form's null-poisoned fold mapped such rows to all-'0' — a

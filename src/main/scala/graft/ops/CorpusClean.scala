@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus cleaning — the composition a large-scale
@@ -62,7 +63,7 @@ object CorpusClean {
     * 2¹²⁸ value space — so unlike fixed-width SimHash bands or
     * sign-LSH buckets it cannot exhaust as the corpus grows (the r8
     * sweep measured its max bucket FLAT from ×1 to ×64). The
-    * width-sensitive operators (`Dedup.simHashSignatures*`,
+    * width-sensitive operators (`Dedup.simHashSignatures`,
     * `Similarity.lshBucket*`) are not on this pipeline; since r9 their
     * library defaults are the wide variants, sized by
     * `Dedup.autoSimHashWidth` / `Similarity.autoBits` when the corpus
@@ -367,7 +368,11 @@ object CorpusClean {
     * where |verified pairs| ~ |corpus|, r16 verdict #4) the ids are
     * swap-published once under `dropListDir`/`name`
     * (complete-or-absent under the _SUCCESS-gated rename) and read
-    * back for a DISTRIBUTED join; the driver never holds the list. */
+    * back for a DISTRIBUTED join; the driver never holds the list.
+    * The probe is a take over `drops`' own executed plan, so the
+    * publish re-executes only that plan's last stage, reading the
+    * shuffle output the probe left behind: the band self-join and the
+    * verify behind `drops` run once in either arm. */
   private def dropList(drops: DataFrame, cfg: Config,
       name: String = "ids"): DataFrame = {
     val spark = drops.sparkSession
@@ -378,10 +383,12 @@ object CorpusClean {
     // all-partitions job reads the same final exchange once.
     val confKey = "spark.sql.limit.initialNumPartitions"
     val prevConf = spark.conf.getOption(confKey)
+    val qe = drops.queryExecution
     val probe =
       try {
         spark.conf.set(confKey, Int.MaxValue.toString)
-        drops.limit(cfg.dropListThreshold + 1).collect().map(_.getLong(0))
+        SQLExecution.withNewExecutionId(qe, Some("collect"))(
+          qe.executedPlan.executeTake(cfg.dropListThreshold + 1)).map(_.getLong(0))
       } finally prevConf match {
         case Some(v) => spark.conf.set(confKey, v)
         case None => spark.conf.unset(confKey)
@@ -393,7 +400,8 @@ object CorpusClean {
       val dir = cfg.dropListDir.getOrElse(graft.etl.Scratch.dir("droplist"))
       val ids = graft.etl.Swap.open(spark,
         new org.apache.hadoop.fs.Path(dir, name).toString)
-      ids.publish(drops)()
+      ids.publish(spark.createDataFrame(
+        qe.executedPlan.execute().map(r => Row(r.getLong(0))), drops.schema))()
       ids.read()
     }
   }

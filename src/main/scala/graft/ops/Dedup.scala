@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * 100 TB design notes:
   *  - every operator here is a pure DataFrame plan: hash-partitioned
   *    groupBys with map-side partial aggregation, no driver collects;
-  *  - signatures are computed per-document (linear), candidate
-  *    generation joins only on (band, bucket-hash) keys — the full
-  *    text never enters a shuffle;
+  *  - signatures are row-local kernels over each document (linear, no
+  *    exchange), candidate generation joins only on (band,
+  *    bucket-hash) keys — the full text never enters a shuffle;
   *  - the final pairwise verify (`ngramJaccardPairs`) should only run
   *    on LSH candidates at scale, never all pairs: pass
   *    `candidates = minHashLshCandidates(...)` and join.
@@ -66,49 +66,28 @@ object Dedup {
       explode(graft.functions.GraftFunctions.shingleWindows(
         split(textCol, " "), n)).as("s"))
 
-  /** MinHash signature: `numHashes` columns m0..m{k-1}, each the
-    * lexicographic minimum of seeded md5 over the document's shingles.
-    * min() is associative+commutative → partial aggregation works and
-    * the result is deterministic under any partitioning. */
-  def minHashSignatures(sh: DataFrame, numHashes: Int = 8): DataFrame = {
-    val mins = (0 until numHashes).map(j =>
-      min(md5(concat_ws("|", lit(j.toString), col("s")).cast("binary"))).as(s"m$j"))
-    sh.groupBy(col("id")).agg(mins.head, mins.tail: _*)
-  }
-
-  /** Same signature, one-pass: `graft.functions.MinHashAgg` keeps all
-    * `numHashes` minima in a single fixed-width typed buffer, so the
-    * planner uses ObjectHashAggregate — Spark's HashAggregate cannot
-    * hold variable-width string-min buffers and the column formulation
-    * above falls back to SortAggregate (a sort per side per grouping).
-    * Output is byte-identical to `minHashSignatures` (spec-enforced). */
-  def minHashSignaturesFast(sh: DataFrame, numHashes: Int = 8): DataFrame = {
-    val mh = sh.groupBy(col("id"))
-      .agg(graft.functions.MinHashAgg.minhash(col("s"), numHashes).as("__mh"))
-    mh.select(col("id") +:
-      (0 until numHashes).map(j => col("__mh").getItem(j).as(s"m$j")): _*)
-  }
-
-  /** The same MinHash signature as [[minHashSignatures]], computed
-    * ROW-LOCALLY as higher-order-function columns over the document's
-    * own shingle array — no explode, no aggregation, no state. This is
-    * the streaming-safe form (a per-doc groupBy on an unbounded stream
-    * would keep state per document forever); on the batch path prefer
-    * [[minHashSignaturesFast]], whose one-pass typed aggregate stays
-    * codegen'd where HOFs are CodegenFallback. Byte-identical output
-    * (spec-enforced). Returns null signature columns for docs with
-    * fewer than `shingleLen` tokens — filter those out first when
-    * banding. */
-  def minHashColumns(textCol: Column, numHashes: Int = 8,
-      shingleLen: Int = 3): Seq[Column] = {
-    val sh = shingleArray(textCol, shingleLen)
-    (0 until numHashes).map(j => minOverShingleArray(sh, j).as(s"m$j"))
-    // NOTE: each returned column re-embeds the tokenize+shingle tree
-    // (HOFs are CodegenFallback — no subexpression elimination), so
-    // this convenience form shingles ~numHashes× per row. On a hot
-    // path, project [[shingleArray]] into a real column once and map
-    // [[minOverShingleArray]] over it — what [[lshBandKeys]] does.
-  }
+  /** Per-document MinHash signature (id, m0 … m{k−1}): m_j is the
+    * lexicographic minimum of `md5("{j}|" + shingle)` over the
+    * document's word `shingleLen`-grams. Row-local: ONE
+    * [[graft.functions.MinHashMinima]] kernel pass over the
+    * [[shingleArray]] column — no explode, no exchange, no aggregate
+    * state, so it is linear, partitioning-invariant by construction and
+    * runs unchanged on a stream. Documents with fewer than `shingleLen`
+    * tokens (and null texts) have no shingles and emit no row.
+    *
+    * The short-doc drop is a predicate on the TEXT, never an isNotNull
+    * on the kernel column: that filter would be pushed below the
+    * projection with the whole split+shingle+minima chain inlined, and
+    * the kernel would run twice per row (r10 plan-audit finding). The
+    * minima are materialized once as `__mh` and read by attribute. */
+  def minHashSignatures(docs: DataFrame, textCol: Column, idCol: Column,
+      numHashes: Int = 8, shingleLen: Int = 3): DataFrame =
+    docs.filter(size(split(textCol, " ")) >= shingleLen)
+      .select(idCol.as("id"),
+        graft.functions.GraftFunctions.minHashMinima(
+          shingleArray(textCol, shingleLen), numHashes).as("__mh"))
+      .select(col("id") +:
+        (0 until numHashes).map(j => col("__mh").getItem(j).as(s"m$j")): _*)
 
   /** The document's shingle array as one Column; null when the doc
     * has fewer than `n` tokens. Runs in the codegen ShingleWindows
@@ -120,30 +99,19 @@ object Dedup {
   def shingleArray(textCol: Column, n: Int = 3): Column =
     graft.functions.GraftFunctions.shingleWindows(split(textCol, " "), n)
 
-  /** min(md5("{j}|" + s)) over a shingle-array column — one MinHash
-    * permutation, row-local. */
-  def minOverShingleArray(shCol: Column, j: Int): Column =
-    array_min(transform(shCol,
-      s => md5(concat_ws("|", lit(j.toString), s).cast("binary"))))
-
   /** Row-local LSH band keys (id, band, h) straight from the text —
-    * [[minHashColumns]] + banding in one stateless projection, so it
-    * runs unchanged on a STREAM (each arriving doc emits its `bands`
-    * bucket keys; join them against an indexed band table for
-    * incremental near-dup candidates). Docs with fewer than
+    * the [[minHashSignatures]] minima + banding in one stateless
+    * projection, so it runs unchanged on a STREAM (each arriving doc
+    * emits its `bands` bucket keys; join them against an indexed band
+    * table for incremental near-dup candidates). Docs with fewer than
     * `shingleLen` tokens emit nothing, matching [[shingles]]. */
   def lshBandKeys(docs: DataFrame, textCol: Column, idCol: Column,
       numHashes: Int = 8, bands: Int = 2, shingleLen: Int = 3): DataFrame = {
     // ALL numHashes minima in one kernel pass over the shingle array
-    // (graft.functions.MinHashMinima): the per-permutation
-    // array_min(transform(md5)) HOF columns re-walked the shingle
-    // array through interpreted lambda dispatch numHashes× per row
-    // with an intermediate md5-string array each — the same
-    // CodegenFallback tax SimHashSign retired on the SimHash twin.
-    // Materialized as a real column so the per-band getItems below
-    // read it by attribute (single evaluation); a null shingle array
-    // (doc shorter than shingleLen) nulls the minima and is filtered,
-    // matching the old shingle-array filter.
+    // (graft.functions.MinHashMinima), materialized as a real column
+    // so the per-band getItems below read it by attribute (single
+    // evaluation); a null shingle array (doc shorter than shingleLen)
+    // nulls the minima and is filtered.
     // NOTE: no isNotNull filter on __mh here — it would inline the
     // whole split+shingle+minima chain into a pushed Filter and
     // evaluate it twice per row (r10 plan-audit finding). Short docs
@@ -302,8 +270,9 @@ object Dedup {
 
   /** Candidate near-dup pairs (id1 < id2) sharing ≥1 LSH bucket.
     * Candidate threshold ≈ (1/bands)^(bands/numHashes).
-    * Uses the one-pass sketch + a cached band table (both join sides
-    * read it), the same shape as the declared q_dedup_minhash_lsh.
+    * The self-join of the row-local [[lshBandKeys]] over a cached band
+    * table (both join sides read it): no shingle explode, no
+    * aggregate; only (band, h) keys shuffle.
     *
     * `cacheBands = false` skips the cache for callers managing their
     * own persistence (the cached table is otherwise pinned for the
@@ -312,9 +281,7 @@ object Dedup {
   def minHashLshCandidates(docs: DataFrame, textCol: Column, idCol: Column,
       numHashes: Int = 8, bands: Int = 2, shingleLen: Int = 3,
       cacheBands: Boolean = true): DataFrame = {
-    val raw = lshBands(
-      minHashSignaturesFast(shingles(docs, textCol, idCol, shingleLen), numHashes),
-      numHashes, bands)
+    val raw = lshBandKeys(docs, textCol, idCol, numHashes, bands, shingleLen)
     val bandsDf = if (cacheBands) raw.cache() else raw
     bandsDf.as("a").join(bandsDf.as("b"),
         col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
@@ -403,25 +370,6 @@ object Dedup {
       case _ => ()
     }
 
-  /** SimHash signature per document at the LIBRARY DEFAULT width —
-    * 64 bits (a 64-char '0'/'1' string): per-token md5-derived
-    * hashes, weighted bit majority. 64-bit is the default since the
-    * r8 scaling sweep measured 32-bit signatures' 8-bit bands
-    * SATURATING at ×16 corpus growth (band value space exhausts; pair
-    * space then grows quadratically — SCALE.md "Fixed-width blocking
-    * saturates"). Pass an explicit width through
-    * [[simHashSignaturesWide]] to pin a narrower/wider signature —
-    * sized by [[autoSimHashWidth]] when the corpus size is known.
-    *
-    * The weighted bit-sums are `nBits` aggregate COLUMNS over the
-    * (id, token, count) table — one hash aggregate, map-side
-    * combinable — rather than exploding every token row nBits× (an
-    * nBits× shuffle blowup) and aggregating per (id, bitpos). Bit j's
-    * ±1 sign comes from nibble j/4 of the hex token hash; identical
-    * arithmetic to the DuckDB oracle's unnest formulation. */
-  def simHashSignatures(docs: DataFrame, textCol: Column, idCol: Column): DataFrame =
-    simHashSignaturesWide(docs, textCol, idCol, 64)
-
   /** Band-space sizing rule (SCALE.md "Fixed-width blocking
     * saturates"): each of the `nBands` band keys must draw from a
     * value space ≫ corpus size, i.e. nBits/nBands ≥ log₂(nDocs) +
@@ -430,8 +378,8 @@ object Dedup {
     * smallest width satisfying the rule that is BOTH a multiple of 4
     * (the hex-nibble signature constraint) AND divisible by `nBands`
     * (the banding constraint) — i.e. a multiple of lcm(4, nBands) —
-    * so the result always feeds [[simHashSignaturesWide]] /
-    * [[simHashNearDupPairsWide]] without tripping their requires.
+    * so the result always feeds [[simHashSignatures]] /
+    * [[simHashNearDupPairs]] without tripping their requires.
     * Clamped to ≤ 128 (the md5 nibble budget: beyond ~2³⁰-doc corpora
     * at 4 bands, add bands or shard the corpus instead); nBands whose
     * lcm with 4 exceeds 128 are rejected. */
@@ -455,43 +403,45 @@ object Dedup {
     a / gcd(a, b) * b
   }
 
-  /** SimHash signature at an arbitrary width (≤ 128 bits — the md5
-    * nibble budget). 32 bits is the declared-query width (oracle
-    * parity); **64 is the corpus-scale width**: band blocking carves
-    * the signature into `nBands` substrings, and a band over b bits
-    * has only 2^b possible VALUES — so at 32 bits / 4 bands every
-    * bucket key comes from a 256-value space and bucket sizes grow as
-    * n/256·⟨band skew⟩ with corpus size, driving the Σ|bucket|² pair
-    * space quadratic once n ≫ 2^8 (ScaleProbe risk mode measures
-    * exactly this saturation). At 64 bits the band space is 2^16 per
-    * band and random collisions stay negligible to ~10⁷ docs per
-    * partition of the banding key-space; beyond that, widen again
-    * (96/128) — the pigeonhole exactness argument is width-agnostic.
-    * Same one-aggregate plan shape at every width: the bit-sums are
-    * `nBits` aggregate columns, never an explode. */
-  def simHashSignaturesWide(docs: DataFrame, textCol: Column, idCol: Column,
+  /** Per-document SimHash signature (id, simhash): an `nBits`-char
+    * '0'/'1' string whose bit j is the sign of the document's token
+    * occurrences' ±1 votes, bit j of each token's md5 (nibble j/4 of
+    * the hex digest, LSB-first within the nibble) — the DuckDB
+    * oracle's arithmetic. Documents with no non-empty token emit no
+    * row.
+    *
+    * Row-local: ONE [[graft.functions.SimHashSign]] kernel pass over
+    * the document's per-token md5-hex prefixes — no explode, no
+    * exchange, no aggregate state, so it runs unchanged on a stream.
+    * The no-token drop is a predicate on the TEXT (a non-space
+    * character exists iff a non-empty token does): a filter on the
+    * hex array would be pushed below the projection with the
+    * per-token md5 chain inlined, hashing every token twice (r10
+    * plan-audit finding).
+    *
+    * Width (≤ 128 bits — the md5 nibble budget): **64, the default, is
+    * the corpus-scale width**; 32 is the declared-query width (oracle
+    * parity). Band blocking carves the signature into `nBands`
+    * substrings, and a band over b bits has only 2^b possible VALUES —
+    * so at 32 bits / 4 bands every bucket key comes from a 256-value
+    * space, bucket sizes grow as n/256·⟨band skew⟩ with corpus size and
+    * the Σ|bucket|² pair space goes quadratic once n ≫ 2^8 (the r8
+    * sweep measured exactly this saturation at ×16 growth — SCALE.md
+    * "Fixed-width blocking saturates"). At 64 bits the band space is
+    * 2^16 per band and random collisions stay negligible to ~10⁷ docs
+    * per partition of the banding key space; beyond that, widen again
+    * (96/128) — [[autoSimHashWidth]] sizes it when the corpus size is
+    * known. */
+  def simHashSignatures(docs: DataFrame, textCol: Column, idCol: Column,
       nBits: Int = 64): DataFrame = {
     require(nBits % 4 == 0 && nBits >= 8 && nBits <= 128,
       s"nBits must be a multiple of 4 in [8,128], got $nBits")
     val nHex = nBits / 4
-    val tokc = docs.select(idCol.as("id"), explode(split(textCol, " ")).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .groupBy(col("id"), col("tok")).agg(count(lit(1)).as("cnt"))
-      .withColumn("h", substring(md5(col("tok").cast("binary")), 1, nHex))
-    // hex nibbles as ints, once per token row
-    val withNibs = (0 until nHex).foldLeft(tokc) { (df, k) =>
-      df.withColumn(s"n$k",
-        expr(s"instr('0123456789abcdef', substring(h, ${k + 1}, 1)) - 1"))
-    }
-    val bitSums = (0 until nBits).map { j =>
-      val nib = col(s"n${j / 4}")
-      val p = 1 << (j % 4)
-      sum(col("cnt") * ((nib.divide(p).cast("int") % 2) * 2 - 1)).as(s"b$j")
-    }
-    val sig = concat((0 until nBits).map(j =>
-      when(col(s"b$j") > 0, "1").otherwise("0")): _*)
-    withNibs.groupBy(col("id")).agg(bitSums.head, bitSums.tail: _*)
-      .select(col("id"), sig.as("simhash"))
+    val hexes = transform(filter(split(textCol, " "), t => length(t) > 0),
+      t => substring(md5(t.cast("binary")), 1, nHex))
+    docs.filter(length(translate(textCol, " ", "")) > 0)
+      .select(idCol.as("id"),
+        graft.functions.GraftFunctions.simHashSign(hexes, nBits).as("simhash"))
   }
 
   /** Exact Jaccard over distinct n-gram shingle sets for given
@@ -633,10 +583,10 @@ object Dedup {
     * blocking — the LINEAR pair-generation path for signature-level
     * dedup (the MinHash/LSH dual for SimHash sketches).
     *
-    * Input: (id, simhash) rows as produced by [[simHashSignatures]] /
-    * [[simHashSignaturesWide]] (an `nBits`-char '0'/'1' string —
-    * `nBits` must match the signature width, library default 64). The
-    * bits are cut into `nBands` equal substrings; a pair is examined
+    * Input: (id, simhash) rows as produced by [[simHashSignatures]],
+    * one per id (an `nBits`-char '0'/'1' string — `nBits` must match
+    * the signature width, library default 64). The bits are cut into
+    * `nBands` equal substrings; a pair is examined
     * only when at least one band matches exactly, i.e. the self-join
     * is an EQUI-join on (band, substring) — it shuffles band keys,
     * never pair space. By pigeonhole, any pair with Hamming distance
@@ -645,7 +595,8 @@ object Dedup {
     * not approximate, recall.
     *
     * The distance itself is integer arithmetic: the bit-string parses
-    * to BIGINT chunks (base-2 `conv`) and the distance is
+    * into ≤32-bit BIGINT chunks (base-2 `conv`; a 64-bit chunk would
+    * overflow to null on a set sign bit) and the distance is
     * `bit_count(sig1 XOR sig2)` summed per chunk — one codegen'd
     * instruction pair per chunk per candidate, engine-portable
     * (DuckDB: `bit_count(xor(a::BIT, b::BIT))`).
@@ -658,25 +609,10 @@ object Dedup {
     * 2^(nBits/nBands) must stay ≫ corpus size or buckets saturate
     * (measured — SCALE.md); [[autoSimHashWidth]] encodes the rule. */
   def simHashNearDupPairs(sigs: DataFrame, maxHamming: Int = 3,
-      nBands: Int = 4, nBits: Int = 64): DataFrame =
-    simHashNearDupPairsWide(sigs, maxHamming, nBands, nBits)
-
-  /** [[simHashNearDupPairs]] for wide signatures
-    * ([[simHashSignaturesWide]], default 64-bit): identical pigeonhole
-    * contract (exact recall for `maxHamming < nBands`), but the band
-    * key space is 2^(nBits/nBands) — the property that keeps bucket
-    * sizes flat as the corpus grows (see the width discussion on
-    * [[simHashSignaturesWide]]). The Hamming distance is computed
-    * chunk-wise: the bit-string parses into ≤32-bit BIGINT chunks
-    * (64-bit conv would overflow to null on a set sign bit) and the
-    * distance is the sum of per-chunk `bit_count(xor)` — still one
-    * codegen'd instruction pair per chunk per candidate. */
-  def simHashNearDupPairsWide(sigs: DataFrame, maxHamming: Int = 3,
       nBands: Int = 4, nBits: Int = 64): DataFrame = {
     require(nBits % nBands == 0, s"nBands must divide $nBits, got $nBands")
     require(maxHamming < nBands,
       s"band blocking is exact only for maxHamming < nBands ($maxHamming >= $nBands)")
-    val w = nBits / nBands
     val nChunks = (nBits + 31) / 32
     // WIDTH GUARD, per row at execution: a signature narrower than
     // nBits (the r9 32→64 default-migration scenario) would make the
@@ -696,19 +632,26 @@ object Dedup {
     val withSig = sigs.withColumn("simhash", sig)
       .select(col("id") +: col("simhash") +: chunkCols: _*)
     val bands = withSig.select(
-      col("id") +: (0 until nChunks).map(c => col(s"c$c")) :+
+      col("id") +: col("simhash") +: (0 until nChunks).map(c => col(s"c$c")) :+
         explode(simHashBandArray(nBits, nBands)).as("bx"): _*)
       .withColumn("band", col("bx.band")).withColumn("bh", col("bx.bh"))
       .drop("bx")
     val ham = (0 until nChunks).map(c =>
       expr(s"bit_count(a.c$c ^ b.c$c)")).reduce(_ + _)
+    // a pair is emitted only at its LOWEST matching band: no band below
+    // the joined one may match as well. Each pair then leaves the join
+    // once, so no distinct (an exchange and aggregate over pair space)
+    // follows it.
+    val w = nBits / nBands
+    def bandOf(side: String, j: Int) = substring(col(s"$side.simhash"), 1 + j * w, w)
+    val firstMatch = (0 until nBands - 1).map(j =>
+      col("a.band") <= j || bandOf("a", j) =!= bandOf("b", j)).foldLeft(lit(true))(_ && _)
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.id") < col("b.id"))
+          col("a.id") < col("b.id") && firstMatch)
       .select(col("a.id").as("id1"), col("b.id").as("id2"),
         ham.cast("long").as("ham"))
       .filter(col("ham") <= maxHamming)
-      .distinct()
   }
 
   /** The (band, bh) struct array every SimHash banding consumer
@@ -723,49 +666,9 @@ object Dedup {
         substring(col("simhash"), 1 + b * w, w).as("bh"))): _*)
   }
 
-  /** Row-local SimHash signature — [[simHashSignaturesWide]] as ONE
-    * stateless projection (an HOF fold per bit over the token array),
-    * so it runs unchanged on a STREAM: arriving documents emit their
-    * signature with zero state, the same argument as the row-local
-    * MinHash columns behind [[lshBandKeys]]. Byte-identical to the
-    * aggregate form (spec-gated); documents with no non-empty token
-    * are dropped, matching the aggregate's groupBy. The aggregate
-    * form remains the BATCH path (hash-aggregate, map-side
-    * combinable); the signature here runs in the codegen
-    * [[graft.functions.SimHashSign]] kernel — one pass over the
-    * per-token hex array, so statelessness no longer costs
-    * nBits·|tokens| interpreted HOF steps per row (18× measured, see
-    * the kernel's scaladoc); the remaining interpreted work is the
-    * per-token md5-hex build. */
-  def simHashRowLocal(docs: DataFrame, textCol: Column, idCol: Column,
-      nBits: Int = 64): DataFrame = {
-    require(nBits % 4 == 0 && nBits >= 8 && nBits <= 128,
-      s"nBits must be a multiple of 4 in [8,128], got $nBits")
-    val nHex = nBits / 4
-    // materialize the per-token hex prefixes ONCE as a real column:
-    // the per-bit folds below reference it by attribute, so md5 runs
-    // once per token, not nBits× (same trick as lshBandKeys' __sh)
-    val withHex = docs.select(idCol.as("id"),
-        transform(filter(split(textCol, " "), t => length(t) > 0),
-          t => substring(md5(t.cast("binary")), 1, nHex)).as("__hx"))
-      .filter(size(col("__hx")) > 0)
-    // ONE codegen kernel pass over the hex array instead of nBits
-    // separate aggregate() HOF folds: the folds were CodegenFallback
-    // (nBits·|tokens| interpreted lambda steps per row — the
-    // documented "price of statelessness" this kernel retires), and
-    // lambda-bearing subtrees are excluded from subexpression
-    // elimination so nothing amortized them. Measured 26.1 → 1.45 s
-    // at ×16 docs / 64 bits under forced evaluation (SimHashSign
-    // scaladoc). Byte-parity with the aggregate signature form is
-    // OpsSpec-gated at 32 and 64 bits.
-    withHex.select(col("id"),
-      graft.functions.GraftFunctions.simHashSign(col("__hx"), nBits)
-        .as("simhash"))
-  }
-
   /** Row-local SimHash band keys (id, band, bh) straight from text —
     * the stream-side counterpart of the banding inside
-    * [[simHashNearDupPairsWide]]: arriving docs emit their `nBands`
+    * [[simHashNearDupPairs]]: arriving docs emit their `nBands`
     * bucket keys statelessly; join them against an indexed band table
     * for incremental Hamming near-dup candidates
     * (`StreamingPipeline.simHashCandidatesStream`).
@@ -780,7 +683,7 @@ object Dedup {
   def simHashBandKeys(docs: DataFrame, textCol: Column, idCol: Column,
       nBits: Int = 64, nBands: Int = 4): DataFrame = {
     require(nBits % nBands == 0, s"nBands must divide $nBits, got $nBands")
-    simHashRowLocal(docs, textCol, idCol, nBits)
+    simHashSignatures(docs, textCol, idCol, nBits)
       .select(col("id"), explode(simHashBandArray(nBits, nBands)).as("bx"))
       .select(col("id"), col("bx.band").as("band"), col("bx.bh").as("bh"))
   }

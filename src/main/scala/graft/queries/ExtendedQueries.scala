@@ -458,41 +458,39 @@ object ExtendedQueries {
         .select(col("id").as("doc_id"), col("comp").as("group_id"))
     }
 
-  /** Per-doc MinHash signature columns (id, m0..m7) over the shared
-    * shingle cache — one ObjectHashAggregate pass. Cached (memoized):
-    * the band table derives from it, and the sketch-accuracy query
-    * (q_minhash_est) reads the raw components. At scale this is the
-    * persisted signature table every LSH pass re-reads. */
+  /** Per-doc MinHash signature columns (id, m0..m7) — the row-local
+    * `Dedup.minHashSignatures` kernel over the cached documents, no
+    * exchange and no aggregate. Cached (memoized): the band table
+    * derives from it, and the sketch-accuracy query (q_minhash_est)
+    * reads the raw components. At scale this is the persisted
+    * signature table every LSH pass re-reads. */
   private[queries] def mhSignatures(s: org.apache.spark.sql.SparkSession, d: String) =
     memoCache("mhsig", s, d) {
-      graft.ops.Dedup
-        .minHashSignaturesFast(shingles(s, d).withColumnRenamed("doc_id", "id"), 8)
+      graft.ops.Dedup.minHashSignatures(docProfile(s, d), col("text"), col("doc_id"), 8)
     }
 
-  /** Per-doc SimHash-32 signatures (id, simhash) — cached: both the
-    * signature-dump query (q_dedup_simhash) and the Hamming near-dup
-    * pair query (q_dedup_simhash_ham) read it, and at scale it is the
+  /** Per-doc SimHash-32 signatures (id, simhash) — the row-local
+    * `Dedup.simHashSignatures` kernel, cached: both the signature-dump
+    * query (q_dedup_simhash) and the Hamming near-dup pair query
+    * (q_dedup_simhash_ham) read it, and at scale it is the
     * materialized signature table the banded pair join runs against. */
   private[queries] def simSignatures(s: org.apache.spark.sql.SparkSession, d: String) =
     memoCache("simsig", s, d) {
       // 32-bit pinned EXPLICITLY: the DuckDB oracle pins this exact
-      // signature output. The library default (simHashSignatures) is
-      // 64-bit since r9 — the width the r8 sweep showed non-saturating.
-      graft.ops.Dedup.simHashSignaturesWide(
+      // signature output. The library default is 64-bit since r9 —
+      // the width the r8 sweep showed non-saturating.
+      graft.ops.Dedup.simHashSignatures(
         docProfile(s, d), col("text"), col("doc_id"), 32)
     }
 
-  /** LSH band table (doc_id, band, h) over the shared shingle cache:
-    * one-pass typed MinHash sketch (graft.functions.MinHashAgg —
-    * ObjectHashAggregate, not the SortAggregate the 8-column
-    * min(md5hex) formulation forces; byte-identical per MinHashAggSpec),
-    * then `Dedup.lshBands` — the library's one minima→band-hash
-    * construction, one explode emitting both band rows. cache(): both
-    * sides of the LSH self-join read it, and BOTH declared dedup
-    * queries (minhash-lsh candidates, ngram-jaccard candidate
-    * generation) share the exact same plan, so the CacheManager serves
-    * one materialization to all. At scale this is "materialize
-    * signatures before LSH" — the standard shape. */
+  /** LSH band table (doc_id, band, h) over the cached per-doc MinHash
+    * signatures ([[mhSignatures]]), then `Dedup.lshBands` — the
+    * library's one minima→band-hash construction, one explode emitting
+    * both band rows. cache(): both sides of the LSH self-join read it,
+    * and BOTH declared dedup queries (minhash-lsh candidates,
+    * ngram-jaccard candidate generation) share the exact same plan, so
+    * the CacheManager serves one materialization to all. At scale this
+    * is "materialize signatures before LSH" — the standard shape. */
   private def bandTable(s: org.apache.spark.sql.SparkSession, d: String) =
     memoCache("bands", s, d) {
       graft.ops.Dedup.lshBands(mhSignatures(s, d), 8, 2)

@@ -127,9 +127,9 @@ object StreamingPipeline {
 
   /** Incremental SimHash near-dup candidates — the Hamming-blocking
     * twin of [[nearDupCandidatesStream]]: each arriving doc computes
-    * its signature ROW-LOCALLY (`Dedup.simHashRowLocal` — the batch
-    * signature is a per-doc aggregation, which on a stream is
-    * unbounded state) and its band keys join stream–static against an
+    * its signature ROW-LOCALLY (`Dedup.simHashSignatures`, the same
+    * stateless kernel projection the batch path runs) and its band
+    * keys join stream–static against an
     * indexed band table (`Dedup.simHashBandKeys` over the corpus, or
     * the persisted signature index). Same contracts as the MinHash
     * twin: no watermark, no state, pairs not deduplicated across

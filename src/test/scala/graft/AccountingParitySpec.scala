@@ -25,7 +25,7 @@ class AccountingParitySpec extends AnyFunSuite {
 
   /** The pipeline from the public operators, nothing shared with
     * `CorpusClean`'s private steps: filters, `dedupExact`, then
-    * `shingles` → `minHashSignaturesFast` → `lshBands` → distinct
+    * `shingles` → the column-form MinHash reference → `lshBands` → distinct
     * band self-join → `jaccardFromShingles` ≥ threshold → greedy
     * higher-id drop. Stage rows ordered by name, survivor digest. */
   private def reference(docs: DataFrame, cfg: ops.CorpusClean.Config): (Stages, String) = {
@@ -38,7 +38,7 @@ class AccountingParitySpec extends AnyFunSuite {
     val exact = Dedup.dedupExact(qual, text, id)
     val sh = Dedup.shingles(exact, text, id, cfg.shingleLen)
     val bands = Dedup.lshBands(
-      Dedup.minHashSignaturesFast(sh, cfg.numHashes), cfg.numHashes, cfg.bands)
+      SignatureRefs.minHash(sh, cfg.numHashes), cfg.numHashes, cfg.bands)
     val cands = bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
           col("a.id") < col("b.id"))

@@ -41,9 +41,8 @@ class CorpusCleanSpec extends AnyFunSuite {
     // saturation class). Assert the key shape that carries the
     // property, plus the r9 wide library defaults on the
     // width-sensitive operators clean() does NOT use.
-    val sh = graft.ops.Dedup.shingles(fixture, col("text"), col("doc_id"))
     val bands = graft.ops.Dedup.lshBands(
-      graft.ops.Dedup.minHashSignaturesFast(sh, 8), 8, 2)
+      graft.ops.Dedup.minHashSignatures(fixture, col("text"), col("doc_id")), 8, 2)
     assert(bands.select("h").collect().forall(
       r => r.getString(0).length == 32 &&
         r.getString(0).forall(c => c.isDigit || ('a' to 'f').contains(c))))
@@ -175,9 +174,31 @@ class CorpusCleanSpec extends AnyFunSuite {
     }
     val expected = survivors(CorpusClean.Config())
     val (listsBefore, pinnedBefore) = (dropLists, pinned)
-    val spilled = survivors(CorpusClean.Config(dropListThreshold = 0))
+    // SQL executions whose plan holds the LSH band self-join: the size
+    // probe must be the only one — the publish re-reads the probe's
+    // final stage instead of re-running the band join and the verify
+    val bandJoins = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      import org.apache.spark.sql.catalyst.plans.logical.Join
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.collect { case j: Join => j }.exists(
+            _.condition.exists(_.references.exists(_.name == "band"))))
+          bandJoins.incrementAndGet()
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val spilled =
+      try survivors(CorpusClean.Config(dropListThreshold = 0))
+      finally {
+        org.apache.spark.status.StatusBridge.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
     assert(spilled.sameElements(expected),
       s"spilled arm keeps ${spilled.length} docs, the gathered arm ${expected.length}")
+    assert(bandJoins.get == 1,
+      s"${bandJoins.get} executions ran the band self-join; the spilled arm must run it once")
     val published = dropLists -- listsBefore
     assert(published.size == 1 && new java.io.File(published.head, "ids/_SUCCESS").exists(),
       s"expected one published drop list under ${graft.etl.Scratch.root}: $published")

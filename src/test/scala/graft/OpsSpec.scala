@@ -30,37 +30,53 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("identical docs get identical MinHash signatures; different docs differ") {
-    val mh = Dedup.minHashSignatures(Dedup.shingles(docs, col("text"), col("doc_id")))
+    val mh = Dedup.minHashSignatures(docs, col("text"), col("doc_id"))
       .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getString).mkString).toMap
     assert(mh(1L) == mh(2L))
     assert(mh(1L) != mh(4L))
   }
 
+  /** sf0.001 corpus docs plus the edge inputs: a null text, empty and
+    * all-space texts (empty tokens only), doubled spaces (empty tokens
+    * inside a shingle), and docs shorter than a 3-shingle. */
+  private def edgeCorpus(n: Int) =
+    graft.queries.t(spark, TestSpark.sfTiny, "documents").limit(n)
+      .select(col("doc_id"), col("text"))
+      .unionByName(Seq[(Long, String)](
+        (-1L, null), (-2L, ""), (-3L, "   "), (-4L, "a  b c"),
+        (-5L, "one two"), (-6L, "solo"), (-7L, "  x  ")).toDF("doc_id", "text"))
+
+  /** The executed plan of a per-document signature over a parquet
+    * scan: row-local, so no exchange and no aggregate of any kind. */
+  private def assertRowLocal(sigs: org.apache.spark.sql.DataFrame): Unit = {
+    val p = sigs.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange") && !p.contains("Aggregate"), p)
+  }
+
   test("row-local MinHash columns are byte-identical to the aggregate form") {
-    // corpus docs at sf0.001 — real texts, incl. short-doc edge cases
-    val corpus = spark.read.parquet(s"${TestSpark.sfTiny}/documents.parquet")
-      .limit(200)
-    val agg = Dedup.minHashSignaturesFast(
-        Dedup.shingles(corpus, col("text"), col("doc_id")))
-      .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getString).mkString("|")).toMap
-    val local = corpus.select(col("doc_id") +:
-        Dedup.minHashColumns(col("text")): _*)
-      .collect().map(r => r.getLong(0) ->
-        (1 to 8).map(i => Option(r.getString(i)).orNull)).toMap
-    // every doc the aggregate path signed gets the same signature
-    agg.foreach { case (id, sig) =>
-      assert(local(id).mkString("|") == sig, s"doc $id") }
-    // docs too short to shingle sign null on the row-local path and
-    // are absent from the aggregate path
-    local.filter(_._2.contains(null)).keys.foreach { id =>
-      assert(!agg.contains(id), s"doc $id") }
-    // band keys agree as a set with the signature-frame banding
-    val fromSig = Dedup.lshBands(Dedup.minHashSignaturesFast(
+    // the one path (MinHashMinima kernel) against the column-form
+    // reference over the exploded shingles, incl. the edge inputs
+    val corpus = edgeCorpus(200)
+    def sigMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> (1 to 8).map(r.getString).mkString("|")).toMap
+    val local = sigMap(Dedup.minHashSignatures(corpus, col("text"), col("doc_id")))
+    val ref = sigMap(SignatureRefs.minHash(
+      Dedup.shingles(corpus, col("text"), col("doc_id"))))
+    assert(local == ref)
+    // null, empty and too-short docs have no shingles and no row;
+    // empty tokens count as tokens, so space runs still shingle
+    assert(Seq(-1L, -2L, -5L, -6L).forall(id => !local.contains(id)))
+    assert(Seq(-3L, -4L, -7L).forall(local.contains))
+    // band keys agree as a set with the reference signature banding
+    val fromRef = Dedup.lshBands(SignatureRefs.minHash(
         Dedup.shingles(corpus, col("text"), col("doc_id"))), 8, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val rowLocal = Dedup.lshBandKeys(corpus, col("text"), col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    assert(rowLocal == fromSig)
+    assert(rowLocal == fromRef)
+    assertRowLocal(Dedup.minHashSignatures(
+      spark.read.parquet(s"${TestSpark.sfTiny}/documents.parquet"),
+      col("text"), col("doc_id")))
   }
 
   test("LSH candidates include exact and near dups, not unrelated docs") {
@@ -103,8 +119,10 @@ class OpsSpec extends AnyFunSuite {
     val sigs = Dedup.simHashSignatures(
       graft.queries.t(spark, TestSpark.sfTiny, "documents").limit(120),
       col("text"), col("doc_id"))
-    val blocked = Dedup.simHashNearDupPairs(sigs, maxHamming = 3, nBands = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val blockedRows = Dedup.simHashNearDupPairs(sigs, maxHamming = 3, nBands = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val blocked = blockedRows.toSet
+    assert(blockedRows.length == blocked.size, "a pair left the band join twice")
     def ham(a: String, b: String): Long = a.zip(b).count { case (x, y) => x != y }.toLong
     val all = sigs.collect().map(r => r.getLong(0) -> r.getString(1))
     val brute = (for {
@@ -120,16 +138,18 @@ class OpsSpec extends AnyFunSuite {
 
   test("wide simhash: 64-bit blocked pairs equal all-pairs Hamming (exact recall)") {
     val corpus = graft.queries.t(spark, TestSpark.sfTiny, "documents").limit(120)
-    val sigs = Dedup.simHashSignaturesWide(corpus, col("text"), col("doc_id"))
+    val sigs = Dedup.simHashSignatures(corpus, col("text"), col("doc_id"))
     val collected = sigs.collect().map(r => r.getLong(0) -> r.getString(1))
     assert(collected.forall(_._2.length == 64))
     // the 32-bit signature is the exact prefix of the 64-bit one
     // (same nibble arithmetic, wider hash slice)
-    val sig32 = Dedup.simHashSignaturesWide(corpus, col("text"), col("doc_id"), 32)
+    val sig32 = Dedup.simHashSignatures(corpus, col("text"), col("doc_id"), 32)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(collected.forall { case (id, s) => s.take(32) == sig32(id) })
-    val blocked = Dedup.simHashNearDupPairsWide(sigs, maxHamming = 3, nBands = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val blockedRows = Dedup.simHashNearDupPairs(sigs, maxHamming = 3, nBands = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val blocked = blockedRows.toSet
+    assert(blockedRows.length == blocked.size, "a pair left the band join twice")
     def ham(a: String, b: String): Long = a.zip(b).count { case (x, y) => x != y }.toLong
     val brute = (for {
       (i1, s1) <- collected; (i2, s2) <- collected
@@ -139,14 +159,14 @@ class OpsSpec extends AnyFunSuite {
     // band VALUE space: 16-bit bands cannot saturate at corpus scale
     // the way 8-bit bands do — spot-check the occupancy bound here
     // (ScaleProbe risk mode carries the measured ×32 curves)
-    val occ = Dedup.simHashSignaturesWide(
+    val occ = Dedup.simHashSignatures(
         graft.queries.t(spark, TestSpark.sfTiny, "documents"),
         col("text"), col("doc_id"))
       .select(explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"), substring(col("simhash"), 1 + b * 16, 16).as("bh"))): _*)).as("x"))
       .groupBy(col("x.band"), col("x.bh")).count()
       .agg(max(col("count"))).head.getLong(0)
-    val occ32 = Dedup.simHashSignaturesWide(
+    val occ32 = Dedup.simHashSignatures(
         graft.queries.t(spark, TestSpark.sfTiny, "documents"),
         col("text"), col("doc_id"), 32)
       .select(explode(array((0 until 4).map(b =>
@@ -158,24 +178,31 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("row-local simhash is byte-identical to the aggregate signature (32 and 64)") {
-    val corpus = graft.queries.t(spark, TestSpark.sfTiny, "documents").limit(100)
+    // the one path (SimHashSign kernel) against the oracle's
+    // explode/aggregate arithmetic, incl. the edge inputs
+    val corpus = edgeCorpus(100)
     for (bits <- Seq(32, 64)) {
-      val agg = Dedup.simHashSignaturesWide(corpus, col("text"), col("doc_id"), bits)
+      val ref = SignatureRefs.simHash(corpus, "text", "doc_id", bits)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val row = Dedup.simHashRowLocal(corpus, col("text"), col("doc_id"), bits)
+      val row = Dedup.simHashSignatures(corpus, col("text"), col("doc_id"), bits)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(row == agg, s"row-local diverged from aggregate at $bits bits")
+      assert(row == ref, s"row-local diverged from the reference at $bits bits")
+      // no non-empty token → no row; every short doc still signs
+      assert(Seq(-1L, -2L, -3L).forall(id => !row.contains(id)))
+      assert(Seq(-4L, -5L, -6L, -7L).forall(row.contains))
     }
-    // band keys from the row-local path equal the banding the pair
-    // join derives from the aggregate signatures
+    // band keys equal the banding of the reference signatures
     val fromRowLocal = Dedup.simHashBandKeys(corpus, col("text"), col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val fromAgg = Dedup.simHashSignatures(corpus, col("text"), col("doc_id"))
+    val fromRef = SignatureRefs.simHash(corpus, "text", "doc_id", 64)
       .select(col("id"), explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"), substring(col("simhash"), 1 + b * 16, 16).as("bh"))): _*)).as("x"))
       .select(col("id"), col("x.band"), col("x.bh"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(fromRowLocal == fromAgg)
+    assert(fromRowLocal == fromRef)
+    assertRowLocal(Dedup.simHashSignatures(
+      spark.read.parquet(s"${TestSpark.sfTiny}/documents.parquet"),
+      col("text"), col("doc_id"), 32))
   }
 
   test("cosine: self-similarity = 1.0; brute-force top-k ordered") {

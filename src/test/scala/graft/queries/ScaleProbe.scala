@@ -223,22 +223,21 @@ object ScaleProbe {
         (d: String) => Dedup.minHashLshCandidates(
           docs(d), col("text"), col("doc_id"), cacheBands = false),
         (d: String) => occupancy(
-          Dedup.lshBands(Dedup.minHashSignaturesFast(
-              Dedup.shingles(docs(d), col("text"), col("doc_id"), 3), 8), 8, 2)
+          Dedup.lshBandKeys(docs(d), col("text"), col("doc_id"))
             .groupBy(col("band"), col("h")).agg(count(lit(1)).as("c"))), 3),
       ("risk_simhash_pairs",
         // the 32-bit NARROW variant on purpose: this probe charts the
         // saturation curve the r9 default flip (64-bit) protects against
         (d: String) => Dedup.simHashNearDupPairs(
-          Dedup.simHashSignaturesWide(docs(d), col("text"), col("doc_id"), 32),
+          Dedup.simHashSignatures(docs(d), col("text"), col("doc_id"), 32),
           nBits = 32),
         (d: String) => simBandOcc(
-          Dedup.simHashSignaturesWide(docs(d), col("text"), col("doc_id"), 32), 8), 1),
+          Dedup.simHashSignatures(docs(d), col("text"), col("doc_id"), 32), 8), 1),
       ("risk_simhash64_pairs",
-        (d: String) => Dedup.simHashNearDupPairsWide(
-          Dedup.simHashSignaturesWide(docs(d), col("text"), col("doc_id"))),
+        (d: String) => Dedup.simHashNearDupPairs(
+          Dedup.simHashSignatures(docs(d), col("text"), col("doc_id"))),
         (d: String) => simBandOcc(
-          Dedup.simHashSignaturesWide(docs(d), col("text"), col("doc_id")), 16), 3),
+          Dedup.simHashSignatures(docs(d), col("text"), col("doc_id")), 16), 3),
       ("risk_embed_lsh",
         (d: String) => {
           graft.functions.GraftFunctions.register(spark)

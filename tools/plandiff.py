@@ -16,6 +16,9 @@ what differs between two runs of the same plan:
                            -> [file:/d/*, ... 2 entries])
   - part-file UUIDs       (part-00000-<uuid>.c000 -> part-00000-*.c000)
   - source line numbers   (Foo.scala:120 -> Foo.scala:N)
+  - lambda variable names (lambda x_51 -> lambda x_N: the suffix is a
+                           per-JVM counter every earlier higher-order
+                           function call advances)
 Files pair up by query name (the file name before its last `_`, so
 give the dump a suffix without `_`); dumps written with different
 suffixes compare. Prints one line per differing or unpaired query and a tally;
@@ -36,6 +39,7 @@ RULES = [
     (re.compile(r"part-(\d+)-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"),
      r"part-\1-*"),
     (re.compile(r"\.(scala|java|py):\d+"), r".\1:N"),
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_N"),
 ]
 
 
