@@ -95,8 +95,8 @@ object PipelineDemo {
     val docs = queries.t(spark, sf, "documents")
     val cand = Dedup.minHashLshCandidates(docs, col("text"), col("doc_id")).cache()
     println(s"[demo] minhash-lsh candidate pairs = ${cand.count()}")
-    val verified = Dedup.ngramJaccardPairs(docs, col("text"), col("doc_id"),
-      candidates = Some(cand.toDF("id1", "id2")))
+    val verified = Dedup.jaccardPairs(
+      Dedup.shingleSets(docs, col("text"), col("doc_id")), cand)
     println(s"[demo] verified near-dups (jac>=0.8) = ${verified.filter(col("jac") >= 0.8).count()}")
 
     // --- tokenizer induction over the corpus vocabulary ---

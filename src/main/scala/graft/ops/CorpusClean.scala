@@ -288,56 +288,39 @@ object CorpusClean {
   private val ExactKeep: Column =
     col("__qual_ok") && (col("__fp").isNull || col("__rn") === 1)
 
-  /** Row-local (id, shset, __mh) per exact survivor: distinct shingle
-    * set + all MinHash minima in one kernel pass (min over the
-    * distinct set equals min over the occurrence multiset) — no
-    * explode, no aggregation. Short docs (< shingleLen tokens) carry
-    * null shset/minima and fall out of the band explode. Callers
-    * cache it: bands, the verify and the eval sweep all read it. */
+  /** Row-local (id, shset, __mh) per exact survivor: the
+    * `Dedup.shingleSets` distinct set + all MinHash minima in one
+    * kernel pass (min over the distinct set equals min over the
+    * occurrence multiset) — no explode, no aggregation. Short docs
+    * (< shingleLen tokens) carry null shset/minima and fall out of the
+    * band explode. Callers cache it: bands, the verify and the eval
+    * sweep all read it. */
   private def shingleSets(docs: DataFrame, textCol: Column, idCol: Column,
       cfg: Config): DataFrame =
-    flagged(docs, textCol, idCol, cfg).filter(ExactKeep)
-      .select(idCol.as("id"),
-        array_distinct(Dedup.shingleArray(textCol, cfg.shingleLen)).as("shset"))
+    Dedup.shingleSets(flagged(docs, textCol, idCol, cfg).filter(ExactKeep),
+        textCol, idCol, cfg.shingleLen)
       .select(col("id"), col("shset"),
         graft.functions.GraftFunctions.minHashMinima(
           col("shset"), cfg.numHashes).as("__mh"))
 
   /** Verified near-dup pairs (id1 < id2, Jaccard ≥ threshold) over
     * [[shingleSets]]: the shared minima→band-hash construction, the
-    * bucket self-join, the candidate docs' sets restricted BEFORE any
-    * join that could shuffle them (derived-text bytes never move at
-    * corpus volume), and an array_intersect verify. Everything that
-    * shuffles is (id, hash)-shaped or candidate-bounded. */
+    * library's one bucket self-join (`Dedup.bandPairs`) and its one
+    * verify (`Dedup.jaccardPairs`), which restricts the candidate
+    * docs' sets BEFORE any join that could shuffle them (derived-text
+    * bytes never move at corpus volume). Everything that shuffles is
+    * (id, hash)-shaped or candidate-bounded.
+    *
+    * NO distinct on the pair list (r19, guide §2.4): a pair matching
+    * in BOTH bands appears ≤ `bands` times, the verify scores each row
+    * on its own, and the drop ids re-distinct after it. Cost moved:
+    * duplicate pairs re-verify (≤ ×bands, row-local); cost removed:
+    * one exchange + AQE stage per invocation (sf0.1 isolated min-of-9:
+    * 0.874 → 0.776 s, 50 → 42 stages, values identical). */
   private def nearDupPairs(sets: DataFrame, cfg: Config): DataFrame = {
     val bands = Dedup.bandKeysFromMinima(
       sets, col("id"), col("__mh"), cfg.numHashes, cfg.bands)
-    // NO distinct on the pair list (r19, guide §2.4): a pair matching
-    // in BOTH bands appears ≤ `bands` times, and every consumer is
-    // duplicate-insensitive — the semi-join build side below, and the
-    // drop ids re-distinct after the verify. Cost moved: duplicate
-    // pairs re-verify (≤ ×bands, row-local); cost removed: one
-    // exchange + AQE stage per invocation (sf0.1 isolated min-of-9:
-    // 0.874 → 0.776 s, 50 → 42 stages, values identical).
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
-    // no distinct on the exploded ids either: a LEFT SEMI join's
-    // output ignores duplicate build-side keys, and the broadcast
-    // stays ≤ 2|cand| ids (r17 stage-floor work)
-    val candIdFrame = cand
-      .select(explode(array(col("id1"), col("id2"))).as("id"))
-    val candDocs = sets.join(broadcast(candIdFrame), Seq("id"), "left_semi")
-      .select(col("id"), col("shset"))
-    cand
-      .join(candDocs.select(col("id").as("id1"), col("shset").as("s1")), "id1")
-      .join(candDocs.select(col("id").as("id2"), col("shset").as("s2")), "id2")
-      .withColumn("__inter",
-        size(array_intersect(col("s1"), col("s2"))).cast("long"))
-      .withColumn("jac", col("__inter") /
-        (size(col("s1")).cast("long") + size(col("s2")).cast("long")
-          - col("__inter")))
+    Dedup.jaccardPairs(sets, Dedup.bandPairs(bands))
       .filter(col("jac") >= cfg.jaccardThreshold)
       .select(col("id1"), col("id2"))
   }

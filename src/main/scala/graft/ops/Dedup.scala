@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *  - signatures are row-local kernels over each document (linear, no
   *    exchange), candidate generation joins only on (band,
   *    bucket-hash) keys — the full text never enters a shuffle;
-  *  - the final pairwise verify (`ngramJaccardPairs`) should only run
-  *    on LSH candidates at scale, never all pairs: pass
-  *    `candidates = minHashLshCandidates(...)` and join.
+  *  - the final pairwise verify ([[jaccardPairs]]) runs on LSH
+  *    candidate pairs ([[minHashLshCandidates]]), never all pairs:
+  *    each pair is scored in its own row from the two docs' shingle
+  *    sets, so its cost follows |candidates|, not |corpus|².
   */
 object Dedup {
 
@@ -98,6 +99,13 @@ object Dedup {
     * token array once and emits all windows in one pass. */
   def shingleArray(textCol: Column, n: Int = 3): Column =
     graft.functions.GraftFunctions.shingleWindows(split(textCol, " "), n)
+
+  /** Per-document distinct shingle sets (id, shset): one row-local
+    * `array_distinct` over [[shingleArray]], no explode and no
+    * aggregate. Docs with fewer than `n` tokens (and null texts) carry
+    * a null set. The input of [[jaccardPairs]]. */
+  def shingleSets(docs: DataFrame, textCol: Column, idCol: Column, n: Int = 3): DataFrame =
+    docs.select(idCol.as("id"), array_distinct(shingleArray(textCol, n)).as("shset"))
 
   /** Row-local LSH band keys (id, band, h) straight from the text —
     * the [[minHashSignatures]] minima + banding in one stateless
@@ -269,41 +277,30 @@ object Dedup {
       array((0 until numHashes).map(j => col(s"m$j")): _*), numHashes, bands)
 
   /** Candidate near-dup pairs (id1 < id2) sharing ≥1 LSH bucket.
-    * Candidate threshold ≈ (1/bands)^(bands/numHashes).
-    * The self-join of the row-local [[lshBandKeys]] over a cached band
-    * table (both join sides read it): no shingle explode, no
-    * aggregate; only (band, h) keys shuffle.
-    *
-    * `cacheBands = false` skips the cache for callers managing their
-    * own persistence (the cached table is otherwise pinned for the
-    * session — repeated calls on changing inputs should either pass
-    * false or unpersist via the catalog). */
+    * Candidate threshold ≈ (1/bands)^(bands/numHashes). The
+    * [[bandPairs]] self-join of the row-local [[lshBandKeys]]: no
+    * shingle explode, no aggregate before the join; only (band, h)
+    * keys shuffle. Distinct: a pair matching in several bands is
+    * emitted once. Nothing is cached. */
   def minHashLshCandidates(docs: DataFrame, textCol: Column, idCol: Column,
-      numHashes: Int = 8, bands: Int = 2, shingleLen: Int = 3,
-      cacheBands: Boolean = true): DataFrame = {
-    val raw = lshBandKeys(docs, textCol, idCol, numHashes, bands, shingleLen)
-    val bandsDf = if (cacheBands) raw.cache() else raw
-    bandsDf.as("a").join(bandsDf.as("b"),
-        col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
+      numHashes: Int = 8, bands: Int = 2, shingleLen: Int = 3): DataFrame =
+    bandPairs(lshBandKeys(docs, textCol, idCol, numHashes, bands, shingleLen))
       .distinct()
-  }
 
-  /** Doc ids appearing in ≥1 LSH candidate pair, derived from bucket
-    * occupancy in ONE aggregation pass over a (id, band, h) band table
-    * — a doc is a candidate iff some bucket it occupies holds ≥2 docs
-    * (each doc contributes at most one row per bucket, so a row count
-    * suffices). Equivalent to distinct(id1 ∪ id2) over the pair
-    * self-join but avoids computing the join at all — the cheap way to
-    * feed a candidate-doc restriction to `jaccardFromShingles`. */
-  def lshCandidateDocIds(bands: DataFrame): DataFrame = {
-    val hot = bands.groupBy(col("band"), col("h"))
-      .agg(count(lit(1)).as("__c")).filter(col("__c") > 1)
-      .select(col("band"), col("h"))
-    bands.join(hot, Seq("band", "h"), "left_semi")
-      .select(col("id")).distinct()
-  }
+  /** The (band, h) self-join of a band table: (id1, id2) with
+    * id1 < id2 for every bucket two docs share — the one batch
+    * candidate join, behind [[minHashLshCandidates]], the declared
+    * candidate memo and CorpusClean. `id` names the table's id column.
+    * NO distinct: a pair matching in k bands is emitted k times
+    * (k ≤ bands). [[jaccardPairs]] scores each input row on its own,
+    * so duplicates cost a re-verify, never a wrong score; callers that
+    * need a set add the distinct (an exchange and an aggregate over
+    * pair space). */
+  private[graft] def bandPairs(bands: DataFrame, id: String = "id"): DataFrame =
+    bands.as("a").join(bands.as("b"),
+        col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
+          col(s"a.$id") < col(s"b.$id"))
+      .select(col(s"a.$id").as("id1"), col(s"b.$id").as("id2"))
 
   /** Connected components over an undirected pair list (id1, id2):
     * returns (id, comp) where comp is the MINIMUM id reachable from
@@ -444,139 +441,45 @@ object Dedup {
         graft.functions.GraftFunctions.simHashSign(hexes, nBits).as("simhash"))
   }
 
-  /** Exact Jaccard over distinct n-gram shingle sets for given
-    * candidate pairs (or all pairs when `candidates` is None — test
-    * scale only). Output: (id1, id2, inter, jac).
+  /** Exact Jaccard of the given (id1, id2) pairs over per-document
+    * distinct shingle sets (id, shset) — [[shingleSets]], or any frame
+    * carrying those two columns. Output: (id1, id2, inter, jac).
     *
-    * With candidates, the shingle table is semi-joined down to
-    * candidate documents BEFORE the self-join — the quadratic pair
-    * space never materializes for non-candidates (the post-aggregation
-    * semi join then trims pairs where both docs are candidates but the
-    * pair itself is not). This is the 100 TB contract: pairwise verify
-    * cost follows |candidates|, not |corpus|². */
-  def ngramJaccardPairs(docs: DataFrame, textCol: Column, idCol: Column,
-      shingleLen: Int = 3, candidates: Option[DataFrame] = None): DataFrame =
-    jaccardFromShingles(shingles(docs, textCol, idCol, shingleLen), candidates)
-
-  /** Same verify, from a pre-built raw (id, s) shingle-occurrence table
-    * — lets callers share one shingle scan (and its cache) between
-    * candidate generation and verification. The candidate semi-join is
-    * applied BELOW the distinct: at scale the distinct then aggregates
-    * only candidate documents' shingles, not the corpus. */
-  def jaccardFromShingles(shRaw: DataFrame,
-      candidates: Option[DataFrame] = None,
-      candidateIds: Option[DataFrame] = None): DataFrame = {
-    // Doc restriction applies when EITHER form is given: explicit ids
-    // (e.g. lshCandidateDocIds' one-pass bucket-occupancy scan — the
-    // cheap derivation) or ids implied by the candidate pairs.
-    // broadcast(): candidate ids/pairs are a vanishing fraction of the
-    // corpus BY CONSTRUCTION (LSH bounds them), so they are legitimate
-    // build sides. Without the hint Spark sort-merge-joins, exchanging
-    // + sorting the full shingle table once per consumer; with it the
-    // big side is never shuffled.
-    val ids = candidateIds.orElse(candidates.map(c =>
-      c.select(explode(array(col("id1"), col("id2"))).as("id")).distinct()))
-    val restricted = ids match {
-      case Some(i) => shRaw.join(broadcast(i), Seq("id"), "left_semi")
-      case None => shRaw
-    }
-    val sh = restricted.distinct()
-    candidates match {
-      case Some(c) => jaccardOnPairs(sh, c)
-      case None =>
-        // All-pairs verify within the (possibly restricted) doc set —
-        // unrestricted all-pairs is test scale only (scaladoc contract).
-        val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-        val inter = sh.as("a").join(sh.as("b"),
-            col("a.s") === col("b.s") && col("a.id") < col("b.id"))
-          .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
-          .agg(count(lit(1)).as("inter"))
-        inter
-          .join(sizes.toDF("id1", "n1"), "id1")
-          .join(sizes.toDF("id2", "n2"), "id2")
-          .withColumn("jac", col("inter") / (col("n1") + col("n2") - col("inter")))
-    }
-  }
-
-  /** Exact Jaccard for the given (id1, id2) pairs over a
-    * DISTINCT (id, s) shingle table already restricted to candidate
-    * documents. OUTPUT CONTRACT: pairs whose docs share ZERO shingles
-    * (incl. docs too short to shingle at all) emit NO row — the
-    * intersection join has nothing to group. Callers that need
-    * explicit jac=0 rows (verified-vs-rejected accounting) should
-    * left-join this output back to their candidate list and coalesce
-    * to 0; the declared-query oracles mirror the omit-empty
-    * behavior, so it is pinned, not accidental. Callers that consume the restricted table repeatedly
-    * (it feeds sizes + both intersection sides) should persist it —
-    * it is candidate-bounded, so tiny by construction.
+    * Row-local per pair: the candidate docs' sets are semi-joined out
+    * of `sets` first (the build side is the pairs' exploded ids,
+    * broadcast: LSH bounds them, and without the hint the corpus side
+    * would be exchanged and sorted), each pair joins its two sets, and
+    * `size(array_intersect)` scores it in its own row. No explode and
+    * no aggregate, so work follows |pairs|, and a duplicated input pair
+    * yields a duplicated row with the same score — it cannot
+    * double-count.
     *
-    * Pair-FIRST intersection: fan each pair out to doc1's shingles,
-    * then inner-join doc2's shingles on (id2, s). Work is
-    * Σ_pairs |shingles(doc1)| — intersections are never materialized
-    * for non-candidate pairs, unlike a candidate-doc self-join which
-    * computes all C(|cand docs|, 2) overlaps and discards most.
-    * shuffle_hash: both sides are candidate-bounded; avoids the sort a
-    * merge join would add.
-    *
-    * Set sizes: an input that already HAS an `n` column (a persisted
-    * sized-shingle table — the repeated-verify shape) carries sizes
-    * THROUGH the intersection join (the group-by takes `max`,
-    * constant within a group) — zero extra sizing work per run. An
-    * unsized input pays one map-side-combinable groupBy (the exchange
-    * carries |candidate docs| partial rows, the table having been
-    * semi-joined to candidate ids first) joined back onto the
-    * candidate-bounded aggregated pairs — never a count-over-window,
-    * which would shuffle + sort every shingle OCCURRENCE to size the
-    * sets. */
-  def jaccardOnPairs(sh: DataFrame, pairs: DataFrame,
-      pairsDistinct: Boolean = false): DataFrame = {
-    // distinct(): a duplicated candidate pair would fan the shingle
-    // match out twice and double-count inter (jac > 1, or a zero
-    // denominator for exact dups). LSH callers generate distinct pairs
-    // already and may assert so (`pairsDistinct`) to keep the exchange
-    // + aggregate out of the broadcast-build job; the default guards
-    // the public API at candidate-bounded cost.
-    val p = pairs.select(col("id1"), col("id2"))
-    val distinctPairs = if (pairsDistinct) p else p.distinct()
-    val bp = broadcast(distinctPairs)
-    if (sh.columns.contains("n")) {
-      // pre-sized input (a persisted sized-shingle table — the
-      // repeated-verify shape): sizes ride THROUGH the intersection
-      // join and the group-by takes max (constant within a group) —
-      // no extra sizing jobs at all.
-      val sized = sh.select(col("id"), col("s"), col("n"))
-      bp.join(sized.select(col("id").as("id1"), col("s"), col("n").as("n1")), Seq("id1"))
-        .join(sized.select(col("id").as("id2"), col("s"), col("n").as("n2"))
-          .hint("shuffle_hash"), Seq("id2", "s"))
-        .groupBy(col("id1"), col("id2"))
-        .agg(count(lit(1)).as("inter"), max(col("n1")).as("n1"), max(col("n2")).as("n2"))
-        .withColumn("jac", col("inter") / (col("n1") + col("n2") - col("inter")))
-        .select(col("id1"), col("id2"), col("inter"), col("jac"))
-    } else {
-      // unsized input: per-doc set sizes via a map-side-combinable
-      // groupBy (the exchange carries |docs| partial rows) — never a
-      // count-over-window, which would shuffle + sort every shingle
-      // occurrence just to size the sets. The size table is semi-
-      // joined down to candidate documents before broadcasting, so
-      // both broadcasts stay candidate-bounded at any corpus size.
-      // candIds reads the UNHINTED pairs: under a projection and a
-      // union the broadcast hint is not on a join side, and Spark
-      // drops it with a HintErrorLogger WARN (IgnoredHintSpec).
-      val plain = sh.select(col("id"), col("s"))
-      val candIds = distinctPairs.select(col("id1").as("id"))
-        .union(distinctPairs.select(col("id2").as("id"))).distinct()
-      val sizes = plain.join(candIds, Seq("id"), "left_semi")
-        .groupBy(col("id")).agg(count(lit(1)).as("n"))
-      bp.join(plain.select(col("id").as("id1"), col("s")), Seq("id1"))
-        .join(plain.select(col("id").as("id2"), col("s")).hint("shuffle_hash"),
-          Seq("id2", "s"))
-        .groupBy(col("id1"), col("id2"))
-        .agg(count(lit(1)).as("inter"))
-        .join(broadcast(sizes.select(col("id").as("id1"), col("n").as("n1"))), Seq("id1"))
-        .join(broadcast(sizes.select(col("id").as("id2"), col("n").as("n2"))), Seq("id2"))
-        .withColumn("jac", col("inter") / (col("n1") + col("n2") - col("inter")))
-        .select(col("id1"), col("id2"), col("inter"), col("jac"))
-    }
+    * OUTPUT CONTRACT: a pair whose docs share no shingle (incl. a doc
+    * too short to shingle, or absent from `sets`) emits NO row. Callers
+    * that need explicit jac=0 rows left-join this output back to their
+    * pair list; the declared-query oracles mirror the omission, so it
+    * is pinned, not accidental. */
+  def jaccardPairs(sets: DataFrame, pairs: DataFrame): DataFrame = {
+    // no distinct on the exploded ids: a LEFT SEMI join's output
+    // ignores duplicate build-side keys, and the broadcast stays
+    // ≤ 2|pairs| ids
+    val candIds = pairs.select(explode(array(col("id1"), col("id2"))).as("id"))
+    val candDocs = sets.join(broadcast(candIds), Seq("id"), "left_semi")
+      .select(col("id"), col("shset"))
+    pairs.select(col("id1"), col("id2"))
+      .join(candDocs.select(col("id").as("id1"), col("shset").as("s1")), "id1")
+      .join(candDocs.select(col("id").as("id2"), col("shset").as("s2")), "id2")
+      // the zero-overlap drop is arrays_overlap, not `inter > 0`: Spark
+      // pushes a filter through the projection into the join condition
+      // with the alias inlined, and array_intersect would run twice per
+      // pair. coalesce: from a null-intolerant condition on s1/s2 Spark
+      // infers isnotnull(shset) and pushes it below an uncached sets
+      // projection with the shingle kernel inlined — twice per doc
+      .filter(coalesce(arrays_overlap(col("s1"), col("s2")), lit(false)))
+      .withColumn("inter", size(array_intersect(col("s1"), col("s2"))).cast("long"))
+      .select(col("id1"), col("id2"), col("inter"),
+        (col("inter") / (size(col("s1")).cast("long") + size(col("s2")).cast("long")
+          - col("inter"))).as("jac"))
   }
 
   /** Near-duplicate pairs by SimHash Hamming distance, found via band

@@ -93,8 +93,7 @@ object ExtendedQueries {
       disclosed("streamjsonl", Path, "stream_jsonl_state", "q_stream_jsonl_publish")
     ) ++ internal(Frame)("bands", "bgcounts", "bgmodel", "candpairs",
       "doclens", "docprof", "dupcc", "eventprof", "ivfassign", "jacpairs",
-      "mhsig", "restricted", "sheval", "shsplit", "shtrain", "simsig",
-      "tfidfscore") ++
+      "mhsig", "sheval", "shsplit", "shtrain", "simsig", "tfidfscore") ++
       internal(Count)("ndocs", "ntoks") ++ // corpus sizes
       internal(Bytes)("bloomfilter") ++    // the bloom join sketch
       internal(Path)("cleanids") ++        // the cleaned corpus's survivor ids
@@ -135,10 +134,10 @@ object ExtendedQueries {
     (org.apache.spark.sql.SparkSession, String, String), Memo]()
 
   /** Get-or-build for every kind. NO computeIfAbsent: the builders nest
-    * (restrictedShingles → bandTable → shingles) and run Spark jobs,
-    * and mutating a ConcurrentHashMap from inside an in-flight mapping
-    * function violates its contract (recursive-update
-    * IllegalStateException / livelock). */
+    * (jaccardPairs → lshCandidatePairs → bandTable → mhSignatures)
+    * and run Spark jobs, and mutating a ConcurrentHashMap from inside
+    * an in-flight mapping function violates its contract
+    * (recursive-update IllegalStateException / livelock). */
   private[graft] def memo[M <: Memo](key: String, kind: MemoKind,
       s: org.apache.spark.sql.SparkSession, d: String)(build: => M): M = {
     require(allowedMemoKeys.contains(key),
@@ -372,8 +371,8 @@ object ExtendedQueries {
     * out cheap rows before expensive per-row work" shape that also
     * fixes skewed-split layouts on a cluster.
     *
-    * Cached (memoized): three declared queries (minhash, jaccard,
-    * fingerprint) share this exact subtree.
+    * Cached (memoized): the split-labeled decontamination index and
+    * the fingerprint query share this exact subtree.
     */
   private[queries] def shingles(s: org.apache.spark.sql.SparkSession, d: String) =
     memoCache("shingles", s, d) {
@@ -436,15 +435,19 @@ object ExtendedQueries {
     }
 
   /** Exact Jaccard verify results (id1, id2, inter, jac) over the LSH
-    * candidate pairs — cached: the near-dup verify query filters it
-    * and the sketch-accuracy query joins against it, and at scale it
-    * is the materialized verified-pairs table every downstream
-    * consumer (dup grouping, accuracy monitoring, survivorship) reads
-    * rather than re-running the pair intersection. */
+    * candidate pairs — the library's one verify (`Dedup.jaccardPairs`:
+    * row-local `array_distinct` shingle sets of the cached documents,
+    * candidate docs semi-joined out, one `array_intersect` per pair).
+    * Cached: the near-dup verify query filters it and the
+    * sketch-accuracy query joins against it, and at scale it is the
+    * materialized verified-pairs table every downstream consumer (dup
+    * grouping, accuracy monitoring, survivorship) reads rather than
+    * re-running the pair intersection. */
   private def jaccardPairs(s: org.apache.spark.sql.SparkSession, d: String) =
     memoCache("jacpairs", s, d) {
-      graft.ops.Dedup.jaccardOnPairs(restrictedShingles(s, d),
-        lshCandidatePairs(s, d).toDF("id1", "id2"), pairsDistinct = true)
+      graft.ops.Dedup.jaccardPairs(
+        graft.ops.Dedup.shingleSets(docProfile(s, d), col("text"), col("doc_id")),
+        lshCandidatePairs(s, d).toDF("id1", "id2"))
     }
 
   /** The (doc_id, group_id) near-dup components — shared by
@@ -545,39 +548,18 @@ object ExtendedQueries {
     }
 
   /** Candidate pairs (doc1 < doc2) sharing ≥1 LSH bucket — the linear-
-    * cost candidate generator both near-dup queries build on. The join
+    * cost candidate generator both near-dup queries build on: the
+    * library's band self-join (`Dedup.bandPairs`) over the cached band
+    * table, distinct (the oracle's `SELECT DISTINCT`). The join
     * shuffles only (band, h) keys, never text. Cached (memoized): the
-    * minhash query RETURNS it and the jaccard verify broadcasts it —
+    * minhash query RETURNS it and the jaccard verify reads it —
     * without the cache the jaccard run re-executes the band self-join
-    * + distinct inside its broadcast-build job every invocation. */
+    * + distinct every invocation. */
   private def lshCandidatePairs(s: org.apache.spark.sql.SparkSession, d: String) =
     memoCache("candpairs", s, d) {
-      val bands = bandTable(s, d)
-      bands.as("a").join(bands.as("b"),
-          col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
+      graft.ops.Dedup.bandPairs(bandTable(s, d), "doc_id")
+        .toDF("doc1", "doc2")
         .distinct()
-    }
-
-  /** Distinct shingle sets of LSH-candidate documents only — the
-    * verify-stage working set. The candidate-doc restriction comes
-    * from bucket occupancy (one aggregation pass over the cached band
-    * table, no pair self-join), is broadcast (candidate-bounded), and
-    * the result is cached: it feeds per-doc sizes AND both sides of
-    * the pairwise intersection, and is tiny by construction. */
-  private def restrictedShingles(s: org.apache.spark.sql.SparkSession, d: String) =
-    memoCache("restricted", s, d) {
-      val candIds = graft.ops.Dedup.lshCandidateDocIds(
-        bandTable(s, d).withColumnRenamed("doc_id", "id"))
-      shingles(s, d).withColumnRenamed("doc_id", "id")
-        .join(broadcast(candIds), Seq("id"), "left_semi")
-        .distinct()
-        // pre-size each doc's set INTO the cache: jaccardOnPairs reads
-        // `n` off the shingle rows instead of re-aggregating sizes and
-        // joining them back per run (two broadcast-build jobs saved)
-        .withColumn("n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("id"))))
     }
 
   /** The q_ivfpq_probe index: (vec_id, codes) persisted
@@ -1316,14 +1298,15 @@ object ExtendedQueries {
     // the 100 TB contract: candidate generation is linear (MinHash
     // sketch + keys-only band join, shared with q_dedup_minhash_lsh via
     // the band-table cache), and the pairwise verify cost follows
-    // |candidates|, not |corpus|². The shingle table is semi-joined
-    // down to candidate documents BELOW the distinct, so no O(corpus)
-    // broadcast or all-pairs shuffle exists anywhere in the plan.
+    // |candidates|, not |corpus|²: the row-local shingle sets are
+    // semi-joined down to candidate documents and each pair is scored
+    // by one array_intersect in its own row, so no O(corpus) broadcast
+    // or all-pairs shuffle exists anywhere in the plan.
     // inter/union are exact ints → the division is bit-identical.
     "q_dedup_ngram_jaccard" -> { (s, d) =>
-      // the verified-pairs cache: built once per session from the
-      // candidate-restricted sized shingles (pairsDistinct by
-      // construction); this query filters it, q_minhash_est joins it
+      // the verified-pairs cache: built once per session by the one
+      // verify over the candidate pairs; this query filters it,
+      // q_minhash_est joins it
       jaccardPairs(s, d)
         .filter(col("jac") >= 0.5)
         .select(col("id1").as("doc1"), col("id2").as("doc2"),

@@ -99,9 +99,9 @@ object StreamingPipeline {
     * the index side is a bounded batch frame (refresh it by restarting
     * the query or via the upsert-sink snapshot pattern). Pairs are NOT
     * deduplicated across bands (a streaming distinct would be
-    * stateful); the downstream verify treats candidate pairs as a set,
-    * and `Dedup.jaccardOnPairs`-style verifies are idempotent per
-    * pair. */
+    * stateful); the downstream verify (`Dedup.jaccardPairs`) scores
+    * each pair row on its own, so a repeated pair repeats its score and
+    * never changes it. */
   def nearDupCandidatesStream(docs: DataFrame, textCol: Column,
       idCol: Column, indexBands: DataFrame,
       numHashes: Int = 8, bands: Int = 2, shingleLen: Int = 3): DataFrame =

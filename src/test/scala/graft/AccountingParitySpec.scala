@@ -26,7 +26,8 @@ class AccountingParitySpec extends AnyFunSuite {
   /** The pipeline from the public operators, nothing shared with
     * `CorpusClean`'s private steps: filters, `dedupExact`, then
     * `shingles` → the column-form MinHash reference → `lshBands` → distinct
-    * band self-join → `jaccardFromShingles` ≥ threshold → greedy
+    * band self-join → `jaccardPairs` (held to the oracle-form
+    * `SignatureRefs.jaccard` on the same pairs) ≥ threshold → greedy
     * higher-id drop. Stage rows ordered by name, survivor digest. */
   private def reference(docs: DataFrame, cfg: ops.CorpusClean.Config): (Stages, String) = {
     import ops.Dedup
@@ -43,9 +44,14 @@ class AccountingParitySpec extends AnyFunSuite {
         col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct()
-    val drops = Dedup.jaccardFromShingles(sh, Some(cands))
-      .filter(col("jac") >= cfg.jaccardThreshold)
-      .select(col("id2")).collect().map(_.getLong(0)).toSet
+    def scores(df: DataFrame) = df.select(col("id1"), col("id2"), col("inter"), col("jac"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3))).toMap
+    val verified = scores(Dedup.jaccardPairs(
+      Dedup.shingleSets(exact, text, id, cfg.shingleLen), cands))
+    assert(verified == scores(SignatureRefs.jaccard(sh, cands)),
+      s"the verify diverges from the oracle-form Jaccard at $cfg")
+    val drops = verified.collect { case ((_, id2), (_, j)) if j >= cfg.jaccardThreshold => id2 }
+      .toSet
     val exactIds = exact.select(id).collect().map(_.getLong(0))
     val near = exactIds.filterNot(drops).sorted
     val counts = Seq(docs.count(), lang.count(), qual.count(),

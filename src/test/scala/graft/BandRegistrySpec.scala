@@ -51,11 +51,11 @@ class BandRegistrySpec extends AnyFunSuite {
     val histIds = cands.map(_._2)
     val hist = batch1.unionByName(batch2)
       .filter(col("doc_id").isin(histIds.toSeq: _*))
-    val sh = Dedup.shingles(crawl.unionByName(hist), col("text"), col("doc_id"))
+    val sets = Dedup.shingleSets(crawl.unionByName(hist), col("text"), col("doc_id"))
     val pairs = cands.toSeq.toDF("id1", "id2")
-    val verified = Dedup.jaccardFromShingles(sh, Some(pairs.select(
+    val verified = Dedup.jaccardPairs(sets, pairs.select(
         least(col("id1"), col("id2")).as("id1"),
-        greatest(col("id1"), col("id2")).as("id2"))), None)
+        greatest(col("id1"), col("id2")).as("id2")))
       .filter(col("jac") >= 0.8)
       .collect()
     assert(verified.nonEmpty, "the true near-dup must verify at 0.8")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Library-usage cache discipline: the dedup queries pin shared
-  * artifacts (shingles, LSH bands, candidate-restricted shingles) for
+  * artifacts (shingles, LSH bands, candidate and verified pairs) for
   * cross-query reuse; `ExtendedQueries.releaseCaches` must free every
   * one of them so a long-lived session embedding the library does not
   * leak executor memory. Asserted on the executor block store
@@ -57,5 +57,20 @@ class CacheDisciplineSpec extends AnyFunSuite {
     // the queries still work (and re-pin) after release
     assert(SparkEntry.queries("q_dedup_ngram_jaccard")(spark, sfTiny).count() > 0)
     graft.queries.ExtendedQueries.releaseCaches(spark, sfTiny)
+  }
+
+  test("minHashLshCandidates leaves no CacheManager entry") {
+    import org.apache.spark.sql.functions.col
+    // a library call on changing inputs must not pin a band table for
+    // the session: the self-join reads one uncached band-key frame
+    val docs = spark.read.parquet(sfTiny + "/documents.parquet")
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    assert(ops.Dedup.minHashLshCandidates(docs, col("text"), col("doc_id")).count() > 0)
+    // storageLevel reads the CacheManager entry of the frame's plan
+    assert(ops.Dedup.lshBandKeys(docs, col("text"), col("doc_id")).storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE,
+      "the band-key frame behind the candidate join is cached")
+    val pinned = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet -- before
+    assert(pinned.isEmpty, s"minHashLshCandidates pinned blocks: $pinned")
   }
 }

@@ -38,7 +38,7 @@ class MemoFenceSpec extends AnyFunSuite {
     Seq(
       "bands", "bgcounts", "bgmodel", "candpairs", "cleancorpus", "doclens",
       "docprof", "dupcc", "embednorm", "eventprof", "ivfassign", "jacpairs",
-      "mhsig", "restricted", "sheval", "shingles", "shsplit", "shtrain",
+      "mhsig", "sheval", "shingles", "shsplit", "shtrain",
       "simsig", "tfidfscore", "toktf").map(_ -> Frame) ++
     Seq("ndocs", "ntoks").map(_ -> Count) ++
     Seq("bloomfilter").map(_ -> Bytes) ++

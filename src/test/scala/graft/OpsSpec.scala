@@ -47,10 +47,13 @@ class OpsSpec extends AnyFunSuite {
         (-5L, "one two"), (-6L, "solo"), (-7L, "  x  ")).toDF("doc_id", "text"))
 
   /** The executed plan of a per-document signature over a parquet
-    * scan: row-local, so no exchange and no aggregate of any kind. */
-  private def assertRowLocal(sigs: org.apache.spark.sql.DataFrame): Unit = {
+    * scan: row-local, so no exchange and no aggregate of any kind.
+    * `joins` admits the exchanges of a join (a per-pair operator reads
+    * two rows per output row), never an aggregate. */
+  private def assertRowLocal(sigs: org.apache.spark.sql.DataFrame,
+      joins: Boolean = false): Unit = {
     val p = sigs.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange") && !p.contains("Aggregate"), p)
+    assert((joins || !p.contains("Exchange")) && !p.contains("Aggregate"), p)
   }
 
   test("row-local MinHash columns are byte-identical to the aggregate form") {
@@ -86,22 +89,42 @@ class OpsSpec extends AnyFunSuite {
     assert(!cand.exists { case (a, b) => a == 4L || b == 4L })
   }
 
+  /** Every (id1 < id2) pair of the four test docs. */
+  private def allPairs = (for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)).toDF("id1", "id2")
+
+  private def jacMap(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2")) ->
+      (r.getAs[Long]("inter"), r.getAs[Double]("jac"))).toMap
+
+  private def verify(pairs: org.apache.spark.sql.DataFrame) =
+    jacMap(Dedup.jaccardPairs(Dedup.shingleSets(docs, col("text"), col("doc_id")), pairs))
+
   test("ngram Jaccard: identity pair = 1.0; near pair in (0.5, 1)") {
-    val jac = Dedup.ngramJaccardPairs(docs, col("text"), col("doc_id"))
-      .collect().map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2")) -> r.getAs[Double]("jac")).toMap
-    assert(jac((1L, 2L)) == 1.0)
-    assert(jac((1L, 3L)) > 0.5 && jac((1L, 3L)) < 1.0)
+    val jac = verify(allPairs)
+    assert(jac((1L, 2L))._2 == 1.0)
+    assert(jac((1L, 3L))._2 > 0.5 && jac((1L, 3L))._2 < 1.0)
+    // the oracle-form reference over the exploded shingles: same pairs,
+    // same intersections, same scores; doc 4 shares no shingle (no row)
+    assert(jac == jacMap(SignatureRefs.jaccard(
+      Dedup.shingles(docs, col("text"), col("doc_id")), allPairs)))
+    assert(!jac.keySet.exists(_._2 == 4L))
   }
 
   test("ngram Jaccard with candidates restricts pairs and keeps exact scores") {
-    val cand = Seq((1L, 2L)).toDF("id1", "id2")
-    val jac = Dedup.ngramJaccardPairs(docs, col("text"), col("doc_id"),
-        candidates = Some(cand))
-      .collect().map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2")) -> r.getAs[Double]("jac")).toMap
+    val jac = verify(Seq((1L, 2L)).toDF("id1", "id2"))
     // only the candidate pair survives, with the same score as the
-    // unrestricted run (sizes computed on FULL shingle sets)
+    // all-pairs run (sizes computed on FULL shingle sets)
     assert(jac.keySet == Set((1L, 2L)))
-    assert(jac((1L, 2L)) == 1.0)
+    assert(jac((1L, 2L)) == verify(allPairs)((1L, 2L)))
+    assert(jac((1L, 2L))._2 == 1.0)
+    // per pair in its own row: no aggregate in the plan over a scan
+    // (sets and pairs both read it: a local pair frame's distinct would
+    // be optimized away and prove nothing)
+    val scan = spark.read.parquet(s"${TestSpark.sfTiny}/documents.parquet")
+    assertRowLocal(Dedup.jaccardPairs(
+        Dedup.shingleSets(scan, col("text"), col("doc_id")),
+        scan.select(col("doc_id").as("id1"), (col("doc_id") + 1).as("id2"))),
+      joins = true)
   }
 
   test("simhash: exact dups share signatures; library default is 64 bits") {

@@ -99,26 +99,35 @@ class PropertySpec extends AnyFunSuite {
     val wordGen = Gen.oneOf("alpha", "beta", "gamma", "delta", "eps")
     val docGen = Gen.listOfN(12, wordGen).map(_.mkString(" "))
     for (seed <- 1L to 3L) {
-      val docs = (0 until 12).map { i =>
-        (i.toLong, sample(docGen, seed * 100 + i)) }.toDF("doc_id", "text")
-      val all = graft.ops.Dedup
-        .ngramJaccardPairs(docs, col("text"), col("doc_id"))
-        .collect().map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2")) -> r.getAs[Double]("jac")).toMap
+      // doc 12 shares no word with the vocabulary: zero overlap
+      val docs = ((0 until 12).map { i =>
+        (i.toLong, sample(docGen, seed * 100 + i)) } :+ ((12L, "x y z w"))).toDF("doc_id", "text")
+      val pairs = (for (a <- 0L to 12L; b <- a + 1 to 12L) yield (a, b)).toDF("id1", "id2")
+      def verify(d: org.apache.spark.sql.DataFrame, p: org.apache.spark.sql.DataFrame) =
+        graft.ops.Dedup.jaccardPairs(
+            graft.ops.Dedup.shingleSets(d, col("text"), col("doc_id")), p)
+          .collect().map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2")) -> r.getAs[Double]("jac"))
+      val all = verify(docs, pairs).toMap
       assert(all.values.forall(j => j > 0.0 && j <= 1.0), s"seed=$seed $all")
+      // the oracle-form reference scores the same pairs identically
+      val ref = SignatureRefs.jaccard(
+          graft.ops.Dedup.shingles(docs, col("text"), col("doc_id")), pairs)
+        .collect().map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2")) -> r.getAs[Double]("jac")).toMap
+      assert(all == ref, s"seed=$seed")
+      // a pair with zero overlap has no row
+      assert(!all.keySet.exists(_._2 == 12L), s"seed=$seed")
       // exact duplicate docs must score exactly 1.0
-      val dup = graft.ops.Dedup.ngramJaccardPairs(
-          Seq((1L, "a b c d e"), (2L, "a b c d e")).toDF("doc_id", "text"),
-          col("text"), col("doc_id")).collect()
-      assert(dup.length == 1 && dup.head.getAs[Double]("jac") == 1.0)
+      val dup = verify(Seq((1L, "a b c d e"), (2L, "a b c d e")).toDF("doc_id", "text"),
+        Seq((1L, 2L)).toDF("id1", "id2"))
+      assert(dup.toSeq == Seq((1L, 2L) -> 1.0))
       // candidate restriction selects exactly those pairs, same scores;
-      // duplicated candidate pairs must not change the result
+      // a duplicated input pair keeps its score, one row per input row
       val somePairs = all.keys.take(3).toSeq
       if (somePairs.nonEmpty) {
         val cands = (somePairs ++ somePairs).toDF("id1", "id2") // dups on purpose
-        val restricted = graft.ops.Dedup
-          .ngramJaccardPairs(docs, col("text"), col("doc_id"), candidates = Some(cands))
-          .collect().map(r => (r.getAs[Long]("id1"), r.getAs[Long]("id2")) -> r.getAs[Double]("jac")).toMap
-        assert(restricted.keySet == somePairs.toSet, s"seed=$seed")
+        val restricted = verify(docs, cands)
+        assert(restricted.length == 2 * somePairs.length, s"seed=$seed")
+        assert(restricted.map(_._1).toSet == somePairs.toSet, s"seed=$seed")
         restricted.foreach { case (k, j) => assert(j == all(k), s"seed=$seed pair=$k") }
       }
     }

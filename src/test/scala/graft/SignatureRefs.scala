@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The definitional formulations of the two per-document signatures,
-  * spelled out as explode → aggregate plans. The library computes each
-  * signature by one row-local kernel only (`Dedup.minHashSignatures`,
-  * `Dedup.simHashSignatures`); the specs hold it to these references,
+/** The definitional formulations of the two per-document signatures
+  * and of the pairwise shingle Jaccard, spelled out as explode →
+  * aggregate plans. The library computes each by one row-local kernel
+  * only (`Dedup.minHashSignatures`, `Dedup.simHashSignatures`,
+  * `Dedup.jaccardPairs`); the specs hold it to these references,
   * which share no code with the kernels. */
 private[graft] object SignatureRefs {
 
@@ -41,5 +42,24 @@ private[graft] object SignatureRefs {
       when(col(s"b$j") > 0, "1").otherwise("0")): _*)
     withNibs.groupBy(col("id")).agg(bitSums.head, bitSums.tail: _*)
       .select(col("id"), sig.as("simhash"))
+  }
+
+  /** Jaccard (id1, id2, inter, jac) of the given (id1, id2) pairs over
+    * an (id, s) shingle-occurrence table, in the DuckDB oracle's
+    * formulation (q_dedup_ngram_jaccard): distinct (id, s), per-doc
+    * set sizes, an inner join on s, a group-by count. Pairs sharing no
+    * shingle have no row; a duplicated input pair double-counts, so
+    * pass a set. */
+  def jaccard(sh: DataFrame, pairs: DataFrame): DataFrame = {
+    val shd = sh.select(col("id"), col("s")).distinct()
+    val sizes = shd.groupBy(col("id")).agg(count(lit(1)).as("n"))
+    pairs.select(col("id1"), col("id2"))
+      .join(shd.toDF("id1", "s"), "id1")
+      .join(shd.toDF("id2", "s"), Seq("id2", "s"))
+      .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("inter"))
+      .join(sizes.toDF("id1", "n1"), "id1")
+      .join(sizes.toDF("id2", "n2"), "id2")
+      .select(col("id1"), col("id2"), col("inter"),
+        (col("inter") / (col("n1") + col("n2") - col("inter"))).as("jac"))
   }
 }

@@ -221,7 +221,7 @@ object ScaleProbe {
     val probes: Seq[(String, String => DataFrame, String => String, Int)] = Seq(
       ("risk_minhash_cand",
         (d: String) => Dedup.minHashLshCandidates(
-          docs(d), col("text"), col("doc_id"), cacheBands = false),
+          docs(d), col("text"), col("doc_id")),
         (d: String) => occupancy(
           Dedup.lshBandKeys(docs(d), col("text"), col("doc_id"))
             .groupBy(col("band"), col("h")).agg(count(lit(1)).as("c"))), 3),
